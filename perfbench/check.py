@@ -123,3 +123,18 @@ def check_curate(out_dir, input_ids: set[int],
     return dup + foreign + kept_copies, {
         "rows": len(ids), "duplicated": dup, "foreign": foreign,
         "kept_copies": kept_copies}, h.hexdigest()
+
+
+def main(argv: list[str]) -> int:
+    """python3 perfbench/check.py <pages dir> <out.parquet> <workers>:
+    writes the oracle table of the pages."""
+    pages, out, workers = argv
+    pq.write_table(oracle_table(pages, int(workers)), out)
+    return 0
+
+
+if __name__ == "__main__":
+    import sys
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    sys.exit(main(sys.argv[1:]))

@@ -82,8 +82,8 @@ class Workload:
             self.pages = spark.read.parquet(str(self.inputs / "pages"))
             # the resume workload uses the explicit salted url-hash
             # repartition; the fresh crawl keeps the map-only default
-            self.cfg = (ExtractConfig(repartition=2 * spec["cores"])
-                        if self.name == "crawl_resume_skewed"
+            self.salted = ExtractConfig(repartition=2 * spec["cores"])
+            self.cfg = (self.salted if self.name == "crawl_resume_skewed"
                         else ExtractConfig())
             self.expected = pq.read_table(spec["oracle"])
             if self.name == "crawl_resume_skewed":
@@ -307,7 +307,9 @@ def crawl_probes(wl: Workload, tr: Tracer) -> dict:
     """Cumulative extraction jobs (scan -> + Arrow round trip -> + kernel ->
     + parquet write -> + commit, the workload itself) on the rows the
     workload extracts: all pages on a fresh crawl, the not-yet-committed
-    ones on the resume. PROBE_REPS interleaved rounds, then a resume of the
+    ones on the resume. Beside them, the extraction with the salted url-hash
+    repartition to a noop sink, so that the shuffle is measured on a
+    map-only crawl too. PROBE_REPS interleaved rounds, then a resume of the
     fully committed input. Durations are read from the spans."""
     from llmap_spark.sources.snapshot import committed_snapshots
     from llmap_spark.plans.pipeline import extract, prepared_pages
@@ -329,6 +331,8 @@ def crawl_probes(wl: Workload, tr: Tracer) -> dict:
             _noop(narrow.mapInArrow(_identity, schema=narrow.schema))
         with tr.span("pipeline.extract_noop"):
             _noop(extract(todo, wl.cfg))
+        with tr.span("pipeline.salted_noop"):
+            _noop(extract(todo, wl.salted))
         with tr.span("pipeline.extract_write"):
             extract(todo, wl.cfg).write.mode("overwrite").parquet(str(scratch))
         shutil.rmtree(scratch, ignore_errors=True)

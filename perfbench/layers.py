@@ -77,15 +77,15 @@ def per_layer(workload: str, res: dict, events: list[dict], cores: int,
         put("selftime.sum_over_wall", dur["workload"] / ref_wall)
         return got
 
-    agg = st["pipeline.extract_noop"]
     put("pipeline.scan_s", dur["pipeline.scan"])
     put("pipeline.arrow_roundtrip_s", dur["pipeline.arrow_roundtrip"])
     put("pipeline.extract_noop_s", dur["pipeline.extract_noop"])
     put("pipeline.extract_write_s", dur["pipeline.extract_write"])
-    put("pipeline.shuffle_write_mb",
-        agg["shuffle_write_bytes"] / 1e6 / len(spans["pipeline.extract_noop"]))
-    put("pipeline.partition_skew", eventlog.partition_skew(agg))
     put("pipeline.task_busy_frac", busy("pipeline.extract_noop"))
+    salted = st["pipeline.salted_noop"]
+    put("pipeline.shuffle_write_mb",
+        salted["shuffle_write_bytes"] / 1e6 / len(spans["pipeline.salted_noop"]))
+    put("pipeline.partition_skew", eventlog.partition_skew(salted))
     put("snapshot.run_extract_job_s", dur["workload"])
     put("snapshot.commit_overhead_s",
         dur["workload"] - dur["pipeline.extract_write"])

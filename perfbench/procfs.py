@@ -7,7 +7,10 @@ and the Python workers the JVM forks.
 from __future__ import annotations
 
 import os
+import signal
+import subprocess
 import threading
+import time
 
 _TICK = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
@@ -39,6 +42,34 @@ def _tree(root: int, stats: dict[int, list[str]]) -> list[list[str]]:
             out.append(stats[pid])
             todo.extend(kids.get(pid, []))
     return out
+
+
+def session_pids(sid: int) -> list[int]:
+    """Live (not zombie) processes of session ``sid``."""
+    return [pid for pid, f in _stats().items() if int(f[3]) == sid and f[0] != "Z"]
+
+
+def end_session(proc: subprocess.Popen, timeout: float = 30.0) -> None:
+    """Kills every process of the session ``proc`` leads (it was started
+    with ``start_new_session``) and waits until none is left. Process
+    groups are not enough: PySpark's worker daemon moves to a group of its
+    own, and multiprocessing's resource tracker outlives its parent, but
+    both stay in the session."""
+    end = time.monotonic() + timeout
+    while True:
+        pids = session_pids(proc.pid)
+        if not pids:
+            break
+        if time.monotonic() > end:
+            raise RuntimeError(f"processes {pids} of session {proc.pid} survive SIGKILL")
+        for pid in pids:
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+        proc.poll()  # reap the leader
+        time.sleep(0.05)
+    proc.wait()
 
 
 def tree_cpu_s(root: int) -> float:

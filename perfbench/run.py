@@ -1,6 +1,6 @@
 """The repository benchmark: one workload, one seed, one JSON result line.
 
-    python3 perfbench/run.py --workload crawl_extract --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload crawl_extract --seed 1 --seconds 14 --trace 0
 
 Workloads (batch jobs in a closed loop: one job at a time, one client):
   crawl_extract        fresh crawl segment -> sources.snapshot.run_extract_job
@@ -105,45 +105,51 @@ class Launcher:
         cmd += ["--py-files", str(self.zip), str(HERE / "job.py"), str(spec_path)]
         spec = {**spec, "cores": self.cores, "launch_ts": time.time()}
         spec_path.write_text(json.dumps(spec))
-        with open(err_path, "w") as err:
-            proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=err,
-                                    cwd=self.work, env=self.env, text=True,
-                                    start_new_session=True)
-            try:
-                out, _ = proc.communicate(
-                    timeout=max(1.0, self.deadline - time.time()))
-            except subprocess.TimeoutExpired:
-                out = None
-            finally:
-                # the JVM's Python workers share its process group
-                try:
-                    os.killpg(proc.pid, signal.SIGKILL)
-                except ProcessLookupError:
-                    pass
-                proc.wait()
-        if out is None:
-            raise RuntimeError(f"launch {self.n} passed the deadline")
-        lines = [ln for ln in out.splitlines() if ln.startswith("{")]
-        if proc.returncode != 0 or not lines:
+        out_path = self.work / f"launch-{self.n}.out"
+        with open(out_path, "w") as out, open(err_path, "w") as err:
+            code = run_session(cmd, self.deadline, stdout=out, stderr=err,
+                               cwd=self.work, env=self.env)
+        lines = [ln for ln in out_path.read_text().splitlines() if ln.startswith("{")]
+        if code != 0 or not lines:
             tail = err_path.read_text()[-3000:]
-            raise RuntimeError(f"launch {self.n} exited {proc.returncode}:\n{tail}")
+            raise RuntimeError(f"launch {self.n} exited {code}:\n{tail}")
         return json.loads(lines[-1])
 
 
-def prepare_inputs(workload: str, seed: int, cache: Path, workers: int) -> Path:
+def run_session(cmd: list[str], deadline: float, **popen) -> int:
+    """Runs ``cmd`` in a session of its own until it exits or ``deadline``
+    passes, then stops every process left in that session and returns the
+    exit code. Output goes to files, not pipes: a process left behind could
+    hold a pipe open."""
+    import procfs
+
+    proc = subprocess.Popen(cmd, start_new_session=True, **popen)
+    try:
+        proc.wait(timeout=max(1.0, deadline - time.time()))
+    except subprocess.TimeoutExpired:
+        raise RuntimeError(f"passed the deadline running {cmd[-1]}") from None
+    finally:
+        procfs.end_session(proc)
+    return proc.returncode
+
+
+def prepare_inputs(workload: str, seed: int, cache: Path, workers: int,
+                   deadline: float) -> Path:
     """Generated inputs plus, for the crawl workloads, the oracle's
     extraction of them; both cached by workload, seed and generator
-    version."""
-    import pyarrow.parquet as pq
-
-    import check
+    version. The oracle runs in a process session of its own, so that its
+    worker pool's helper processes are stopped with it."""
     import gen
 
     inputs = gen.generate(workload, seed, cache)
     oracle = inputs / "oracle.parquet"
     if workload != "curate_corpus" and not oracle.exists():
         tmp = inputs / f".oracle-{os.getpid()}.parquet"
-        pq.write_table(check.oracle_table(inputs / "pages", workers), tmp)
+        code = run_session([sys.executable, str(HERE / "check.py"),
+                            str(inputs / "pages"), str(tmp), str(workers)],
+                           deadline, cwd=ROOT, stdout=subprocess.DEVNULL)
+        if code != 0:
+            raise RuntimeError(f"the oracle exited {code}")
         os.replace(tmp, oracle)
     return inputs
 
@@ -216,7 +222,8 @@ def main(argv=None) -> int:
     work.mkdir(parents=True)
     try:
         cores = len(os.sched_getaffinity(0))
-        inputs = prepare_inputs(args.workload, args.seed, state / "inputs", cores)
+        inputs = prepare_inputs(args.workload, args.seed, state / "inputs", cores,
+                                deadline)
         rows = json.loads((inputs / "meta.json").read_text())["rows"]
         launcher = Launcher(work, deadline)
         spec = {"workload": args.workload, "seed": args.seed,

@@ -32,13 +32,14 @@ def spans(durations):
 
 def test_crawl_self_times_decompose_the_workload():
     steps = [("pipeline.scan", 0.5), ("pipeline.arrow_roundtrip", 1.0),
-             ("pipeline.extract_noop", 3.0), ("pipeline.extract_write", 3.5),
-             ("workload", 4.0), ("snapshot.resume_check", 0.7)]
+             ("pipeline.extract_noop", 3.0), ("pipeline.salted_noop", 3.2),
+             ("pipeline.extract_write", 3.5), ("workload", 4.0),
+             ("snapshot.resume_check", 0.7)]
     res = {"layers": {"failed": 0, "attempted": 10, "kernel.pages_extracted": 10},
            "spans": spans(steps + steps),
            "reference_s": [4.0, 4.2, 3.8]}
     events = relabelled({"label.map": "pipeline.extract_noop",
-                         "label.shuffle": "workload"})
+                         "label.shuffle": "pipeline.salted_noop"})
     got = layers.per_layer("crawl_extract", res, events, 2, NAMES)
     assert set(got) == set(NAMES)
     assert [got[f"selftime.{s}_s"] for s in
@@ -50,6 +51,9 @@ def test_crawl_self_times_decompose_the_workload():
     assert got["snapshot.commit_overhead_s"] == pytest.approx(0.5)
     # task time over wall x cores, over both extract_noop spans
     assert got["pipeline.task_busy_frac"] == pytest.approx(3.382 / (6.0 * 2))
+    # the shuffle is read from the salted probe, per span
+    assert got["pipeline.shuffle_write_mb"] == pytest.approx(0.001008 / 2)
+    assert got["pipeline.partition_skew"] > 0
     assert got["operators.exact_dedup_s"] == 0.0
     assert got["kernel.pages_extracted"] == 10
 
