@@ -375,3 +375,98 @@ def test_literal_replacement_char_is_not_decode_replaced():
     bad = (b"<html><body><p>caf\xe9 plenty of words to pass the keep rule "
            b"here today ok</p></body></html>")
     assert kernel.extract_page(bad).status == "decode_replaced"
+
+
+# adversarial tokenizer atoms for the block-level golden pin: every branch
+# of the scanner (comments incl. the abrupt '<!-->'/'<!--->' forms,
+# declarations, processing instructions, junk after '<' and '</', raw-text
+# close-tag boundaries, quote-aware and degraded tag tails, self-closing
+# rules, non-ASCII case folding, entities without ';') plus enough running
+# text that classify/stitch see kept, rescued and link-dominated blocks
+_FUZZ_ATOMS = (
+    "<", " < ", "a < b", "x<y", "<1", "< p>", "</", "</ ", "</1>", "</>",
+    "</-x>", "</ p>", "<!-->", "<!--->", "<!---->", "<!-- c -->",
+    "<!-- open", "-->", "<!DOCTYPE html>", "<!x", "<?xml v?>", "<?pi",
+    '<p class="x>', "<div title='y>", '"', "'", "<p title=don't>",
+    "<script>", "</script>", "</scriptable>", "</script >", "</script/",
+    "<script src=x/>", "<style>", "</style>", "<title>", "</title>",
+    "<textarea>", "</textarea>", "<xmp>", "</xmp>", "<svg/>", "<svg>",
+    "</svg>", "<math/>", "<br/>", "<br>", "<br />", '<img src="i"/>',
+    "<hr/>", "<p/>", "<div/>", "<nav/>", "<a href=/x/>", '<a href="/y">',
+    "</a>", "<A HREF=z>", "</A>", "<a href=q>x < y</a>", "<P>", "</P>",
+    "<DIV>", "</DIV>", "<SCRIPT>", "</SCRIPT>", "İ", "İstanbul",
+    "<Dİv>", "<pİ>", "&amp", "&lt", "&amp;", "&#65", "&#x41;", "&copy",
+    "&nbsp", "&bogus;", "<nav>", "</nav>", "<header>", "</header>",
+    "<footer>", "</footer>", "<aside>", "</aside>", "<form>", "</form>",
+    "<select>", "<option>", "</select>", "<body>", "</body>", "<html>",
+    "<head>", "</head>", "<main>", "</main>", "<li>", "<td>", "<p>",
+    "</p>", "<div>", "</div>", "<b>", "</b>", "<span class=s>",
+    "</span>", "<h1>", "</h1>", ">", "/", "=", " ", " ", "\n", "\t",
+    "word", "alpha beta", "the quick brown fox jumps over the lazy dog",
+    "plenty of running words to clear the keep threshold in a paragraph",
+)
+
+
+def _fuzz_corpus(n: int, seed: int) -> list[str]:
+    rng = random.Random(seed)
+    return ["".join(rng.choice(_FUZZ_ATOMS) for _ in range(rng.randrange(1, 60)))
+            for _ in range(n)]
+
+
+def _corpus_pages(n: int, seed: int) -> list[bytes]:
+    """Seeded pages through the corpus builders: all 8 templates (template
+    ``i % 8``) and every edge kind."""
+    from llmap_spark import corpus
+
+    rng = random.Random(seed)
+    vocab = ("spark window merge table column vector stream value data join"
+             " filter group hash sort order line part row key query scan"
+             " caf\xe9 na\xefve r\xe9sum\xe9 <b> & \"q\"").split()
+    pages = [corpus._edge_html(kind, "edge page text with a few words")
+             for kind in sorted(set(corpus.EDGE_RESIDUES.values()))]
+    for i in range(n):
+        text = " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 120)))
+        pages.append(corpus._page_html(i, i % corpus.N_TEMPLATES, text, rng))
+    return pages
+
+
+def test_golden_block_level_hash():
+    """Regression anchor below test_golden_corpus_hash: every Block field,
+    body_seen and parse_error of parse_blocks, and the whole extract_page
+    result (text, spans, counts, status), over seeded corpus pages and a
+    seeded adversarial fuzz corpus. A tokenizer rewrite must leave this
+    hash unchanged; an intentional semantic change bumps KERNEL_VERSION and
+    this constant together."""
+    import hashlib
+
+    h = hashlib.sha256()
+    docs = _corpus_pages(800, 7)
+    docs += [d.encode("utf-8") for d in _fuzz_corpus(20_000, 11)]
+    for html in docs:
+        dec = kernel.decode_html(html)
+        blocks, body_seen, perr = kernel.parse_blocks(dec.text)
+        h.update(repr(([tuple(b) for b in blocks], body_seen, perr)).encode())
+        h.update(b"\x00")
+        h.update(repr(tuple(kernel.extract_page(html))).encode())
+        h.update(b"\x01")
+    assert h.hexdigest() == (
+        "9af989d112b9879b0d6a07a27e4b1441e48279ec00860a3ac3ec7afa8aee1811"
+    ), "kernel block output drifted"
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.text(alphabet="<>!-?/ab cpAPSB=\"'&#;İ\n", max_size=2048))
+def test_total_on_markup_branch_text(txt):
+    # reaches the comment ('<!--'), declaration ('<!'), processing-
+    # instruction ('<?') and uppercase/İ tag-name paths the narrower
+    # alphabet above never does
+    blocks, _, perr = kernel.parse_blocks(txt)
+    assert not perr
+    for b in blocks:
+        assert 0 <= b.start < b.end <= len(txt)
+    html = txt.encode("utf-8")
+    r = kernel.extract_page(html)
+    n = len(kernel.decode_html(html).text)
+    assert r.status in {"ok", "empty", "no_body", "decode_replaced"}
+    for s, e in r.spans:
+        assert 0 <= s < e <= n
