@@ -7,6 +7,8 @@ Runs the headline pipelines at $SPARK_GRAFT_SF_DIR (default
    "queries": {name: sec, ...}, "sf": ..., "pages_per_sec": ...,
    "extracted_mb_per_sec": ...}
 
+SPARK_GRAFT_CPUS defaults to the cores this process may run on.
+
 Every timed query is materialized with the noop sink (full computation of
 every column, no disk variance); the flagship extraction is ALSO timed with
 a real parquet write (extract_write) since the contract metric is
@@ -28,10 +30,11 @@ import time
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from llmap_spark.corpus import pages_path_for
-    from llmap_spark.session import get_spark, scan_conf_for
+    from llmap_spark.session import get_spark, local_defaults, scan_conf_for
+
+    cpus = local_defaults().cores
 
     pages_path = pages_path_for(sf_dir)  # cached; generation not timed
 

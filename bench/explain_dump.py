@@ -14,10 +14,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main(tag: str, suffix: str) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from llmap_spark.corpus import pages_path_for
-    from llmap_spark.session import get_spark, scan_conf_for, ensure_parallelism
+    from llmap_spark.session import (ensure_parallelism, get_spark,
+                                     local_defaults, scan_conf_for)
+
+    cpus = local_defaults().cores
 
     pages_path = pages_path_for(sf_dir)
     spark = get_spark(app_name="llmap-explain", cores=cpus,

@@ -23,11 +23,13 @@ import time
 
 def main(groups: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     reps = int(os.environ.get("LLMAP_BENCH_REPS", "2"))
 
     from llmap_spark.corpus import pages_path_for
-    from llmap_spark.session import get_spark, scan_conf_for, ensure_parallelism
+    from llmap_spark.session import (ensure_parallelism, get_spark,
+                                     local_defaults, scan_conf_for)
+
+    cpus = local_defaults().cores
 
     pages_path = pages_path_for(sf_dir)
     spark = get_spark(app_name="llmap-bench-extra", cores=cpus,

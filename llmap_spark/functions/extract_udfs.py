@@ -95,37 +95,44 @@ def stage1_coarse(batches):
                    "n_candidates", "status", "bytes_in", "salt_bucket"])
 
 
+def _spans_array(offsets: list[int], flat: list[tuple[int, int]]):
+    """The ``spans`` column from flat buffers: row i's spans are
+    ``flat[offsets[i]:offsets[i + 1]]``. Builds list<struct<start, end>>
+    from three primitive arrays instead of one Python dict per span."""
+    import pyarrow as pa
+
+    starts, ends = zip(*flat) if flat else ((), ())
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(starts, pa.int64()), pa.array(ends, pa.int64())],
+            names=["start", "end"]))
+
+
 def refine_stitch(batches):
     """mapInArrow kernel over stage-1 survivors: classify + stitch."""
     import pyarrow as pa
 
-    global SPAN_PA_TYPE
-    if SPAN_PA_TYPE is None:
-        SPAN_PA_TYPE = pa.list_(pa.struct(
-            [("start", pa.int64()), ("end", pa.int64())]))
-
     for rb in batches:
         col = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-        texts, spans_col, kept_col = [], [], []
+        texts, kept_col, offsets, flat = [], [], [0], []
         for bb in col["blocks"].to_pylist():
             blocks = pickle.loads(bb)
             keep = kernel.classify(blocks)
             text, spans = kernel.stitch(blocks, keep)
             texts.append(text)
-            spans_col.append([{"start": s, "end": e} for s, e in spans])
+            flat += spans
+            offsets.append(len(flat))
             kept_col.append(sum(keep))
         yield pa.RecordBatch.from_arrays(
             [col["url"], col["warc_ts"], col["lang"],
              pa.array(texts, pa.string()),
-             pa.array(spans_col, SPAN_PA_TYPE),
+             _spans_array(offsets, flat),
              pa.array(kept_col, pa.int32()), col["n_blocks_total"],
              col["status"], col["bytes_in"], col["salt_bucket"]],
             names=["url", "warc_ts", "lang", "extracted_text", "spans",
                    "n_blocks_kept", "n_blocks_total", "status", "bytes_in",
                    "salt_bucket"])
-
-
-SPAN_PA_TYPE = None  # built lazily (pyarrow import kept out of module import)
 
 
 def extract_fused_arrow(batches):
@@ -137,19 +144,16 @@ def extract_fused_arrow(batches):
     batch on both sides of the UDF."""
     import pyarrow as pa
 
-    global SPAN_PA_TYPE
-    if SPAN_PA_TYPE is None:
-        SPAN_PA_TYPE = pa.list_(pa.struct(
-            [("start", pa.int64()), ("end", pa.int64())]))
-
     for rb in batches:
         names = rb.schema.names
         col = {n: rb.column(i) for i, n in enumerate(names)}
-        texts, spans, kept, total, status, bytes_in = [], [], [], [], [], []
+        texts, kept, total, status, bytes_in = [], [], [], [], []
+        offsets, flat = [0], []
         for h in col["html"].to_pylist():
             r = kernel.extract_page(h)
             texts.append(r.extracted_text)
-            spans.append([{"start": s, "end": e} for s, e in r.spans])
+            flat += r.spans
+            offsets.append(len(flat))
             kept.append(r.n_blocks_kept)
             total.append(r.n_blocks_total)
             status.append(r.status)
@@ -157,7 +161,7 @@ def extract_fused_arrow(batches):
         yield pa.RecordBatch.from_arrays(
             [col["url"], col["warc_ts"], col["lang"],
              pa.array(texts, pa.string()),
-             pa.array(spans, SPAN_PA_TYPE),
+             _spans_array(offsets, flat),
              pa.array(kept, pa.int32()), pa.array(total, pa.int32()),
              pa.array(status, pa.string()),
              pa.array(bytes_in, pa.int64()),

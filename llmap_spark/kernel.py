@@ -32,6 +32,16 @@ Design lineage (reference: jbellis/llmap, studied at /root/reference):
 All keep/candidate decisions use integer arithmetic (no floats) so the same
 decision is reached regardless of serialization boundary (Arrow, Parquet,
 JSON). Float densities are carried for inspection only.
+
+The tokenizer in :func:`parse_blocks` is single-dispatch: per markup token it
+makes one search of one compiled regex (``_TOKEN_RE``: comment, declaration
+or processing instruction, close tag, open tag with its quote-aware tail,
+literal '<') over an ASCII-lowered copy of the document, branches on the
+matched group, and looks the tag name up once in ``_ACTIONS``, a table of
+per-tag action bits (block, skip, boiler, void, anchor, raw-text, foreign).
+Each match spans its whole token, so the scanning runs in C and comments,
+declarations and processing instructions never reach Python code; block
+assembly is local variables plus one ``flush`` closure.
 """
 
 from __future__ import annotations
@@ -169,118 +179,51 @@ def decode_html(html: bytes | None, cap: int = MAX_HTML_BYTES) -> DecodeResult:
     return DecodeResult(text, truncated, True)
 
 
-class _BlockSink:
-    """Document-ordered Block accumulator driven by the tag scanner.
-
-    Counters (not strict stacks) make unclosed/malformed tags harmless.
-    Offsets are char positions into the decoded document, supplied
-    directly by the scanner.
-    """
-
-    def __init__(self) -> None:
-        self.blocks: list[Block] = []
-        self.body_seen = False
-        self._skip = 0          # depth inside _SKIP_TAGS
-        self._boiler = 0        # depth inside _BOILER_TAGS
-        self._anchor = 0        # depth inside <a>
-        self._depth = 0         # open-element depth
-        self._tag = "body"      # block tag context for the next flush
-        self._pieces: list[tuple[str, bool]] = []  # (decoded text, in_link)
-        self._start = -1        # char offset of first piece in current block
-        self._end = -1          # char offset just past last piece
-
-    # -- block assembly --
-    def _add_piece(self, raw: str, pos: int, raw_len: int) -> None:
-        if self._skip:
-            return
-        if self._start < 0:
-            self._start = pos
-        self._end = pos + raw_len
-        self._pieces.append((raw, self._anchor > 0))
-
-    def _flush(self) -> None:
-        if not self._pieces:
-            return
-        raw = "".join(p for p, _ in self._pieces)
-        # one split serves normalization AND the token count (identical to
-        # _normalize + text.split(): " ".join(words).split() == words)
-        words = raw.split()
-        text = " ".join(words)
-        if text:
-            n_chars = len(text)
-            if any(in_link for _, in_link in self._pieces):
-                link_chars = sum(len(_normalize(p))
-                                 for p, in_link in self._pieces if in_link)
-                if link_chars > n_chars:
-                    link_chars = n_chars
-            else:
-                link_chars = 0  # common case: no anchors in the block
-            n_tokens = len(words)
-            in_boiler = self._boiler > 0
-            # stage-1 coarse candidate gate (integer arithmetic only):
-            # enough chars, not link-dominated, not inside a boiler container.
-            candidate = (
-                n_chars >= MIN_CANDIDATE_CHARS
-                and 4 * link_chars < 3 * n_chars
-                and not in_boiler
-            )
-            self.blocks.append(Block(
-                idx=len(self.blocks), tag=self._tag, depth=self._depth,
-                start=self._start, end=self._end, text=text,
-                n_chars=n_chars, n_tokens=n_tokens, n_link_chars=link_chars,
-                in_boiler=in_boiler, candidate=candidate,
-            ))
-        self._pieces = []
-        self._start = -1
-        self._end = -1
-
-    # -- scanner callbacks --
-    def start(self, tag: str) -> None:
-        if tag == "body":
-            self.body_seen = True
-        if tag in _BLOCK_TAGS:
-            self._flush()
-            self._tag = tag
-        if tag == "a":
-            self._anchor += 1
-        if tag in _SKIP_TAGS:
-            self._skip += 1
-        if tag in _BOILER_TAGS:
-            self._boiler += 1
-        if tag not in _VOID_TAGS:
-            self._depth += 1
-
-    def end(self, tag: str) -> None:
-        if tag in _BLOCK_TAGS:
-            self._flush()
-            self._tag = tag
-        if tag == "a" and self._anchor:
-            self._anchor -= 1
-        if tag in _SKIP_TAGS and self._skip:
-            self._skip -= 1
-        if tag in _BOILER_TAGS and self._boiler:
-            self._boiler -= 1
-        if tag not in _VOID_TAGS and self._depth:
-            self._depth -= 1
-
-    def startend(self, tag: str) -> None:
-        if tag in _BLOCK_TAGS:
-            self._flush()
-            self._tag = tag
-
-    def data(self, pos: int, raw: str) -> None:
-        if raw:
-            # entity decode only when present (html.unescape is regex-based
-            # and worth skipping for the common entity-free run)
-            decoded = _htmlmod.unescape(raw) if "&" in raw else raw
-            self._add_piece(decoded, pos, len(raw))
-
-
-# start-tag tail: attributes with quote-aware '>' detection; '/>' included
-_TAG_TAIL_RE = re.compile(r"""[^>"']*(?:"[^"]*"[^>"']*|'[^']*'[^>"']*)*>""")
-_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9:_.-]*")
+# --- tokenizer -------------------------------------------------------------
 # content of these elements is raw text: '<' inside does not open tags
 _RAWTEXT_TAGS = frozenset({"script", "style", "textarea", "title", "xmp"})
+# Elements where the self-closing slash is HONORED: void elements (no-op
+# either way) and foreign-content roots (SVG/MathML follow XML rules). On
+# every other element HTML5 IGNORES the slash — '<script src=x/>' OPENS a
+# script whose body must stay invisible; treating it as self-closed leaked
+# the JS into extracted text.
+_FOREIGN_TAGS = frozenset({"svg", "math"})
+
+# One action bitmask per tag name, looked up ONCE per tag token; a name
+# absent from the table only moves the open-element depth.
+_BLOCK, _SKIP, _BOILER, _VOID, _ANCHOR, _RAWTEXT, _FOREIGN = (
+    1 << i for i in range(7))
+_ACTIONS: dict[str, int] = {}
+for _bit, _tags in ((_BLOCK, _BLOCK_TAGS), (_SKIP, _SKIP_TAGS),
+                    (_BOILER, _BOILER_TAGS), (_VOID, _VOID_TAGS),
+                    (_ANCHOR, {"a"}), (_RAWTEXT, _RAWTEXT_TAGS),
+                    (_FOREIGN, _FOREIGN_TAGS)):
+    for _t in _tags:
+        _ACTIONS[_t] = _ACTIONS.get(_t, 0) | _bit
+
+# One search per markup token over the ASCII-lowered document: m.lastindex
+# names the token kind and m.end() is where it ends (an unterminated
+# construct runs to EOF).
+#   1 comment. '<!-->' and '<!--->' are COMPLETE (HTML5 "abrupt closing of
+#     an empty comment": searching for '-->' past them swallowed the rest
+#     of the page under status 'ok'); any other runs through the next '-->'.
+#   2 '<!' declaration or '<?' processing instruction, through the next '>'.
+#   3 close tag, through the next '>'.
+#   4 open tag with its quote-aware tail ('/>' included). On a stray quote
+#     in an unquoted value (title=don't, legal per HTML5) or an unclosed
+#     quote the tail cannot match, and the tag closes at the next '>'.
+#   5 '<' (or '</') before anything else: literal text.
+_NAME = r"[a-z][a-z0-9:_.-]*"
+_TOKEN_RE = re.compile(
+    rf"<(?:(!--)(?:-?>|.*?-->|.*)|([!?])[^>]*>?|/({_NAME})[^>]*>?|({_NAME})"
+    r"""(?:[^>"']*(?:"[^"]*"[^>"']*|'[^']*'[^>"']*)*>|[^>]*>?)|(/?))""",
+    re.DOTALL)
+_CLOSE, _OPEN, _LITERAL = 3, 4, 5
+# a raw-text close tag must be followed by whitespace, '/', '>' or EOF
+# (HTML5): '</scriptable>' must NOT close <script> — matching the bare
+# prefix leaked script source as text
+_RAWTEXT_CLOSE = {t: re.compile(rf"</{t}(?![^\t\n\f\r />])[^>]*>?")
+                  for t in _RAWTEXT_TAGS}
 # ASCII-only lowercase map: LENGTH-PRESERVING, unlike str.lower() (e.g.
 # U+0130 'İ' lowercases to 2 chars), so offsets into the lowered copy stay
 # aligned with the original document. Tag names are ASCII by definition.
@@ -290,129 +233,150 @@ _ASCII_LOWER = str.maketrans(
 # quoted value or whitespace. A '/' right after an unquoted attribute value
 # (e.g. <a href=/x/>) is part of the value per HTML5, not self-closing.
 _PRE_SLASH_OK = frozenset(" \t\n\r\f\"'")
-# Elements where the self-closing slash is HONORED: void elements (no-op
-# either way) and foreign-content roots (SVG/MathML follow XML rules). On
-# every other element HTML5 IGNORES the slash — '<script src=x/>' OPENS a
-# script whose body must stay invisible; treating it as self-closed leaked
-# the JS into extracted text.
-_FOREIGN_TAGS = frozenset({"svg", "math"})
-
-
-def _scan(doc: str, sink: _BlockSink) -> None:
-    """Single-pass, quote-aware HTML tokenizer driving the sink.
-
-    Replaces html.parser (v1 kernel): str.find / compiled-regex driven,
-    ~4x faster on real pages, and offsets are native (no line/col
-    bookkeeping). Tolerant by construction: anything unrecognized after
-    '<' is treated as text; unterminated constructs run to end-of-doc.
-    """
-    low = doc.translate(_ASCII_LOWER)  # case-insensitive tag searches, offset-aligned
-    n = len(doc)
-    pos = 0
-    while pos < n:
-        lt = doc.find("<", pos)
-        if lt < 0:
-            sink.data(pos, doc[pos:n])
-            break
-        if lt > pos:
-            sink.data(pos, doc[pos:lt])
-        nxt = doc[lt + 1:lt + 2]
-        if nxt == "!":
-            if doc.startswith("<!--", lt):
-                # HTML5 "abrupt closing of an empty comment": '<!-->' and
-                # '<!--->' are COMPLETE comments whose closer overlaps the
-                # opener — searching for '-->' past them used to swallow
-                # the whole rest of the document under status 'ok'
-                if doc.startswith(">", lt + 4):
-                    pos = lt + 5
-                elif doc.startswith("->", lt + 4):
-                    pos = lt + 6
-                else:
-                    e = doc.find("-->", lt + 4)
-                    pos = n if e < 0 else e + 3
-            else:
-                e = doc.find(">", lt + 2)
-                pos = n if e < 0 else e + 1
-            continue
-        if nxt == "?":
-            e = doc.find(">", lt + 2)
-            pos = n if e < 0 else e + 1
-            continue
-        if nxt == "/":
-            m = _NAME_RE.match(low, lt + 2)
-            if m is None:  # "</" followed by junk -> text
-                sink.data(lt, doc[lt:lt + 2])
-                pos = lt + 2
-                continue
-            tag = m.group(0)
-            e = doc.find(">", m.end())
-            sink.end(tag)
-            pos = n if e < 0 else e + 1
-            continue
-        m = _NAME_RE.match(low, lt + 1)
-        if m is None:  # bare '<' -> text
-            sink.data(lt, doc[lt:lt + 1])
-            pos = lt + 1
-            continue
-        tag = m.group(0)
-        tail = _TAG_TAIL_RE.match(doc, m.end())
-        if tail is not None:
-            end_pos = tail.end()
-        else:
-            # quote-aware match failed: a stray quote in an unquoted
-            # attribute value (title=don't — legal per HTML5) or an
-            # unclosed quote. Degrade to the naive next-'>' close instead
-            # of dropping the rest of the document (previously a silent
-            # whole-page loss with status 'ok').
-            gt = doc.find(">", m.end())
-            end_pos = n if gt < 0 else gt + 1
-        self_closing = doc[end_pos - 2:end_pos - 1] == "/" and (
-            end_pos - 2 == m.end()  # '/' directly after the tag name: <br/>
-            or doc[end_pos - 3] in _PRE_SLASH_OK)
-        if self_closing and (tag in _VOID_TAGS or tag in _FOREIGN_TAGS):
-            sink.startend(tag)
-        else:
-            # non-void self-closing: HTML5 ignores the slash — the element
-            # OPENS (counters tolerate it never closing)
-            sink.start(tag)
-            if tag in _RAWTEXT_TAGS:
-                # close tag must be followed by whitespace, '/', '>' or
-                # EOF (HTML5): '</scriptable>' must NOT close <script> —
-                # matching the bare prefix leaked script source as text
-                search = end_pos
-                close = -1
-                target = "</" + tag
-                while True:
-                    close = low.find(target, search)
-                    if close < 0:
-                        break
-                    after = low[close + len(target):close + len(target) + 1]
-                    if after in ("", ">", "/", " ", "\t", "\n", "\r", "\f"):
-                        break
-                    search = close + 1
-                if close < 0:
-                    sink.end(tag)  # unterminated raw text: skip to EOF
-                    break
-                gt = doc.find(">", close + 2 + len(tag))
-                sink.end(tag)
-                end_pos = n if gt < 0 else gt + 1
-        pos = end_pos
 
 
 def parse_blocks(doc: str) -> tuple[list[Block], bool, bool]:
     """Decoded html -> (blocks in document order, body_seen, parse_error).
 
+    A single-dispatch scanner: one ``_TOKEN_RE`` search per markup token
+    over an ASCII-lowered, offset-aligned copy of ``doc`` (tag names come
+    out lowered, and every offset is an offset into ``doc``), a branch on
+    ``m.lastindex``, and one ``_ACTIONS`` lookup per tag. The text between
+    tokens becomes a block's pieces; block tags flush the open block.
+    Counters (not stacks) make unclosed and stray tags harmless, and
+    anything unrecognized after '<' is text, so the scan is tolerant by
+    construction; unterminated constructs run to end-of-doc.
+
     Total: any scanner exception yields ([], body_seen, True) rather than
     raising (reference analogue: exceptions-as-data, exceptions.py:1-29 —
     a throwing Arrow UDF would kill the whole task batch).
     """
-    sink = _BlockSink()
+    blocks: list[Block] = []
+    pieces: list[str] = []  # decoded text pieces of the open block
+    links: list[str] = []   # the pieces that lie inside <a>
+
+    def flush(tag: str, depth: int, start: int, end: int,
+              in_boiler: bool) -> None:
+        # one split serves normalization AND the token count (identical to
+        # _normalize + text.split(): " ".join(words).split() == words)
+        words = "".join(pieces).split()
+        if words:
+            text = " ".join(words)
+            n_chars = len(text)
+            link_chars = min(n_chars, sum(
+                len(_normalize(p)) for p in links)) if links else 0
+            # tuple.__new__ skips the NamedTuple's Python-level __new__
+            # (this is the kernel's hot path); all 11 fields, in order
+            blocks.append(tuple.__new__(Block, (
+                len(blocks), tag, depth, start, end, text, n_chars,
+                len(words), link_chars, in_boiler,
+                # stage-1 coarse candidate gate (integer arithmetic only):
+                # enough chars, not link-dominated, not inside a boiler
+                # container
+                n_chars >= MIN_CANDIDATE_CHARS
+                and 4 * link_chars < 3 * n_chars and not in_boiler)))
+        pieces.clear()
+        links.clear()
+
+    body_seen = False
     try:
-        _scan(doc, sink)
-        sink._flush()
+        # str.lower() IS the ASCII map on ASCII text, and much faster
+        low = doc.lower() if doc.isascii() else doc.translate(_ASCII_LOWER)
+        search = _TOKEN_RE.search
+        actions = _ACTIONS.get
+        n = len(doc)
+        skip = boiler = anchor = depth = 0
+        block_tag = "body"  # block tag context for the next flush
+        start = end = -1    # char span of the open block's pieces
+        pos = 0
+        while pos < n:
+            m = search(low, pos)
+            lt = n if m is None else m.start()
+            if lt > pos and not skip:
+                raw = doc[pos:lt]
+                if start < 0:
+                    start = pos
+                end = lt
+                # entity decode only when present (html.unescape is
+                # regex-based and worth skipping for entity-free runs)
+                if "&" in raw:
+                    raw = _htmlmod.unescape(raw)
+                pieces.append(raw)
+                if anchor:
+                    links.append(raw)
+            if m is None:
+                break
+            k = m.lastindex
+            pos = m.end()
+            if k == _OPEN:
+                name = m[4]
+                act = actions(name, 0)
+                if not act:
+                    depth += 1
+                    continue
+                if act & _RAWTEXT:
+                    # skip to past the close tag; the element's open and
+                    # close leave every counter as it was
+                    close = _RAWTEXT_CLOSE[name].search(low, pos)
+                    if close is None:  # unterminated raw text: skip to EOF
+                        break
+                    pos = close.end()
+                    continue
+                if act & _BLOCK:
+                    if pieces:
+                        flush(block_tag, depth, start, end, boiler > 0)
+                        start = -1
+                    block_tag = name
+                    body_seen = body_seen or name == "body"
+                # honored self-closing ('/' right after the name as in
+                # <br/>, or after a legal char): nothing opens
+                if (act & (_VOID | _FOREIGN) and low[pos - 2:pos - 1] == "/"
+                        and (pos - 2 == m.end(4)
+                             or low[pos - 3] in _PRE_SLASH_OK)):
+                    continue
+                # a non-void, non-foreign '/>' OPENS (HTML5 ignores the
+                # slash; counters tolerate it never closing)
+                if act & _ANCHOR:
+                    anchor += 1
+                if act & _SKIP:
+                    skip += 1
+                if act & _BOILER:
+                    boiler += 1
+                if not act & _VOID:
+                    depth += 1
+            elif k == _CLOSE:
+                name = m[3]
+                act = actions(name, 0)
+                if act & _BLOCK:
+                    if pieces:
+                        flush(block_tag, depth, start, end, boiler > 0)
+                        start = -1
+                    block_tag = name
+                if act & _ANCHOR and anchor:
+                    anchor -= 1
+                if act & _SKIP and skip:
+                    skip -= 1
+                if act & _BOILER and boiler:
+                    boiler -= 1
+                if not act & _VOID and depth:
+                    depth -= 1
+            elif k == _LITERAL:
+                # a bare '<', or '</' before a non-name, is text and its OWN
+                # piece: n_link_chars normalizes per piece, so merging it
+                # with the runs around it would change link density
+                if not skip:
+                    if start < 0:
+                        start = lt
+                    end = pos
+                    pieces.append(doc[lt:pos])
+                    if anchor:
+                        links.append(doc[lt:pos])
+            # comments, declarations and processing instructions: skipped
+        if pieces:
+            flush(block_tag, depth, start, end, boiler > 0)
     except Exception:
-        return [], sink.body_seen, True
-    return sink.blocks, sink.body_seen, False
+        return [], body_seen, True
+    return blocks, body_seen, False
 
 
 def classify(blocks: list[Block]) -> list[bool]:

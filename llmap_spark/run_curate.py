@@ -6,7 +6,7 @@
     python -m llmap_spark.run_curate \
         --input  /path/to/documents_parquet \
         --output /path/to/kept_parquet \
-        [--verify-jaccard 0.5] [--cores 32] \
+        [--verify-jaccard 0.5] [--cores N] \
         [--emit corpus --benchmark /path/to/benchmark_parquet]
 
 Writes the kept (doc_id) list as parquet (or, with --emit corpus, the
@@ -33,7 +33,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--cores", type=int, default=None,
-                    help="local mode cores (ignored under a real master)")
+                    help="local mode cores (ignored under a real master; "
+                         "default: SPARK_GRAFT_CPUS, else the cores this "
+                         "process may run on)")
     ap.add_argument("--checkpoint-dir", default=None,
                     help="reliable checkpoint location (HDFS/S3/local dir); "
                          "when set, the component iteration uses cluster "
@@ -70,9 +72,10 @@ def main(argv: list[str] | None = None) -> int:
         # every crawl timestamp
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     else:
-        from llmap_spark.session import get_spark, scan_conf_for
+        from llmap_spark.session import (get_spark, local_defaults,
+                                         scan_conf_for)
 
-        cores = args.cores or 32
+        cores = args.cores or local_defaults().cores
         spark = get_spark(app_name="llmap-curate", cores=cores,
                           extra_conf=scan_conf_for(args.input, cores))
 

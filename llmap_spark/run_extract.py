@@ -6,7 +6,7 @@
         --input  /path/to/pages_parquet_or_warc_dir \
         --output /path/to/output_root \
         [--input-format parquet|warc] [--export-wet /path/to/wet_dir] \
-        [--repartition 0] [--n-salts 8] [--staged] [--cores 32]
+        [--repartition 0] [--n-salts 8] [--staged] [--cores N]
 
 Runs one snapshot commit (resuming past committed urls), prints a JSON
 summary line. Safe to re-run: completed inputs are a no-op.
@@ -39,7 +39,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--staged", action="store_true",
                     help="use the two-UDF funnel plan instead of the fused pass")
     ap.add_argument("--cores", type=int, default=None,
-                    help="local mode cores (ignored under a real master)")
+                    help="local mode cores (ignored under a real master; "
+                         "default: SPARK_GRAFT_CPUS, else the cores this "
+                         "process may run on)")
     ap.add_argument("--compact", nargs="?", const=0, default=None, type=int,
                     metavar="N_FILES",
                     help="after committing, rewrite all live snapshots into "
@@ -63,9 +65,10 @@ def main(argv: list[str] | None = None) -> int:
         # every crawl timestamp
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     else:
-        from llmap_spark.session import get_spark, scan_conf_for
+        from llmap_spark.session import (get_spark, local_defaults,
+                                         scan_conf_for)
 
-        cores = args.cores or 32
+        cores = args.cores or local_defaults().cores
         spark = get_spark(app_name="llmap-extract",
                           cores=cores,
                           extra_conf=scan_conf_for(args.input, cores))

@@ -9,6 +9,7 @@ memory-bounded, UTC timezone pinned for oracle comparability.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -39,11 +40,35 @@ def scan_conf_for(input_path: str, cores: int, splits_per_core: int = 3) -> dict
     }
 
 
+class LocalDefaults(NamedTuple):
+    cores: int
+    driver_memory: str  # a spark.driver.memory value
+
+
+def local_defaults() -> LocalDefaults:
+    """Local-mode sizing taken from the box this process runs on.
+
+    ``cores``: ``SPARK_GRAFT_CPUS``, else the cores this process may run on
+    (its affinity mask, which taskset and cgroup cpusets narrow).
+    ``driver_memory``: ``LLMAP_DRIVER_MEM``, else half of physical RAM and
+    at most 16g, so the driver heap never asks for more than the machine
+    has.
+    """
+    cores = os.environ.get("SPARK_GRAFT_CPUS")
+    memory = os.environ.get("LLMAP_DRIVER_MEM")
+    if not memory:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        memory = f"{min(16 << 10, ram_mb // 2)}m"
+    return LocalDefaults(
+        int(cores) if cores else len(os.sched_getaffinity(0)), memory)
+
+
 def get_spark(app_name: str = "llmap_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
+    defaults = local_defaults()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = defaults.cores
     if shuffle_partitions is None:
         shuffle_partitions = 2 * cores
     b = (
@@ -64,7 +89,7 @@ def get_spark(app_name: str = "llmap_spark", cores: int | None = None,
         # shuffle volume. Env-overridable for A/B.
         .config("spark.io.compression.codec",
                 os.environ.get("LLMAP_SHUFFLE_CODEC", "zstd"))
-        .config("spark.driver.memory", os.environ.get("LLMAP_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", defaults.driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
