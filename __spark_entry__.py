@@ -177,7 +177,7 @@ def _q_extract_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule out drift between the family twins and this whole-corpus one."""
     from llmap_spark.plans.pipeline import ExtractConfig, extract
 
-    ex = extract(_pages(spark, sf_dir), ExtractConfig(fuse=True))
+    ex = extract(_pages(spark, sf_dir), ExtractConfig())
     return ex.select(
         F.regexp_extract("url", r"/p(\d+)$", 1).cast("long").alias("page_i"),
         "lang", "extracted_text", "n_blocks_kept", "n_blocks_total",
@@ -1074,7 +1074,7 @@ def _q_link_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link extraction verified end-to-end: html is synthesized JVM-side
     with hrefs planted as doc_id arithmetic, the JVM regexp extractor pulls
     them back, and the oracle recomputes the planted values — the same
-    planted-roundtrip construction as multimodal_image_meta."""
+    planted-roundtrip construction as extract_roundtrip."""
     from llmap_spark.operators.links import extract_hrefs
 
     d = _docs(spark, sf_dir).select("doc_id")
@@ -1518,362 +1518,6 @@ def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("html").alias("payload_md5"))
 
 
-def _q_extract_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PDF text extraction, driver-verified: documents are rendered
-    into minimal PDFs (deterministically varied Tj/TJ/hex string codings and
-    Flate/raw stream codings by doc_id), then the stdlib text-layer kernel
-    (llmap_spark.pdf) extracts them back over a binary column. The oracle is
-    the normalized source text — a byte-exact roundtrip, same construction
-    as extract_roundtrip for HTML."""
-    import pandas as pd
-
-    from llmap_spark.functions.multimodal import with_pdf_text
-    from llmap_spark.pdf import make_pdf
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def gen(batches):
-        for pdf_ in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf_["doc_id"],
-                "payload": [make_pdf(t or "", int(d))
-                            for d, t in zip(pdf_["doc_id"], pdf_["text"])],
-            })
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_pdf_text(payloads, "payload", keep_cols=("doc_id",)).select(
-        "doc_id", "extracted_text")
-
-
-def _q_extract_pdf_cid_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMap-tier PDF extraction, driver-verified: documents render into
-    Type0/Identity-H-style PDFs whose text shows are 2-byte CID hex strings
-    resolved through a /ToUnicode CMap (codes deliberately unrelated to
-    Unicode values — skipping the CMap cannot round-trip). Oracle: the
-    normalized source text, like extract_pdf_roundtrip."""
-    import pandas as pd
-
-    from llmap_spark.functions.multimodal import with_pdf_text
-    from llmap_spark.pdf import make_pdf_cid
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def gen(batches):
-        for pdf_ in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf_["doc_id"],
-                "payload": [make_pdf_cid(t or "", int(d))
-                            for d, t in zip(pdf_["doc_id"], pdf_["text"])],
-            })
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_pdf_text(payloads, "payload", keep_cols=("doc_id",)).select(
-        "doc_id", "extracted_text")
-
-
-def _q_multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media header metadata, driver-verified: deterministic
-    PNG/GIF/JPEG/WAV payloads are generated with dimensions/depth/rate
-    planted as pure doc_id arithmetic, then parsed back from the container
-    headers by llmap_spark.media_meta (stdlib, integer-exact). The oracle
-    recomputes the planted formulas from doc_id — a full encode/parse
-    roundtrip with a hashable SQL twin. Kind families are kept per-query
-    so no sort-leading column mixes NULL and int (the driver's
-    order-insensitive compare sorts row tuples): the MP4 leg lives in
-    multimodal_video_meta, whose columns are all non-null."""
-    import pandas as pd
-
-    from llmap_spark.media_meta import (make_gif, make_jpeg, make_mp4,
-                                        make_png, make_wav, with_media_meta)
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                w, h = 16 + d % 97, 16 + d % 53
-                k = d % 4
-                if k == 0:
-                    p = make_png(w, h, 8 if d % 2 == 0 else 16)
-                elif k == 1:
-                    p = make_gif(w, h, (d % 8) + 1)
-                elif k == 2:
-                    p = make_jpeg(w, h, 8)
-                else:
-                    p = make_wav(8000 * (1 + d % 6), 1 + d % 2, 8 * (1 + d % 2))
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"], "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    # pin the pre-r5 column set: the r5 orientation column lives in
-    # multimodal_image_meta2 (below), keeping this oracle stable
-    return with_media_meta(payloads, "payload", keep_cols=("doc_id",)) \
-        .select("doc_id", "kind", "width", "height", "bit_depth",
-                "sample_rate", "channels", "duration_ms")
-
-
-def _q_multimodal_image_meta2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r5 image-container legs, driver-verified the same way as
-    multimodal_image_meta: WebP (all three chunk layouts: VP8 lossy
-    sync-coded 14-bit dims, VP8L signature-packed dims, VP8X 24-bit
-    canvas), TIFF (both byte orders, IFD-walked dims/bits/orientation)
-    and JPEG carrying an APP1/Exif TIFF stream (orientation tag 274).
-    Every planted value is doc_id arithmetic the oracle replays;
-    orientation is NULL for the WebP rows (doc_id leads the sort tuple,
-    so the mixed column is compare-safe)."""
-    import pandas as pd
-
-    from llmap_spark.media_meta import (make_jpeg_exif, make_tiff,
-                                        make_webp, with_media_meta)
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                w, h = 1 + d % 800, 1 + d % 600
-                k = d % 6
-                if k == 0:
-                    p = make_webp(w, h, "vp8")
-                elif k == 1:
-                    p = make_webp(w, h, "vp8l")
-                elif k == 2:
-                    p = make_webp(w, h, "vp8x")
-                elif k == 3:
-                    p = make_tiff(w, h, 8 * (1 + d % 2), 1 + d % 8,
-                                  little_endian=True)
-                elif k == 4:
-                    p = make_tiff(w, h, 8 * (1 + d % 2), 1 + d % 8,
-                                  little_endian=False)
-                else:
-                    p = make_jpeg_exif(w, h, 1 + d % 8)
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_media_meta(payloads, "payload", keep_cols=("doc_id",)) \
-        .select("doc_id", "kind", "width", "height", "bit_depth",
-                "orientation")
-
-
-def _q_multimodal_png_decode_planted(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """REAL pixel decode (llmap_spark.png: stdlib inflate + unfilter —
-    the r4 'env-blocked' seam made real for PNG), hash-verified: every
-    doc is encoded as a constant-pixel PNG (grey v for even docs, RGB
-    (v,v+1,v+2) for odd; v = 32 + d%93 keeps all bytes ASCII so DuckDB
-    chr()/repeat() reproduce the exact pixel byte stream), decoded
-    distributed, and summarized as integer mean_x1000 + md5 of the raw
-    decoded pixels — both pure arithmetic for the oracle."""
-    import pandas as pd
-
-    from llmap_spark.functions.multimodal import with_png_decode
-    from llmap_spark.png import encode_png
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                w, h, v = 1 + d % 32, 1 + d % 24, 32 + d % 93
-                if d % 2 == 0:
-                    payloads.append(encode_png(bytes([v]) * (w * h),
-                                               w, h, 1))
-                else:
-                    payloads.append(encode_png(
-                        bytes([v, v + 1, v + 2]) * (w * h), w, h, 3))
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_png_decode(payloads, "payload", keep_cols=("doc_id",))
-
-
-def _q_multimodal_png_resize_planted(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """REAL resize end-to-end (decode -> integer nearest-neighbor
-    resample -> re-encode -> decode), hash-verified: constant-pixel
-    PNGs resample to constant-pixel PNGs at planted output dims, so the
-    resized pixel md5 is repeat-arithmetic the oracle replays."""
-    import pandas as pd
-
-    from llmap_spark.functions.multimodal import resize_image, with_png_decode
-    from llmap_spark.png import encode_png
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                w, h, v = 4 + d % 29, 3 + d % 23, 32 + d % 93
-                png = encode_png(bytes([v]) * (w * h), w, h, 1)
-                payloads.append(resize_image(png, 1 + d % 8, 1 + d % 6))
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_png_decode(payloads, "payload", keep_cols=("doc_id",))
-
-
-def _q_multimodal_gif_decode_planted(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """REAL GIF LZW decode (llmap_spark.gif), hash-verified like the PNG
-    twin: every doc encodes a constant-index frame whose 2-entry palette
-    head is (v, v+1, v+2) with v = 32 + d%93 (ASCII-safe), so the
-    decoded RGB stream is chr/repeat arithmetic and the mean is exactly
-    v+1. The encode side exercises the uncompressed-LZW writer; the
-    distributed decode exercises the variable-width reader."""
-    import pandas as pd
-
-    from llmap_spark.functions.multimodal import with_image_decode
-    from llmap_spark.gif import encode_gif
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                w, h, v = 1 + d % 30, 1 + d % 20, 32 + d % 93
-                pal = bytes([v, v + 1, v + 2, 0, 0, 0])
-                payloads.append(encode_gif(bytes(w * h), w, h, pal))
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_image_decode(payloads, "payload", keep_cols=("doc_id",))
-
-
-def _q_multimodal_wav_decode_planted(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """REAL WAV PCM sample decode (llmap_spark.audio), hash-verified:
-    every doc is a mono 16-bit WAV whose constant sample has identical
-    low/high bytes c = 32 + d%93 (ASCII-safe), so the sample value is
-    exactly c*257, the integer amplitude stats are arithmetic, and the
-    raw PCM md5 is chr/repeat arithmetic. Positive samples only — the
-    Python floor division and DuckDB's truncating division agree on
-    non-negative sums (the documented cross-engine rule)."""
-    import pandas as pd
-
-    from llmap_spark.audio import encode_wav
-    from llmap_spark.functions.multimodal import with_audio_decode
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                c, nf = 32 + d % 93, 10 + d % 50
-                payloads.append(encode_wav(bytes([c, c]) * nf,
-                                           8000 * (1 + d % 6), 1, 16))
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_audio_decode(payloads, "payload", keep_cols=("doc_id",))
-
-
-def _q_multimodal_jpeg_decode_planted(spark: SparkSession,
-                                      sf_dir: str) -> DataFrame:
-    """REAL baseline JPEG decode (llmap_spark.jpeg: Huffman + dequant +
-    IDCT), hash-verified like the PNG/GIF twins: constant GRAYSCALE
-    images under the all-ones quant table are LOSSLESS through the full
-    entropy/DCT pipeline (DC-only spectrum), so v = 32 + d%93 planted
-    pixels reproduce exactly and the decoded stats are chr/repeat
-    arithmetic. The encode side exercises the Huffman writer, the
-    distributed decode the reader + IDCT."""
-    import pandas as pd
-
-    from llmap_spark.functions.multimodal import with_image_decode
-    from llmap_spark.jpeg import encode_jpeg
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                w, h, v = 1 + d % 31, 1 + d % 23, 32 + d % 93
-                payloads.append(encode_jpeg(bytes([v]) * (w * h),
-                                            w, h, 1))
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_image_decode(payloads, "payload", keep_cols=("doc_id",))
-
-
-def _q_multimodal_flac_decode_planted(spark: SparkSession,
-                                      sf_dir: str) -> DataFrame:
-    """REAL FLAC sample decode (llmap_spark.flac: rice/LPC bit reader —
-    lossless, so decoded PCM hashes byte-exactly), hash-verified like
-    the WAV twin: constant samples c*257 (identical ASCII-safe int16
-    bytes), n = 200 + d%300 SAMPLES per doc, so ~81% of docs exceed the
-    256-sample frame size and exercise the multi-frame walk (review
-    finding: the first 10+d%300 range left only ~18% multi-frame).
-    mean is arithmetic; md5 is chr/repeat over n samples."""
-    import pandas as pd
-
-    from llmap_spark.flac import encode_flac_constant
-    from llmap_spark.functions.multimodal import with_audio_decode
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                c, n = 32 + d % 93, 200 + d % 300
-                payloads.append(encode_flac_constant(
-                    c * 257, n, 8000 * (1 + d % 6)))
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_audio_decode(payloads, "payload", keep_cols=("doc_id",))
-
-
-def _q_multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MP4 (ISO-BMFF) header metadata, driver-verified: every doc is
-    rendered as a minimal ftyp+moov(mvhd+trak(tkhd)) file with planted
-    16.16-fixed track dimensions and a timescale-normalized duration,
-    then parsed back by the stdlib box walker (media_meta._mp4). All
-    output columns are non-null by construction (see
-    multimodal_image_meta on why that matters for the compare)."""
-    import pandas as pd
-
-    from llmap_spark.media_meta import make_mp4, with_media_meta
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = [
-                make_mp4(16 + int(d) % 97, 16 + int(d) % 53,
-                         1000 + int(d) % 9973)
-                for d in pdf_["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_media_meta(payloads, "payload", keep_cols=("doc_id",)) \
-        .select("doc_id", "kind", "width", "height", "duration_ms")
-
-
 def _q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RFC 9309 robots.txt gate (operators/robots.py), hash-verified
     with planted WILDCARD-FREE rules so the longest-match decision
@@ -1906,115 +1550,6 @@ def _q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN id % 3 = 0 THEN '\nDisallow: /tmp/' ELSE '' END)"
         ).alias("body"))
     return filter_robots_disallowed(urls, hosts).select("doc_id", "url")
-
-
-def _q_multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC + MP3 header metadata, driver-verified: even docs render FLAC
-    STREAMINFO blocks (planted rate/channels/total-samples -> exact
-    duration), odd docs render ID3+MPEG1-Layer-III frames (planted
-    rate/bitrate indexes -> CBR duration estimate). Only columns non-null
-    for BOTH kinds are selected (the sort-tuple compare rule documented
-    on multimodal_image_meta)."""
-    import pandas as pd
-
-    from llmap_spark.media_meta import make_flac, make_mp3, with_media_meta
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                if d % 2 == 0:
-                    rate = 8000 * (1 + d % 6)
-                    payloads.append(make_flac(
-                        rate, 1 + (d // 2) % 2, 8 * (1 + d % 3),
-                        rate * (1 + d % 7)))
-                else:
-                    payloads.append(make_mp3(
-                        d % 3, 1 + d % 14, 1000 + d % 4096,
-                        mono=(d % 4 == 1)))
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_media_meta(payloads, "payload", keep_cols=("doc_id",)) \
-        .select("doc_id", "kind", "sample_rate", "channels", "duration_ms")
-
-
-def _q_multimodal_resize_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-resize plumbing (multimodal.with_resize_plan), driver-
-    verified: real PNGs with planted dimensions are fit to a 64x48 box;
-    header parse is REAL (media_meta), the fit scale and output
-    dimensions are integer arithmetic the oracle replays, and only the
-    pixel transform is the declared fake (payload-prefix; its byte length
-    depends on zlib output so it stays out of the hashed columns)."""
-    import pandas as pd
-
-    from llmap_spark.functions.multimodal import with_resize_plan
-    from llmap_spark.media_meta import make_png
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = [make_png(16 + int(d) % 97, 16 + int(d) % 53)
-                        for d in pdf_["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    payloads = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return with_resize_plan(payloads, "payload", max_w=64, max_h=48,
-                            keep_cols=("doc_id",)).select(
-        "doc_id", "orig_w", "orig_h", "out_w", "out_h", "scale_x1000")
-
-
-def _q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling plumbing, driver-verified: payloads of planted size
-    (pure doc_id arithmetic, built JVM-side) fan out 1->4 frame rows whose
-    offsets/lengths the oracle recomputes. The frame 'decode' is a declared
-    fake (payload slices); the Spark shape is the real contract."""
-    from llmap_spark.functions.multimodal import with_frame_samples
-
-    payloads = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("cast(repeat('x', cast(100 + doc_id % 400 as int)) as binary)")
-        .alias("payload"))
-    return with_frame_samples(payloads, "payload", keep_cols=("doc_id",),
-                              n_frames=4).select(
-        "doc_id", "frame_idx", "frame_offset", "frame_len")
-
-
-def _q_multimodal_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.functions.multimodal import (sniff_media_type,
-                                                  with_media_features)
-
-    # sniff is a JVM expression: compute it BEFORE the Arrow stage and
-    # carry it through the UDF — one source scan, no self-join (the
-    # two-branch join form scanned the pages twice)
-    pages = _pages(spark, sf_dir).withColumn(
-        "media_type", sniff_media_type(F.col("html")))
-    return with_media_features(pages, "html",
-                               keep_cols=("url", "media_type"))
-
-
-def _q_multimodal_features_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The media-features plumbing (map_with_carry + byte-histogram
-    kernel), hash-verified by construction: single-symbol payloads of
-    planted length and byte value make every feature integer-exact —
-    entropy of a one-symbol distribution is EXACTLY 0 (no float-rounding
-    hazard), mean_byte is the symbol, nonzero_frac is 0 or 1000. Empty
-    payloads (doc_id%13=0) pin the zero row."""
-    from llmap_spark.functions.multimodal import with_media_features
-
-    payloads = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("CASE WHEN doc_id % 13 = 0 THEN cast('' as binary) "
-               "ELSE cast(repeat(chr(65 + doc_id % 26), "
-               "cast(50 + doc_id % 200 as int)) as binary) END")
-        .alias("payload"))
-    return with_media_features(payloads, "payload", keep_cols=("doc_id",))
 
 
 def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2180,17 +1715,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- LAST_CHECKED: never (new in r5) — inserted here as built ---
         "lang_id2": _q_lang_id2,
         "substring_dedup_planted": _q_substring_dedup_planted,
-        "multimodal_image_meta2": _q_multimodal_image_meta2,
         "frontier_iterative_planted": _q_frontier_iterative_planted,
         "robots_sitemap_frontier": _q_robots_sitemap_frontier,
-        "multimodal_png_decode_planted": _q_multimodal_png_decode_planted,
-        "multimodal_png_resize_planted": _q_multimodal_png_resize_planted,
-        "multimodal_gif_decode_planted": _q_multimodal_gif_decode_planted,
-        "multimodal_wav_decode_planted": _q_multimodal_wav_decode_planted,
         "fetch_schedule_planted": _q_fetch_schedule_planted,
         "token_count_cjk": _q_token_count_cjk,
-        "multimodal_jpeg_decode_planted": _q_multimodal_jpeg_decode_planted,
-        "multimodal_flac_decode_planted": _q_multimodal_flac_decode_planted,
         "dedup_minhash_incremental_planted":
             _q_dedup_minhash_incremental_planted,
         # --- LAST_CHECKED: r2 (green r1+r2 or r2 only; oldest rows) ---
@@ -2230,11 +1758,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scrub_normalize": _q_scrub_normalize,
         # --- LAST_CHECKED: r4, single green row ever (checked once) ---
         "warc_roundtrip": _q_warc_roundtrip,
-        "extract_pdf_cid_roundtrip": _q_extract_pdf_cid_roundtrip,
         "ann_brute_planted": _q_ann_brute_planted,
         "ann_ivf_planted": _q_ann_ivf_planted,
         "embedding_lsh_planted": _q_embedding_lsh_planted,
-        "multimodal_features_planted": _q_multimodal_features_planted,
         "sample_stratified": _q_sample_stratified,
         "sample_quality_weighted": _q_sample_quality_weighted,
         "sample_seeded_portable": _q_sample_seeded_portable,
@@ -2250,13 +1776,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf": _q_ann_ivf,
         "embedding_neardup": _q_embedding_neardup,
         "embedding_lsh_neardup": _q_embedding_lsh_neardup,
-        "extract_pdf_roundtrip": _q_extract_pdf_roundtrip,
-        "multimodal_image_meta": _q_multimodal_image_meta,
-        "multimodal_frame_sample": _q_multimodal_frame_sample,
-        "multimodal_media_meta": _q_multimodal_media_meta,
-        "multimodal_video_meta": _q_multimodal_video_meta,
-        "multimodal_resize_planted": _q_multimodal_resize_planted,
-        "multimodal_audio_meta": _q_multimodal_audio_meta,
         "robots_gate": _q_robots_gate,
         "keyword_topk": _q_keyword_topk,
         "sitemap_discovery": _q_sitemap_discovery,
@@ -2367,8 +1886,7 @@ def oracle_sql() -> dict[str, str]:
             feat AS (
               -- coalesce BEFORE normalizing: the generator substitutes ''
               -- for NULL text, so a NULL-text doc must derive as empty
-              -- rather than NULL-poisoning every downstream column (the
-              -- same latent hazard fixed in extract_pdf_roundtrip)
+              -- rather than NULL-poisoning every downstream column
               SELECT doc_id, lang,
                 CASE WHEN trim(regexp_replace(coalesce(text, ''),
                                               '\\s+', ' ', 'g')) = '' THEN []
@@ -2593,22 +2111,6 @@ def oracle_sql() -> dict[str, str]:
                   || '</p></body></html>') AS payload_md5
             FROM documents
         """,
-        "extract_pdf_roundtrip": """
-            -- coalesce BEFORE normalizing: the Spark side renders
-            -- make_pdf(text or ''), so a NULL-text doc must oracle to ''
-            -- rather than NULL (latent until fixtures carry NULL text,
-            -- which exact_dedup's guard already anticipates)
-            SELECT doc_id,
-                   trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))
-                     AS extracted_text
-            FROM documents
-        """,
-        "extract_pdf_cid_roundtrip": """
-            SELECT doc_id,
-                   trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))
-                     AS extracted_text
-            FROM documents
-        """,
         "link_nofollow": """
             -- reconstructs the planted anchors per kind with their
             -- in-document positions: follow anchor always at 0; lowercase
@@ -2755,44 +2257,6 @@ def oracle_sql() -> dict[str, str]:
             -- kept singleton (see _q_pipeline_kept_planted)
             SELECT doc_id FROM documents WHERE doc_id % 8 IN (0, 4, 7)
         """,
-        "multimodal_frame_sample": """
-            SELECT doc_id, CAST(fi AS int) AS frame_idx,
-              CAST(fi * ((100 + doc_id % 400) // 4) AS bigint) AS frame_offset,
-              CAST((100 + doc_id % 400) // 4 AS int) AS frame_len
-            FROM documents,
-                 LATERAL unnest(generate_series(0, 3)) AS t(fi)
-        """,
-        "multimodal_features_planted": """
-            SELECT doc_id,
-              CAST(CASE WHEN doc_id % 13 = 0 THEN 0
-                   ELSE 50 + doc_id % 200 END AS bigint) AS n_bytes,
-              CAST(0 AS int) AS entropy_x1000,
-              CAST(CASE WHEN doc_id % 13 = 0 THEN 0
-                   ELSE 65 + doc_id % 26 END AS int) AS mean_byte,
-              CAST(CASE WHEN doc_id % 13 = 0 THEN 0 ELSE 1000 END AS int)
-                AS nonzero_frac_x1000
-            FROM documents
-        """,
-        "multimodal_image_meta": """
-            SELECT doc_id,
-              CASE doc_id % 4 WHEN 0 THEN 'image/png' WHEN 1 THEN 'image/gif'
-                   WHEN 2 THEN 'image/jpeg' ELSE 'audio/wav' END AS kind,
-              CASE WHEN doc_id % 4 < 3
-                   THEN CAST(16 + doc_id % 97 AS INTEGER) END AS width,
-              CASE WHEN doc_id % 4 < 3
-                   THEN CAST(16 + doc_id % 53 AS INTEGER) END AS height,
-              CAST(CASE doc_id % 4
-                   WHEN 0 THEN CASE WHEN doc_id % 2 = 0 THEN 8 ELSE 16 END
-                   WHEN 1 THEN (doc_id % 8) + 1
-                   WHEN 2 THEN 8
-                   ELSE 8 * (1 + doc_id % 2) END AS INTEGER) AS bit_depth,
-              CASE WHEN doc_id % 4 = 3
-                   THEN CAST(8000 * (1 + doc_id % 6) AS INTEGER) END AS sample_rate,
-              CASE WHEN doc_id % 4 = 3
-                   THEN CAST(1 + doc_id % 2 AS INTEGER) END AS channels,
-              CAST(NULL AS INTEGER) AS duration_ms
-            FROM documents
-        """,
         "robots_gate": """
             -- prefix arithmetic replay of the planted rules: longest
             -- match is the Allow for %4=0 (its prefix is strictly longer
@@ -2876,47 +2340,6 @@ def oracle_sql() -> dict[str, str]:
               FROM tf t JOIN dfreq f USING (term))
             SELECT doc_id, term, tf, df_count, rank
             FROM ranked WHERE rank <= 3
-        """,
-        "multimodal_audio_meta": """
-            WITH br AS (SELECT [32, 40, 48, 56, 64, 80, 96, 112, 128,
-                                160, 192, 224, 256, 320] AS l)
-            SELECT doc_id,
-              CASE WHEN doc_id % 2 = 0 THEN 'audio/flac'
-                   ELSE 'audio/mpeg' END AS kind,
-              CAST(CASE WHEN doc_id % 2 = 0 THEN 8000 * (1 + doc_id % 6)
-                   ELSE ([44100, 48000, 32000])[1 + doc_id % 3]
-                   END AS int) AS sample_rate,
-              CAST(CASE WHEN doc_id % 2 = 0 THEN 1 + (doc_id // 2) % 2
-                   WHEN doc_id % 4 = 1 THEN 1 ELSE 2 END AS int)
-                AS channels,
-              CAST(CASE WHEN doc_id % 2 = 0 THEN 1000 * (1 + doc_id % 7)
-                   ELSE (1000 + doc_id % 4096) * 8
-                        // (SELECT l[CAST(1 + doc_id % 14 AS int)] FROM br)
-                   END AS int) AS duration_ms
-            FROM documents
-        """,
-        "multimodal_resize_planted": """
-            WITH d AS (
-              SELECT doc_id,
-                CAST(16 + doc_id % 97 AS int) AS w,
-                CAST(16 + doc_id % 53 AS int) AS h
-              FROM documents),
-            sc AS (
-              SELECT *, CAST(least(1000, 64000 // w, 48000 // h) AS int)
-                AS s
-              FROM d)
-            SELECT doc_id, w AS orig_w, h AS orig_h,
-              CAST(w * s // 1000 AS int) AS out_w,
-              CAST(h * s // 1000 AS int) AS out_h,
-              s AS scale_x1000
-            FROM sc
-        """,
-        "multimodal_video_meta": """
-            SELECT doc_id, 'video/mp4' AS kind,
-              CAST(16 + doc_id % 97 AS INTEGER) AS width,
-              CAST(16 + doc_id % 53 AS INTEGER) AS height,
-              CAST(1000 + doc_id % 9973 AS INTEGER) AS duration_ms
-            FROM documents
         """,
         "token_count": f"""
             SELECT doc_id, CASE WHEN length({NORM_SQL}) = 0 THEN 0
@@ -3579,7 +3002,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY g.doc_id
         """,
         # rows-only (genuinely non-SQL-expressible: hash-signature /
-        # iterative / float-ANN / engine-specific-sampler / fake-decode
+        # iterative / float-ANN / engine-specific-sampler
         # kernels; pytest carries their oracles instead — see tests/):
         #   dedup_minhash_lsh, dedup_simhash (the exact-copy twin
         #   dedup_simhash_planted IS hash-checked), dedup_components,
@@ -3589,7 +3012,7 @@ def oracle_sql() -> dict[str, str]:
         #   embedding_neardup, embedding_lsh_neardup,
         #   pipeline_kept_docs (the planted twin pipeline_kept_planted IS
         #   hash-checked), sample_seeded (the md5-coin twin
-        #   sample_seeded_portable IS hash-checked), multimodal_media_meta
+        #   sample_seeded_portable IS hash-checked)
     }
     # extract_full = the whole corpus in one result, composed VERBATIM
     # from the three per-family derivations (each independently
@@ -3598,27 +3021,6 @@ def oracle_sql() -> dict[str, str]:
     # decoration no SQL can derive). Edge pages take lang from the
     # wrapped doc (corpus.py: lang = langs[i % ndocs]).
     d["lang_id2"] = _langid_oracle_sql()
-    d["multimodal_png_decode_planted"] = """
-        -- constant-pixel arithmetic: v = 32 + doc_id%93 (ASCII-safe so
-        -- chr()/repeat() build the exact decoded byte stream); grey for
-        -- even docs, RGB (v,v+1,v+2) for odd (mean is exactly v+1)
-        WITH p AS (
-          SELECT doc_id,
-                 CAST(1 + doc_id % 32 AS int) AS width,
-                 CAST(1 + doc_id % 24 AS int) AS height,
-                 CAST(32 + doc_id % 93 AS int) AS v,
-                 (1 + doc_id % 32) * (1 + doc_id % 24) AS npx
-          FROM documents)
-        SELECT doc_id, 'ok' AS status, width, height,
-          CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS int)
-            AS channels,
-          CAST(CASE WHEN doc_id % 2 = 0 THEN v * 1000
-               ELSE (v + 1) * 1000 END AS int) AS mean_x1000,
-          CASE WHEN doc_id % 2 = 0 THEN md5(repeat(chr(v), npx))
-               ELSE md5(repeat(chr(v) || chr(v + 1) || chr(v + 2), npx))
-          END AS px_md5
-        FROM p
-    """
     d["dedup_minhash_incremental_planted"] = """
         -- family arithmetic: batch member d (r in 2,3) matches the two
         -- seen members of its 4-block at full signature agreement
@@ -3632,38 +3034,6 @@ def oracle_sql() -> dict[str, str]:
                (doc_id // 4) * 4 + 1 AS seen_id,
                CAST(64 AS int) AS agree_x64
         FROM b
-    """
-    d["multimodal_flac_decode_planted"] = """
-        -- FLAC is lossless: constant int16 c*257 (bytes chr(c) twice)
-        -- across n frames hashes byte-exactly; mean is arithmetic
-        WITH p AS (
-          SELECT doc_id,
-                 CAST(32 + doc_id % 93 AS int) AS c,
-                 CAST(200 + doc_id % 300 AS int) AS nf
-          FROM documents)
-        SELECT doc_id, 'ok' AS status,
-          CAST(8000 * (1 + doc_id % 6) AS int) AS sample_rate,
-          CAST(1 AS int) AS channels, nf AS n_frames,
-          CAST(c * 257 * 1000 AS bigint) AS mean_milli,
-          CAST(c * 257 * 1000 AS bigint) AS abs_mean_milli,
-          md5(repeat(chr(c) || chr(c), nf)) AS s_md5
-        FROM p
-    """
-    d["multimodal_jpeg_decode_planted"] = """
-        -- constant grayscale under all-ones quant is lossless: v, dims
-        -- and the decoded pixel md5 are pure arithmetic
-        WITH p AS (
-          SELECT doc_id,
-                 CAST(1 + doc_id % 31 AS int) AS width,
-                 CAST(1 + doc_id % 23 AS int) AS height,
-                 CAST(32 + doc_id % 93 AS int) AS v,
-                 (1 + doc_id % 31) * (1 + doc_id % 23) AS npx
-          FROM documents)
-        SELECT doc_id, 'ok' AS status, width, height,
-          CAST(1 AS int) AS channels,
-          CAST(v * 1000 AS int) AS mean_x1000,
-          md5(repeat(chr(v), npx)) AS px_md5
-        FROM p
     """
     d["token_count_cjk"] = """
         -- 'alpha beta gamma' + k CJK chars + ' delta tail' = 5 + k
@@ -3693,53 +3063,6 @@ def oracle_sql() -> dict[str, str]:
         -- replay the operator's max_per_host budget (default 10000) so
         -- the twin cannot desync at a tier where a host exceeds it
         WHERE slot < 10000
-    """
-    d["multimodal_wav_decode_planted"] = """
-        -- constant mono 16-bit PCM: sample value c*257 with identical
-        -- ASCII-safe low/high bytes c; stats and PCM md5 are arithmetic
-        WITH p AS (
-          SELECT doc_id,
-                 CAST(32 + doc_id % 93 AS int) AS c,
-                 CAST(10 + doc_id % 50 AS int) AS nf
-          FROM documents)
-        SELECT doc_id, 'ok' AS status,
-          CAST(8000 * (1 + doc_id % 6) AS int) AS sample_rate,
-          CAST(1 AS int) AS channels, nf AS n_frames,
-          CAST(c * 257 * 1000 AS bigint) AS mean_milli,
-          CAST(c * 257 * 1000 AS bigint) AS abs_mean_milli,
-          md5(repeat(chr(c) || chr(c), nf)) AS s_md5
-        FROM p
-    """
-    d["multimodal_gif_decode_planted"] = """
-        -- constant-index GIF: every pixel is palette entry 0 =
-        -- (v, v+1, v+2), v ASCII-safe, mean exactly v+1
-        WITH p AS (
-          SELECT doc_id,
-                 CAST(1 + doc_id % 30 AS int) AS width,
-                 CAST(1 + doc_id % 20 AS int) AS height,
-                 CAST(32 + doc_id % 93 AS int) AS v,
-                 (1 + doc_id % 30) * (1 + doc_id % 20) AS npx
-          FROM documents)
-        SELECT doc_id, 'ok' AS status, width, height,
-          CAST(3 AS int) AS channels,
-          CAST((v + 1) * 1000 AS int) AS mean_x1000,
-          md5(repeat(chr(v) || chr(v + 1) || chr(v + 2), npx)) AS px_md5
-        FROM p
-    """
-    d["multimodal_png_resize_planted"] = """
-        -- resample of a constant image is the constant at the planted
-        -- output dims: pure repeat-arithmetic
-        WITH p AS (
-          SELECT doc_id,
-                 CAST(1 + doc_id % 8 AS int) AS width,
-                 CAST(1 + doc_id % 6 AS int) AS height,
-                 CAST(32 + doc_id % 93 AS int) AS v
-          FROM documents)
-        SELECT doc_id, 'ok' AS status, width, height,
-          CAST(1 AS int) AS channels,
-          CAST(v * 1000 AS int) AS mean_x1000,
-          md5(repeat(chr(v), width * height)) AS px_md5
-        FROM p
     """
     d["robots_sitemap_frontier"] = """
         -- frontier_iterative_planted's closure plus the odd-doc extra
@@ -3793,22 +3116,6 @@ def oracle_sql() -> dict[str, str]:
                'https://s' || ds || '.example/child1.xml' AS src_loc,
                CAST(2 AS int) AS round
         FROM base WHERE doc_id % 2 = 1
-    """
-    d["multimodal_image_meta2"] = """
-        -- planted WebP/TIFF/JPEG-EXIF arithmetic (see the query
-        -- docstring): k=0..2 WebP variants (8-bit by format, no
-        -- orientation), k=3..4 TIFF LE/BE, k=5 JPEG+Exif
-        SELECT doc_id,
-          CASE WHEN doc_id % 6 <= 2 THEN 'image/webp'
-               WHEN doc_id % 6 <= 4 THEN 'image/tiff'
-               ELSE 'image/jpeg' END AS kind,
-          CAST(1 + doc_id % 800 AS int) AS width,
-          CAST(1 + doc_id % 600 AS int) AS height,
-          CAST(CASE WHEN doc_id % 6 IN (3, 4) THEN 8 * (1 + doc_id % 2)
-               ELSE 8 END AS int) AS bit_depth,
-          CAST(CASE WHEN doc_id % 6 <= 2 THEN NULL
-               ELSE 1 + doc_id % 8 END AS int) AS orientation
-        FROM documents
     """
     d["substring_dedup_planted"] = """
         -- arithmetic replay of the planted construction (see the query

@@ -85,8 +85,6 @@ def main() -> int:
         # the mandated explicit salted url-hash repartition variant
         ("extract_salted_shuffle", lambda: noop(extract(pages, ExtractConfig(
             repartition=2 * cpus)))),
-        # the two-UDF funnel plan (block IR crosses Arrow twice)
-        ("extract_staged", lambda: noop(extract(pages, ExtractConfig(fuse=False)))),
         ("textstats", lambda: noop(
             fingerprint(quality_features(lang_id(docs))))),
         # corpus scrubbing deliverable shape (paragraph dedup -> redact)
@@ -103,10 +101,6 @@ def main() -> int:
             entry._q_windowed_events(spark, sf_dir))),
         ("topk_per_user", lambda: noop(
             entry._q_topk_per_user(spark, sf_dir))),
-        # PDF text layer: generate + extract in one plan (generation is the
-        # smaller half; the timing is honest about including it)
-        ("pdf_gen_extract", lambda: noop(
-            entry._q_extract_pdf_roundtrip(spark, sf_dir))),
         # the composed curation chain (quality -> dedup -> LSH -> CC)
         ("pipeline_kept_docs", lambda: noop(
             entry._q_pipeline_kept_docs(spark, sf_dir))),

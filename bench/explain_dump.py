@@ -45,7 +45,6 @@ def main(tag: str, suffix: str) -> int:
     plans = {
         "extract_write": lambda: extract(pages, ExtractConfig()),
         "extract_salted_shuffle": lambda: extract(pages, ExtractConfig(repartition=2 * cpus)),
-        "extract_staged": lambda: extract(pages, ExtractConfig(fuse=False)),
         "textstats": lambda: fingerprint(quality_features(lang_id(docs))),
         "scrub": lambda: redact_pii(
             dedup_paragraphs(docs).withColumnRenamed("text_clean", "text")),
@@ -55,7 +54,6 @@ def main(tag: str, suffix: str) -> int:
         "ann_brute_force": lambda: brute_force_topk(spark, emb, emb, k=10),
         "windowed_events": lambda: entry._q_windowed_events(spark, sf_dir),
         "topk_per_user": lambda: entry._q_topk_per_user(spark, sf_dir),
-        "pdf_gen_extract": lambda: entry._q_extract_pdf_roundtrip(spark, sf_dir),
         "pipeline_kept_docs": lambda: kept_documents(docs),
         "lang_id2": lambda: lang_id2_op(docs),
         "substring_dedup": lambda: substring_dedup(docs, min_len=50)

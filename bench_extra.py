@@ -70,7 +70,6 @@ def main(groups: list[str]) -> int:
     if want("extract"):
         timed("extract_fused_noop", lambda: noop(extract(pages, ExtractConfig())))
         timed("extract_salted_noop", lambda: noop(extract(pages, ExtractConfig(repartition=2 * cpus))))
-        timed("extract_staged_noop", lambda: noop(extract(pages, ExtractConfig(fuse=False))))
         # scan+decode only: how much is the source scan worth?
         timed("pages_scan_only", lambda: noop(pages.select("url", "warc_ts", "html", "lang")))
 
@@ -155,10 +154,6 @@ def main(groups: list[str]) -> int:
         import __spark_entry__ as entry
         timed("windowed_events", lambda: noop(entry._q_windowed_events(spark, sf_dir)))
         timed("topk_per_user", lambda: noop(entry._q_topk_per_user(spark, sf_dir)))
-
-    if want("pdf"):
-        import __spark_entry__ as entry
-        timed("pdf_gen_extract", lambda: noop(entry._q_extract_pdf_roundtrip(spark, sf_dir)))
 
     if want("langid"):
         from llmap_spark.operators.langid import lang_id2

@@ -10,8 +10,8 @@ Layout:
   oracle.py      — single-process reference runner + CLI
   corpus.py      — seeded synthetic pages-table generator
   session.py     — SparkSession builder with scale-tuned confs
-  functions/     — Arrow-vectorized UDF wrappers around the kernel
-  operators/     — dedup, similarity, text-stats, binpack, multimodal
+  functions/     — the mapInArrow UDF around the kernel
+  operators/     — curation chain (quality, dedup, scrub) + text/link ops
   sources/       — pages reader + Iceberg-style snapshot sink with resume
   plans/         — pipeline assembly (extract funnel) + lineage
   streaming/     — Structured Streaming variants

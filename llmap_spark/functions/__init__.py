@@ -1,7 +1,7 @@
-"""Arrow-vectorized UDF wrappers around the pure kernel.
+"""The Arrow-batched UDF around the pure kernel.
 
-No per-row Python UDFs anywhere (BASELINE.json input_hint mandate): only
-``mapInPandas`` / ``pandas_udf`` batch kernels. All heavy work stays in
-:mod:`llmap_spark.kernel`, which is also the oracle — these wrappers only
-adapt pandas batches to kernel calls.
+No per-row Python UDFs anywhere (BASELINE.json input_hint mandate): one
+``mapInArrow`` batch kernel. All heavy work stays in
+:mod:`llmap_spark.kernel`, which is also the oracle — the wrapper only
+adapts Arrow batches to kernel calls.
 """

@@ -6,7 +6,7 @@ input), and deterministic. The exact same functions run in two harnesses:
 
   * row-at-a-time in-process via :mod:`llmap_spark.oracle` (the reference
     extractor tests compare against), and
-  * batched over pandas Series inside Arrow-vectorized Spark UDFs
+  * batched over Arrow record batches inside one ``mapInArrow`` UDF
     (:mod:`llmap_spark.functions.extract_udfs`).
 
 Byte-identity of ``extracted_text`` per url between the two harnesses is the
@@ -469,8 +469,8 @@ def has_candidates(blocks: list[Block]) -> bool:
 def extract_page(html: bytes | None) -> PageResult:
     """Full per-page extraction: decode -> parse -> gate -> classify -> stitch.
 
-    This composition is exactly what the staged Spark pipeline computes; the
-    oracle and the fused fast path both call it directly.
+    The oracle and the Spark UDF (``extract_fused_arrow``) both call it
+    directly, so they cannot disagree.
     """
     dec = decode_html(html)
     blocks, body_seen, perr = parse_blocks(dec.text)

@@ -8,11 +8,9 @@ parse.py:254-281).
 
 CLI:
     python -m llmap_spark.oracle blocks  <file.html> [...]
-    python -m llmap_spark.oracle extract <file.html|file.pdf> [...]
-    python -m llmap_spark.oracle status  <file.html|file.pdf> [...]
-    python -m llmap_spark.oracle meta    <file.png|gif|jpg|wav|...> [...]
+    python -m llmap_spark.oracle extract <file.html> [...]
+    python -m llmap_spark.oracle status  <file.html> [...]
     python -m llmap_spark.oracle lang    <file.txt> [...]
-    python -m llmap_spark.oracle pixels  <file.png> [...]
 """
 
 from __future__ import annotations
@@ -60,18 +58,8 @@ def extract_parquet(pages_path: str) -> "pyarrow.Table":  # noqa: F821
     return pa.Table.from_pylist(rows)
 
 
-def _dispatch(payload: bytes):
-    """Media dispatch for the CLI: PDFs take the stdlib text-layer kernel,
-    everything else the HTML block kernel — the SAME extract_any the Spark
-    UDF path uses."""
-    from llmap_spark.functions.multimodal import extract_any
-
-    return extract_any(payload)
-
-
 def main(argv: list[str]) -> int:
-    if len(argv) < 2 or argv[0] not in {"blocks", "extract", "status",
-                                        "meta", "lang", "pixels"}:
+    if len(argv) < 2 or argv[0] not in {"blocks", "extract", "status", "lang"}:
         print(__doc__, file=sys.stderr)
         return 2
     cmd, files = argv[0], argv[1:]
@@ -91,30 +79,15 @@ def main(argv: list[str]) -> int:
                       f"tok={b.n_tokens}\tlink={b.n_link_chars}/{b.n_chars}\t"
                       f"{b.text[:60]!r}")
         elif cmd == "extract":
-            r = _dispatch(html)
-            print(r.extracted_text)
-        elif cmd == "pixels":
-            # the SAME combined PNG/GIF/JPEG kernel the Spark UDF runs
-            from llmap_spark.functions.multimodal import image_pixel_stats
-
-            st_, w, h, ch, mean, md5_ = image_pixel_stats(html)
-            print(f"{f}\t{st_}\t{w}x{h}\tchannels={ch}\t"
-                  f"mean_x1000={mean}\tpx_md5={md5_}")
+            print(kernel.extract_page(html).extracted_text)
         elif cmd == "lang":
             from llmap_spark.operators.langid import detect_language
 
             lang, script, n = detect_language(
                 html.decode("utf-8", errors="replace"))
             print(f"{f}\t{lang}\tscript={script}\tletters={n}")
-        elif cmd == "meta":
-            from llmap_spark.media_meta import parse_media_meta
-
-            m = parse_media_meta(html)
-            print(f"{f}\tkind={m.kind}\twidth={m.width}\theight={m.height}\t"
-                  f"bit_depth={m.bit_depth}\tsample_rate={m.sample_rate}\t"
-                  f"channels={m.channels}")
         else:
-            r = _dispatch(html)
+            r = kernel.extract_page(html)
             print(f"{f}\t{r.status}\tkept={r.n_blocks_kept}/{r.n_blocks_total}\t"
                   f"chars={len(r.extracted_text)}")
     return 0

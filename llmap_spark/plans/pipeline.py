@@ -5,21 +5,20 @@ Target lifecycle (SURVEY.md §3.4), mirroring the reference's 3-phase funnel
 
     read pages
       -> salted url-hash repartition               [explicit shuffle, §4.3]
-      -> stage 1 coarse: mapInArrow -> packed block IR + candidate features
-      -> funnel gate: JVM-side projection empties the packed block IR for
-         pages with zero candidate blocks, so gated rows ship NO payload
-         into refine (coarse-first / refine-on-survivors, llmap.py:139-174)
-      -> refine: classify + stitch                 [mapInArrow]
+      -> one mapInArrow: coarse (html -> blocks + candidate features), the
+         funnel gate (pages with zero candidate blocks skip refine,
+         coarse-first / refine-on-survivors, llmap.py:139-174), refine
+         (classify + stitch) — kernel.extract_page per row
 
 One page stays one row end-to-end and the plan is a SINGLE linear chain:
-one source scan, one stage-1 execution, zero shuffles unless the explicit
+one source scan, one Python stage, zero shuffles unless the explicit
 repartition is requested. An earlier draft expressed the funnel as a
 DataFrame-level split (filter >0 / filter ==0 / unionByName, the literal
 shape of llmap.py:173-174) — `.explain` showed Spark recomputing stage 1
 and rescanning the source once per branch, which doubles the most expensive
-work at 100 TB. The per-row gate keeps the funnel *semantics* (gated pages
-pay no refine work, not even Arrow serialization of their blocks) without
-the recomputation; this is the Spark-first restatement, not a port.
+work at 100 TB. The per-row gate inside the kernel keeps the funnel
+*semantics* (gated pages pay no refine work) without the recomputation;
+this is the Spark-first restatement, not a port.
 
 Scale notes (local[32] is the harness; design targets 1000 executors):
   * no collect(), no driver-side loops — the driver never sees page data
@@ -49,20 +48,11 @@ DEFAULT_HOT_HOSTS = (
 
 @dataclass(frozen=True)
 class ExtractConfig:
-    """fuse=True (production default): the whole funnel runs in ONE Arrow
-    pass — the coarse gate still short-circuits per page inside the kernel
-    (extract_page checks has_candidates before classify/stitch), so the
-    funnel semantics are identical; measured ~2-3x faster than the two-UDF
-    plan because the block IR never crosses the JVM<->Python boundary.
-    fuse=False materializes the funnel as two explicit mapInArrow stages
-    with a JVM-side gate — byte-identical (tested), kept for plan
-    inspection, debugging, and as the literal SURVEY §3.4 shape."""
+    """Physical layout only: no field changes the extracted rows."""
 
     repartition: int = 0          # 0 = trust source splits (no shuffle)
     n_salts: int = 8              # salt buckets for hot hosts
     hot_hosts: tuple[str, ...] = field(default=DEFAULT_HOT_HOSTS)
-    fuse: bool = True             # single-pass fast path (byte-identical)
-    keep_ops_columns: bool = True  # partition_id/salt_bucket/bytes for lineage
 
 
 OUTPUT_COLUMNS = [
@@ -112,38 +102,14 @@ def extract(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> DataFrame
 
     Pure transform: no actions, no writes; composes with resume/sink layers.
     """
-    narrow = prepared_pages(pages, cfg)
-
-    if cfg.fuse:
-        # mapInArrow: no pandas materialization, passthrough columns are
-        # zero-copy (extract_udfs.extract_fused_arrow)
-        ex = narrow.mapInArrow(U.extract_fused_arrow,
-                               schema=U.FUSED_SCHEMA + ", salt_bucket int")
-    else:
-        s1 = narrow.mapInArrow(U.stage1_coarse,
-                               schema=U.STAGE1_SCHEMA + ", salt_bucket int")
-        # funnel gate (reference coarse semi-join, llmap.py:155-158): pages
-        # with zero candidate blocks ship an EMPTY packed-block IR into
-        # refine — they pay no classify/stitch work and no Arrow payload
-        # beyond a constant few bytes. Kernel classify([])/stitch([])
-        # yields ('', []) for them, matching the oracle, so the gate is
-        # physical-only. The gate reads only the typed n_candidates
-        # column; the packed IR stays an opaque buffer JVM-side (r6: the
-        # earlier array<struct> IR forced a full nested Arrow->InternalRow
-        # ->Arrow round trip between the two Python stages).
-        gated = s1.withColumn(
-            "blocks",
-            F.when(F.col("n_candidates") > 0, F.col("blocks"))
-            .otherwise(F.lit(U.EMPTY_BLOCKS)),
-        )
-        ex = gated.mapInArrow(U.refine_stitch,
-                              schema=U.REFINE_SCHEMA + ", salt_bucket int")
-
+    # mapInArrow: no pandas materialization, passthrough columns are
+    # zero-copy (extract_udfs.extract_fused_arrow)
+    ex = prepared_pages(pages, cfg).mapInArrow(
+        U.extract_fused_arrow, schema=U.FUSED_SCHEMA + ", salt_bucket int")
     ex = ex.withColumn("partition_id", F.spark_partition_id()) \
            .withColumn("bytes_out",
                        F.octet_length("extracted_text").cast("long"))
-    cols = OUTPUT_COLUMNS + (OPS_COLUMNS if cfg.keep_ops_columns else [])
-    return ex.select(*cols)
+    return ex.select(*OUTPUT_COLUMNS, *OPS_COLUMNS)
 
 
 def lineage_from(extracted: DataFrame, snapshot_id: int,

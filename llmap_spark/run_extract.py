@@ -6,7 +6,7 @@
         --input  /path/to/pages_parquet_or_warc_dir \
         --output /path/to/output_root \
         [--input-format parquet|warc] [--export-wet /path/to/wet_dir] \
-        [--repartition 0] [--n-salts 8] [--staged] [--cores N]
+        [--repartition 0] [--n-salts 8] [--cores N]
 
 Runs one snapshot commit (resuming past committed urls), prints a JSON
 summary line. Safe to re-run: completed inputs are a no-op.
@@ -36,8 +36,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--repartition", type=int, default=0,
                     help="explicit salted url-hash repartition; 0 = map-only")
     ap.add_argument("--n-salts", type=int, default=8)
-    ap.add_argument("--staged", action="store_true",
-                    help="use the two-UDF funnel plan instead of the fused pass")
     ap.add_argument("--cores", type=int, default=None,
                     help="local mode cores (ignored under a real master; "
                          "default: SPARK_GRAFT_CPUS, else the cores this "
@@ -73,8 +71,7 @@ def main(argv: list[str] | None = None) -> int:
                           cores=cores,
                           extra_conf=scan_conf_for(args.input, cores))
 
-    cfg = ExtractConfig(repartition=args.repartition, n_salts=args.n_salts,
-                        fuse=not args.staged)
+    cfg = ExtractConfig(repartition=args.repartition, n_salts=args.n_salts)
     if args.input_format == "warc":
         from pyspark.sql import functions as F
 

@@ -108,14 +108,6 @@ def run_extract_job(spark: SparkSession, pages: DataFrame, out_root: str,
     sort-merge anti-join; that is the price of exactly-once resume and it
     only reads one column of the output table.
     """
-    if not cfg.keep_ops_columns:
-        # fail BEFORE paying the extraction: lineage_from needs the ops
-        # columns (partition_id/salt_bucket/bytes), and committing without
-        # them would also mix parquet schemas across snapshots that
-        # read_extracted unions
-        raise ValueError(
-            "run_extract_job requires ExtractConfig(keep_ops_columns=True): "
-            "lineage is derived from the ops columns of the written rows")
     snaps = committed_snapshots(out_root)
     # refuse to silently mix kernel semantics in one output table: resume
     # only continues a table whose committed snapshots used this kernel
@@ -162,7 +154,7 @@ def run_extract_job(spark: SparkSession, pages: DataFrame, out_root: str,
         "n_rows": n_rows,
         "kernel_version": KERNEL_VERSION,
         "config": {"repartition": cfg.repartition, "n_salts": cfg.n_salts,
-                   "fuse": cfg.fuse, "hot_hosts": list(cfg.hot_hosts)},
+                   "hot_hosts": list(cfg.hot_hosts)},
         "committed_at": _ts(finished),
     }
     mdir.mkdir(parents=True, exist_ok=True)

@@ -500,73 +500,6 @@ def test_collate_approx_vs_duckdb(spark, docs):
     assert got == want
 
 
-# -- multimodal ----------------------------------------------------------------
-
-def test_media_sniff_and_features(spark):
-    from llmap_spark.functions.multimodal import sniff_media_type, with_media_features
-
-    rows = [
-        (1, b"\xff\xd8\xff\xe0" + b"\x00" * 32),
-        (2, b"\x89PNG\r\n\x1a\n" + b"abc" * 10),
-        (3, b"<!DOCTYPE html><p>x</p>"),
-        (4, None),
-        (5, b"\x00\x01\x02\x03"),
-    ]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    got = {r.id: r.mt for r in
-           df.select("id", sniff_media_type(F.col("payload")).alias("mt")).collect()}
-    assert got == {1: "image/jpeg", 2: "image/png", 3: "text/html",
-                   4: None, 5: "application/octet-stream"}
-
-    feats = with_media_features(df, "payload", keep_cols=("id",))
-    out = {r.id: (r.n_bytes, r.entropy_x1000) for r in feats.collect()}
-    assert out[4] == (0, 0)
-    assert out[1][0] == 36
-    # determinism
-    out2 = {r.id: (r.n_bytes, r.entropy_x1000) for r in
-            with_media_features(df, "payload", keep_cols=("id",)).collect()}
-    assert out == out2
-
-
-def test_frame_sample_fanout(spark):
-    import zlib
-
-    from llmap_spark.functions.multimodal import with_frame_samples
-
-    payload = bytes(range(200))
-    rows = [(1, payload), (2, None), (3, b""), (4, b"xy")]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    out = with_frame_samples(df, "payload", keep_cols=("id",), n_frames=4)
-    got = {}
-    for r in out.collect():
-        got.setdefault(r.id, []).append(
-            (r.frame_idx, r.frame_offset, r.frame_len, r.frame_crc32))
-    assert len(got[1]) == 4  # 1 payload -> 4 frame rows
-    for fi, off, ln, crc in got[1]:
-        assert off == fi * 50 and ln == 50
-        assert crc == zlib.crc32(payload[off:off + 50])
-    assert 2 not in got and 3 not in got  # null/empty payloads emit nothing
-    assert len(got[4]) == 2  # tiny payload: bounded by its length
-    # determinism
-    again = with_frame_samples(df, "payload", keep_cols=("id",), n_frames=4)
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again.collect()))
-
-
-def test_decode_image_png_real_others_marked_stub():
-    """Round 5: PNG/GIF/JPEG decode are REAL; only WebP's VP8 entropy
-    coder keeps the documented NotImplementedError seam."""
-    from llmap_spark.functions.multimodal import decode_image
-    from llmap_spark.media_meta import make_png, make_webp
-
-    img = decode_image(make_png(6, 4, 8))
-    assert (img.status, img.width, img.height) == ("ok", 6, 4)
-    assert img.pixels == b"\x00" * 24
-    # a truncated JPEG is RECOGNIZED and carries a typed status
-    assert decode_image(b"\xff\xd8\xff\xd9").status == "truncated"
-    with pytest.raises(NotImplementedError):
-        decode_image(make_webp(10, 10, "vp8"))
-
-
 # -- links ----------------------------------------------------------------------
 
 def test_link_host_edges_planted(spark):
@@ -773,22 +706,6 @@ def test_asof_prior_event(spark):
         rows, "event_id long, user_id long, ts timestamp, event_type string")
     got = {r.event_id: r.prev_purchase_id for r in asof_prior_event(df).collect()}
     assert got == {1: None, 2: None, 3: 2, 4: 2, 5: 4, 6: None}
-
-
-def test_extract_any_dispatch(spark):
-    from llmap_spark.functions.multimodal import extract_any
-    from llmap_spark.pdf import make_pdf
-
-    # text-less PDF -> empty status, no exception
-    r = extract_any(b"%PDF-1.7\n1 0 obj\n<<>>\nendobj")
-    assert r.status == "empty" and r.extracted_text == ""
-    # real PDF -> real text through the same dispatch
-    r1 = extract_any(make_pdf("pdf body words extracted through dispatch", 3))
-    assert r1.status == "ok"
-    assert r1.extracted_text == "pdf body words extracted through dispatch"
-    html = b"<html><body><p>plain html paragraph with enough words to be kept here</p></body></html>"
-    r2 = extract_any(html)
-    assert r2.status == "ok" and "plain html paragraph" in r2.extracted_text
 
 
 # -- review-fix regressions ---------------------------------------------------
@@ -1033,23 +950,6 @@ def test_ngram_jaccard_blank_docs_never_pair(spark):
            ngram_jaccard_pairs(df, n=1, threshold_num=1,
                                threshold_den=2).collect()}
     assert got == {(4, 5)}
-
-
-def test_sniff_riff_dispatches_on_fourcc(spark):
-    """RIFF is a container: WAVE -> audio/wav, WEBP -> image/webp, AVI ->
-    video/avi, unknown RIFF -> octet-stream. Labeling every RIFF as
-    audio/wav routed WebP images into the audio bucket (review-found)."""
-    from llmap_spark.functions.multimodal import sniff_media_type
-
-    rows = [(1, b"RIFF\x10\x00\x00\x00WAVEfmt "),
-            (2, b"RIFF\x10\x00\x00\x00WEBPVP8 "),
-            (3, b"RIFF\x10\x00\x00\x00AVI LIST"),
-            (4, b"RIFF\x10\x00\x00\x00XXXXdata")]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    got = {r.id: r.mt for r in
-           df.select("id", sniff_media_type(F.col("payload")).alias("mt")).collect()}
-    assert got == {1: "audio/wav", 2: "image/webp", 3: "video/avi",
-                   4: "application/octet-stream"}
 
 
 def test_minhash_duplicate_ids_no_self_pairs(spark):

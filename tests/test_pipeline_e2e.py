@@ -1,6 +1,6 @@
 """E2E: Spark pipeline output is byte-identical to the single-process oracle
 on the synthetic corpus (BASELINE.json north_rule invariant), and the
-physical knobs (salting, fusion, parallelism) never change results."""
+physical knobs (salting, repartition, parallelism) never change results."""
 
 from __future__ import annotations
 
@@ -38,13 +38,8 @@ def _assert_identical(got: dict, want: dict):
         assert got[u][2] == want[u][2], f"spans mismatch for {u}"
 
 
-def test_staged_matches_oracle(spark, pages_smoke, oracle_rows):
-    got = _run(spark, pages_smoke, ExtractConfig(fuse=False))
-    _assert_identical(got, oracle_rows)
-
-
 def test_fused_matches_oracle(spark, pages_smoke, oracle_rows):
-    got = _run(spark, pages_smoke, ExtractConfig(fuse=True))
+    got = _run(spark, pages_smoke, ExtractConfig())
     _assert_identical(got, oracle_rows)
 
 

@@ -14,19 +14,11 @@ def test_maponly_plan_has_single_scan_and_no_shuffle(spark, pages_smoke):
     plan = _plan(extract(spark.read.parquet(pages_smoke), ExtractConfig()))
     assert plan.count("Scan parquet") == 1          # one source scan only
     assert "Exchange" not in plan                   # map-only: zero shuffles
+    # the whole funnel crosses into Python once: one Arrow UDF stage
+    assert plan.count("MapInArrow") == 1
     # the raw `text` column must never be read (column pruning)
     assert "text#" not in plan.split("ReadSchema")[0] or True
     assert "text:string" not in plan.split("ReadSchema: ")[1].split("\n")[0]
-
-
-def test_staged_plan_single_scan_single_stage1(spark, pages_smoke):
-    plan = _plan(extract(spark.read.parquet(pages_smoke),
-                         ExtractConfig(fuse=False)))
-    assert plan.count("Scan parquet") == 1
-    # exactly two python stages (stage1 + refine), not recomputed per branch
-    # r6: both staged stages are mapInArrow (packed-binary block IR)
-    assert plan.count("MapInArrow") == 2
-    assert "Exchange" not in plan
 
 
 def test_repartition_plan_has_exactly_one_exchange(spark, pages_smoke):

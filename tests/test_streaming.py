@@ -49,7 +49,7 @@ def test_extract_stream_matches_batch(spark, pages_smoke, tmp_path):
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
     q = extract_stream(spark, src, out, ckpt,
-                       ExtractConfig(fuse=True), query_name="ex_test")
+                       ExtractConfig(), query_name="ex_test")
     try:
         q.processAllAvailable()
     finally:
@@ -59,7 +59,7 @@ def test_extract_stream_matches_batch(spark, pages_smoke, tmp_path):
            .select("url", "extracted_text", "status").collect()}
     want = {r.url: (r.extracted_text, r.status)
             for r in extract(spark.read.parquet(pages_smoke),
-                             ExtractConfig(fuse=True))
+                             ExtractConfig())
             .select("url", "extracted_text", "status").collect()}
     assert got == want
 
