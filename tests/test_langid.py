@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -87,6 +88,59 @@ def test_tie_breaks_are_fixed_order():
     for script, langs in MARKERS.items():
         for lang, words in langs:
             assert len(words) == len(set(words)), (script, lang)
+
+
+
+# one line of ordinary news prose per language: the marker model must
+# separate real text, not only marker-word lists
+PROSE = {
+    "en": "The city council said that the new bridge is ready for traffic and will open with a short ceremony.",
+    "de": "Der Bericht zeigt, dass die Stadt nicht genug Geld für das neue Schwimmbad hat und die Arbeiten mit Verzögerung beginnen.",
+    "fr": "Le maire a annoncé que les travaux dans le centre de la ville sont une priorité pour des milliers de familles.",
+    "es": "El gobierno anunció que los precios de las viviendas bajaron por primera vez en una década, según los datos para este año.",
+    "it": "Il sindaco ha detto che i lavori della nuova scuola sono quasi finiti e che anche il parco sarà più grande per tutti.",
+    "pt": "O governo disse que não há dinheiro para mais uma ponte, e os moradores também pedem uma solução rápida.",
+    "nl": "Het college van de gemeente zegt dat de nieuwe brug nog niet klaar is, maar de werkzaamheden zijn voor de zomer ook gepland.",
+    "pl": "Rząd poinformował, że nie jest jeszcze gotowy plan, ale minister powiedział, że wszystko zmieni się przez lato tylko dzięki nowej ustawie.",
+    "sv": "Regeringen säger att det inte finns pengar för den nya bron och att kommunen har fått vänta i flera år.",
+    "da": "Regeringen siger, at der ikke er penge til den nye bro, og kommunen har ventet i mange år, før planen blev godkendt.",
+    "fi": "Hallitus kertoi, että uusi silta ei ole vielä valmis, mutta työt alkavat myös kesällä, kun rahoitus on varmistettu.",
+    "tr": "Belediye başkanı, yeni köprünün bu yıl içinde açılacağını ve şehir için çok önemli bir proje olarak görüldüğünü söyledi.",
+    "id": "Pemerintah mengatakan bahwa jembatan yang baru dan jalan menuju kota tidak akan dibuka untuk umum sebelum akhir tahun ini.",
+    "vi": "Chính quyền thành phố cho biết cây cầu mới và con đường không được mở trong năm nay vì người dân có nhiều ý kiến.",
+    "ro": "Primarul a spus că noul pod este aproape gata și că lucrările din centrul orașului nu vor mai dura mult pentru locuitorii care așteaptă.",
+    "cs": "Starosta řekl, že nový most je téměř hotový, ale práce na silnici se zpozdí, protože pro město je to tak drahé.",
+    "hu": "A polgármester szerint az új híd már majdnem kész, és a munkák hamarosan befejeződnek, de egy út csak jövőre nyílik meg.",
+    "ru": "Мэр города сказал, что новый мост почти готов и что работы на дороге не займут много времени, как и обещали.",
+    "uk": "Мер міста сказав, що новий міст майже готовий, але роботи на дорозі триватимуть ще рік, щоб усе було як слід.",
+    "bg": "Кметът каза, че новият мост е почти готов и че това ще може да стане само след като бъде завършен пътят към града.",
+    "sr": "Градоначелник је рекао да је нови мост скоро завршен и да су радови на путу били тежи него што се очекивало.",
+    "ar": "قال رئيس البلدية إن الجسر الجديد في المدينة سيفتح على الطريق الرئيسي في هذا الشهر بعد سنوات من العمل.",
+    "fa": "شهردار گفت که این پل جدید برای مردم شهر ساخته شده است و آن را تا پایان سال باز می‌کنند.",
+    "ur": "شہر کے میئر نے کہا کہ نیا پل تقریباً تیار ہے اور سڑک کا کام اگلے مہینے میں مکمل ہو جائے گا۔",
+    "el": "Ο δήμαρχος είπε ότι η νέα γέφυρα είναι σχεδόν έτοιμη και θα ανοίξει τον επόμενο μήνα.",
+    "he": "ראש העיר אמר שהגשר החדש כמעט מוכן וייפתח בחודש הבא לאחר שנים של עבודה.",
+    "hi": "महापौर ने कहा कि नया पुल लगभग तैयार है और अगले महीने खुल जाएगा।",
+    "bn": "মেয়র বলেছেন যে নতুন সেতুটি প্রায় প্রস্তুত এবং আগামী মাসে খুলে দেওয়া হবে।",
+    "ta": "புதிய பாலம் கிட்டத்தட்ட தயாராக உள்ளது என்றும் அடுத்த மாதம் திறக்கப்படும் என்றும் மேயர் கூறினார்.",
+    "th": "นายกเทศมนตรีกล่าวว่าสะพานใหม่ใกล้จะเสร็จแล้วและจะเปิดใช้ในเดือนหน้า",
+    "ko": "시장은 새 다리가 거의 완공되었으며 다음 달에 개통될 것이라고 말했다.",
+    "ja": "市長は、新しい橋はほぼ完成しており、来月には開通する予定だと述べた。",
+    "zh": "市长表示，新桥已基本完工，预计下个月正式通车。",
+    "ka": "მერმა თქვა, რომ ახალი ხიდი თითქმის მზადაა და მომავალ თვეში გაიხსნება.",
+    "hy": "Քաղաքապետը ասաց, որ նոր կամուրջը գրեթե պատրաստ է և կբացվի հաջորդ ամիս։",
+}
+
+
+def test_prose_table_covers_every_language():
+    assert set(PROSE) == set(LANGUAGES) - {"und"}
+
+
+@pytest.mark.parametrize("lang", sorted(PROSE))
+def test_natural_prose_is_identified(lang):
+    got, script, n_letters = detect_language(PROSE[lang])
+    assert got == lang, (lang, got, script)
+    assert n_letters > 0
 
 
 @settings(max_examples=300, deadline=None)

@@ -3,6 +3,10 @@ ARCHITECTURE.md must stay true as the code evolves."""
 
 from __future__ import annotations
 
+import dataclasses
+
+import pytest
+
 from llmap_spark.plans.pipeline import ExtractConfig, extract
 
 
@@ -19,6 +23,24 @@ def test_maponly_plan_has_single_scan_and_no_shuffle(spark, pages_smoke):
     # the raw `text` column must never be read (column pruning)
     assert "text#" not in plan.split("ReadSchema")[0] or True
     assert "text:string" not in plan.split("ReadSchema: ")[1].split("\n")[0]
+
+
+def test_extract_config_is_physical_layout_only():
+    # one plan: no field selects an alternative execution path
+    assert [f.name for f in dataclasses.fields(ExtractConfig)] == [
+        "repartition", "n_salts", "hot_hosts"]
+
+
+def test_run_extract_cli_options(capsys):
+    from llmap_spark import run_extract
+
+    with pytest.raises(SystemExit) as exc:
+        run_extract.main(["--help"])
+    assert exc.value.code == 0
+    out = capsys.readouterr().out
+    for opt in ("--input", "--output", "--repartition", "--n-salts"):
+        assert opt in out
+    assert "--staged" not in out
 
 
 def test_repartition_plan_has_exactly_one_exchange(spark, pages_smoke):
