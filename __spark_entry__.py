@@ -55,25 +55,6 @@ MWL_SQL = ("CASE WHEN n_tokens_t > 0 THEN "
 QKEEP_SQL = ("(n_tokens_t >= 10 AND mwl_x100 BETWEEN 200 AND 1200 "
              "AND n_stop_hits >= 1)")
 
-# shared by the ann_brute_planted / ann_ivf_planted oracle keys — the two
-# operators produce the IDENTICAL exact result on the one-hot corpus, and
-# a second hand-maintained copy of the ranking arithmetic is the drift
-# pattern word_ngrams documents
-ANN_PLANTED_SQL = """
-    WITH m AS (SELECT vec_id, (vec_id // 4) % 64 AS dim
-               FROM embeddings),
-    p AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-            CASE WHEN a.dim = b.dim THEN 1 ELSE 0 END AS s
-          FROM m a, m b WHERE a.vec_id <> b.vec_id),
-    r AS (SELECT query_id, neighbor_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY s DESC, neighbor_id ASC) AS rnk
-          FROM p)
-    SELECT query_id, neighbor_id, CAST(rnk AS int) AS rank
-    FROM r WHERE rnk <= 5
-"""
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -102,10 +83,6 @@ def _table_stat_key(sf_dir: str, table: str) -> str:
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,29 +856,12 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup_against(batch, seen).select("doc_id", "fingerprint")
 
 
-def _q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), n=3,
-                               threshold_num=1, threshold_den=10)
-
-
 def _q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llmap_spark.operators.dedup import minhash_lsh_candidates
 
     # materialize=True: the driver runs many queries in one session; the
     # lazy default would leave the signature cache pinned for all of them
     return minhash_lsh_candidates(_docs(spark, sf_dir), materialize=True)
-
-
-def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.dedup import simhash_candidates
-
-    # radius 4 exercises the derived banding (5 disjoint bands; the fixed
-    # 4-band split was only lossless up to Hamming 3) while keeping band
-    # keys wide enough that bucket collisions stay sub-quadratic
-    return simhash_candidates(_docs(spark, sf_dir), max_hamming=4,
-                              materialize=True)
 
 
 def _planted_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -962,24 +922,6 @@ def _q_dedup_minhash_incremental_planted(spark: SparkSession,
                     .alias("agree_x64")))
 
 
-def _q_dedup_simhash_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash banding hash-verified by construction: 4-block families of
-    EXACT copies have IDENTICAL simhash (Hamming 0), so pigeonhole banding
-    guarantees every within-family pair is a candidate and the verify
-    stage reports hamming exactly 0. Distinct families are md5 word soups;
-    validated at sf0.01: zero cross-family pairs at radius 4 and no zero
-    sketches, so the pair list is pure doc_id arithmetic. (The corpus-data
-    variant dedup_simhash stays rows-only: real sketch distances are not
-    SQL-expressible.)"""
-    from llmap_spark.operators.dedup import simhash_candidates
-
-    text = F.expr(
-        "concat('the ', regexp_replace(md5(concat('s', "
-        "cast(doc_id DIV 4 as string))), '(....)', '$1 '))")
-    planted = _docs(spark, sf_dir).select("doc_id", text.alias("text"))
-    return simhash_candidates(planted, max_hamming=4, materialize=True)
-
-
 def _q_dedup_components_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components hash-verified by construction: components over
     the planted family candidates are exactly the 4-blocks, label = min id
@@ -993,12 +935,15 @@ def _q_dedup_components_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The curation chain's near-dup stages on the real corpus: MinHash
+    candidates verified at est_jaccard >= 0.5, then connected components.
+    Rows-only (real signature estimates are not SQL-expressible);
+    dedup_components_planted is the hash-checked twin."""
     from llmap_spark.operators.dedup import (connected_components,
-                                             simhash_candidates)
+                                             minhash_lsh_candidates)
 
-    pairs = simhash_candidates(_docs(spark, sf_dir), max_hamming=4,
-                               materialize=True)
-    return connected_components(pairs)
+    cand = minhash_lsh_candidates(_docs(spark, sf_dir), materialize=True)
+    return connected_components(cand.filter(F.col("est_jaccard") >= 0.5))
 
 
 def _q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1048,26 +993,6 @@ def _q_cdc_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate(F.transform("_chunks", F.length),
                     F.lit(0), lambda a, v: a + v).cast("long")
         .alias("n_chars_sum"))
-
-
-def _q_embedding_lsh_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH embedding near-dup path (hyperplane sketch UDF -> Hamming
-    banding -> exact JVM cosine verify), hash-verified by construction:
-    one-hot float vectors, identical within each (vec_id div 4) family —
-    identical sketches, Hamming 0, cosine exactly 1.0 (norms are exactly 1,
-    no float rounding). Families sharing a hot dimension ((g % 64)
-    collides) are ALSO near-dups by construction, so the oracle joins on
-    the one-hot dimension, not the family id."""
-    from llmap_spark.operators.similarity import embedding_lsh_neardup
-
-    emb = _one_hot_emb(spark, sf_dir)
-    # max_bucket=None: the oracle assumes LOSSLESS recall, and the planted
-    # construction intentionally piles identical sketches into shared
-    # buckets (n/64 per bucket) — the default cap would drop ALL planted
-    # pairs past ~640k vectors. The construction bounds bucket join cost
-    # by itself (identical sketches, one band key per family dimension).
-    return embedding_lsh_neardup(emb, max_hamming=6, threshold=0.95,
-                                 max_bucket=None, materialize=True)
 
 
 def _q_link_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1319,149 +1244,6 @@ def _q_union_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = d.filter(F.col("lang") != "en").select(
         "doc_id", F.lit("passthrough").alias("branch"))
     return a.unionByName(b)
-
-
-def _quantized(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        F.col("vec_id"),
-        F.expr("transform(embedding, x -> cast(floor(cast(x as double) * 1000) as bigint))")
-        .alias("qv"))
-
-
-def _q_embedding_topk_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-3 neighbors by quantized-integer dot product: float32 ->
-    floor(x*1000) int64 makes the arithmetic engine-portable (the float
-    version is ann_brute_force, checked against numpy in pytest)."""
-    from pyspark.sql import Window
-
-    q = _quantized(_emb(spark, sf_dir))
-    a, b = q.alias("a"), q.alias("b")
-    dot = F.aggregate(
-        F.zip_with("a.qv", "b.qv", lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda acc, v: acc + v)
-    pairs = (
-        a.crossJoin(b)
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("query_id"),
-                F.col("b.vec_id").alias("neighbor_id"), dot.alias("dot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3).select("query_id", "neighbor_id", "rnk")
-    )
-
-
-def _q_embedding_neardup_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-oracle twin of embedding near-dup: cosine >= 0.95 expressed in
-    PURE INTEGER arithmetic over floor(x*100) quantized vectors —
-    400*dot^2 >= 361*|a|^2*|b|^2 with dot > 0 (0.95^2 = 361/400) — so both
-    engines hash identically. O(n^2) by design as a correctness fixture
-    (like embedding_topk_int); the production paths are ivf/LSH."""
-    q = _emb(spark, sf_dir).select(
-        F.col("vec_id"),
-        F.expr("transform(embedding, x -> cast(floor(cast(x as double) * 100)"
-               " as bigint))").alias("qv"))
-    a, b = q.alias("a"), q.alias("b")
-
-    def dot(x, y):
-        return F.aggregate(F.zip_with(x, y, lambda u, v: u * v),
-                           F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-    pairs = (
-        a.crossJoin(b).filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"),
-                dot(F.col("a.qv"), F.col("b.qv")).alias("dot"),
-                dot(F.col("a.qv"), F.col("a.qv")).alias("na2"),
-                dot(F.col("b.qv"), F.col("b.qv")).alias("nb2"))
-    )
-    return (
-        pairs.filter((F.col("dot") > 0)
-                     & (400 * F.col("dot") * F.col("dot")
-                        >= 361 * F.col("na2") * F.col("nb2")))
-        .select("id_a", "id_b", "dot", "na2", "nb2")
-    )
-
-
-def _q_ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.similarity import brute_force_topk
-
-    e = _emb(spark, sf_dir)
-    return brute_force_topk(spark, e, e, k=5).select(
-        "query_id", "neighbor_id", "rank")
-
-
-def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.similarity import ivf_topk
-
-    e = _emb(spark, sf_dir)
-    return ivf_topk(spark, e, e, k=5, n_centroids=16, nprobe=8).select(
-        "query_id", "neighbor_id", "rank")
-
-
-def _q_embedding_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed embedding near-dup (random-hyperplane sketch + lossless
-    Hamming banding + exact JVM cosine verify) — the hash-bucketed sibling
-    of the IVF path."""
-    from llmap_spark.operators.similarity import embedding_lsh_neardup
-
-    # radius and threshold must agree (operator docstring): Hamming 6 on
-    # 64 bits corresponds to cos(6*pi/64) ~ 0.956 — a 0.9 threshold at
-    # this radius would silently miss ~83% of pairs in [0.90, 0.95]
-    return embedding_lsh_neardup(_emb(spark, sf_dir), max_hamming=6,
-                                 threshold=0.95, materialize=True)
-
-
-def _q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs over the corpus via the scale path
-    (IVF on both sides — no driver-side collect of either side)."""
-    from llmap_spark.operators.similarity import embedding_neardup_pairs
-
-    return embedding_neardup_pairs(spark, _emb(spark, sf_dir),
-                                   threshold=0.9, k=5).select("id_a", "id_b")
-
-
-def _one_hot_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-hot float unit vectors on dimension (vec_id div 4) % 64 —
-    cosines are EXACTLY 1.0 (shared dim) or 0.0, so top-k ranking under
-    (score desc, neighbor asc) is pure arithmetic (shared by the planted
-    ANN/LSH oracles)."""
-    return _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(sequence(0, 63), "
-               "j -> CASE WHEN j = cast((vec_id DIV 4) % 64 as int) "
-               "THEN cast(1.0 as float) ELSE cast(0.0 as float) END)")
-        .alias("embedding"))
-
-
-def _q_ann_brute_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The brute-force operator itself (broadcast blocks, partial top-k,
-    window merge), hash-verified: one-hot vectors make every score exactly
-    1.0 or 0.0, so the top-5 per query is same-dimension neighbors
-    ascending, then zero-score neighbors ascending — derivable in SQL.
-    (embedding_topk_int verifies exact top-k MATH via a crossJoin twin;
-    this row verifies the OPERATOR's plan.)"""
-    from llmap_spark.operators.similarity import brute_force_topk
-
-    e = _one_hot_emb(spark, sf_dir)
-    return brute_force_topk(spark, e, e, k=5).select(
-        "query_id", "neighbor_id", "rank")
-
-
-def _q_ann_ivf_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF operator (seeded sample -> k-means -> assign -> probe ->
-    co-partitioned score), hash-verified: with a single centroid every
-    probe sees the whole corpus, so IVF degenerates to exact top-k over
-    the one-hot construction — the same arithmetic oracle as
-    ann_brute_planted while still exercising the full assign/probe/score
-    machinery."""
-    from llmap_spark.operators.similarity import ivf_topk
-
-    e = _one_hot_emb(spark, sf_dir)
-    return ivf_topk(spark, e, e, k=5, n_centroids=1, nprobe=1).select(
-        "query_id", "neighbor_id", "rank")
 
 
 def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1727,7 +1509,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id": _q_lang_id,
         "quality_score": _q_quality_score,
         "repetition_score": _q_repetition_score,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
         "link_extract_roundtrip": _q_link_extract_roundtrip,
         "link_hosts": _q_link_hosts,
         "link_nofollow": _q_link_nofollow,
@@ -1758,9 +1539,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scrub_normalize": _q_scrub_normalize,
         # --- LAST_CHECKED: r4, single green row ever (checked once) ---
         "warc_roundtrip": _q_warc_roundtrip,
-        "ann_brute_planted": _q_ann_brute_planted,
-        "ann_ivf_planted": _q_ann_ivf_planted,
-        "embedding_lsh_planted": _q_embedding_lsh_planted,
         "sample_stratified": _q_sample_stratified,
         "sample_quality_weighted": _q_sample_quality_weighted,
         "sample_seeded_portable": _q_sample_seeded_portable,
@@ -1770,12 +1548,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_seeded": _q_sample_seeded,
         "explode_chunks": _q_explode_chunks,
         "union_passthrough": _q_union_passthrough,
-        "embedding_topk_int": _q_embedding_topk_int,
-        "embedding_neardup_int": _q_embedding_neardup_int,
-        "ann_brute_force": _q_ann_brute_force,
-        "ann_ivf": _q_ann_ivf,
-        "embedding_neardup": _q_embedding_neardup,
-        "embedding_lsh_neardup": _q_embedding_lsh_neardup,
         "robots_gate": _q_robots_gate,
         "keyword_topk": _q_keyword_topk,
         "sitemap_discovery": _q_sitemap_discovery,
@@ -1795,8 +1567,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_incremental": _q_dedup_incremental,
         "dedup_minhash_lsh": _q_dedup_minhash_lsh,
         "dedup_minhash_planted": _q_dedup_minhash_planted,
-        "dedup_simhash": _q_dedup_simhash,
-        "dedup_simhash_planted": _q_dedup_simhash_planted,
         "dedup_components": _q_dedup_components,
         "dedup_components_planted": _q_dedup_components_planted,
     }
@@ -2210,35 +1980,12 @@ def oracle_sql() -> dict[str, str]:
                 '\\s+', ' ', 'g'))) AS bigint) AS n_chars_sum
             FROM documents
         """,
-        # one maintained copy for both planted-ANN twins (brute exact;
-        # single-centroid IVF degenerates to the same exact top-k): exact
-        # 1.0/0.0 cosines -> top-5 = same-dim neighbors ascending, then
-        # zero-score neighbors ascending (score desc, id asc)
-        "ann_brute_planted": ANN_PLANTED_SQL,
-        "ann_ivf_planted": ANN_PLANTED_SQL,
-        "embedding_lsh_planted": """
-            -- near-dup pairs = vectors one-hot on the SAME dimension
-            -- ((vec_id // 4) % 64), cosine exactly 1.0 -> 1000000
-            WITH m AS (SELECT vec_id, (vec_id // 4) % 64 AS dim
-                       FROM embeddings)
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   CAST(1000000 AS bigint) AS cos_x1000000
-            FROM m a JOIN m b ON a.dim = b.dim AND a.vec_id < b.vec_id
-        """,
         "dedup_minhash_planted": """
             -- 6 within-family pairs per 4-block, agreement exactly 64/64
             WITH m AS (SELECT doc_id, doc_id // 4 AS g, doc_id % 4 AS r
                        FROM documents)
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                    CAST(64 AS int) AS agree_x64
-            FROM m a JOIN m b ON a.g = b.g AND a.doc_id < b.doc_id
-        """,
-        "dedup_simhash_planted": """
-            -- exact-copy families: identical simhash, so candidates are
-            -- exactly the within-family pairs, each at Hamming 0
-            WITH m AS (SELECT doc_id, doc_id // 4 AS g FROM documents)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(0 AS int) AS hamming
             FROM m a JOIN m b ON a.g = b.g AND a.doc_id < b.doc_id
         """,
         "dedup_components_planted": """
@@ -2442,20 +2189,6 @@ def oracle_sql() -> dict[str, str]:
                    doc_id <> rep_id AS is_dup
             FROM w
         """,
-        "dedup_ngram_jaccard": f"""
-            WITH d AS (SELECT doc_id, {w_norm} AS w FROM documents),
-            g AS (SELECT DISTINCT doc_id,
-                    unnest(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-                                          i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS gram
-                  FROM d),
-            sz AS (SELECT doc_id, count(*) AS sz FROM g GROUP BY 1),
-            i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-                  FROM g a JOIN g b USING (gram) WHERE a.doc_id < b.doc_id
-                  GROUP BY 1, 2)
-            SELECT id_a, id_b, inter, sa.sz + sb.sz - inter AS union_sz
-            FROM i JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-            WHERE 10 * inter >= sa.sz + sb.sz - inter
-        """,
         "token_count_bpe2": """
             -- the real BPE under power merges = binary-carry pairing:
             -- word j of doc i ('ab' x k_j, k_j = 1 + (i+3j)%31) encodes
@@ -2571,33 +2304,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, 'parseable' AS branch FROM documents WHERE lang = 'en'
             UNION ALL
             SELECT doc_id, 'passthrough' AS branch FROM documents WHERE lang <> 'en'
-        """,
-        "embedding_topk_int": """
-            WITH q AS (SELECT vec_id,
-                list_transform(embedding,
-                  x -> CAST(floor(CAST(x AS double) * 1000) AS bigint)) AS v
-              FROM embeddings),
-            p AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                    CAST(list_dot_product(a.v, b.v) AS bigint) AS dot
-                  FROM q a, q b WHERE a.vec_id <> b.vec_id)
-            SELECT query_id, neighbor_id, rnk FROM (
-              SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY dot DESC, neighbor_id ASC) AS rnk
-              FROM p) WHERE rnk <= 3
-        """,
-        "embedding_neardup_int": """
-            WITH q AS (SELECT vec_id,
-                list_transform(embedding,
-                  x -> CAST(floor(CAST(x AS double) * 100) AS bigint)) AS v
-              FROM embeddings),
-            p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                    CAST(list_dot_product(a.v, b.v) AS bigint) AS dot,
-                    CAST(list_dot_product(a.v, a.v) AS bigint) AS na2,
-                    CAST(list_dot_product(b.v, b.v) AS bigint) AS nb2
-                  FROM q a, q b WHERE a.vec_id < b.vec_id)
-            SELECT id_a, id_b, dot, na2, nb2 FROM p
-            WHERE dot > 0 AND 400 * dot * dot >= 361 * na2 * nb2
         """,
         "sessionize": """
             SELECT event_id, user_id,
@@ -3002,14 +2708,11 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY g.doc_id
         """,
         # rows-only (genuinely non-SQL-expressible: hash-signature /
-        # iterative / float-ANN / engine-specific-sampler
-        # kernels; pytest carries their oracles instead — see tests/):
-        #   dedup_minhash_lsh, dedup_simhash (the exact-copy twin
-        #   dedup_simhash_planted IS hash-checked), dedup_components,
-        #   doc_fingerprints, winnow_overlap, cdc_chunks,
-        #   ann_brute_force, ann_ivf (integer twins embedding_topk_int /
-        #   embedding_neardup_int ARE oracle-checked),
-        #   embedding_neardup, embedding_lsh_neardup,
+        # iterative / engine-specific-sampler kernels; pytest carries
+        # their oracles instead — see tests/):
+        #   dedup_minhash_lsh, dedup_components (the planted twins
+        #   dedup_minhash_planted / dedup_components_planted ARE
+        #   hash-checked), doc_fingerprints, winnow_overlap, cdc_chunks,
         #   pipeline_kept_docs (the planted twin pipeline_kept_planted IS
         #   hash-checked), sample_seeded (the md5-coin twin
         #   sample_seeded_portable IS hash-checked)

@@ -46,7 +46,6 @@ def main() -> int:
     from llmap_spark.operators.dedup import (exact_dedup,
                                              minhash_lsh_candidates)
     from llmap_spark.operators.scrub import dedup_paragraphs, redact_pii
-    from llmap_spark.operators.similarity import brute_force_topk
     from llmap_spark.operators.textstats import (fingerprint, lang_id,
                                                  quality_features)
     from llmap_spark.operators.langid import lang_id2 as lang_id2_op
@@ -60,12 +59,8 @@ def main() -> int:
     pages = spark.read.parquet(pages_path)
     # documents is a single-file table at bench scale: widen once so
     # pure-map jobs (textstats, scrub) don't run on one core — UDF
-    # operators guard themselves, JVM map-only chains can't. emb is NOT
-    # wrapped: brute_force_topk guards its own corpus side, and an outer
-    # repartition would force the query-side probe collect (scan + limit)
-    # through a full round-robin exchange
+    # operators guard themselves, JVM map-only chains can't
     docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
     n_pages = pages.count()
     html_bytes = pages.agg(F.sum(F.length("html"))).collect()[0][0] or 0
@@ -95,8 +90,6 @@ def main() -> int:
         # cache persisted for the rest of the bench session
         ("dedup_minhash_lsh", lambda: noop(
             minhash_lsh_candidates(docs, materialize=True))),
-        ("ann_brute_force", lambda: noop(
-            brute_force_topk(spark, emb, emb, k=10))),
         ("windowed_events", lambda: noop(
             entry._q_windowed_events(spark, sf_dir))),
         ("topk_per_user", lambda: noop(

@@ -29,7 +29,6 @@ def main(tag: str, suffix: str) -> int:
 
     from llmap_spark.operators.dedup import exact_dedup, minhash_lsh_candidates
     from llmap_spark.operators.scrub import dedup_paragraphs, redact_pii
-    from llmap_spark.operators.similarity import brute_force_topk
     from llmap_spark.operators.substrings import substring_dedup
     from llmap_spark.operators.textstats import (fingerprint, lang_id,
                                                  quality_features)
@@ -40,7 +39,6 @@ def main(tag: str, suffix: str) -> int:
 
     pages = spark.read.parquet(pages_path)
     docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
     plans = {
         "extract_write": lambda: extract(pages, ExtractConfig()),
@@ -51,7 +49,6 @@ def main(tag: str, suffix: str) -> int:
         "dedup_exact": lambda: exact_dedup(docs),
         # lazy variant: the materialized one executes eagerly on explain
         "dedup_minhash_lsh": lambda: minhash_lsh_candidates(docs),
-        "ann_brute_force": lambda: brute_force_topk(spark, emb, emb, k=10),
         "windowed_events": lambda: entry._q_windowed_events(spark, sf_dir),
         "topk_per_user": lambda: entry._q_topk_per_user(spark, sf_dir),
         "pipeline_kept_docs": lambda: kept_documents(docs),

@@ -39,7 +39,6 @@ def main(groups: list[str]) -> int:
 
     pages = spark.read.parquet(pages_path)
     docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
@@ -145,10 +144,6 @@ def main(groups: list[str]) -> int:
             _gram_table(docs, "doc_id", "text", 50)), release_persisted()))
         timed("substring_full", lambda: noop(substring_dedup(
             docs, min_len=50).select("doc_id", "n_spans", "n_dup_chars")))
-
-    if want("ann"):
-        from llmap_spark.operators.similarity import brute_force_topk
-        timed("ann_brute", lambda: noop(brute_force_topk(spark, emb, emb, k=10)))
 
     if want("events"):
         import __spark_entry__ as entry

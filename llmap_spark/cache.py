@@ -1,6 +1,6 @@
 """Session-scoped registry for operator-persisted DataFrames.
 
-Several operators (minhash_lsh_candidates, hamming_band_pairs, the
+Several operators (exact_dedup, minhash_lsh_candidates, the
 curation chain) persist an intermediate frame because multiple consumers
 share an expensive UDF subtree. Under their lazy default
 (materialize=False) the operator cannot know when the caller is done, so

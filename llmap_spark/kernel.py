@@ -54,7 +54,9 @@ from typing import NamedTuple
 # 2.4.0: lineage schema gained n_empty — the version gate exists exactly
 # so a resume cannot mix lineage/extraction schemas across snapshots
 # (extraction output bytes are unchanged from 2.3.0)
-KERNEL_VERSION = "2.4.0"
+# 2.4.1: <embed> is void only, no longer a skip tag — an unclosed one hid
+# the rest of the page
+KERNEL_VERSION = "2.4.1"
 
 # --- bounded per-item work (reference parse.py:20-26 analogue) ------------
 MAX_HTML_BYTES = 1_000_000  # raw html byte cap per page
@@ -72,7 +74,7 @@ _BLOCK_TAGS = frozenset({
 # Content inside these is never visible text.
 _SKIP_TAGS = frozenset({
     "script", "style", "noscript", "template", "svg", "head", "iframe",
-    "object", "embed", "applet", "audio", "video", "canvas", "map",
+    "object", "applet", "audio", "video", "canvas", "map",
 })
 # Blocks nested under these are boilerplate containers (reference analogue:
 # annotation-strip predicate, parse.py:55-57 — drop boilerplate node classes).

@@ -1,27 +1,25 @@
 """Deduplication operators for web-scale text corpora.
 
-Five families, each with a distinct scale profile:
+One exact and one near-duplicate detector, plus the clustering step the
+curation chain runs after them:
 
   exact_dedup          md5 fingerprint -> groupBy-min winners -> join-back
+                       (exact_dedup_against: the incremental form, a
+                       left-anti join against a prior fingerprint table)
   minhash_lsh          char-shingle MinHash signatures (pandas UDF) ->
                        banded LSH bucket join -> candidate pairs with
                        signature-estimated Jaccard (JVM zip_with)
-  simhash              64-bit SimHash (pandas UDF) -> 16-bit band blocking
-                       -> Hamming<=k verify via bit_count(xor) (JVM)
-  ngram_jaccard_pairs  exact word-trigram Jaccard via explode + equi-join,
-                       integer cross-multiplied threshold (SQL-oracle-able)
-  connected_components iterative min-label propagation over candidate
-                       pairs -> duplicate clusters (no GraphFrames dep)
+                       (minhash_candidates_against: the incremental form)
+  connected_components min-label propagation over candidate pairs ->
+                       duplicate clusters (no GraphFrames dep)
 
 Scale notes baked in: LSH buckets are capped (hot-bucket skew guard),
 signatures travel as array<long> (Arrow-native), verification math stays
-JVM-side (zip_with / bit_count), and components iterate with AQE-friendly
-joins rather than driver-side union-find.
+JVM-side (zip_with), and components iterate with AQE-friendly joins, with
+a driver-side union-find only for small, already-materialized pair sets.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
@@ -399,202 +397,6 @@ def minhash_candidates_against(batch: DataFrame, seen_sigs: DataFrame,
     return withsigs.select(
         "batch_id", "seen_id",
         (agree / F.lit(float(num_hashes))).alias("est_jaccard"))
-
-
-# --------------------------------------------------------------------------
-# simhash
-# --------------------------------------------------------------------------
-
-def simhash_udf(seed: int = 42):
-    """pandas_udf: text -> 64-bit SimHash (as signed long)."""
-
-    @pandas_udf("long")
-    def sim(texts: pd.Series) -> pd.Series:
-        # memoize word hashes per batch: web/word-soup text repeats a small
-        # vocabulary, so this cuts digest calls by ~100x
-        memo: dict[str, int] = {}
-
-        def whash(w: str) -> int:
-            h = memo.get(w)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.blake2b(w.encode(), digest_size=8).digest(), "big")
-                memo[w] = h
-            return h
-
-        out = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            words = (t or "").lower().split()
-            if not words:
-                out[i] = 0
-                continue
-            hs = np.fromiter((whash(w) for w in words),
-                             dtype=np.uint64, count=len(words))
-            bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & 1)
-            score = (2 * bits.astype(np.int32) - 1).sum(axis=0)
-            v = 0
-            for bit in np.nonzero(score > 0)[0]:
-                v |= 1 << int(bit)
-            out[i] = np.int64(np.uint64(v).astype(np.int64))
-        return pd.Series(out)
-
-    # see minhash_signature_udf: blocks optimizer UDF cloning into the
-    # sh != 0 filter
-    return sim.asNondeterministic()
-
-
-def simhash_candidates(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", max_hamming: int = 3,
-                       max_bucket: int | None = 10_000,
-                       materialize: bool = False) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming.
-
-    Blocking: the 64 bits are split into `max_hamming + 1` disjoint bands —
-    by pigeonhole, any pair differing in <= max_hamming bits agrees exactly
-    on at least one band, so banding is lossless for the requested radius
-    (with a fixed 4-band split, recall silently broke above Hamming 3).
-    Verify is JVM-side bit_count(xor). Returns (id_a, id_b, hamming int).
-
-    `max_bucket` (default 10k) drops over-full band buckets before the
-    self-join: at radius 4 band keys are only ~12-13 bits, so bucket
-    population grows LINEARLY with corpus size and an uncapped bucket join
-    goes quadratic on a 10^9-doc corpus — the same skew hazard the MinHash
-    and embedding-LSH paths cap. Recall trade: the cap costs pairs only
-    when EVERY band of both members is hot, i.e. docs near-dup to very
-    many others (boilerplate-class content a curation pipeline drops
-    anyway). Pass max_bucket=None to restore the lossless-at-radius
-    pigeonhole guarantee on bounded corpora.
-
-    Scale tradeoff: more bands means narrower band keys, hence a smaller
-    key space and larger buckets (candidate volume grows roughly as
-    n^2 * bands / 2^width per band). Radii beyond ~7 on a 64-bit
-    fingerprint want a wider fingerprint, not more bands.
-    """
-    s = ensure_parallelism(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col))).select(
-        "_id", simhash_udf()(F.col(text_col)).alias("sh"))
-    # sh=0 marks word-less docs (see simhash_udf) — they are not duplicates
-    # of each other, just empty; exclude them from blocking
-    s = s.filter(F.col("sh") != 0)
-    return hamming_band_pairs(s, max_hamming, max_bucket=max_bucket,
-                              materialize=materialize)
-
-
-def hamming_band_pairs(s: DataFrame, max_hamming: int,
-                       max_bucket: int | None = None,
-                       materialize: bool = False) -> DataFrame:
-    """Generic Hamming blocking over a 64-bit sketch column:
-    input (_id long, sh long) -> (id_a, id_b, hamming) for all pairs with
-    Hamming(sh_a, sh_b) <= max_hamming. Pigeonhole over max_hamming+1
-    disjoint bands; verify is JVM bit_count(xor). Shared by the text
-    SimHash and the random-hyperplane embedding sketch
-    (similarity.embedding_lsh_neardup).
-
-    max_bucket=None (default) is LOSSLESS at the radius (the pigeonhole
-    guarantee; pinned by test_simhash_banding_is_lossless). At high radii
-    band keys get narrow (radius 6 -> ~9-bit keys) and bucket sizes scale
-    with corpus size, so the self-join goes quadratic on huge corpora —
-    pass max_bucket to drop over-full buckets (the minhash-LSH skew guard;
-    costs recall only for items whose EVERY band is hot, i.e. items
-    near-dup to very many others).
-
-    Same laziness contract as minhash_lsh_candidates: the sketch frame is
-    persisted (both self-join sides consume it); materialize=True eagerly
-    localCheckpoints the pair set and releases that cache — otherwise the
-    persist is registered with llmap_spark.cache for caller-controlled
-    release via release_persisted() (each call pins one tiny id+long
-    frame)."""
-    from llmap_spark.cache import register_persisted
-
-    n_bands = max_hamming + 1
-    if not 1 <= n_bands <= 16:
-        raise ValueError(f"max_hamming={max_hamming} out of range for a "
-                         "64-bit sketch; use a wider fingerprint")
-    base, rem = divmod(64, n_bands)
-    widths = [base + 1 if k < rem else base for k in range(n_bands)]
-    # both self-join sides consume the sketch subtree (often a UDF);
-    # persist so that pass happens once (tiny rows: id + one long)
-    s = s.persist()
-    if not materialize:
-        register_persisted(s)
-    bands = []
-    off = 0
-    for k, w in enumerate(widths):
-        # w == 64 (max_hamming=0, one band): (1<<64)-1 overflows a signed
-        # long literal; -1 is the same all-bits mask in two's complement
-        mask = F.lit((1 << w) - 1 if w < 64 else -1)
-        bands.append(F.struct(
-            F.lit(k).alias("band"),
-            F.shiftrightunsigned("sh", off).bitwiseAND(mask).alias("key")))
-        off += w
-    e = s.select("_id", "sh", F.explode(F.array(*bands)).alias("bk")) \
-         .select("_id", "sh", "bk.band", "bk.key")
-    if max_bucket is not None:
-        # groupBy counts + anti-join against over-full buckets, not a
-        # window: the hot bucket the cap targets would otherwise buffer
-        # whole in one window task. The anti side carries only buckets
-        # exceeding the cap (rare by construction), so AQE broadcasts it
-        # and the exploded frame never shuffles for the cap (same
-        # rationale as the minhash guard above)
-        hot = (e.groupBy("band", "key")
-               .agg(F.count(F.lit(1)).alias("_bn"))
-               .filter(F.col("_bn") > max_bucket)
-               .select("band", "key"))
-        e = e.join(hot, ["band", "key"], "left_anti")
-    a = e.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a"), "band", "key")
-    b = e.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b"), "band", "key")
-    out = (
-        a.join(b, ["band", "key"]).filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        s.unpersist()
-    return out
-
-
-# --------------------------------------------------------------------------
-# exact n-gram jaccard (SQL-oracle-able)
-# --------------------------------------------------------------------------
-
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 3,
-                        threshold_num: int = 1, threshold_den: int = 2) -> DataFrame:
-    """Exact word-n-gram Jaccard >= num/den via explode + equi-join.
-
-    Pure DataFrame ops, integer threshold comparison (den*inter >=
-    num*union) — no floats, so the DuckDB oracle hashes identically.
-    At scale this is the verify stage after LSH; on its own it is
-    quadratic in bucket df and should follow a candidate filter.
-    """
-    from llmap_spark.operators.textstats import word_ngrams
-
-    words = F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
-    # the shared constructor carries the sequence(1,0)-descending guard
-    # and the blank-doc '' gram guard (critical at n=1: every blank doc
-    # would share the '' gram and pair with every other blank doc — the
-    # shared-sentinel hazard plus an uncapped quadratic join)
-    g = (
-        df.select(F.col(id_col).alias("_id"), words.alias("_w"))
-        .select("_id",
-                F.explode(F.array_distinct(word_ngrams("_w", n))).alias("gram"))
-    )
-    sizes = g.groupBy("_id").agg(F.count("*").alias("sz"))
-    inter = (
-        g.alias("x").join(g.alias("y"), "gram")
-        .filter(F.col("x._id") < F.col("y._id"))
-        .groupBy(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn("union_sz", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        .filter(F.lit(threshold_den) * F.col("inter") >= F.lit(threshold_num) * F.col("union_sz"))
-        .select("id_a", "id_b", "inter", "union_sz")
-    )
 
 
 # --------------------------------------------------------------------------

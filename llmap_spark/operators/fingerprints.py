@@ -2,7 +2,7 @@
 Wilkerson, Aiken — the MOSS local fingerprinting scheme).
 
 Complements the other dedup families: md5 catches EXACT duplicates,
-MinHash/SimHash catch whole-document NEAR duplicates; winnowing catches
+MinHash catches whole-document NEAR duplicates; winnowing catches
 PARTIAL overlap — a paragraph lifted from one document into another —
 because its fingerprints are local. Guarantee: any shared (normalized)
 substring of length >= k + window - 1 chars contributes at least one

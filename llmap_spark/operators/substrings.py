@@ -36,7 +36,7 @@ Plan shape (the exact-dedup discipline at corpus scale):
 64-bit gram hashes stand in for gram equality (the standard corpus-
 dedup assumption; a collision needs ~2^32 distinct grams per bucket).
 Reference analogue: none — the reference has no dedup; this is
-brief-side scope alongside MinHash/SimHash/winnowing/CDC.
+brief-side scope alongside MinHash/winnowing/CDC.
 """
 
 from __future__ import annotations

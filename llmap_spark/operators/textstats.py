@@ -123,7 +123,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 def word_ngrams(words_col: str, n: int):
     """Word n-gram array over a pre-split words column (JVM transform
     expression) — the SINGLE n-gram constructor shared by
-    repetition_features and dedup.ngram_jaccard_pairs (two hand-maintained
+    repetition_features and scrub.decontaminate (two hand-maintained
     copies drifted once; a fix to one silently missed the other).
 
     Gotchas baked in: sequence(1, 0) yields a DESCENDING [1, 0] in Spark,

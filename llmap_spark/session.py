@@ -82,13 +82,11 @@ def get_spark(app_name: str = "llmap_spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # zstd shuffle/spill/broadcast blocks: markedly better ratio than
-        # the lz4 default at similar speed — fewer bytes to disk and (on a
-        # cluster) across the NIC; measured 2.14s -> 1.97s best-of-3 on
-        # the salted-shuffle extract at sf0.1, and the win grows with
-        # shuffle volume. Env-overridable for A/B.
-        .config("spark.io.compression.codec",
-                os.environ.get("LLMAP_SHUFFLE_CODEC", "zstd"))
+        # zstd shuffle/spill/broadcast blocks, not Spark's lz4 default:
+        # lz4 lost 5 of 6 alternating curate_corpus perfbench pairs on a
+        # 4-core VM (median wall_s 1.12x). get_spark(extra_conf=...)
+        # overrides it for an A/B.
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", defaults.driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

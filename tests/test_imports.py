@@ -1,12 +1,23 @@
-"""Every module under llmap_spark imports: a stale import of a deleted
-module fails here in milliseconds instead of deep inside a Spark job."""
+"""Every module under llmap_spark imports, and every name the package and
+its scripts import from it exists: a stale import of a deleted module or
+function fails here in milliseconds instead of deep inside a Spark job."""
 
 from __future__ import annotations
 
-import importlib
+import ast
+import importlib.util
 import pkgutil
+from pathlib import Path
 
 import llmap_spark
+
+ROOT = Path(__file__).resolve().parent.parent
+# every file whose imports a deletion can leave dangling, function-local
+# (lazy) ones included; read only, never executed
+SOURCES = sorted(
+    [*ROOT.glob("llmap_spark/**/*.py"), ROOT / "__spark_entry__.py",
+     ROOT / "bench.py", ROOT / "bench_extra.py", *ROOT.glob("bench/*.py"),
+     *ROOT.glob("perfbench/*.py")])
 
 
 def test_every_module_imports():
@@ -15,3 +26,33 @@ def test_every_module_imports():
     assert "llmap_spark.plans.pipeline" in names
     for name in names:
         importlib.import_module(name)
+
+
+def _package_imports(path: Path):
+    """(module, name) for every `from llmap_spark... import name` in the
+    file (name None for a plain `import llmap_spark...`), at any depth."""
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.ImportFrom) and not node.level and (
+                node.module.split(".")[0] == "llmap_spark"):
+            for alias in node.names:
+                yield node.module, alias.name
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == "llmap_spark":
+                    yield alias.name, None
+
+
+def test_no_dangling_package_imports():
+    seen = set()
+    for path in SOURCES:
+        for module, name in _package_imports(path):
+            seen.add((module, name))
+            where = f"{path.relative_to(ROOT)}: {module}"
+            mod = importlib.import_module(module)
+            if name is not None and not hasattr(mod, name):
+                # `from pkg import submodule` binds a module, not an attribute
+                assert hasattr(mod, "__path__") and importlib.util.find_spec(
+                    f"{module}.{name}"), f"{where} has no {name}"
+    # the walk reaches lazy imports: this one is only ever made inside
+    # function bodies
+    assert ("llmap_spark.operators.dedup", "minhash_lsh_candidates") in seen

@@ -23,7 +23,7 @@ BLOCK_TAGS = (
     "li", "main", "nav", "ol", "option", "p", "pre", "section", "select",
     "table", "tbody", "td", "tfoot", "th", "thead", "tr", "ul")
 SKIP_TAGS = (
-    "applet", "audio", "canvas", "embed", "head", "iframe", "map",
+    "applet", "audio", "canvas", "head", "iframe", "map",
     "noscript", "object", "script", "style", "svg", "template", "video")
 BOILER_TAGS = ("aside", "footer", "form", "header", "nav", "select")
 VOID_TAGS = (
@@ -88,14 +88,15 @@ def test_rawtext_content_is_opaque(tag):
     assert [(b.tag, b.text) for b in blocks] == [("p", A), ("p", C)]
 
 
-# '<embed>' is in the skip set as well, so everything after an unclosed
-# one is hidden; it is pinned by test_skip_tag_content_is_never_extracted
-@pytest.mark.parametrize("tag", sorted(set(VOID_TAGS) - set(SKIP_TAGS)))
+@pytest.mark.parametrize("tag", VOID_TAGS)
 def test_void_tag_does_not_nest_following_blocks(tag):
-    blocks = _blocks(
-        f"<html><body><div><p>{A}</p><{tag}><p>{B}</p></div></body></html>")
-    assert [b.text for b in blocks] == [A, B]
+    html = (f"<html><body><div><p>{A}</p><{tag} src=x><p>{B}</p></div>"
+            f"<p>{C}</p></body></html>")
+    blocks = _blocks(html)
+    assert [b.text for b in blocks] == [A, B, C]
     assert blocks[0].depth == blocks[1].depth
+    assert kernel.extract_page(html.encode()).extracted_text == (
+        f"{A}\n\n{B}\n\n{C}")
 
 
 CHARSET_SAMPLES = {

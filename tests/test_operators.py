@@ -1,25 +1,18 @@
-"""Operator tests against independent oracles (DuckDB SQL / numpy / pure
-Python), on the driver-provided sf0.001 documents + embeddings tables."""
+"""Operator tests against independent oracles (DuckDB SQL / pure Python),
+on the driver-provided sf0.001 documents table."""
 
 from __future__ import annotations
 
 import duckdb
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
-EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
 
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(DOCS)
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(EMB)
 
 
 # -- textstats --------------------------------------------------------------
@@ -162,67 +155,6 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
     assert ests and min(ests) > 0.5
 
 
-def test_simhash_candidates(spark, docs):
-    from llmap_spark.operators.dedup import simhash_candidates
-
-    near = (docs.limit(20)
-            .withColumn("doc_id", F.col("doc_id") + 100000)
-            .withColumn("text", F.concat(F.col("text"), F.lit(" zzz"))))
-    cand = simhash_candidates(docs.unionByName(near), max_hamming=6)
-    pairs = {(r.id_a, r.id_b) for r in cand.collect()}
-    found = sum((d, d + 100000) in pairs for d in range(20))
-    assert found >= 18
-    for r in cand.collect():
-        assert 0 <= r.hamming <= 6
-
-
-@pytest.mark.parametrize("max_hamming", [3, 4, 6])
-def test_simhash_banding_is_lossless(spark, docs, max_hamming):
-    """The banded candidate set must equal the brute-force all-pairs set at
-    the requested radius — the fixed 4-band split only guaranteed this up to
-    Hamming 3 (pigeonhole needs max_hamming+1 bands)."""
-    from llmap_spark.operators.dedup import simhash_candidates, simhash_udf
-
-    base = docs.limit(40)
-    near = (base.withColumn("doc_id", F.col("doc_id") + 100000)
-            .withColumn("text", F.concat(F.col("text"), F.lit(" qq zz"))))
-    allr = base.unionByName(near)
-    sh = {r._id: r.sh for r in allr.select(
-        F.col("doc_id").alias("_id"),
-        simhash_udf()(F.col("text")).alias("sh")).collect() if r.sh != 0}
-    ids = sorted(sh)
-    want = {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]
-            if bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1") <= max_hamming}
-    got = {(r.id_a, r.id_b) for r in
-           simhash_candidates(allr, max_hamming=max_hamming).collect()}
-    assert got == want
-    assert want  # the planted pairs make the radius non-trivial
-
-
-def test_ngram_jaccard_vs_duckdb(spark, docs):
-    from llmap_spark.operators.dedup import ngram_jaccard_pairs
-
-    small = docs.limit(60)
-    got = {(r.id_a, r.id_b, r.inter, r.union_sz) for r in
-           ngram_jaccard_pairs(small, n=3, threshold_num=1,
-                               threshold_den=10).collect()}
-    want = {tuple(r) for r in duckdb.sql(f"""
-      WITH d AS (SELECT doc_id, string_split(trim(regexp_replace(text,'\\s+',' ','g')),' ') w
-                 FROM '{DOCS}' WHERE doc_id < 60),
-      g AS (SELECT DISTINCT doc_id,
-              unnest(list_transform(generate_series(1, greatest(len(w)-2,0)),
-                                    i -> w[i]||' '||w[i+1]||' '||w[i+2])) AS gram
-            FROM d),
-      sz AS (SELECT doc_id, count(*) sz FROM g GROUP BY 1),
-      inter AS (SELECT a.doc_id id_a, b.doc_id id_b, count(*) inter
-                FROM g a JOIN g b USING (gram) WHERE a.doc_id < b.doc_id
-                GROUP BY 1, 2)
-      SELECT id_a, id_b, inter, sa.sz + sb.sz - inter AS union_sz
-      FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-      WHERE 10 * inter >= 1 * (sa.sz + sb.sz - inter)""").fetchall()}
-    assert got == want
-
-
 def test_connected_components_vs_union_find(spark):
     from llmap_spark.operators.dedup import connected_components
 
@@ -251,169 +183,6 @@ def test_connected_components_vs_union_find(spark):
     dist = {r.node: r.component for r in
             connected_components(pairs, driver_threshold=0).collect()}
     assert dist == want
-
-
-# -- similarity ---------------------------------------------------------------
-
-def _numpy_topk(vecs: dict, k: int):
-    ids = np.array(sorted(vecs))
-    m = np.array([vecs[i] for i in ids], dtype=np.float64)
-    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    sims = m @ m.T
-    out = {}
-    for qi, q in enumerate(ids):
-        order = sorted(
-            ((-sims[qi, j], ids[j]) for j in range(len(ids)) if ids[j] != q))
-        out[q] = [int(n) for _, n in order[:k]]
-    return out
-
-
-def test_brute_force_topk_vs_numpy(spark, emb):
-    from llmap_spark.operators.similarity import brute_force_topk
-
-    vecs = {r.vec_id: list(r.embedding) for r in emb.collect()}
-    want = _numpy_topk(vecs, k=5)
-    got = {}
-    res = brute_force_topk(spark, emb, emb, k=5).collect()
-    for r in sorted(res, key=lambda r: (r.query_id, r.rank)):
-        got.setdefault(r.query_id, []).append(r.neighbor_id)
-    assert got == want
-
-
-def test_ivf_recall_on_clustered_data(spark):
-    """IVF is an approximation whose quality depends on cluster structure;
-    the driver embeddings are isotropic noise (measured: intra-label and
-    inter-label cosine both ~0), where any IVF recall ~= nprobe/ncentroids
-    by construction. So recall is asserted on synthetic clustered vectors —
-    the regime IVF exists for."""
-    from llmap_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    rs = np.random.RandomState(7)
-    centers = rs.normal(size=(8, 32))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for i in range(400):
-        c = centers[i % 8]
-        v = c + 0.15 * rs.normal(size=32)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    exact = brute_force_topk(spark, df, df, k=10).collect()
-    approx = ivf_topk(spark, df, df, k=10, n_centroids=16, nprobe=4).collect()
-    ex, ap = {}, {}
-    for r in exact:
-        ex.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for r in approx:
-        ap.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [len(ex[q] & ap.get(q, set())) / len(ex[q]) for q in ex]
-    assert float(np.mean(recalls)) >= 0.9
-
-
-def test_ivf_recall_on_cluster_sorted_data(spark):
-    """Same regime but rows SORTED BY CLUSTER across few partitions: a
-    centroid sample via bare limit() reads only the first partitions (first
-    clusters), leaving later clusters without nearby centroids — the
-    hash-ordered sample must keep recall regardless of physical order."""
-    from llmap_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    rs = np.random.RandomState(11)
-    centers = rs.normal(size=(8, 32))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for i in range(400):
-        c = centers[i // 50]  # cluster-contiguous ids
-        v = c + 0.15 * rs.normal(size=32)
-        rows.append((i, [float(x) for x in v]))
-    df = (spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-          .repartitionByRange(8, "vec_id"))  # partition == cluster
-
-    exact = brute_force_topk(spark, df, df, k=10).collect()
-    approx = ivf_topk(spark, df, df, k=10, n_centroids=16, nprobe=4,
-                      sample_rows=120).collect()  # < one cluster per limit()
-    ex, ap = {}, {}
-    for r in exact:
-        ex.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for r in approx:
-        ap.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [len(ex[q] & ap.get(q, set())) / len(ex[q]) for q in ex]
-    assert float(np.mean(recalls)) >= 0.9
-
-
-def test_brute_force_chunks_large_query_side(spark, emb):
-    """A query side larger than max_query_rows runs in bounded broadcast
-    blocks (round 2 raised instead) and the chunked result is IDENTICAL to
-    the single-block result — blocks partition query ids disjointly, so
-    chunking must not change a single row."""
-    from llmap_spark.operators.similarity import brute_force_topk
-
-    one_block = brute_force_topk(spark, emb, emb, k=3)
-    chunked = brute_force_topk(spark, emb, emb, k=3, max_query_rows=10)
-    key = ["query_id", "neighbor_id", "rank"]
-    assert sorted(map(tuple, one_block.select(*key).collect())) == \
-        sorted(map(tuple, chunked.select(*key).collect()))
-
-
-def test_embedding_neardup_pairs_ivf_path(spark):
-    """Planted duplicate-ish vectors must surface as near-dup pairs through
-    the default (IVF both sides, no driver collect) path."""
-    from llmap_spark.operators.similarity import embedding_neardup_pairs
-
-    rs = np.random.RandomState(3)
-    base = rs.normal(size=(200, 32))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    rows = [(i, [float(x) for x in base[i]]) for i in range(200)]
-    # ids 1000+i are near-copies of ids 0..19
-    for i in range(20):
-        v = base[i] + 0.01 * rs.normal(size=32)
-        rows.append((1000 + i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = {(r.id_a, r.id_b) for r in
-             embedding_neardup_pairs(spark, df, threshold=0.98,
-                                     n_centroids=8, nprobe=2).collect()}
-    found = sum((i, 1000 + i) in pairs for i in range(20))
-    assert found >= 18
-
-
-def test_embedding_lsh_neardup_recall_and_precision(spark):
-    """Random-hyperplane LSH near-dup: planted near-copies found; reported
-    cosine is the EXACT JVM dot (checked against numpy); no pair below the
-    threshold leaks through."""
-    from llmap_spark.operators.similarity import embedding_lsh_neardup
-
-    rs = np.random.RandomState(5)
-    base = rs.normal(size=(150, 32))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    rows = [(i, [float(x) for x in base[i]]) for i in range(150)]
-    for i in range(20):
-        v = base[i] + 0.02 * rs.normal(size=32)
-        rows.append((1000 + i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = embedding_lsh_neardup(df, max_hamming=8, threshold=0.95)
-    got = {(r.id_a, r.id_b): r.cos_x1000000 for r in out.collect()}
-    found = sum((i, 1000 + i) in got for i in range(20))
-    assert found >= 18  # >=90% recall on planted pairs
-    # exact-cosine verify: spot-check values against numpy
-    vecs = {i: np.asarray(v, dtype=np.float64) for i, v in rows}
-    for (a, b), cx in got.items():
-        va, vb = vecs[a], vecs[b]
-        want = float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
-        assert cx >= 950_000
-        assert abs(cx - int(np.floor(want * 1_000_000))) <= 1
-
-
-def test_topk_total_on_null_and_ragged_embeddings(spark):
-    """One NULL/ragged embedding must not kill the job (never-raise rule);
-    null rows simply never rank as neighbors."""
-    from llmap_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    rs = np.random.RandomState(13)
-    rows = [(i, [float(x) for x in rs.normal(size=8)]) for i in range(30)]
-    rows += [(100, None), (101, [1.0])]  # null + ragged
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bf = brute_force_topk(spark, df, df, k=3).collect()
-    assert bf  # ran to completion
-    ivf = ivf_topk(spark, df, df, k=3, n_centroids=4, nprobe=2).collect()
-    assert ivf
 
 
 def test_exact_dedup_null_text_never_dup(spark):
@@ -453,25 +222,6 @@ def test_exact_dedup_preserves_rows_and_extra_columns(spark):
     assert got["c"].rep_id is None
     assert got["c"].is_dup is False
     assert got["d"].fingerprint is None and not got["d"].is_dup
-
-
-def test_embedding_lsh_neardup_total_on_degenerate_input(spark):
-    """Never-raise rule: empty corpus, NULL embeddings, and ragged rows
-    all flow through without exceptions and never appear in pairs."""
-    from llmap_spark.operators.similarity import embedding_lsh_neardup
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert embedding_lsh_neardup(empty).count() == 0
-
-    rs = np.random.RandomState(9)
-    v = rs.normal(size=16)
-    rows = [(1, [float(x) for x in v]), (2, [float(x) for x in v]),
-            (3, None), (4, [0.0] * 16), (5, [1.0, 2.0])]  # null/zero/ragged
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = {(r.id_a, r.id_b) for r in
-             embedding_lsh_neardup(df, max_hamming=4, threshold=0.99).collect()}
-    assert (1, 2) in pairs
-    assert all(a not in (3, 4, 5) and b not in (3, 4, 5) for a, b in pairs)
 
 
 # -- binpack ------------------------------------------------------------------
@@ -710,18 +460,8 @@ def test_asof_prior_event(spark):
 
 # -- review-fix regressions ---------------------------------------------------
 
-def test_empty_queries_topk_returns_empty(spark, emb):
-    from llmap_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    none = emb.filter("vec_id < 0")
-    assert brute_force_topk(spark, emb, none, k=3).count() == 0
-    assert brute_force_topk(spark, none, none, k=3).count() == 0
-    assert ivf_topk(spark, none, none, k=3).count() == 0
-
-
 def test_shingleless_docs_are_not_duplicates(spark):
-    from llmap_spark.operators.dedup import (minhash_lsh_candidates,
-                                             simhash_candidates)
+    from llmap_spark.operators.dedup import minhash_lsh_candidates
 
     rows = [(1, "a"), (2, "zz"), (3, ""), (4, "   "),
             (5, "a real document with plenty of words to shingle properly today"),
@@ -729,9 +469,6 @@ def test_shingleless_docs_are_not_duplicates(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     mh = {(r.id_a, r.id_b) for r in minhash_lsh_candidates(df).collect()}
     assert mh == {(5, 6)}  # tiny/empty docs never pair with each other
-    sh = {(r.id_a, r.id_b) for r in simhash_candidates(df, max_hamming=3).collect()}
-    assert (5, 6) in sh
-    assert all(a not in (1, 2, 3, 4) and b not in (1, 2, 3, 4) for a, b in sh)
 
 
 def test_training_pipeline_kept_documents(spark, docs):
@@ -851,24 +588,6 @@ def test_connected_components_long_path_converges_fast(spark):
     assert out.count() == 1000
 
 
-def test_simhash_hot_bucket_cap(spark):
-    """A planted hot bucket (many identical-simhash docs -> every band
-    bucket holds all of them) must be DROPPED under max_bucket, and kept
-    under max_bucket=None (the lossless contract). This pins the scale
-    guard the round-2 verdict flagged: uncapped simhash band buckets grow
-    linearly with corpus size and send the self-join quadratic."""
-    from llmap_spark.operators.dedup import simhash_candidates
-
-    n = 30
-    rows = [(i, "the same exact boilerplate sentence repeated verbatim")
-            for i in range(n)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = simhash_candidates(df, max_hamming=4, max_bucket=10).collect()
-    assert capped == []  # every band bucket holds n=30 > 10 -> all dropped
-    lossless = simhash_candidates(df, max_hamming=4, max_bucket=None).collect()
-    assert len(lossless) == n * (n - 1) // 2
-
-
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     """reliable=True must produce identical components via cluster
     checkpoints (recoverable on executor loss, unlike localCheckpoint),
@@ -897,19 +616,6 @@ def test_release_persisted_registry(spark, docs):
     assert release_persisted() == 0  # drained; second call is a no-op
 
 
-def test_as_matrix_modal_dim_survives_ragged_leading_row():
-    """dim inference uses the MODAL row length: a corrupt leading row must
-    not silently zero every well-formed row (round-2 ADVICE)."""
-    from llmap_spark.operators.similarity import _as_matrix
-
-    rows = [[1.0, 2.0, 3.0, 4.0, 5.0],      # ragged leader (wrong dim)
-            [1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 2.0]]
-    m = _as_matrix(rows)
-    assert m.shape == (4, 3)
-    assert np.allclose(m[0], 0.0)           # the ragged row zeroes
-    assert np.allclose(m[1:], np.asarray(rows[1:]))  # the rest survive
-
-
 def test_host_of_stops_at_query_and_fragment(spark):
     """Slash-less urls with a query/fragment must not leak it into the
     host key — 'http://h?x=1' previously produced host 'h?x=1', splitting
@@ -922,34 +628,6 @@ def test_host_of_stops_at_query_and_fragment(spark):
     got = {r.i: r.h for r in df.select("i", host_of(F.col("u")).alias("h")).collect()}
     assert got == {1: "example.com", 2: "example.com",
                    3: "example.com", 4: "example.com"}
-
-
-def test_hamming_band_pairs_radius_zero(spark):
-    """max_hamming=0 (one 64-bit band) is in the documented range and must
-    work: the (1<<64)-1 mask literal overflowed a signed long
-    (review-found). Radius 0 == exact sketch equality."""
-    from llmap_spark.operators.dedup import hamming_band_pairs
-
-    rows = [(1, 5), (2, 5), (3, 7), (4, -9223372036854775808)]
-    s = spark.createDataFrame(rows, "_id long, sh long")
-    got = {(r.id_a, r.id_b, r.hamming)
-           for r in hamming_band_pairs(s, 0).collect()}
-    assert got == {(1, 2, 0)}
-
-
-def test_ngram_jaccard_blank_docs_never_pair(spark):
-    """At n=1, split('') is [''] — blank docs previously shared the ''
-    gram and paired with every other blank doc at Jaccard 1, an uncapped
-    quadratic join (review-found)."""
-    from llmap_spark.operators.dedup import ngram_jaccard_pairs
-
-    rows = [(1, ""), (2, "   "), (3, ""), (4, "real words here"),
-            (5, "real words here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.id_a, r.id_b) for r in
-           ngram_jaccard_pairs(df, n=1, threshold_num=1,
-                               threshold_den=2).collect()}
-    assert got == {(4, 5)}
 
 
 def test_minhash_duplicate_ids_no_self_pairs(spark):

@@ -96,6 +96,23 @@ def test_decontaminate_empty_benchmark_is_all_clean(spark):
     assert (r.n_hits, r.contaminated) == (0, 0)
 
 
+def test_decontaminate_blank_docs_never_match_blank_benchmark_row(spark):
+    """At n=1, split('') is [''], so without word_ngrams' blank-text guard
+    every blank, whitespace-only or NULL doc would share the '' gram with a
+    blank benchmark row and be flagged contaminated."""
+    docs = spark.createDataFrame(
+        [(0, ""), (1, "   "), (2, "\n\t "), (3, None),
+         (4, "shared word"), (5, "clean text")],
+        "doc_id long, text string")
+    bench = spark.createDataFrame([("",), ("   ",), ("shared",)],
+                                  "text string")
+    got = {r.doc_id: r for r in decontaminate(docs, bench, n=1).collect()}
+    for d in (0, 1, 2, 3):
+        assert d not in got or got[d].contaminated == 0
+    assert (got[4].n_hits, got[4].contaminated) == (1, 1)
+    assert got[5].contaminated == 0
+
+
 def test_paragraph_dedup_preserves_blank_paragraphs(spark):
     """Blank paragraphs are spacing, not content: they must NOT dedup
     corpus-wide to one arbitrary winner (every other doc's spacing would
