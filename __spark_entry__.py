@@ -673,7 +673,7 @@ def _q_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     surrogate — (tf DESC, df ASC, term ASC) is the idf ordering without
     the float log, so the oracle replays it exactly. ASCII-translate case
     fold on both engines (lower() diverges cross-engine on e.g. U+0130,
-    the standing cdc rule)."""
+    the kernel's standing rule)."""
     from llmap_spark.operators.textstats import top_terms
 
     return top_terms(_docs(spark, sf_dir), k=3)
@@ -775,49 +775,6 @@ def _langid_oracle_sql() -> str:
     """
 
 
-def _q_substring_dedup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicated-substring dedup (operators/substrings.py:
-    positional L-gram reduction of the Lee-et-al suffix-array family;
-    equivalence to a real suffix-array+LCP oracle pinned in
-    tests/test_substrings.py), hash-verified by a planted construction
-    whose coverage is pure arithmetic — validated against the pure-python
-    suffix-array oracle for doc_ids 0..47 BEFORE this SQL was written:
-
-      doc_id%3==0  whole-doc shared block per family doc_id%12 (62
-                   chars, md5-unit x7): fully covered -> 1 span, 62 dup
-                   chars, trimmed ''.
-      doc_id%3==1  doc-unique 40-char u repeated: 'u u' -> spans [0,40)
-                   and [41,81) (the separator space survives: grams
-                   straddling it occur once) -> 2 spans, 80 dup chars,
-                   trimmed ' '.
-      doc_id%3==2  two distinct md5 hexes: nothing >=20 chars repeats
-                   -> 0 spans, text unchanged.
-
-    Cross-case bleed is md5-improbable (a >=20-char collision between
-    independent digests). The real corpus text is REPLACED by the
-    construction so every output cell is engine-portable arithmetic."""
-    from llmap_spark.operators.substrings import substring_dedup
-
-    ds = F.col("doc_id").cast("string")
-    unit = F.substring(F.md5(F.encode(
-        F.concat(F.lit("sdp-shared-"),
-                 (F.col("doc_id") % 12).cast("string")), "UTF-8")), 1, 8)
-    shared = F.concat(unit, F.repeat(F.concat(F.lit(" "), unit), 6))
-    u = F.concat(F.md5(F.encode(ds, "UTF-8")),
-                 F.substring(F.md5(F.encode(F.concat(ds, F.lit("x")),
-                                            "UTF-8")), 1, 8))
-    uniq = F.concat(F.md5(F.encode(F.concat(ds, F.lit("a")), "UTF-8")),
-                    F.lit(" "),
-                    F.md5(F.encode(F.concat(ds, F.lit("b")), "UTF-8")))
-    text = (F.when(F.col("doc_id") % 3 == 0, shared)
-            .when(F.col("doc_id") % 3 == 1,
-                  F.concat(u, F.lit(" "), u))
-            .otherwise(uniq))
-    d = _docs(spark, sf_dir).select("doc_id", text.alias("text"))
-    return substring_dedup(d, min_len=20).select(
-        "doc_id", "n_spans", "n_dup_chars", "text_deduped")
-
-
 def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llmap_spark.operators.textstats import quality_features
 
@@ -838,22 +795,6 @@ def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return exact_dedup(_docs(spark, sf_dir)).select(
         "doc_id", "fingerprint", "rep_id", "is_dup")
-
-
-def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental exact dedup (dedup.exact_dedup_against): docs with
-    doc_id % 5 == 0 play the prior snapshot's fingerprint table; the rest
-    arrive as the new batch and survive iff their md5 fingerprint is
-    unseen. md5 is engine-identical, so the whole operator is
-    hash-verified directly on the real corpus (no planting needed)."""
-    from llmap_spark.operators.dedup import exact_dedup_against
-    from llmap_spark.operators.textstats import fingerprint
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    seen = fingerprint(d.filter(F.col("doc_id") % 5 == 0), "text") \
-        .select("fingerprint")
-    batch = d.filter(F.col("doc_id") % 5 != 0)
-    return exact_dedup_against(batch, seen).select("doc_id", "fingerprint")
 
 
 def _q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -898,30 +839,6 @@ def _q_dedup_minhash_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("agree_x64")))
 
 
-def _q_dedup_minhash_incremental_planted(spark: SparkSession,
-                                         sf_dir: str) -> DataFrame:
-    """INCREMENTAL near-dup (dedup.minhash_candidates_against — the
-    MinHash counterpart of exact_dedup_against for continuously-arriving
-    batches), hash-verified: the case-variant families are SPLIT across
-    the prior snapshot (members r=0,1 -> minhash_signatures) and the new
-    batch (members r=2,3, re-idd +100000). Within-family signatures are
-    identical, so every batch doc matches exactly its family's two seen
-    docs at agreement 64/64 — pure doc_id arithmetic; within-batch pairs
-    are structurally absent (out of the operator's scope)."""
-    from llmap_spark.operators.dedup import (minhash_candidates_against,
-                                             minhash_signatures)
-
-    base = _planted_neardup_docs(spark, sf_dir)
-    seen = minhash_signatures(base.filter(F.col("doc_id") % 4 <= 1))
-    batch = (base.filter(F.col("doc_id") % 4 >= 2)
-             .select((F.col("doc_id") + 100000).alias("doc_id"), "text"))
-    cand = minhash_candidates_against(batch, seen)
-    return (cand.filter(F.col("est_jaccard") >= 0.5)
-            .select("batch_id", "seen_id",
-                    F.round(F.col("est_jaccard") * 64).cast("int")
-                    .alias("agree_x64")))
-
-
 def _q_dedup_components_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components hash-verified by construction: components over
     the planted family candidates are exactly the 4-blocks, label = min id
@@ -944,55 +861,6 @@ def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cand = minhash_lsh_candidates(_docs(spark, sf_dir), materialize=True)
     return connected_components(cand.filter(F.col("est_jaccard") >= 0.5))
-
-
-def _q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking: rolling-hash boundary cuts -> chunk table
-    (id, idx, md5, n_chars). Sub-document dedup granularity; boundaries
-    survive edits (shift-resistance pinned in pytest)."""
-    from llmap_spark.operators.fingerprints import cdc_chunk_table
-
-    return cdc_chunk_table(_docs(spark, sf_dir))
-
-
-def _q_winnow_overlap_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowed-fingerprint overlap, hash-verified by construction: 4-block
-    families of EXACT copies (winnowing does no dedup) share their entire
-    fingerprint set, so the pair list collapses to within-family pairs —
-    doc_id arithmetic. Distinct families are md5 word soups sharing no
-    16-char k-grams, so no cross-family pair reaches min_shared=2. The
-    shared-count column is a rolling-hash count (not SQL-expressible) and
-    is deliberately not selected; the corpus-data variant winnow_overlap
-    carries it rows-only."""
-    from llmap_spark.operators.fingerprints import winnow_overlap_pairs
-
-    text = F.expr(
-        "concat('the ', regexp_replace(md5(concat('w', "
-        "cast(doc_id DIV 4 as string))), '(....)', '$1 '), "
-        "regexp_replace(md5(concat('x', cast(doc_id DIV 4 as string))), "
-        "'(....)', '$1 '))")
-    planted = _docs(spark, sf_dir).select("doc_id", text.alias("text"))
-    return winnow_overlap_pairs(planted, min_shared=2) \
-        .select("id_a", "id_b")
-
-
-def _q_cdc_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC concatenation invariant, hash-verified over EVERY real document:
-    the chunks of a doc, concatenated in order, must reproduce the
-    normalized lowercased text exactly (md5-compared in SQL) and their
-    lengths must sum to its length. Chunk BOUNDARY positions are rolling-
-    hash math (rows-only in cdc_chunks; pytest pins shift-resistance)."""
-    from llmap_spark.operators.fingerprints import cdc_chunks_udf
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", cdc_chunks_udf()(F.col("text")).alias("_chunks"))
-    return d.select(
-        "doc_id",
-        F.md5(F.encode(F.concat_ws("", F.col("_chunks")), "UTF-8"))
-        .alias("whole_md5"),
-        F.aggregate(F.transform("_chunks", F.length),
-                    F.lit(0), lambda a, v: a + v).cast("long")
-        .alias("n_chars_sum"))
 
 
 def _q_link_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1120,22 +988,6 @@ def _q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN doc_id % 3 = 0 THEN '#frag' ELSE '' END)")
     return _docs(spark, sf_dir).select(
         "doc_id", canonical_url(messy).alias("canonical"))
-
-
-def _q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowed rolling-hash document fingerprints (MOSS scheme; local —
-    detects PARTIAL overlap, unlike md5/MinHash whole-doc schemes)."""
-    from llmap_spark.operators.fingerprints import doc_fingerprints
-
-    return doc_fingerprints(_docs(spark, sf_dir))
-
-
-def _q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial-overlap candidate pairs from shared winnowed fingerprints
-    (hot-fingerprint df-cap guards the self-join)."""
-    from llmap_spark.operators.fingerprints import winnow_overlap_pairs
-
-    return winnow_overlap_pairs(_docs(spark, sf_dir), min_shared=2)
 
 
 def _q_collate_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1496,13 +1348,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- LAST_CHECKED: never (new in r5) — inserted here as built ---
         "lang_id2": _q_lang_id2,
-        "substring_dedup_planted": _q_substring_dedup_planted,
         "frontier_iterative_planted": _q_frontier_iterative_planted,
         "robots_sitemap_frontier": _q_robots_sitemap_frontier,
         "fetch_schedule_planted": _q_fetch_schedule_planted,
         "token_count_cjk": _q_token_count_cjk,
-        "dedup_minhash_incremental_planted":
-            _q_dedup_minhash_incremental_planted,
         # --- LAST_CHECKED: r2 (green r1+r2 or r2 only; oldest rows) ---
         "token_count": _q_token_count,
         "token_count_bpe": _q_token_count_bpe,
@@ -1527,12 +1376,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pricing_summary": _q_pricing_summary,
         "orders_per_region": _q_orders_per_region,
         "sample_deterministic": _q_sample_deterministic,
-        # --- LAST_CHECKED: r3 (dedup/fingerprint/scrub families) ---
-        "doc_fingerprints": _q_doc_fingerprints,
-        "winnow_overlap": _q_winnow_overlap,
-        "winnow_overlap_planted": _q_winnow_overlap_planted,
-        "cdc_chunks": _q_cdc_chunks,
-        "cdc_reassembly": _q_cdc_reassembly,
+        # --- LAST_CHECKED: r3 (scrub families) ---
         "scrub_paragraph_dedup": _q_scrub_paragraph_dedup,
         "scrub_redact_pii": _q_scrub_redact_pii,
         "scrub_decontaminate": _q_scrub_decontaminate,
@@ -1564,7 +1408,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipeline_kept_planted": _q_pipeline_kept_planted,
         "pipeline_curated_planted": _q_pipeline_curated_planted,
         "dedup_exact": _q_dedup_exact,
-        "dedup_incremental": _q_dedup_incremental,
         "dedup_minhash_lsh": _q_dedup_minhash_lsh,
         "dedup_minhash_planted": _q_dedup_minhash_planted,
         "dedup_components": _q_dedup_components,
@@ -1962,24 +1805,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT src_host, dst_host, count(*) AS n_links
             FROM e GROUP BY src_host, dst_host
         """,
-        "winnow_overlap_planted": """
-            WITH m AS (SELECT doc_id, doc_id // 4 AS g FROM documents)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM m a JOIN m b ON a.g = b.g AND a.doc_id < b.doc_id
-        """,
-        "cdc_reassembly": """
-            -- chunks concatenate back to the normalized ASCII-folded text;
-            -- the fold is translate(A-Z -> a-z), NOT lower(): engines'
-            -- lower() diverges from Python str.lower() on full-mapping
-            -- chars (İ), the repo's documented oracle-twin hazard
-            SELECT doc_id,
-              md5(translate(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g')),
-                  'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'))
-                AS whole_md5,
-              CAST(length(trim(regexp_replace(coalesce(text, ''),
-                '\\s+', ' ', 'g'))) AS bigint) AS n_chars_sum
-            FROM documents
-        """,
         "dedup_minhash_planted": """
             -- 6 within-family pairs per 4-block, agreement exactly 64/64
             WITH m AS (SELECT doc_id, doc_id // 4 AS g, doc_id % 4 AS r
@@ -2158,20 +1983,6 @@ def oracle_sql() -> dict[str, str]:
                 1000 * (len(g3) - len(list_distinct(g3))) / len(g3)) AS int)
                 ELSE 0 END AS dup_3gram_x1000
             FROM g
-        """,
-        "dedup_incremental": f"""
-            -- NOT EXISTS (not NOT IN): null-safe — a NULL fingerprint
-            -- (NULL text) always survives, mirroring the operator's
-            -- unknown-content rule
-            WITH f AS (
-              SELECT doc_id, md5({NORM_SQL}) AS fingerprint
-              FROM documents WHERE doc_id % 5 <> 0),
-            seen AS (
-              SELECT DISTINCT md5({NORM_SQL}) AS fp
-              FROM documents WHERE doc_id % 5 = 0)
-            SELECT doc_id, fingerprint FROM f
-            WHERE fingerprint IS NULL
-               OR NOT EXISTS (SELECT 1 FROM seen WHERE seen.fp = f.fingerprint)
         """,
         "dedup_exact": f"""
             -- NULL text = UNKNOWN content, never a duplicate (mirrors the
@@ -2712,10 +2523,10 @@ def oracle_sql() -> dict[str, str]:
         # their oracles instead — see tests/):
         #   dedup_minhash_lsh, dedup_components (the planted twins
         #   dedup_minhash_planted / dedup_components_planted ARE
-        #   hash-checked), doc_fingerprints, winnow_overlap, cdc_chunks,
-        #   pipeline_kept_docs (the planted twin pipeline_kept_planted IS
-        #   hash-checked), sample_seeded (the md5-coin twin
-        #   sample_seeded_portable IS hash-checked)
+        #   hash-checked), pipeline_kept_docs (the planted twin
+        #   pipeline_kept_planted IS hash-checked), sample_seeded (the
+        #   md5-coin twin sample_seeded_portable IS hash-checked);
+        #   tests/test_entry_contract.py pins this set
     }
     # extract_full = the whole corpus in one result, composed VERBATIM
     # from the three per-family derivations (each independently
@@ -2724,20 +2535,6 @@ def oracle_sql() -> dict[str, str]:
     # decoration no SQL can derive). Edge pages take lang from the
     # wrapped doc (corpus.py: lang = langs[i % ndocs]).
     d["lang_id2"] = _langid_oracle_sql()
-    d["dedup_minhash_incremental_planted"] = """
-        -- family arithmetic: batch member d (r in 2,3) matches the two
-        -- seen members of its 4-block at full signature agreement
-        WITH b AS (SELECT doc_id FROM documents WHERE doc_id % 4 IN (2, 3))
-        SELECT doc_id + 100000 AS batch_id,
-               (doc_id // 4) * 4 AS seen_id,
-               CAST(64 AS int) AS agree_x64
-        FROM b
-        UNION ALL
-        SELECT doc_id + 100000 AS batch_id,
-               (doc_id // 4) * 4 + 1 AS seen_id,
-               CAST(64 AS int) AS agree_x64
-        FROM b
-    """
     d["token_count_cjk"] = """
         -- 'alpha beta gamma' + k CJK chars + ' delta tail' = 5 + k
         SELECT doc_id, CAST(5 + doc_id % 9 AS int) AS n_tokens_sa
@@ -2819,23 +2616,6 @@ def oracle_sql() -> dict[str, str]:
                'https://s' || ds || '.example/child1.xml' AS src_loc,
                CAST(2 AS int) AS round
         FROM base WHERE doc_id % 2 = 1
-    """
-    d["substring_dedup_planted"] = """
-        -- arithmetic replay of the planted construction (see the query
-        -- docstring; derivation validated against the pure-python
-        -- suffix-array oracle before this SQL was written)
-        SELECT doc_id,
-          CAST(CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 2
-               ELSE 0 END AS int) AS n_spans,
-          CAST(CASE doc_id % 3 WHEN 0 THEN 62 WHEN 1 THEN 80
-               ELSE 0 END AS int) AS n_dup_chars,
-          CASE doc_id % 3
-            WHEN 0 THEN ''
-            WHEN 1 THEN ' '
-            ELSE md5(CAST(doc_id AS VARCHAR) || 'a') || ' '
-                 || md5(CAST(doc_id AS VARCHAR) || 'b')
-          END AS text_deduped
-        FROM documents
     """
     d["extract_full"] = f"""
         WITH n AS (SELECT count(*) AS ndocs FROM documents)

@@ -49,7 +49,6 @@ def main() -> int:
     from llmap_spark.operators.textstats import (fingerprint, lang_id,
                                                  quality_features)
     from llmap_spark.operators.langid import lang_id2 as lang_id2_op
-    from llmap_spark.operators.substrings import substring_dedup
     from llmap_spark.plans.pipeline import ExtractConfig, extract
     from llmap_spark.plans.training import curated_corpus
     import __spark_entry__ as entry
@@ -103,13 +102,8 @@ def main() -> int:
         ("pipeline_curated", lambda: noop(curated_corpus(
             docs, benchmark=docs.filter(F.col("doc_id") % 97 == 0)
             .select("text")))),
-        # r5 first-class operators: 35-language id (map-only kernel UDF)
-        # and exact duplicated-substring dedup (the heavy positional-gram
-        # pass — its linear-in-corpus cost should stay visible)
+        # r5 first-class operator: 35-language id (map-only kernel UDF)
         ("lang_id2", lambda: noop(lang_id2_op(docs))),
-        ("substring_dedup", lambda: noop(substring_dedup(
-            docs, min_len=50).select(
-            "doc_id", "n_spans", "n_dup_chars"))),
     ]
 
     # warmup (untimed): python workers + codegen + shuffle spin-up, so the

@@ -29,7 +29,6 @@ def main(tag: str, suffix: str) -> int:
 
     from llmap_spark.operators.dedup import exact_dedup, minhash_lsh_candidates
     from llmap_spark.operators.scrub import dedup_paragraphs, redact_pii
-    from llmap_spark.operators.substrings import substring_dedup
     from llmap_spark.operators.textstats import (fingerprint, lang_id,
                                                  quality_features)
     from llmap_spark.operators.langid import lang_id2 as lang_id2_op
@@ -53,8 +52,6 @@ def main(tag: str, suffix: str) -> int:
         "topk_per_user": lambda: entry._q_topk_per_user(spark, sf_dir),
         "pipeline_kept_docs": lambda: kept_documents(docs),
         "lang_id2": lambda: lang_id2_op(docs),
-        "substring_dedup": lambda: substring_dedup(docs, min_len=50)
-            .select("doc_id", "n_spans", "n_dup_chars"),
         "curated_scrub_tail": lambda: _curated_tail(docs),
     }
 

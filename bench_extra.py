@@ -2,7 +2,7 @@
 
 NOT the contract bench — bench.py is frozen for driver measurement. This
 file exists to attribute seconds inside the composed chains (kept_docs,
-curated, LSH, substring dedup, extraction) to individual stages, and to
+curated, LSH, extraction) to individual stages, and to
 A/B candidate optimizations, with the same session config bench.py uses.
 
 Usage:
@@ -88,11 +88,8 @@ def main(groups: list[str]) -> int:
 
     if want("dedup"):
         from llmap_spark.operators.dedup import (exact_dedup,
-                                                 minhash_lsh_candidates,
-                                                 minhash_signatures)
+                                                 minhash_lsh_candidates)
         timed("exact_dedup", lambda: noop(exact_dedup(docs)))
-        timed("minhash_sig_only", lambda: (noop(minhash_signatures(docs)),
-                                           release_persisted()))
         timed("lsh_lazy_noop", lambda: (noop(minhash_lsh_candidates(docs)),
                                         release_persisted()))
         timed("lsh_materialized", lambda: noop(
@@ -137,13 +134,6 @@ def main(groups: list[str]) -> int:
         timed("curated_full", lambda: noop(curated_corpus(
             docs, benchmark=docs.filter(F.col("doc_id") % 97 == 0)
             .select("text"))))
-
-    if want("substr"):
-        from llmap_spark.operators.substrings import substring_dedup, _gram_table
-        timed("gram_table_only", lambda: (noop(
-            _gram_table(docs, "doc_id", "text", 50)), release_persisted()))
-        timed("substring_full", lambda: noop(substring_dedup(
-            docs, min_len=50).select("doc_id", "n_spans", "n_dup_chars")))
 
     if want("events"):
         import __spark_entry__ as entry

@@ -11,7 +11,8 @@ Layout:
   corpus.py      — seeded synthetic pages-table generator
   session.py     — SparkSession builder with scale-tuned confs
   functions/     — the mapInArrow UDF around the kernel
-  operators/     — curation chain (quality, dedup, scrub) + text/link ops
+  operators/     — curation chain (quality, exact + MinHash-LSH dedup,
+                   scrub incl. paragraph dedup) + text/link ops
   sources/       — pages reader + Iceberg-style snapshot sink with resume
   plans/         — pipeline assembly (extract funnel) + lineage
   streaming/     — Structured Streaming variants

@@ -1,9 +1,10 @@
 """Session-scoped registry for operator-persisted DataFrames.
 
-Several operators (exact_dedup, minhash_lsh_candidates, the
-curation chain) persist an intermediate frame because multiple consumers
-share an expensive UDF subtree. Under their lazy default
-(materialize=False) the operator cannot know when the caller is done, so
+Three operators (exact_dedup, minhash_lsh_candidates and the curation
+chain in plans/training.py) persist an intermediate frame because
+multiple consumers share an expensive subtree. While the plan stays lazy
+(minhash_lsh_candidates' default materialize=False, and always for the
+other two) the operator cannot know when the caller is done, so
 the persisted block would otherwise pin executor storage for the life of
 the session — a leak-by-default API in long-lived apps.
 

@@ -1,17 +1,16 @@
 """Deduplication operators for web-scale text corpora.
 
-One exact and one near-duplicate detector, plus the clustering step the
-curation chain runs after them:
+The curation chain's two whole-document detectors, plus the clustering
+step it runs after them:
 
   exact_dedup          md5 fingerprint -> groupBy-min winners -> join-back
-                       (exact_dedup_against: the incremental form, a
-                       left-anti join against a prior fingerprint table)
   minhash_lsh          char-shingle MinHash signatures (pandas UDF) ->
                        banded LSH bucket join -> candidate pairs with
                        signature-estimated Jaccard (JVM zip_with)
-                       (minhash_candidates_against: the incremental form)
   connected_components min-label propagation over candidate pairs ->
                        duplicate clusters (no GraphFrames dep)
+
+Sub-document (paragraph) dedup is scrub.dedup_paragraphs.
 
 Scale notes baked in: LSH buckets are capped (hot-bucket skew guard),
 signatures travel as array<long> (Arrow-native), verification math stays
@@ -30,6 +29,13 @@ from pyspark.sql.functions import pandas_udf
 from llmap_spark.operators.textstats import fingerprint
 
 MERSENNE61 = (1 << 61) - 1
+# the one LSH configuration: 64 hashes in 16 bands of 4 rows over
+# 5-byte shingles, hash family seeded once, buckets capped at 200 members
+NUM_HASHES = 64
+BANDS = 16
+SHINGLE_K = 5
+SEED = 42
+MAX_BUCKET = 200
 
 
 # --------------------------------------------------------------------------
@@ -98,39 +104,9 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def exact_dedup_against(df: DataFrame, seen: DataFrame,
-                        text_col: str = "text",
-                        seen_fp_col: str = "fingerprint") -> DataFrame:
-    """Incremental exact dedup for continuously-arriving crawl batches:
-    drop rows whose whitespace-normalized md5 fingerprint already exists
-    in a PRIOR snapshot's fingerprint table, keeping everything else with
-    its fingerprint attached (feed the survivors' fingerprints back into
-    the seen table for the next batch).
-
-    One left-anti equi-join on the fingerprint: AQE broadcasts the seen
-    side when it is small; at full scale both sides shuffle on the
-    fingerprint key (uniform by construction — md5). NULL-text rows carry
-    NULL fingerprints and always SURVIVE (anti-join null keys never
-    match): unknown content is not evidence of duplication, the same rule
-    exact_dedup applies within a batch. Within-batch duplicates are not
-    this operator's job — run exact_dedup on the batch first (or after).
-    """
-    fp = fingerprint(df, text_col)
-    seen_d = seen.select(
-        F.col(seen_fp_col).alias("fingerprint")).distinct()
-    return fp.join(seen_d, "fingerprint", "left_anti")
-
-
 # --------------------------------------------------------------------------
 # minhash + LSH
 # --------------------------------------------------------------------------
-
-def _hash_params(num_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
-    rs = np.random.RandomState(seed)
-    a = rs.randint(1, MERSENNE61, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    b = rs.randint(0, MERSENNE61, size=num_hashes, dtype=np.int64).astype(np.uint64)
-    return a, b
-
 
 _FNV = np.uint64(1099511628211)
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
@@ -148,39 +124,45 @@ def _mix64(h: np.ndarray) -> np.ndarray:
     return h
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Stable byte-k-shingle 64-bit hashes, fully numpy-vectorized:
+def _shingle_hashes(text: str) -> np.ndarray:
+    """Stable SHINGLE_K-byte-shingle 64-bit hashes, fully numpy-vectorized:
     sliding windows x FNV-prime powers, then a murmur finalizer. (The
     first draft hashed each shingle with blake2b in a Python loop —
     ~300 digest calls per doc dominated the whole LSH stage.) Never
     Python hash(): not stable across workers."""
     t = " ".join(text.split()).lower()
     b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-    if b.size < k:
+    if b.size < SHINGLE_K:
         return np.empty(0, dtype=np.uint64)
-    win = np.lib.stride_tricks.sliding_window_view(b, k).astype(np.uint64)
-    pw = _FNV ** np.arange(k, dtype=np.uint64)  # wraparound mod 2^64 is fine
+    win = np.lib.stride_tricks.sliding_window_view(
+        b, SHINGLE_K).astype(np.uint64)
+    # wraparound mod 2^64 is fine
+    pw = _FNV ** np.arange(SHINGLE_K, dtype=np.uint64)
     h = _mix64((win * pw[None, :]).sum(axis=1, dtype=np.uint64))
     return np.unique(h)
 
 
-def minhash_signature_udf(num_hashes: int = 64, shingle_k: int = 5, seed: int = 42):
+def minhash_signature_udf():
     """pandas_udf: text -> array<long> MinHash signature. The per-doc min
     over (a*h+b) mod 2^61-1 is a vectorized numpy outer product."""
-    a, b = _hash_params(num_hashes, seed)
+    rs = np.random.RandomState(SEED)
+    a = rs.randint(1, MERSENNE61, size=NUM_HASHES,
+                   dtype=np.int64).astype(np.uint64)
+    b = rs.randint(0, MERSENNE61, size=NUM_HASHES,
+                   dtype=np.int64).astype(np.uint64)
 
     @pandas_udf("array<long>")
     def sig(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            h = _shingle_hashes(t or "", shingle_k)
+            h = _shingle_hashes(t or "")
             if h.size == 0:
                 # shingle-less doc: NULL signature. A shared sentinel
                 # signature would make every tiny/empty doc a "perfect
                 # duplicate" of every other one.
                 out.append(None)
                 continue
-            # (num_hashes, n_shingles) — wraparound mult is fine pre-mod
+            # (NUM_HASHES, n_shingles) — wraparound mult is fine pre-mod
             m = (a[:, None] * h[None, :] + b[:, None]) % MERSENNE61
             out.append(m.min(axis=1).astype(np.int64).tolist())
         return pd.Series(out)
@@ -193,25 +175,23 @@ def minhash_signature_udf(num_hashes: int = 64, shingle_k: int = 5, seed: int = 
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", num_hashes: int = 64,
-                           bands: int = 16, shingle_k: int = 5,
-                           max_bucket: int = 200,
+                           text_col: str = "text",
                            materialize: bool = False) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH.
 
     Returns (id_a, id_b, est_jaccard double) with id_a < id_b. est_jaccard
     is the signature agreement fraction, computed JVM-side via zip_with —
-    no second Python pass. Buckets larger than `max_bucket` are dropped
+    no second Python pass. Buckets larger than MAX_BUCKET are dropped
     (skew guard: a degenerate shingle bucket would otherwise create a
     quadratic join blowup; dropped buckets mean those docs are near-dups of
     *many* docs and are caught by other bands with overwhelming odds).
 
     Shuffle diet: only (id, band, band-hash) rows enter the bucket
-    self-join and the candidate `distinct` — signatures (64 longs, ~0.5 KB)
+    grouping and the candidate `distinct` — signatures (64 longs, ~0.5 KB)
     are re-attached AFTER the pair set is deduplicated, via broadcast of
     the (small by construction) pair list against the persisted signature
-    frame. Carrying both signatures through the join + distinct would ship
-    ~1 KB of avoidable shuffle per candidate occurrence.
+    frame. Carrying both signatures through the grouping + distinct would
+    ship ~1 KB of avoidable shuffle per candidate occurrence.
 
     The operator is LAZY by default: it returns a plan and leaves the
     signature frame persisted (the UDF runs once per row however many
@@ -225,11 +205,9 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     """
     from llmap_spark.cache import register_persisted
 
-    assert num_hashes % bands == 0
     sig = ensure_parallelism(
         df.select(F.col(id_col).alias("_id"), F.col(text_col))).select(
-        "_id",
-        minhash_signature_udf(num_hashes, shingle_k)(F.col(text_col)).alias("sig"))
+        "_id", minhash_signature_udf()(F.col(text_col)).alias("sig"))
     # shingle-less docs carry NULL signatures and cannot be near-dups
     sig = sig.filter(F.col("sig").isNotNull())
     # the signature subtree feeds three consumers (band explode + the two
@@ -237,10 +215,16 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     sig = sig.persist()
     if not materialize:
         register_persisted(sig)
-    # band key: md5 of the band's signature slice, JVM-side (the shared
-    # _band_keys construction — the incremental variant must produce
-    # byte-identical keys)
-    exploded = _band_keys(sig, "_id", num_hashes, bands)
+    # band key: md5 of the band's signature slice, JVM-side
+    rows_per_band = NUM_HASHES // BANDS
+    band_exprs = [
+        F.struct(F.lit(bd).alias("band"),
+                 F.md5(F.to_json(F.slice("sig", bd * rows_per_band + 1,
+                                         rows_per_band))).alias("bh"))
+        for bd in range(BANDS)]
+    exploded = (sig.select("_id", F.explode(F.array(*band_exprs)).alias("bk"))
+                .select("_id", F.col("bk.band").alias("band"),
+                        F.col("bk.bh").alias("bh")))
     # hot-bucket guard via groupBy counts + ANTI-join against the
     # over-full buckets, NOT a window over (band, bh): the hot bucket is
     # exactly the case the cap exists for, and a window would buffer that
@@ -253,39 +237,27 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     # measured +2.6 s at sf0.1 in the driver bench)
     hot = (exploded.groupBy("band", "bh")
            .agg(F.count(F.lit(1)).alias("_bn"))
-           .filter(F.col("_bn") > max_bucket)
+           .filter(F.col("_bn") > MAX_BUCKET)
            .select("band", "bh"))
     pruned = exploded.join(hot, ["band", "bh"], "left_anti")
-    if max_bucket <= 1024:
-        # post-prune, every bucket is <= max_bucket members, so pair
-        # generation can be ONE groupBy + bounded in-array expansion
-        # (max_bucket^2/2 structs per bucket row — hence the 1024 guard:
-        # ~500k structs is the most we let one aggregate row hold)
-        # instead of a two-sided self-join. Saves a full exchange of the
-        # exploded frame AND stops the counts/anti-join subtree being
-        # evaluated once per join side (the winnow_overlap_pairs shape).
-        byb = (pruned.groupBy("band", "bh")
-               .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-               .filter(F.size("ids") >= 2))
-        pairs = (byb.select(F.explode(F.flatten(F.expr(
-            "transform(ids, (x, i) -> transform("
-            "  slice(ids, i + 2, size(ids) - i - 1),"
-            "  y -> struct(x AS id_a, y AS id_b)))"
-        ))).alias("p")).select("p.id_a", "p.id_b")
-            # strict <, matching the self-join branch: a duplicated id in
-            # the input must not emit a self-pair (sort_array makes equal
-            # ids adjacent, so the in-array expansion WOULD pair them)
-            .filter(F.col("id_a") < F.col("id_b"))
-            .distinct())
-    else:
-        # big caps: the in-array expansion would be quadratic in the cap;
-        # fall back to the equi-self-join (AQE can skew-split it)
-        a = pruned.select(F.col("_id").alias("id_a"), "band", "bh")
-        b = pruned.select(F.col("_id").alias("id_b"), "band", "bh")
-        pairs = (
-            a.join(b, ["band", "bh"]).filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct()
-        )
+    # post-prune, every bucket is <= MAX_BUCKET members, so pair
+    # generation is ONE groupBy + bounded in-array expansion
+    # (MAX_BUCKET^2/2 structs per bucket row) instead of a two-sided
+    # self-join. Saves a full exchange of the exploded frame AND stops
+    # the counts/anti-join subtree being evaluated once per join side.
+    byb = (pruned.groupBy("band", "bh")
+           .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
+           .filter(F.size("ids") >= 2))
+    pairs = (byb.select(F.explode(F.flatten(F.expr(
+        "transform(ids, (x, i) -> transform("
+        "  slice(ids, i + 2, size(ids) - i - 1),"
+        "  y -> struct(x AS id_a, y AS id_b)))"
+    ))).alias("p")).select("p.id_a", "p.id_b")
+        # strict <: a duplicated id in the input must not emit a
+        # self-pair (sort_array makes equal ids adjacent, so the
+        # in-array expansion WOULD pair them)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct())
     sa = sig.select(F.col("_id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("_id").alias("id_b"), F.col("sig").alias("sig_b"))
     # no broadcast hint: AQE turns these into broadcast joins at runtime
@@ -297,106 +269,11 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
         F.lit(0), lambda acc, v: acc + v)
     out = withsigs.select(
         "id_a", "id_b",
-        (agree / F.lit(float(num_hashes))).alias("est_jaccard"))
+        (agree / F.lit(float(NUM_HASHES))).alias("est_jaccard"))
     if materialize:
         out = out.localCheckpoint(eager=True)
         sig.unpersist()
     return out
-
-
-def _band_keys(sig_frame: DataFrame, id_alias: str, num_hashes: int,
-               bands: int) -> DataFrame:
-    """(id, sig) -> (id, band, bh): the banded LSH keys, md5 of each
-    signature slice JVM-side — the ONE band-key construction
-    minhash_lsh_candidates and the incremental variant share (keys are
-    only comparable when params match, so one code path)."""
-    rows_per_band = num_hashes // bands
-    band_exprs = []
-    for bd in range(bands):
-        s = F.slice("sig", bd * rows_per_band + 1, rows_per_band)
-        band_exprs.append(F.struct(F.lit(bd).alias("band"),
-                                   F.md5(F.to_json(s)).alias("bh")))
-    return (sig_frame.select(F.col("_id").alias(id_alias), "sig",
-                             F.explode(F.array(*band_exprs)).alias("bk"))
-            .select(id_alias, F.col("bk.band").alias("band"),
-                    F.col("bk.bh").alias("bh")))
-
-
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", num_hashes: int = 64,
-                       shingle_k: int = 5, seed: int = 42) -> DataFrame:
-    """(id, sig array<long>): the MinHash signature table — the snapshot
-    DELIVERABLE an incrementally-crawling pipeline persists between
-    batches and feeds to minhash_candidates_against. Shingle-less docs
-    carry no row (NULL signatures match nothing by design)."""
-    sig = ensure_parallelism(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col))).select(
-        "_id",
-        minhash_signature_udf(num_hashes, shingle_k, seed)(
-            F.col(text_col)).alias("sig"))
-    return (sig.filter(F.col("sig").isNotNull())
-            .select(F.col("_id").alias(id_col), "sig"))
-
-
-def minhash_candidates_against(batch: DataFrame, seen_sigs: DataFrame,
-                               id_col: str = "doc_id",
-                               text_col: str = "text",
-                               num_hashes: int = 64, bands: int = 16,
-                               shingle_k: int = 5, max_bucket: int = 200,
-                               seen_id_col: str = "doc_id",
-                               seen_sig_col: str = "sig",
-                               seed: int = 42) -> DataFrame:
-    """Incremental near-dup candidates for a continuously-arriving crawl
-    batch: (batch_id, seen_id, est_jaccard) pairs between NEW docs and a
-    PRIOR snapshot's signature table (minhash_signatures) — the
-    MinHash/LSH counterpart of exact_dedup_against. Signature params
-    must match the table's (same num_hashes/shingle_k/seed, or the band
-    keys are incomparable).
-
-    Scale shape: the batch side is signed fresh (one Arrow pass,
-    persisted); BOTH sides explode to thin (id, band, bh) keys and meet
-    in an equi-join — the history is never self-joined, and per-batch
-    work is O(|batch| x bands) plus the join against the seen band
-    table (at rest this is a sorted/bucketed table scan; here a
-    computed frame). The hot-bucket cap applies to the SEEN side (the
-    unbounded one): band keys occurring more than `max_bucket` times in
-    the history are anti-joined out, exactly the
-    minhash_lsh_candidates skew guard. Signatures re-attach AFTER the
-    pair distinct, thin-shuffle style. Within-batch duplicates are
-    minhash_lsh_candidates' job; run both for full coverage."""
-    from llmap_spark.cache import register_persisted
-
-    assert num_hashes % bands == 0
-    bsig = ensure_parallelism(
-        batch.select(F.col(id_col).alias("_id"), F.col(text_col))).select(
-        "_id",
-        minhash_signature_udf(num_hashes, shingle_k, seed)(
-            F.col(text_col)).alias("sig"))
-    bsig = bsig.filter(F.col("sig").isNotNull()).persist()
-    register_persisted(bsig)
-    ssig = seen_sigs.select(F.col(seen_id_col).alias("_id"),
-                            F.col(seen_sig_col).alias("sig"))
-    bkeys = _band_keys(bsig, "batch_id", num_hashes, bands)
-    skeys = _band_keys(ssig, "seen_id", num_hashes, bands)
-    hot = (skeys.groupBy("band", "bh")
-           .agg(F.count(F.lit(1)).alias("_bn"))
-           .filter(F.col("_bn") > max_bucket)
-           .select("band", "bh"))
-    skeys = skeys.join(hot, ["band", "bh"], "left_anti")
-    pairs = (bkeys.join(skeys, ["band", "bh"])
-             .select("batch_id", "seen_id").distinct())
-    sa = bsig.select(F.col("_id").alias("batch_id"),
-                     F.col("sig").alias("sig_a"))
-    sb = ssig.select(F.col("_id").alias("seen_id"),
-                     F.col("sig").alias("sig_b"))
-    withsigs = sa.join(pairs, "batch_id").join(sb, "seen_id")
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b",
-                   lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0), lambda acc, v: acc + v)
-    return withsigs.select(
-        "batch_id", "seen_id",
-        (agree / F.lit(float(num_hashes))).alias("est_jaccard"))
 
 
 # --------------------------------------------------------------------------
@@ -457,8 +334,6 @@ def _union_find_components(spark, edges: DataFrame) -> DataFrame:
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b", max_iter: int = 50,
-                         strict: bool = True,
-                         reliable: bool = False,
                          checkpoint_dir: str | None = None,
                          driver_threshold: int = 250_000) -> DataFrame:
     """Duplicate clusters from candidate pairs: min-label propagation with
@@ -469,9 +344,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     remaining pointer distance. The reachable-min distance roughly doubles
     per round, so convergence is O(log diameter) rounds instead of the
     O(diameter) of plain one-hop propagation (a 1000-node path converges
-    in ~10 rounds, not ~1000; pinned by a pytest case). With strict=True
-    (default) a non-converged run RAISES instead of silently returning
-    split components.
+    in ~10 rounds, not ~1000; pinned by a pytest case). A run that has
+    not converged after `max_iter` rounds RAISES instead of silently
+    returning split components.
 
     Round cost: TWO materialization jobs (hop; jump) plus one trivial
     scan-aggregate over the already-materialized jump — change detection
@@ -481,11 +356,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     Fault tolerance: the default materialization is localCheckpoint —
     fastest, but its blocks live on executors and are LOST on executor
     failure, killing a long iteration mid-flight on a real cluster. Pass
-    reliable=True to use RELIABLE checkpoints instead (written to the
-    cluster checkpoint dir — HDFS/S3 — and recoverable across executor
-    loss); set `checkpoint_dir` or pre-configure
-    spark.sparkContext.setCheckpointDir. At 100 TB, reliable=True is the
-    right default for any corpus whose CC runs longer than the mean
+    `checkpoint_dir` (a cluster path — HDFS/S3) to use RELIABLE
+    checkpoints instead, recoverable across executor loss. At 100 TB that
+    is the right choice for any corpus whose CC runs longer than the mean
     executor MTBF.
 
     Reliable-checkpoint retention: Spark deletes checkpoint files only
@@ -519,15 +392,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     round-count/convergence semantics does).
     """
     spark = pairs.sparkSession
-    if reliable:
-        sc = spark.sparkContext
-        if checkpoint_dir is not None:
-            sc.setCheckpointDir(checkpoint_dir)
-        elif sc.getCheckpointDir() is None:
-            raise ValueError(
-                "connected_components(reliable=True) needs a reliable "
-                "checkpoint location: pass checkpoint_dir= or call "
-                "spark.sparkContext.setCheckpointDir first")
+    if checkpoint_dir is not None:
+        spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
         def ckpt(df: DataFrame) -> DataFrame:
             return df.checkpoint(eager=True)
@@ -604,9 +470,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         if not changed:
             converged = True
             break
-    if not converged and strict:
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(log2(diameter) exceeds max_iter); raise max_iter or pass "
-            "strict=False to accept split components")
+            "(log2(diameter) exceeds max_iter); raise max_iter")
     return labels.select(F.col("node"), F.col("label").alias("component"))

@@ -202,7 +202,7 @@ def top_terms(df: DataFrame, id_col: str = "doc_id",
 
     Returns (id_col, term, tf, df_count, rank). Case folding is the
     ASCII translate table — NOT lower() — because Python/Java lower()
-    diverge from SQL engines' on some Unicode (the cdc/kernel rule).
+    diverge from SQL engines' on some Unicode (the kernel's rule).
 
     Scale shape: tf is a (doc, term) groupBy (partial-aggregated —
     stopword-heavy terms collapse map-side); df is a term groupBy over

@@ -35,8 +35,6 @@ from pyspark.sql import DataFrame, functions as F
 def _kept_reps(docs: DataFrame, id_col: str = "doc_id",
                text_col: str = "text",
                verify_jaccard: float = 0.5,
-               cc_max_iter: int = 50,
-               cc_reliable: bool = False,
                cc_checkpoint_dir: str | None = None) -> DataFrame:
     """Surviving representatives WITH their text: (id_col, text_col).
 
@@ -53,10 +51,10 @@ def _kept_reps(docs: DataFrame, id_col: str = "doc_id",
     component (or near-dups with nothing). Deterministic: every rule is
     integer arithmetic or a seeded hash.
 
-    cc_reliable=True runs the component iteration on RELIABLE cluster
-    checkpoints (cc_checkpoint_dir -> HDFS/S3) so an executor loss cannot
-    kill the fixpoint mid-flight — the right mode on a real cluster when
-    the corpus makes CC run longer than executor MTBF.
+    cc_checkpoint_dir (an HDFS/S3 path) runs the component iteration on
+    RELIABLE cluster checkpoints so an executor loss cannot kill the
+    fixpoint mid-flight — the right mode on a real cluster when the
+    corpus makes CC run longer than executor MTBF.
     """
     from llmap_spark.operators.dedup import (connected_components,
                                              exact_dedup,
@@ -87,9 +85,7 @@ def _kept_reps(docs: DataFrame, id_col: str = "doc_id",
     cand = minhash_lsh_candidates(reps, id_col=id_col, text_col=text_col,
                                   materialize=True)
     verified = cand.filter(F.col("est_jaccard") >= verify_jaccard)
-    comp = connected_components(verified, max_iter=cc_max_iter,
-                                reliable=cc_reliable,
-                                checkpoint_dir=cc_checkpoint_dir)
+    comp = connected_components(verified, checkpoint_dir=cc_checkpoint_dir)
     near_dup_losers = (
         comp.filter(F.col("node") != F.col("component"))
         .select(F.col("node").alias(id_col))
@@ -105,18 +101,14 @@ def kept_documents(docs: DataFrame, id_col: str = "doc_id",
     cluster representative, and (3) is the minimum id of its near-dup
     component (or near-dups with nothing). Deterministic: every rule is
     integer arithmetic or a seeded hash. Keyword args (verify_jaccard,
-    cc_max_iter, cc_reliable, cc_checkpoint_dir) pass through to the
-    shared _kept_reps core; see its docstring for the cc_reliable=True
-    cluster-deployment note.
+    cc_checkpoint_dir) pass through to the shared _kept_reps core; see
+    its docstring for the cc_checkpoint_dir cluster-deployment note.
     """
     return _kept_reps(docs, id_col=id_col, text_col=text_col,
                       **kwargs).select(id_col)
 
 
 def curated_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
-                   decontaminate_n: int = 3,
-                   paragraph_dedup: bool = True,
-                   redact: bool = True,
                    nfc: bool = False,
                    id_col: str = "doc_id", text_col: str = "text",
                    **kept_kwargs) -> DataFrame:
@@ -127,7 +119,7 @@ def curated_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
           -> NFC normalize            (opt-in nfc=True: compose combining
                                        sequences + strip controls BEFORE
                                        fingerprinting)
-          -> decontaminate            (drop docs sharing any word n-gram
+          -> decontaminate            (drop docs sharing any word 3-gram
                                        with the held-out benchmark; skipped
                                        when benchmark is None)
           -> dedup_paragraphs         (corpus-wide first-occurrence
@@ -167,25 +159,14 @@ def curated_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
 
     out = register_persisted(out.persist())
     if benchmark is not None:
-        dirty = (_decon(out, benchmark, n=decontaminate_n, id_col=id_col,
-                        text_col=text_col)
+        dirty = (_decon(out, benchmark, id_col=id_col, text_col=text_col)
                  .filter(F.col("contaminated") == 1)
                  .select(id_col))
         out = out.join(dirty, id_col, "left_anti")
-    if paragraph_dedup:
-        out = (dedup_paragraphs(out, id_col=id_col, text_col=text_col)
-               .withColumnRenamed("text_clean", text_col))
-    else:
-        out = (out.select(id_col, text_col)
-               .withColumn("n_paras", F.lit(None).cast("int"))
-               .withColumn("n_paras_kept", F.lit(None).cast("int")))
-    if redact:
-        out = (redact_pii(out, text_col=text_col)
-               .drop(text_col)
-               .withColumnRenamed("text_redacted", text_col))
-    else:
-        out = (out.withColumn("n_emails", F.lit(None).cast("int"))
-               .withColumn("n_ipv4", F.lit(None).cast("int"))
-               .withColumn("n_phones", F.lit(None).cast("int")))
+    out = (dedup_paragraphs(out, id_col=id_col, text_col=text_col)
+           .withColumnRenamed("text_clean", text_col))
+    out = (redact_pii(out, text_col=text_col)
+           .drop(text_col)
+           .withColumnRenamed("text_redacted", text_col))
     return out.select(id_col, text_col, "n_paras", "n_paras_kept",
                       "n_emails", "n_ipv4", "n_phones")

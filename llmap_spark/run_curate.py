@@ -90,13 +90,11 @@ def main(argv: list[str] | None = None) -> int:
                              id_col=args.id_col,
                              text_col=args.text_col,
                              verify_jaccard=args.verify_jaccard,
-                             cc_reliable=args.checkpoint_dir is not None,
                              cc_checkpoint_dir=args.checkpoint_dir)
     else:
         out = kept_documents(docs, id_col=args.id_col,
                              text_col=args.text_col,
                              verify_jaccard=args.verify_jaccard,
-                             cc_reliable=args.checkpoint_dir is not None,
                              cc_checkpoint_dir=args.checkpoint_dir)
     if args.emit == "corpus" and args.partition_by_lang:
         from pyspark.sql import functions as F

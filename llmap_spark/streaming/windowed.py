@@ -20,6 +20,8 @@ from llmap_spark.plans.pipeline import ExtractConfig, extract
 
 EVENTS_DDL = ("event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
+PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
+             "text string, lang string")
 
 
 def windowed_counts_batch(events: DataFrame, minutes: int = 5) -> DataFrame:
@@ -83,8 +85,6 @@ def extract_stream(spark: SparkSession, pages_path: str, out_path: str,
     The kernel is a stateless per-row map, so watermarks/state are not
     needed; checkpointing gives exactly-once file-sink semantics — the
     streaming analogue of the snapshot/anti-join resume used in batch."""
-    from llmap_spark.streaming.dedup import PAGES_DDL  # single DDL source
-
     pages = spark.readStream.schema(PAGES_DDL).format("parquet").load(pages_path)
     ex = extract(pages, cfg)
     return (ex.writeStream.format("parquet").outputMode("append")

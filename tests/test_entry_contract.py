@@ -71,6 +71,23 @@ def test_every_oracle_has_query():
     assert set(ORACLE) <= set(QUERIES)
 
 
+# rows-only query -> the hash-checked twin query that carries its oracle
+ROWS_ONLY_TWINS = {
+    "sample_seeded": "sample_seeded_portable",
+    "pipeline_kept_docs": "pipeline_kept_planted",
+    "dedup_minhash_lsh": "dedup_minhash_planted",
+    "dedup_components": "dedup_components_planted",
+}
+
+
+def test_rows_only_set_is_pinned():
+    """A new query without an oracle fails here instead of surfacing as a
+    no_oracle row in the next correctness sample."""
+    assert set(QUERIES) - set(ORACLE) == set(ROWS_ONLY_TWINS)
+    for twin in ROWS_ONLY_TWINS.values():
+        assert twin in QUERIES and twin in ORACLE, twin
+
+
 # Spark dtype -> acceptable DuckDB types. The driver's value-hash is
 # TYPE-SENSITIVE where this local replica's _canon comparison is not:
 # round 1 shipped three value-identical queries that hash-failed because

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import ast
 import importlib.util
+import inspect
 import pkgutil
 from pathlib import Path
 
@@ -56,3 +57,48 @@ def test_no_dangling_package_imports():
     # the walk reaches lazy imports: this one is only ever made inside
     # function bodies
     assert ("llmap_spark.operators.dedup", "minhash_lsh_candidates") in seen
+
+
+def _package_calls(path: Path):
+    """(line, module, name, n_positional, keywords) for every call, at any
+    depth, of a name the file imports from llmap_spark; n_positional is
+    None when the call unpacks *args."""
+    tree = ast.parse(path.read_text(), str(path))
+    imported = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and not node.level and (
+                node.module.split(".")[0] == "llmap_spark"):
+            for alias in node.names:
+                imported[alias.asname or alias.name] = (node.module,
+                                                        alias.name)
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+                and node.func.id in imported):
+            starred = any(isinstance(a, ast.Starred) for a in node.args)
+            yield (node.lineno, *imported[node.func.id],
+                   None if starred else len(node.args),
+                   [kw.arg for kw in node.keywords if kw.arg is not None])
+
+
+def test_package_call_sites_match_signatures():
+    """A removed keyword option fails here at every caller, the read-only
+    benchmark scripts included, instead of at run time."""
+    seen = set()
+    for path in SOURCES:
+        rel = str(path.relative_to(ROOT))
+        for line, module, name, n_pos, keywords in _package_calls(path):
+            obj = getattr(importlib.import_module(module), name)
+            if not callable(obj):
+                continue
+            seen.add((rel, name, *keywords))
+            try:
+                sig = inspect.signature(obj)
+            except (TypeError, ValueError):
+                continue  # a builtin without an introspectable signature
+            args = () if n_pos is None else range(n_pos)
+            try:
+                sig.bind_partial(*args, **dict.fromkeys(keywords))
+            except TypeError as exc:
+                raise AssertionError(f"{rel}:{line}: {name}: {exc}") from None
+    assert ("perfbench/job.py", "minhash_lsh_candidates",
+            "materialize") in seen

@@ -88,6 +88,45 @@ def test_ops_columns_and_lineage_consistency(spark, pages_smoke):
         ex.unpersist()
 
 
+# the kernel's page statuses -> the one lineage counter each lands in
+LINEAGE_BUCKET = {"ok": "n_ok", "no_body": "n_ok", "truncated": "n_ok",
+                  "decode_replaced": "n_ok", "parse_error": "n_err",
+                  "empty": "n_empty"}
+
+
+def test_lineage_buckets_name_every_kernel_status():
+    import inspect
+    import re
+
+    from llmap_spark import kernel
+
+    src = inspect.getsource(kernel.page_status)
+    assert set(re.findall(r'return "(\w+)"', src)) == set(LINEAGE_BUCKET)
+
+
+@pytest.fixture(scope="module")
+def lineage_by_status(spark):
+    from llmap_spark.plans.pipeline import lineage_from
+
+    # one partition per status, so each lineage row counts exactly one
+    ex = spark.createDataFrame(
+        [(i, 0, st, 10, 5) for i, st in enumerate(LINEAGE_BUCKET)],
+        "partition_id int, salt_bucket int, status string, "
+        "bytes_in long, bytes_out long")
+    rows = lineage_from(ex, snapshot_id=1, started_at="2025-01-01 00:00:00",
+                        finished_at="2025-01-01 00:00:01").collect()
+    names = list(LINEAGE_BUCKET)
+    return {names[r.partition_id]: r for r in rows}
+
+
+@pytest.mark.parametrize("status", LINEAGE_BUCKET)
+def test_lineage_counts_each_status_once(lineage_by_status, status):
+    r = lineage_by_status[status]
+    counts = {c: r[c] for c in ("n_ok", "n_err", "n_empty")}
+    want = {c: int(c == LINEAGE_BUCKET[status]) for c in counts}
+    assert r.n_rows == 1 and counts == want
+
+
 def test_input_order_invariance(spark, pages_smoke, oracle_rows):
     """Shuffled input order -> identical per-url output (reference
     determinism discipline, llmap.py:209-213)."""

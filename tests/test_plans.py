@@ -79,17 +79,6 @@ def test_t0_filter_reaches_the_scan(spark):
         assert "RLIKE(url" in pre_udf
 
 
-def test_winnow_overlap_single_udf_pass(spark):
-    """Pair generation must evaluate the fingerprint UDF exactly once: the
-    self-join formulation ran it 4x (2 sides x filter+explode), and
-    InferFiltersFromGenerate clones deterministic UDFs into a pre-explode
-    filter — both fixed (groupBy-fp pairing + asNondeterministic)."""
-    import __spark_entry__ as e
-
-    plan = _plan(e.queries()["winnow_overlap"](spark, "/root/testdata/sf0.001"))
-    assert plan.count("ArrowEvalPython") == 1
-
-
 def test_paragraph_dedup_single_paragraph_pass(spark):
     """r6 rewrite pin: winner selection carries the paragraph inside the
     min-struct aggregate, so the plan evaluates the posexplode+md5
@@ -122,23 +111,6 @@ def test_cc_driver_labels_broadcast_into_keeplist_join(spark):
     plan = _plan(base.join(losers, "doc_id", "left_anti"))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_substring_stats_projection_prunes_text_udf(spark):
-    """r6 pin: the split finish UDFs let a stats-only projection drop the
-    text_deduped evaluation (trim + utf-8 round-trip per doc) entirely;
-    a single struct UDF made that impossible. Both UDFs must appear when
-    text_deduped IS selected."""
-    from llmap_spark.operators.substrings import substring_dedup
-
-    d = spark.createDataFrame(
-        [(1, "x" * 60), (2, "x" * 60)], "doc_id long, text string")
-    stats_only = _plan(substring_dedup(d, min_len=20)
-                       .select("doc_id", "n_spans", "n_dup_chars"))
-    assert "detext" not in stats_only and "stats" in stats_only
-    full = _plan(substring_dedup(d, min_len=20)
-                 .select("doc_id", "text_deduped"))
-    assert "detext" in full
 
 
 def test_ensure_parallelism_widens_only_bare_scans(spark, tmp_path):
@@ -259,7 +231,7 @@ def test_lsh_curation_skew_stress(spark):
     ONE viral boilerplate page; the rest unique) must keep the LSH/
     paragraph-dedup path bounded — the hot band buckets hold n/2
     members each and would generate ~n^2/8 candidate pairs without the
-    max_bucket cap. Asserts are structural (candidate volume bounded by
+    MAX_BUCKET cap. Asserts are structural (candidate volume bounded by
     the cap arithmetic, hot paragraph collapses to one survivor), plus
     a generous wall-clock ceiling as a regression tripwire."""
     import time
@@ -283,12 +255,11 @@ def test_lsh_curation_skew_stress(spark):
         .alias("text"))
 
     t0 = time.time()
-    cands = minhash_lsh_candidates(df, max_bucket=200,
-                                   materialize=True).collect()
+    cands = minhash_lsh_candidates(df, materialize=True).collect()
     el = time.time() - t0
-    # every hot-page band bucket exceeds max_bucket=200 and is dropped,
+    # every hot-page band bucket exceeds MAX_BUCKET=200 and is dropped,
     # so the candidate set cannot contain the ~2M hot pairs; whatever
-    # survives is bounded by cap arithmetic (bands * max_bucket^2 / 2
+    # survives is bounded by cap arithmetic (BANDS * MAX_BUCKET^2 / 2
     # worst case, and in practice ~0 here since unique docs don't
     # collide). The viral page is exact-dup territory (exact_dedup /
     # dedup_paragraphs), which is the documented division of labor.
@@ -303,22 +274,6 @@ def test_lsh_curation_skew_stress(spark):
     assert kept == 1
     # and no row was lost
     assert para.count() == n
-
-
-def test_substring_dedup_gram_pass_is_cached(spark):
-    """The positional-gram Arrow UDF is the expensive stage; BOTH its
-    consumers (site counts and the covered-position semi join) must read
-    the persisted gram table, not re-run the UDF — and the dup-hash
-    filter joins back LEFT SEMI (output <= input, no row multiplication)."""
-    from llmap_spark.operators.substrings import substring_dedup
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = substring_dedup(df, min_len=20)
-    plan = _plan(out)
-    # two cache readers = counts branch + semi-join branch both reuse
-    # the materialized gram table
-    assert plan.count("InMemoryTableScan") == 2
-    assert "LeftSemi" in plan
 
 
 def test_fetch_schedule_window_group_limit(spark):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from llmap_spark.operators.scrub import (decontaminate, dedup_paragraphs,
@@ -62,6 +63,50 @@ def test_redact_pii_email_wins_over_ip_like_domain(spark):
     # a phone swallowed by the email match is not also counted as a phone
     assert got[1].n_emails == 1 and got[1].n_phones == 0
     assert got[1].text_redacted == "call <EMAIL> today"
+
+
+# (text, (n_emails, n_ipv4, n_phones)): near-misses each regex must leave
+# alone, then the nearest strings it does match
+PII_EDGES = [
+    ("555-1234", (0, 0, 0)),          # local number, no area code
+    ("55-123-4567", (0, 0, 0)),
+    ("555-123-456", (0, 0, 0)),
+    ("5555-123-4567", (0, 0, 0)),     # word boundary before the match
+    ("555-123-45678", (0, 0, 0)),     # ... and after it
+    ("555.123.4567", (0, 0, 0)),      # dots are not the phone separator
+    ("1.2.3", (0, 0, 0)),             # three octets, e.g. a version
+    ("10.0.0", (0, 0, 0)),
+    ("1234.1.1.1", (0, 0, 0)),        # four-digit first group
+    ("a@b", (0, 0, 0)),               # no dot in the domain
+    ("x@y.z", (0, 0, 0)),             # one-letter top-level domain
+    ("me@example.c0m", (0, 0, 0)),    # digit splits the TLD letters
+    ("user@localhost", (0, 0, 0)),
+    ("@example.com", (0, 0, 0)),      # empty local part
+    ("x@y.zz", (1, 0, 0)),
+    ("555-123-4567", (0, 0, 1)),
+    ("1.2.3.4", (0, 1, 0)),
+    ("999.999.999.999", (0, 1, 0)),   # octet values are not range-checked
+]
+
+
+@pytest.fixture(scope="module")
+def pii_edges(spark):
+    df = spark.createDataFrame(
+        [(i, f"see {t} here") for i, (t, _) in enumerate(PII_EDGES)],
+        "doc_id long, text string")
+    return {r.doc_id: r for r in redact_pii(df).collect()}
+
+
+@pytest.mark.parametrize("i", range(len(PII_EDGES)),
+                         ids=[t for t, _ in PII_EDGES])
+def test_redact_pii_edges(pii_edges, i):
+    text, counts = PII_EDGES[i]
+    r = pii_edges[i]
+    assert (r.n_emails, r.n_ipv4, r.n_phones) == counts
+    if counts == (0, 0, 0):
+        assert r.text_redacted == f"see {text} here"
+    else:
+        assert text not in r.text_redacted
 
 
 def test_decontaminate_flags_shared_ngrams(spark):

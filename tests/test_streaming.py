@@ -82,47 +82,3 @@ def test_stateful_running_counts(spark, tmp_path):
             .agg(F.count("*").alias("n")).collect()}
     assert got == want
 
-
-def test_dedup_pages_stream_keeps_one_per_fingerprint(spark, pages_smoke, tmp_path):
-    from pyspark.sql import functions as F
-
-    from llmap_spark.streaming.dedup import dedup_pages_stream
-
-    # recrawl simulation: the same pages arrive twice (second copy is a
-    # later fetch of identical content)
-    src = _as_dir(pages_smoke, tmp_path / "pages_dedup")
-    recrawl = (spark.read.parquet(pages_smoke)
-               .withColumn("url", F.concat(F.col("url"), F.lit("?refetch")))
-               .withColumn("warc_ts",
-                           F.col("warc_ts") + F.expr("INTERVAL 1 MINUTE")))
-    recrawl.write.mode("append").parquet(src)
-    # three NULL-html fetches with distinct urls: UNKNOWN content, all
-    # must pass through (dropDuplicates treats nulls as EQUAL — the batch
-    # twin's null guard applies here too)
-    nulls = spark.createDataFrame(
-        [(f"https://null{i}.example/p", None, None, None, None)
-         for i in range(3)],
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ).withColumn("warc_ts", F.lit("2025-01-01 00:00:00").cast("timestamp"))
-    nulls.write.mode("append").parquet(src)
-
-    q = dedup_pages_stream(spark, src, query_name="dd_test")
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM dd_test").collect()
-    finally:
-        q.stop()
-    batch = (spark.read.parquet(src).filter(F.col("html").isNotNull())
-             .withColumn("fp", F.md5(F.col("html"))))
-    n_distinct = batch.select("fp").distinct().count()
-    n_pages = batch.count()
-    assert n_pages > n_distinct  # the corpus DOES contain recrawl dups
-    null_rows = [r for r in rows if r.fingerprint is None]
-    content_rows = [r for r in rows if r.fingerprint is not None]
-    # all three null-payload pages pass through un-deduped
-    assert len(null_rows) == 3
-    # exactly one survivor per distinct content fingerprint
-    assert len(content_rows) == n_distinct
-    assert len({r.fingerprint for r in content_rows}) == n_distinct
-    corpus_fps = {r.fp for r in batch.select("fp").distinct().collect()}
-    assert {r.fingerprint for r in content_rows} == corpus_fps
