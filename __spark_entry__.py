@@ -467,191 +467,6 @@ def _q_collate_binpack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_bpe2_tokens", "group_id")
 
 
-def _q_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sitemap URL-discovery source (sources/sitemap.py),
-    hash-verified: each doc renders a sitemaps.org urlset with
-    1 + doc_id%3 planted <loc>/<lastmod> entries (pure arithmetic, built
-    JVM-side as binary), the tolerant scan parses them back, and the
-    oracle regenerates the entries with generate_series. Index/gzip/
-    entity/cap behavior is pinned in tests/test_sitemap.py."""
-    from llmap_spark.sources.sitemap import read_sitemaps
-
-    body = F.expr(
-        "cast(concat('<?xml version=\"1.0\"?><urlset>', "
-        "array_join(transform(sequence(1, 1 + cast(doc_id % 3 as int)), "
-        "j -> concat('<url><loc>https://s', cast(doc_id % 20 as string), "
-        "'.example/d', cast(doc_id as string), '/u', cast(j as string), "
-        "'</loc><lastmod>2025-01-', "
-        "lpad(cast(1 + doc_id % 28 as string), 2, '0'), "
-        "'</lastmod></url>')), ''), '</urlset>') as binary)")
-    docs = _docs(spark, sf_dir).select("doc_id", body.alias("body"))
-    return read_sitemaps(docs, keep_cols=("doc_id",)).select(
-        "doc_id", "loc", "lastmod", "kind")
-
-
-def _q_frontier_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed CRAWL-FRONTIER chain, hash-verified end-to-end — the
-    ingest-side flagship analogue of pipeline_curated_planted: sitemap
-    URL discovery -> RFC 9309 robots gate -> URL canonicalization ->
-    frontier dedup, all four real operators chained on one planted
-    construction. Doc d publishes 1 + d%3 sitemap entries; entry j's raw
-    loc varies scheme/host case and default port (j odd ->
-    'HTTPS://R<h>.EXAMPLE:443') and carries a fragment when j%3=0 — the
-    canonicalizer must normalize all three; its path family f = (d+j)%4
-    walks the same robots rules as robots_gate (h = d%20), so the kept
-    set is pure arithmetic: f in (0,3) or (f=2 and h%3<>0)."""
-    from llmap_spark.operators.links import canonical_url
-    from llmap_spark.operators.robots import filter_robots_disallowed
-    from llmap_spark.sources.sitemap import read_sitemaps
-
-    path = (
-        "CASE cast((doc_id + j) % 4 as int) "
-        "WHEN 0 THEN concat('/p', cast(doc_id % 20 as string), '/ok/d', "
-        "  cast(doc_id as string), 'j', cast(j as string)) "
-        "WHEN 1 THEN concat('/p', cast(doc_id % 20 as string), '/d', "
-        "  cast(doc_id as string), 'j', cast(j as string)) "
-        "WHEN 2 THEN concat('/tmp/d', cast(doc_id as string), 'j', "
-        "  cast(j as string)) "
-        "ELSE concat('/free/d', cast(doc_id as string), 'j', "
-        "  cast(j as string)) END")
-    schost = (
-        "CASE WHEN j % 2 = 1 "
-        "THEN concat('HTTPS://R', cast(doc_id % 20 as string), "
-        "  '.EXAMPLE:443') "
-        "ELSE concat('https://r', cast(doc_id % 20 as string), "
-        "  '.example') END")
-    frag = "CASE WHEN j % 3 = 0 THEN '#frag' ELSE '' END"
-    body = F.expr(
-        "cast(concat('<urlset>', "
-        "array_join(transform(sequence(1, 1 + cast(doc_id % 3 as int)), "
-        f"j -> concat('<url><loc>', {schost}, {path}, {frag}, "
-        "'</loc></url>')), ''), '</urlset>') as binary)")
-    docs = _docs(spark, sf_dir).select("doc_id", body.alias("body"))
-    discovered = read_sitemaps(docs, keep_cols=("doc_id",))
-    hosts = spark.range(20).select(
-        F.expr("concat('r', cast(id as string), '.example')").alias("host"),
-        F.expr(
-            "concat('User-Agent: *\n', "
-            "'Disallow: /p', cast(id as string), '/\n', "
-            "'Allow: /p', cast(id as string), '/ok/', "
-            "CASE WHEN id % 3 = 0 THEN '\nDisallow: /tmp/' ELSE '' END)"
-        ).alias("body"))
-    gated = filter_robots_disallowed(discovered, hosts, url_col="loc")
-    return (gated.select("doc_id",
-                         canonical_url(F.col("loc")).alias("url"))
-            .distinct())
-
-
-def _q_frontier_iterative_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ITERATIVE frontier driver (sources/sitemap.py expand_frontier:
-    bounded multi-round index-following with visited anti-join and
-    per-round checkpoints), hash-verified on a planted 2-level sitemap
-    tree whose closure is doc_id arithmetic: doc d's root index lists
-    children c in 0..d%2; child c's urlset lists pages u in
-    1..1+(d+c)%2. So every doc yields page (c0,u1); odd docs add
-    (c0,u2) and (c1,u1) — all discovered in round 2 with their child
-    sitemap as src_loc. The fetch seam is deterministic JVM body
-    synthesis keyed on the loc (the same planted-XML technique as
-    frontier_planted)."""
-    from llmap_spark.sources.sitemap import expand_frontier
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    seeds = docs.select(F.expr(
-        "concat('https://s', cast(doc_id as string), "
-        "'.example/sitemap.xml')").alias("loc"))
-
-    out = expand_frontier(seeds, _planted_tree_fetch(), max_rounds=4)
-    return out.select(
-        F.regexp_extract("src_loc", r"https://s(\d+)\.example", 1)
-        .cast("long").alias("doc_id"),
-        F.col("loc").alias("url"), "src_loc", "round")
-
-
-def _planted_tree_fetch(extra: bool = False):
-    """The deterministic fetch seam both frontier queries share: doc
-    d's root index lists children c in 0..d%2; child c's urlset lists
-    pages u in 1..1+(d+c)%2. With extra=True, '/extra.xml' locs resolve
-    to a one-page urlset (the robots_sitemap_frontier round-1 arm)."""
-    def fetch(frontier: DataFrame) -> DataFrame:
-        d = "cast(regexp_extract(loc, 'https://s(\\\\d+)\\\\.example', 1) as bigint)"
-        c = "cast(regexp_extract(loc, 'child(\\\\d+)\\\\.xml', 1) as bigint)"
-        extra_arm = (
-            f"WHEN loc LIKE '%/extra.xml' THEN "
-            f"concat('<urlset><url><loc>https://s', cast({d} as string), "
-            f"'.example/page-extra</loc></url></urlset>') " if extra else "")
-        body = F.expr(
-            f"cast(CASE WHEN loc LIKE '%/sitemap.xml' THEN "
-            f"concat('<sitemapindex>', array_join(transform("
-            f"sequence(0, {d} % 2), c -> concat("
-            f"'<sitemap><loc>https://s', cast({d} as string), "
-            f"'.example/child', cast(c as string), '.xml</loc></sitemap>'"
-            f")), ''), '</sitemapindex>') "
-            f"{extra_arm}"
-            f"ELSE concat('<urlset>', array_join(transform("
-            f"sequence(1, 1 + ({d} + {c}) % 2), u -> concat("
-            f"'<url><loc>https://s', cast({d} as string), "
-            f"'.example/page-c', cast({c} as string), '-u', "
-            f"cast(u as string), '</loc></url>')), ''), '</urlset>') "
-            f"END as binary)")
-        return frontier.withColumn("body", body)
-
-    return fetch
-
-
-def _q_robots_sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL discovery chain: robots.txt 'Sitemap:' directive
-    extraction (operators/robots.py sitemap_urls — global-scope lines
-    the rule parser ignores) -> seeds -> iterative frontier expansion.
-    Planted: doc d's robots body advertises the 2-level tree root of
-    frontier_iterative_planted (same fetch, same closure arithmetic);
-    odd docs advertise a SECOND root that is directly a urlset, so the
-    result mixes round-1 (direct urlset seed) and round-2 (index ->
-    child) discoveries and the oracle adds one arm."""
-    from llmap_spark.operators.robots import robots_sitemaps
-    from llmap_spark.sources.sitemap import expand_frontier
-
-    robots = _docs(spark, sf_dir).select(
-        F.expr("concat('s', cast(doc_id as string), '.example')")
-        .alias("host"),
-        F.expr(
-            "concat('User-Agent: *\nDisallow: /tmp/\n', "
-            "'Sitemap: https://s', cast(doc_id as string), "
-            "'.example/sitemap.xml', "
-            "CASE WHEN doc_id % 2 = 1 THEN concat("
-            "'\nSitemap: https://s', cast(doc_id as string), "
-            "'.example/extra.xml') ELSE '' END)").alias("body"))
-    seeds = robots_sitemaps(robots).select("loc")
-    out = expand_frontier(seeds, _planted_tree_fetch(extra=True),
-                          max_rounds=4)
-    return out.select(
-        F.regexp_extract("src_loc", r"https://s(\d+)\.example", 1)
-        .cast("long").alias("doc_id"),
-        F.col("loc").alias("url"), "src_loc", "round")
-
-
-def _q_fetch_schedule_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Crawl-delay politeness scheduler (operators/robots.py
-    fetch_schedule: per-host URL slots + eta arithmetic over the SAME
-    winning-group walk as the rules parser), hash-verified: host
-    r{h}.example (h = doc_id % 20) declares Crawl-delay (1 + h % 5)
-    seconds, every doc contributes one URL, and the slot assignment is
-    a plain rank-by-url window the oracle replays with SQL
-    row_number()."""
-    from llmap_spark.operators.robots import fetch_schedule
-
-    urls = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("concat('https://r', cast(doc_id % 20 as string), "
-               "'.example/d', cast(doc_id as string))").alias("url"))
-    hosts = spark.range(20).select(
-        F.expr("concat('r', cast(id as string), '.example')").alias("host"),
-        F.expr("concat('User-Agent: *\nCrawl-delay: ', "
-               "cast(1 + id % 5 as string), '\nDisallow: /tmp/')")
-        .alias("body"))
-    return fetch_schedule(urls, hosts).select(
-        "doc_id", "url", "fetch_host", "slot", "delay_ms", "eta_ms")
-
-
 def _q_lm_score_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CCNet-style char-trigram LM quality scorer (operators/lm.py),
     hash-verified: the model table is planted ({'aba': 1500, 'bab': 2500}
@@ -863,133 +678,6 @@ def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(cand.filter(F.col("est_jaccard") >= 0.5))
 
 
-def _q_link_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link extraction verified end-to-end: html is synthesized JVM-side
-    with hrefs planted as doc_id arithmetic, the JVM regexp extractor pulls
-    them back, and the oracle recomputes the planted values — the same
-    planted-roundtrip construction as extract_roundtrip."""
-    from llmap_spark.operators.links import extract_hrefs
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    html = F.expr(
-        "concat_ws('', transform(sequence(1, cast(doc_id % 4 + 1 as int)), "
-        "i -> concat('<a href=\"https://h', cast(doc_id % 50 as string), "
-        "'.example/p', cast(i as string), '\">x</a>')))")
-    return (
-        d.select("doc_id", F.posexplode(extract_hrefs(html))
-                 .alias("link_idx", "href"))
-    )
-
-
-def _q_link_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-level link graph, hash-verified by construction: html is
-    synthesized JVM-side with the full resolution matrix planted as doc_id
-    arithmetic — absolute links (always), protocol-relative (doc_id%3=0),
-    path-relative (doc_id%2=0, resolves to the SOURCE host), plus dropped
-    kinds (mailto: at doc_id%5=0, bare fragments at doc_id%7=0) that the
-    oracle must NOT count. The real operator (links.link_host_edges:
-    explode + one groupBy shuffle, zero Python) aggregates the edges; the
-    oracle recomputes (src_host, dst_host, n_links) in SQL. The pages-
-    corpus variant of the same operator is pytest-covered
-    (test_operators.py link-graph cases)."""
-    from llmap_spark.operators.links import link_host_edges
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    html = F.expr(
-        "concat("
-        "'<a href=\"https://dst', cast(doc_id % 50 as string), "
-        "'.example/x\">a</a>', "
-        "CASE WHEN doc_id % 3 = 0 THEN concat('<a href=\"//pr', "
-        "cast(doc_id % 30 as string), '.example/y\">p</a>') ELSE '' END, "
-        "CASE WHEN doc_id % 2 = 0 THEN '<a href=\"/local/page\">r</a>' "
-        "ELSE '' END, "
-        "CASE WHEN doc_id % 5 = 0 THEN '<a href=\"mailto:x@y.example\">m</a>' "
-        "ELSE '' END, "
-        "CASE WHEN doc_id % 7 = 0 THEN '<a href=\"#frag\">f</a>' ELSE '' END"
-        ")")
-    pages = d.select(
-        F.concat(F.lit("https://src"), (F.col("doc_id") % 20).cast("string"),
-                 F.lit(".example/page")).alias("url"),
-        html.cast("binary").alias("html"))
-    return link_host_edges(pages)
-
-
-def _q_link_nofollow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rel=nofollow-aware anchor extraction (links.extract_anchor_links),
-    hash-verified by construction: anchors (follow, lowercase-nofollow,
-    SHOUTED-attr nofollow) are planted from doc_id arithmetic and the
-    oracle reconstructs (href, nofollow, position) per kind."""
-    from llmap_spark.operators.links import extract_anchor_links
-
-    html = F.expr(
-        "concat('<a href=\"https://f', cast(doc_id % 40 as string), "
-        "'.example/a\">x</a>', "
-        "CASE WHEN doc_id % 3 = 0 THEN concat("
-        "'<a rel=\"nofollow\" href=\"https://n', "
-        "cast(doc_id % 25 as string), '.example/b\">y</a>') ELSE '' END, "
-        "CASE WHEN doc_id % 4 = 0 THEN concat("
-        "'<A REL=\"NOFOLLOW\" HREF=\"https://m', "
-        "cast(doc_id % 10 as string), '.example/c\">z</A>') ELSE '' END)")
-    return (_docs(spark, sf_dir).select("doc_id", html.alias("_h"))
-            .select("doc_id",
-                    F.posexplode(extract_anchor_links(F.col("_h")))
-                    .alias("link_idx", "_l"))
-            .select("doc_id", "link_idx",
-                    F.col("_l.href").alias("href"),
-                    F.col("_l.nofollow").cast("int").alias("nofollow")))
-
-
-def _q_host_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast host-blocklist gate (links.filter_blocklisted_hosts),
-    hash-verified by construction: urls live on host h(doc_id % 50), the
-    blocklist is built from the documents whose host index is < 10, so the
-    surviving set is pure arithmetic. The corpus side never shuffles
-    (left-anti broadcast hash join, pinned by pytest)."""
-    from llmap_spark.operators.links import (filter_blocklisted_hosts,
-                                             host_of)
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("concat('https://h', cast(doc_id % 50 as string), "
-               "'.example/p', cast(doc_id as string))").alias("url"))
-    bl = (d.filter(F.col("doc_id") % 50 < 10)
-          .select(host_of(F.col("url")).alias("host")))
-    return filter_blocklisted_hosts(d, bl)
-
-
-def _q_host_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-reputation aggregation (links.host_quality_stats): urls are
-    planted on host h(doc_id % 25) over the REAL document texts, so the
-    per-host integer quality sums exercise the whole quality kernel and
-    the oracle recomputes them with the quality_score formulas + a
-    GROUP BY on the host arithmetic."""
-    from llmap_spark.operators.links import host_quality_stats
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "text",
-        F.expr("concat('https://h', cast(doc_id % 25 as string), "
-               "'.example/p', cast(doc_id as string))").alias("url"))
-    return host_quality_stats(d)
-
-
-def _q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization verified by construction: messy urls (mixed
-    scheme/host case, default and non-default ports, fragments) are built
-    from doc_id arithmetic JVM-side, canonicalized by the real operator,
-    and the oracle recomputes the expected canonical form directly."""
-    from llmap_spark.operators.links import canonical_url
-
-    messy = F.expr(
-        "concat(CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'HttpS' END, "
-        "'://WWW.Site', cast(doc_id % 50 as string), '.Example', "
-        "CASE WHEN doc_id % 5 = 0 THEN ':8080' "
-        "     WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END, "
-        "'/Path', cast(doc_id as string), "
-        "CASE WHEN doc_id % 3 = 0 THEN '#frag' ELSE '' END)")
-    return _docs(spark, sf_dir).select(
-        "doc_id", canonical_url(messy).alias("canonical"))
-
-
 def _q_collate_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llmap_spark.operators.binpack import collate_approx
 
@@ -1150,40 +838,6 @@ def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url",
         F.length("html").cast("long").alias("n_bytes"),
         F.md5("html").alias("payload_md5"))
-
-
-def _q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The RFC 9309 robots.txt gate (operators/robots.py), hash-verified
-    with planted WILDCARD-FREE rules so the longest-match decision
-    collapses to prefix arithmetic: host r{h}.example (h = doc_id % 20)
-    publishes 'Disallow: /p{h}/' + 'Allow: /p{h}/ok/' (+ 'Disallow: /tmp/'
-    when h % 3 = 0); URL paths cycle allowed-by-longer-allow /
-    disallowed / tmp-depends-on-host / untouched by doc_id % 4. Wildcard
-    and agent-group semantics are pinned against RFC 9309's own examples
-    in tests/test_robots.py."""
-    from llmap_spark.operators.robots import filter_robots_disallowed
-
-    host = F.expr("concat('r', cast(doc_id % 20 as string), '.example')")
-    path = F.expr(
-        "CASE cast(doc_id % 4 as int) "
-        "WHEN 0 THEN concat('/p', cast(doc_id % 20 as string), '/ok/d', "
-        "  cast(doc_id as string)) "
-        "WHEN 1 THEN concat('/p', cast(doc_id % 20 as string), '/d', "
-        "  cast(doc_id as string)) "
-        "WHEN 2 THEN concat('/tmp/d', cast(doc_id as string)) "
-        "ELSE concat('/free/d', cast(doc_id as string)) END")
-    urls = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(F.lit("https://"), host, path).alias("url"))
-    hosts = spark.range(20).select(
-        F.expr("concat('r', cast(id as string), '.example')").alias("host"),
-        F.expr(
-            "concat('User-Agent: *\n', "
-            "'Disallow: /p', cast(id as string), '/\n', "
-            "'Allow: /p', cast(id as string), '/ok/', "
-            "CASE WHEN id % 3 = 0 THEN '\nDisallow: /tmp/' ELSE '' END)"
-        ).alias("body"))
-    return filter_robots_disallowed(urls, hosts).select("doc_id", "url")
 
 
 def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1348,9 +1002,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- LAST_CHECKED: never (new in r5) — inserted here as built ---
         "lang_id2": _q_lang_id2,
-        "frontier_iterative_planted": _q_frontier_iterative_planted,
-        "robots_sitemap_frontier": _q_robots_sitemap_frontier,
-        "fetch_schedule_planted": _q_fetch_schedule_planted,
         "token_count_cjk": _q_token_count_cjk,
         # --- LAST_CHECKED: r2 (green r1+r2 or r2 only; oldest rows) ---
         "token_count": _q_token_count,
@@ -1358,12 +1009,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id": _q_lang_id,
         "quality_score": _q_quality_score,
         "repetition_score": _q_repetition_score,
-        "link_extract_roundtrip": _q_link_extract_roundtrip,
-        "link_hosts": _q_link_hosts,
-        "link_nofollow": _q_link_nofollow,
-        "host_blocklist": _q_host_blocklist,
-        "host_quality_stats": _q_host_quality_stats,
-        "url_canonicalize": _q_url_canonicalize,
         "collate_binpack": _q_collate_binpack,
         "collate_binpack_bucketed": _q_collate_binpack_bucketed,
         "group_combine": _q_group_combine,
@@ -1392,10 +1037,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_seeded": _q_sample_seeded,
         "explode_chunks": _q_explode_chunks,
         "union_passthrough": _q_union_passthrough,
-        "robots_gate": _q_robots_gate,
         "keyword_topk": _q_keyword_topk,
-        "sitemap_discovery": _q_sitemap_discovery,
-        "frontier_planted": _q_frontier_planted,
         "lm_score_planted": _q_lm_score_planted,
         # --- LAST_CHECKED: r4, multi-round green (freshest + deepest) ---
         "extract_roundtrip": _q_extract_roundtrip,
@@ -1724,87 +1366,6 @@ def oracle_sql() -> dict[str, str]:
                   || '</p></body></html>') AS payload_md5
             FROM documents
         """,
-        "link_nofollow": """
-            -- reconstructs the planted anchors per kind with their
-            -- in-document positions: follow anchor always at 0; lowercase
-            -- nofollow at 1 when doc_id%3=0; shouted-attr nofollow after
-            -- any preceding anchors when doc_id%4=0
-            SELECT doc_id, CAST(0 AS int) AS link_idx,
-              'https://f' || CAST(doc_id % 40 AS varchar) || '.example/a'
-                AS href,
-              CAST(0 AS int) AS nofollow
-            FROM documents
-            UNION ALL
-            SELECT doc_id, CAST(1 AS int),
-              'https://n' || CAST(doc_id % 25 AS varchar) || '.example/b',
-              CAST(1 AS int)
-            FROM documents WHERE doc_id % 3 = 0
-            UNION ALL
-            SELECT doc_id,
-              CAST(CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 1 END AS int),
-              'https://m' || CAST(doc_id % 10 AS varchar) || '.example/c',
-              CAST(1 AS int)
-            FROM documents WHERE doc_id % 4 = 0
-        """,
-        "host_blocklist": """
-            SELECT doc_id,
-              'https://h' || CAST(doc_id % 50 AS varchar) || '.example/p'
-                || CAST(doc_id AS varchar) AS url
-            FROM documents WHERE doc_id % 50 >= 10
-        """,
-        "host_quality_stats": f"""
-            -- the shared quality fragments aggregated over the planted
-            -- host arithmetic (integer sums only)
-            WITH q AS (SELECT doc_id,
-              'h' || CAST(doc_id % 25 AS varchar) || '.example' AS host,
-              {SQ_LEN_SQL} AS sq_len,
-              {TOKENS_SQL} AS n_tokens_t,
-              {STOP_HITS_SQL} AS n_stop_hits
-              FROM documents),
-            f AS (SELECT *, {MWL_SQL} AS mwl_x100 FROM q)
-            SELECT host, count(*) AS n_docs,
-              CAST(sum(CASE WHEN {QKEEP_SQL} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_keep,
-              CAST(sum(n_tokens_t) AS BIGINT) AS sum_tokens,
-              CAST(sum(mwl_x100) AS BIGINT) AS sum_mwl_x100,
-              CAST(sum(n_stop_hits) AS BIGINT) AS sum_stop_hits
-            FROM f GROUP BY host
-        """,
-        "url_canonicalize": """
-            SELECT doc_id,
-              CASE WHEN doc_id % 2 = 0 THEN 'http' ELSE 'https' END
-              || '://www.site' || CAST(doc_id % 50 AS varchar) || '.example'
-              || CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END
-              || '/Path' || CAST(doc_id AS varchar) AS canonical
-            FROM documents
-        """,
-        "link_extract_roundtrip": """
-            SELECT doc_id, CAST(i - 1 AS int) AS link_idx,
-                   'https://h' || CAST(doc_id % 50 AS varchar)
-                     || '.example/p' || CAST(i AS varchar) AS href
-            FROM documents,
-                 LATERAL unnest(generate_series(1, doc_id % 4 + 1)) AS t(i)
-        """,
-        "link_hosts": """
-            -- recompute the planted resolution matrix: absolute links
-            -- always, protocol-relative at doc_id%3=0, path-relative
-            -- (-> the SOURCE host) at doc_id%2=0; mailto:/#frag planted in
-            -- the html are dropped by the operator and absent here
-            WITH d AS (
-              SELECT doc_id,
-                'src' || CAST(doc_id % 20 AS varchar) || '.example' AS src_host,
-                'dst' || CAST(doc_id % 50 AS varchar) || '.example' AS abs_host,
-                'pr'  || CAST(doc_id % 30 AS varchar) || '.example' AS pr_host
-              FROM documents),
-            e AS (
-              SELECT src_host, abs_host AS dst_host FROM d
-              UNION ALL
-              SELECT src_host, pr_host AS dst_host FROM d WHERE doc_id % 3 = 0
-              UNION ALL
-              SELECT src_host, src_host AS dst_host FROM d WHERE doc_id % 2 = 0)
-            SELECT src_host, dst_host, count(*) AS n_links
-            FROM e GROUP BY src_host, dst_host
-        """,
         "dedup_minhash_planted": """
             -- 6 within-family pairs per 4-block, agreement exactly 64/64
             WITH m AS (SELECT doc_id, doc_id // 4 AS g, doc_id % 4 AS r
@@ -1829,22 +1390,6 @@ def oracle_sql() -> dict[str, str]:
             -- kept singleton (see _q_pipeline_kept_planted)
             SELECT doc_id FROM documents WHERE doc_id % 8 IN (0, 4, 7)
         """,
-        "robots_gate": """
-            -- prefix arithmetic replay of the planted rules: longest
-            -- match is the Allow for %4=0 (its prefix is strictly longer
-            -- than the Disallow), the Disallow for %4=1, the host-gated
-            -- /tmp/ Disallow for %4=2, and no rule for %4=3
-            SELECT doc_id,
-              'https://r' || CAST(doc_id % 20 AS varchar) || '.example'
-              || CASE CAST(doc_id % 4 AS int)
-                 WHEN 0 THEN '/p' || CAST(doc_id % 20 AS varchar)
-                   || '/ok/d' || CAST(doc_id AS varchar)
-                 WHEN 2 THEN '/tmp/d' || CAST(doc_id AS varchar)
-                 ELSE '/free/d' || CAST(doc_id AS varchar) END AS url
-            FROM documents
-            WHERE doc_id % 4 IN (0, 3)
-               OR (doc_id % 4 = 2 AND (doc_id % 20) % 3 <> 0)
-        """,
         "lm_score_planted": """
             SELECT doc_id,
               CAST(2 * (2 + doc_id % 9) - 1 AS int) AS n_grams,
@@ -1853,38 +1398,6 @@ def oracle_sql() -> dict[str, str]:
               CAST((4000 * (1 + doc_id % 9) + 9000)
                    // (2 * (2 + doc_id % 9) - 1) AS int) AS avg_millibits
             FROM documents
-        """,
-        "frontier_planted": """
-            -- kept set = robots arithmetic; url = the canonical form
-            -- (lowercase https host, no port, no fragment)
-            SELECT d.doc_id,
-              'https://r' || CAST(d.doc_id % 20 AS varchar) || '.example'
-              || CASE CAST((d.doc_id + j.j) % 4 AS int)
-                 WHEN 0 THEN '/p' || CAST(d.doc_id % 20 AS varchar)
-                   || '/ok/d' || CAST(d.doc_id AS varchar)
-                   || 'j' || CAST(j.j AS varchar)
-                 WHEN 2 THEN '/tmp/d' || CAST(d.doc_id AS varchar)
-                   || 'j' || CAST(j.j AS varchar)
-                 ELSE '/free/d' || CAST(d.doc_id AS varchar)
-                   || 'j' || CAST(j.j AS varchar) END AS url
-            FROM documents d,
-                 LATERAL unnest(generate_series(
-                   1, CAST(1 + d.doc_id % 3 AS int))) AS j(j)
-            WHERE (d.doc_id + j.j) % 4 IN (0, 3)
-               OR ((d.doc_id + j.j) % 4 = 2
-                   AND (d.doc_id % 20) % 3 <> 0)
-        """,
-        "sitemap_discovery": """
-            SELECT d.doc_id,
-              'https://s' || CAST(d.doc_id % 20 AS varchar) || '.example/d'
-                || CAST(d.doc_id AS varchar) || '/u' || CAST(j.j AS varchar)
-                AS loc,
-              '2025-01-' || lpad(CAST(1 + d.doc_id % 28 AS varchar), 2, '0')
-                AS lastmod,
-              'url' AS kind
-            FROM documents d,
-                 LATERAL unnest(generate_series(
-                   1, CAST(1 + d.doc_id % 3 AS int))) AS j(j)
         """,
         "keyword_topk": """
             WITH terms AS (
@@ -2539,83 +2052,6 @@ def oracle_sql() -> dict[str, str]:
         -- 'alpha beta gamma' + k CJK chars + ' delta tail' = 5 + k
         SELECT doc_id, CAST(5 + doc_id % 9 AS int) AS n_tokens_sa
         FROM documents
-    """
-    d["fetch_schedule_planted"] = """
-        -- direct SQL replay: slot = rank by url within the host, delay
-        -- from the planted Crawl-delay arithmetic
-        WITH u AS (
-          SELECT doc_id,
-                 'https://r' || CAST(doc_id % 20 AS VARCHAR)
-                   || '.example/d' || CAST(doc_id AS VARCHAR) AS url,
-                 'r' || CAST(doc_id % 20 AS VARCHAR) || '.example'
-                   AS fetch_host,
-                 CAST((1 + (doc_id % 20) % 5) * 1000 AS int) AS delay_ms
-          FROM documents)
-        SELECT * FROM (
-          SELECT doc_id, url, fetch_host,
-                 CAST(row_number() OVER (PARTITION BY fetch_host
-                                         ORDER BY url) - 1 AS int) AS slot,
-                 delay_ms,
-                 CAST((row_number() OVER (PARTITION BY fetch_host
-                                          ORDER BY url) - 1)
-                      * delay_ms AS bigint) AS eta_ms
-          FROM u)
-        -- replay the operator's max_per_host budget (default 10000) so
-        -- the twin cannot desync at a tier where a host exceeds it
-        WHERE slot < 10000
-    """
-    d["robots_sitemap_frontier"] = """
-        -- frontier_iterative_planted's closure plus the odd-doc extra
-        -- urlset root discovered directly in round 1
-        WITH base AS (
-          SELECT doc_id, CAST(doc_id AS VARCHAR) AS ds FROM documents)
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c0-u1' AS url,
-               'https://s' || ds || '.example/child0.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base
-        UNION ALL
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c0-u2' AS url,
-               'https://s' || ds || '.example/child0.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c1-u1' AS url,
-               'https://s' || ds || '.example/child1.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-extra' AS url,
-               'https://s' || ds || '.example/extra.xml' AS src_loc,
-               CAST(1 AS int) AS round
-        FROM base WHERE doc_id % 2 = 1
-    """
-    d["frontier_iterative_planted"] = """
-        -- closure arithmetic of the planted 2-level tree: every doc
-        -- yields page (c0,u1); odd docs add (c0,u2) and (c1,u1); all
-        -- page discoveries happen in round 2 from their child sitemap
-        WITH base AS (
-          SELECT doc_id, CAST(doc_id AS VARCHAR) AS ds FROM documents)
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c0-u1' AS url,
-               'https://s' || ds || '.example/child0.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base
-        UNION ALL
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c0-u2' AS url,
-               'https://s' || ds || '.example/child0.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c1-u1' AS url,
-               'https://s' || ds || '.example/child1.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base WHERE doc_id % 2 = 1
     """
     d["extract_full"] = f"""
         WITH n AS (SELECT count(*) AS ndocs FROM documents)

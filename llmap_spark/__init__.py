@@ -12,7 +12,7 @@ Layout:
   session.py     — SparkSession builder with scale-tuned confs
   functions/     — the mapInArrow UDF around the kernel
   operators/     — curation chain (quality, exact + MinHash-LSH dedup,
-                   scrub incl. paragraph dedup) + text/link ops
+                   scrub incl. paragraph dedup) + text ops
   sources/       — pages reader + Iceberg-style snapshot sink with resume
   plans/         — pipeline assembly (extract funnel) + lineage
   streaming/     — Structured Streaming variants

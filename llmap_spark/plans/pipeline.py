@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from llmap_spark.functions import extract_udfs as U
 from llmap_spark.kernel import KERNEL_VERSION
@@ -62,6 +62,15 @@ OUTPUT_COLUMNS = [
 OPS_COLUMNS = ["partition_id", "salt_bucket", "bytes_in", "bytes_out"]
 
 
+def host_of(url: Column) -> Column:
+    """Host part of an absolute http(s) url, lowercased; '' for anything
+    else. The scheme matches case-insensitively ('HTTP://HOST' is valid and
+    common on legacy pages) and the host stops at '/', '?' or '#', so
+    slash-less urls with a query or fragment ('http://h?x=1') keep the bare
+    host. An explicit port stays part of the host."""
+    return F.lower(F.regexp_extract(url, r"(?i)^https?://([^/?#]+)", 1))
+
+
 def _with_salt(df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     """salt_bucket: pmod(xxhash64(url,'salt'), n_salts) for hot hosts, else 0.
 
@@ -69,11 +78,6 @@ def _with_salt(df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     plain url-hash already spreads rows; the salt demonstrably cannot change
     results (per-row map) — tests prove output identity with/without it.
     """
-    # reuse links.host_of (case-insensitive scheme, slash-optional, host
-    # stops at /?#): the previous inline regex required a trailing slash
-    # and lowercase scheme, so slash-less or 'HTTP://' fetches on hot hosts
-    # silently fell out of the skew guard — exactly the rows it exists for
-    from llmap_spark.operators.links import host_of
     host = host_of(F.col("url"))
     salt = F.when(
         host.isin(*cfg.hot_hosts),

@@ -48,7 +48,10 @@ def _decompress(data: bytes) -> bytes:
     try:
         with gzip.GzipFile(fileobj=io.BytesIO(data)) as g:
             while True:
-                chunk = g.read(1 << 20)
+                # read1, not read: read() buffers every member it reaches
+                # and loses them all when a later member turns out
+                # truncated; read1 hands over each chunk as it inflates
+                chunk = g.read1(1 << 20)
                 if not chunk:
                     break
                 out.write(chunk)

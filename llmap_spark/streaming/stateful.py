@@ -4,7 +4,7 @@ The reference has no streaming semantics at all (SURVEY §2 end note); this
 is additive surface for a web-scale ingest pipeline: per-key running
 aggregates that survive across micro-batches via GroupState. The demo
 operator keeps a running per-user event count; the same shape carries any
-per-key accumulator (URL frontier state, per-host crawl budgets, ...).
+per-key accumulator.
 """
 
 from __future__ import annotations

@@ -102,3 +102,52 @@ def test_package_call_sites_match_signatures():
                 raise AssertionError(f"{rel}:{line}: {name}: {exc}") from None
     assert ("perfbench/job.py", "minhash_lsh_candidates",
             "materialize") in seen
+
+
+# what the extraction funnel and the curation chain run: their CLIs, the
+# plans, the snapshot sink, the oracle, and the benchmark's job scripts
+REACH_ROOTS = sorted(
+    [ROOT / "llmap_spark/run_extract.py", ROOT / "llmap_spark/run_curate.py",
+     *ROOT.glob("llmap_spark/plans/*.py"),
+     ROOT / "llmap_spark/sources/snapshot.py", ROOT / "llmap_spark/oracle.py",
+     *ROOT.glob("perfbench/*.py")])
+# modules no root reaches that are still scheduled for deletion; a module
+# leaves this list when it is deleted or gains a caller
+PENDING_CUTS = {
+    "llmap_spark.operators.binpack", "llmap_spark.operators.bpe",
+    "llmap_spark.operators.lm", "llmap_spark.operators.sampling",
+    "llmap_spark.operators.sessions", "llmap_spark.streaming.stateful",
+    "llmap_spark.streaming.windowed",
+}
+
+
+def _module_path(name: str) -> Path:
+    p = ROOT / name.replace(".", "/")
+    return p / "__init__.py" if p.is_dir() else p.with_suffix(".py")
+
+
+def test_every_module_is_reachable():
+    """Every module the funnel and the chain never import is dead weight:
+    a new module without a caller fails here, and so does a module that
+    loses its last one. Packages are judged by their submodules."""
+    modules = {m.name: m.ispkg for m in pkgutil.walk_packages(
+        llmap_spark.__path__, prefix="llmap_spark.")}
+    reached: set[str] = set()
+    todo = [".".join(p.relative_to(ROOT).with_suffix("").parts)
+            for p in REACH_ROOTS]
+    while todo:
+        name = todo.pop()
+        parts = name.split(".")
+        # importing a.b.c runs a/__init__.py and a/b/__init__.py too
+        for i in range(1, len(parts) + 1):
+            mod = ".".join(parts[:i])
+            if mod in reached or not _module_path(mod).is_file():
+                continue  # seen, or a directory of scripts (perfbench/)
+            reached.add(mod)
+            for module, imported in _package_imports(_module_path(mod)):
+                sub = f"{module}.{imported}"
+                todo.append(sub if sub in modules else module)
+    leaves = {m for m, ispkg in modules.items() if not ispkg}
+    assert PENDING_CUTS <= leaves, "a pending cut no longer exists"
+    assert not PENDING_CUTS & reached, "a pending cut gained a caller"
+    assert leaves - reached == PENDING_CUTS, "modules nothing reaches"

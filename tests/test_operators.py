@@ -270,172 +270,6 @@ def test_collate_approx_vs_duckdb(spark, docs):
     assert got == want
 
 
-# -- links ----------------------------------------------------------------------
-
-def test_link_host_edges_planted(spark):
-    from llmap_spark.operators.links import link_host_edges
-
-    rows = [
-        ("https://a.example/p1",
-         b'<a href="https://b.example/x">b</a><a href="/rel">r</a>'
-         b'<a href="#frag">f</a><a href="javascript:void(0)">j</a>'
-         b'<a href="mailto:x@y.com">m</a><a href="tel:+123">t</a>'
-         b'<a href="//d.example/pr">pr</a>'
-         b'<a href="HTTP://B.Example/up">upper</a>'
-         b'<a href="https://b.example/y">b2</a>'),
-        ("https://a.example/p2", b'<a href="https://c.example/z">c</a>'),
-        ("https://b.example/p1", b'<a href="https://a.example/h">a</a>'),
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    got = {(r.src_host, r.dst_host): r.n_links
-           for r in link_host_edges(df).collect()}
-    assert got == {
-        ("a.example", "b.example"): 3,   # two https + one HTTP:// (RFC 3986
-                                         # schemes/hosts are case-insensitive)
-        ("a.example", "a.example"): 1,   # path-relative -> source host
-        ("a.example", "d.example"): 1,   # protocol-relative -> its host
-        ("a.example", "c.example"): 1,
-        ("b.example", "a.example"): 1,
-        # mailto/tel/javascript/#fragment contribute nothing
-    }
-
-
-def test_extract_anchor_links_nofollow(spark):
-    from llmap_spark.operators.links import extract_anchor_links
-
-    html = ('<p>x</p><a href="https://a.example/1">one</a>'
-            '<a rel="nofollow" href="https://b.example/2">two</a>'
-            '<A HREF="https://c.example/3" REL="me NOFOLLOW">three</A>'
-            '<a rel="author" href="https://d.example/4">four</a>'
-            '<a name="anchor-no-href">five</a>'
-            '<a data-rel="nofollow" href="https://e.example/5">six</a>'
-            '<a data-href="javascript:x" class="js">seven</a>')
-    df = spark.createDataFrame([(1, html)], "doc_id long, html string")
-    rows = df.select(F.explode(extract_anchor_links(F.col("html")))
-                     .alias("l")).select("l.href", "l.nofollow").collect()
-    got = [(r.href, r.nofollow) for r in rows]
-    assert got == [("https://a.example/1", False),
-                   ("https://b.example/2", True),
-                   ("https://c.example/3", True),  # attr case-insensitive
-                   ("https://d.example/4", False),
-                   # data-rel is NOT rel; data-href is NOT a link at all
-                   ("https://e.example/5", False)]
-
-
-def test_filter_blocklisted_hosts_broadcast_anti_join(spark):
-    from llmap_spark.operators.links import filter_blocklisted_hosts
-
-    df = spark.createDataFrame(
-        [(1, "https://Spam.Example/p"), (2, "https://good.example/p"),
-         (3, "relative/path"), (4, "https://spam.example:443/q"),
-         (5, "https://x@spam.example/p"),     # userinfo cannot evade
-         (6, "https://spam.example:8080/q")],  # nor a non-default port
-        "doc_id long, url string")
-    bl = spark.createDataFrame([("SPAM.example",)], "host string")
-    out = filter_blocklisted_hosts(df, bl)
-    assert {r.doc_id for r in out.collect()} == {2, 3}
-    # the gate keys on the bare registrable host: case-insensitive both
-    # sides, userinfo and ANY port stripped, relative urls ('' host)
-    # untouched; schema untouched
-    assert out.columns == ["doc_id", "url"]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    # a stray blank blocklist line must NOT drop the ''-host (relative)
-    # rows; and a pre-existing _bl_host caller column survives
-    bl2 = spark.createDataFrame([("spam.example",), ("",)], "host string")
-    df2 = df.withColumn("_bl_host", F.lit("mine"))
-    out2 = filter_blocklisted_hosts(df2, bl2)
-    assert {r.doc_id for r in out2.collect()} == {2, 3}
-    assert {r._bl_host for r in out2.collect()} == {"mine"}
-
-
-def test_reputation_blocklist_composes_with_filter(spark, docs):
-    """The derived-blocklist loop: per-host quality stats -> low-keep-rate
-    hosts -> broadcast anti-join gate. A planted spam host (junk docs)
-    is blocked; a healthy host survives."""
-    from llmap_spark.operators.links import (filter_blocklisted_hosts,
-                                             host_quality_stats,
-                                             reputation_blocklist)
-
-    # deterministic slice (limit() on an unordered scan can pick different
-    # rows across the two evaluations below)
-    good = docs.filter("doc_id < 10").select(
-        "doc_id", "text",
-        F.concat(F.lit("https://good.example/p"),
-                 F.col("doc_id").cast("string")).alias("url"))
-    spam = spark.createDataFrame(
-        [(1000 + i, "zz qq xx") for i in range(10)],
-        "doc_id long, text string").withColumn(
-        "url", F.concat(F.lit("https://spam.example/p"),
-                        F.col("doc_id").cast("string")))
-    allr = good.unionByName(spam)
-    stats = host_quality_stats(allr)
-    got = {r.host: (r.n_docs, r.n_keep) for r in stats.collect()}
-    assert got["good.example"][0] == 10 and got["good.example"][1] >= 8
-    assert got["spam.example"] == (10, 0)
-    bl = reputation_blocklist(stats, min_docs=5, max_keep_rate_bp=2000)
-    assert {r.host for r in bl.collect()} == {"spam.example"}
-    kept = filter_blocklisted_hosts(allr, bl)
-    assert {r.doc_id for r in kept.collect()} == \
-        {r.doc_id for r in good.collect()}
-
-
-def test_canonical_url_rules(spark):
-    from llmap_spark.operators.links import canonical_url
-
-    cases = [
-        ("HTTP://WWW.Ex.COM:80/Path?q=A#frag", "http://www.ex.com/Path?q=A"),
-        ("https://Host:443/a", "https://host/a"),
-        ("https://Host:8443/a", "https://host:8443/a"),  # non-default kept
-        ("http://h/a?", "http://h/a"),                   # bare '?' stripped
-        ("FTP://Host:80/x", "ftp://host:80/x"),          # non-http port kept
-        ("relative/path#x", "relative/path#x"),          # no scheme: as-is
-        ("", ""),
-    ]
-    df = spark.createDataFrame([(i, u) for i, (u, _) in enumerate(cases)],
-                               "i long, u string")
-    got = {r.i: r.c for r in
-           df.select("i", canonical_url(F.col("u")).alias("c")).collect()}
-    for i, (_, want) in enumerate(cases):
-        assert got[i] == want, (i, got[i], want)
-
-
-def test_canonical_url_idempotent(spark):
-    """canonical(canonical(u)) == canonical(u): a dedup key that keeps
-    changing under re-application corrupts any join keyed on it."""
-    from llmap_spark.operators.links import canonical_url
-
-    urls = [
-        "HTTP://WWW.Ex.COM:80/Path?q=A#frag", "https://Host:443/a",
-        "https://Host:8443/a?x=1&y=2", "http://h/a?", "FTP://Host:80/x",
-        "relative/path#x", "", "HtTpS://A.B.C:443:443/weird",
-        "http://h:80:80/", "https://h/p#a#b", "mailto:x@y.z",
-        # a trailing '?' that is NOT the (empty-query) separator must not
-        # be stripped: doing so both mutated a real query and broke
-        # idempotency (review-found)
-        "http://h/p??", "http://h/p?a=1?",
-    ]
-    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)],
-                               "i long, u string")
-    once = df.select("i", canonical_url(F.col("u")).alias("c1"))
-    twice = once.select("i", "c1", canonical_url(F.col("c1")).alias("c2"))
-    for r in twice.collect():
-        assert r.c1 == r.c2, (r.i, r.c1, r.c2)
-
-
-def test_link_graph_on_corpus_is_nonempty(spark):
-    from llmap_spark.corpus import pages_path_for
-    from llmap_spark.operators.links import link_host_edges
-
-    pages = spark.read.parquet(pages_path_for("/root/testdata/sf0.001"))
-    edges = link_host_edges(pages)
-    rows = edges.collect()
-    assert rows
-    # corpus links are all relative -> every edge is a self-loop
-    assert all(r.src_host == r.dst_host for r in rows)
-    assert sum(r.n_links for r in rows) > 0
-
-
 # -- sessions -----------------------------------------------------------------
 
 def test_sessionize_vs_python(spark):
@@ -625,20 +459,6 @@ def test_release_persisted_registry(spark, docs):
     assert release_persisted() == 0  # drained; second call is a no-op
 
 
-def test_host_of_stops_at_query_and_fragment(spark):
-    """Slash-less urls with a query/fragment must not leak it into the
-    host key — 'http://h?x=1' previously produced host 'h?x=1', splitting
-    one real host into many graph nodes (review-found)."""
-    from llmap_spark.operators.links import host_of
-
-    rows = [(1, "http://example.com?x=1"), (2, "http://example.com#top"),
-            (3, "HTTPS://Example.COM"), (4, "http://example.com/a?x=1")]
-    df = spark.createDataFrame(rows, "i long, u string")
-    got = {r.i: r.h for r in df.select("i", host_of(F.col("u")).alias("h")).collect()}
-    assert got == {1: "example.com", 2: "example.com",
-                   3: "example.com", 4: "example.com"}
-
-
 def test_minhash_duplicate_ids_no_self_pairs(spark):
     """A duplicated doc_id in the input must not emit (x, x) self-pairs
     from the in-array pair expansion (the self-join branch's strict <
@@ -650,41 +470,6 @@ def test_minhash_duplicate_ids_no_self_pairs(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = minhash_lsh_candidates(df, materialize=True).collect()
     assert all(r.id_a < r.id_b for r in pairs)
-
-
-def test_canonical_url_embedded_newline_keeps_path(spark):
-    """Java regex '.' excludes newlines: without DOTALL, a URL with an
-    embedded newline lost its whole path+query and collapsed onto the
-    bare scheme://host dedup key."""
-    from llmap_spark.operators.links import canonical_url
-
-    rows = [(1, "http://h.example/a\nb"), (2, "http://h.example/c\r2"),
-            (3, "HTTP://H.example:80/x#f\nrag")]
-    df = spark.createDataFrame(rows, "id long, url string")
-    got = {r.id: r.c for r in df.select(
-        "id", canonical_url(F.col("url")).alias("c")).collect()}
-    assert got[1] == "http://h.example/a\nb"
-    assert got[2] == "http://h.example/c\r2"
-    assert got[3] == "http://h.example/x"  # fragment strip spans the \n
-    assert got[1] != got[2]  # distinct pages stay distinct
-
-
-def test_link_host_edges_trims_whitespace_hrefs(spark):
-    """Whitespace-prefixed hrefs (pretty-printed HTML) must classify by
-    their trimmed value — not fall through every anchored pattern into a
-    bogus SELF edge."""
-    from llmap_spark.operators.links import link_host_edges
-
-    html = ('<a href="\n  http://other.example/x">a</a>'
-            '<a href="  #frag">b</a>'
-            '<a href=" javascript:void(0)">c</a>'
-            '<a href="/rel">d</a>').encode()
-    df = spark.createDataFrame([("http://src.example/p", html)],
-                               "url string, html binary")
-    got = {(r.src_host, r.dst_host): r.n_links
-           for r in link_host_edges(df).collect()}
-    assert got == {("src.example", "other.example"): 1,
-                   ("src.example", "src.example"): 1}  # only the /rel link
 
 
 def test_weighted_sample_null_weight_is_explicit_zero(spark):
@@ -730,5 +515,3 @@ def test_token_count_script_aware(spark):
     # case 2: 'hello', 'world' + 2 han chars = 4
     for i, _, want in cases:
         assert got[i] == want, (i, got[i], want)
-
-

@@ -137,6 +137,71 @@ def test_input_order_invariance(spark, pages_smoke, oracle_rows):
     _assert_identical(got, oracle_rows)
 
 
+# url -> host_of(url): the host key the hot-host salt matches on
+HOST_OF = {
+    "query_no_slash": ("http://example.com?x=1", "example.com"),
+    "fragment_no_slash": ("http://example.com#top", "example.com"),
+    "query_after_path": ("http://example.com/a?x=1", "example.com"),
+    "bare_host": ("https://example.com", "example.com"),
+    "upper_scheme_mixed_host": ("HTTPS://Example.COM/a", "example.com"),
+    "mixed_scheme": ("Http://News.Example.com/", "news.example.com"),
+    "port_kept": ("http://example.com:8080/a", "example.com:8080"),
+    "ipv4_with_port": ("http://10.0.0.1:80?q", "10.0.0.1:80"),
+    "path_relative": ("/a/b?x=1", ""),
+    "protocol_relative": ("//example.com/a", ""),
+    "ftp": ("ftp://example.com/a", ""),
+    "leading_blank": (" http://example.com/", ""),
+    "empty": ("", ""),
+    "null": (None, None),
+}
+
+
+@pytest.fixture(scope="module")
+def host_of_rows(spark):
+    from llmap_spark.plans.pipeline import host_of
+
+    df = spark.createDataFrame([(k, u) for k, (u, _) in HOST_OF.items()],
+                               "k string, url string")
+    return {r.k: r.h for r in
+            df.select("k", host_of(F.col("url")).alias("h")).collect()}
+
+
+@pytest.mark.parametrize("case", HOST_OF)
+def test_host_of(host_of_rows, case):
+    assert host_of_rows[case] == HOST_OF[case][1]
+
+
+N_SALTS = 1000
+# url -> whether _with_salt routes it through the salt (hot.example is hot)
+SALT_ROUTING = {
+    "upper_scheme_and_host": ("HTTP://HOT.example", True),
+    "query_no_slash": ("http://hot.example?x", True),
+    "trailing_slash": ("https://hot.example/", True),
+    "cold_host": ("http://cold.example/", False),
+    "hot_host_with_port": ("http://hot.example:80/", False),
+}
+
+
+@pytest.fixture(scope="module")
+def salted_rows(spark):
+    from llmap_spark.plans.pipeline import _with_salt
+
+    df = spark.createDataFrame([(k, u) for k, (u, _) in SALT_ROUTING.items()],
+                               "k string, url string")
+    cfg = ExtractConfig(n_salts=N_SALTS, hot_hosts=("hot.example",))
+    hashed = F.pmod(F.xxhash64("url", F.lit("salt")), F.lit(N_SALTS))
+    return {r.k: (r.salt_bucket, r.hashed) for r in
+            _with_salt(df, cfg).withColumn("hashed", hashed).collect()}
+
+
+@pytest.mark.parametrize("case", SALT_ROUTING)
+def test_with_salt_routes_hot_hosts(salted_rows, case):
+    salt, hashed = salted_rows[case]
+    assert hashed != 0  # so a salted row and an unsalted one differ
+    assert salt == (hashed if SALT_ROUTING[case][1] else 0)
+    assert 0 <= salt < N_SALTS
+
+
 def test_run_curate_cli(spark, tmp_path):
     """The curation spark-submit main end-to-end: writes the kept list and
     reports consistent counts (reuses the test session via getOrCreate)."""

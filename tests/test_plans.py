@@ -274,22 +274,3 @@ def test_lsh_curation_skew_stress(spark):
     assert kept == 1
     # and no row was lost
     assert para.count() == n
-
-
-def test_fetch_schedule_window_group_limit(spark):
-    """The politeness scheduler's max_per_host claim depends on Spark's
-    WindowGroupLimit pushing the rank filter into per-partition partial
-    sorts; the filter must match the optimizer's `row_number() <= k`
-    pattern — `(rn - 1) < k` silently didn't (review-found)."""
-    from pyspark.sql import functions as F
-
-    from llmap_spark.operators.robots import fetch_schedule
-
-    robots = spark.createDataFrame(
-        [("h.example", "User-Agent: *\nCrawl-delay: 1")],
-        "host string, body string")
-    urls = spark.range(1000).select(
-        F.expr("concat('https://h.example/p', cast(id as string))")
-        .alias("url"))
-    plan = _plan(fetch_schedule(urls, robots, max_per_host=100))
-    assert "WindowGroupLimit" in plan

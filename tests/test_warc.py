@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import gzip
 
+import pytest
+
 from llmap_spark.sources import warc
 
 
@@ -309,3 +311,122 @@ def test_run_extract_cli_warc_to_wet(spark, tmp_path):
     rc2 = main(["--input", str(wdir), "--input-format", "warc",
                 "--output", str(out), "--cores", "8"])
     assert rc2 == 0
+
+
+DATE = "2024-01-01T00:00:00Z"
+
+
+def _rec(body: bytes, wtype: bytes = b"response",
+         url: bytes = b"https://a.example/x", length: bytes | None = None,
+         headers: list[bytes] | None = None) -> bytes:
+    """One plain WARC record; `headers` replaces the default header lines."""
+    if headers is None:
+        headers = [b"WARC-Type: " + wtype, b"WARC-Target-URI: " + url,
+                   b"WARC-Date: " + DATE.encode(), b"Content-Length: "
+                   + (str(len(body)).encode() if length is None else length)]
+    return (b"WARC/1.0\r\n" + b"".join(h + b"\r\n" for h in headers)
+            + b"\r\n" + body + b"\r\n\r\n")
+
+
+REAL = _rec(b"<p>real</p>", url=b"https://real.example/")
+REAL_ROW = ("https://real.example/", DATE, b"<p>real</p>")
+# a complete record hidden in the payload tail of an oversized record
+_INNER = _rec(b"hi", url=b"https://fake.example/injected")
+_BIG = b"x" * (warc.MAX_RECORD_PAYLOAD + 100) + _INNER
+_TWO_MEMBERS = warc.make_warc([("https://a.example/1", DATE, b"one"),
+                               ("https://a.example/2", DATE, b"two")])
+_ONE_MEMBER = warc.make_warc([("https://a.example/1", DATE, b"one")])
+
+# case -> (WARC bytes, record_type, expected parse_warc rows)
+PARSE_CASES = {
+    "header_value_trailing_blanks": (
+        _rec(b"hi", headers=[b"WARC-Type: response \t",
+                             b"WARC-Target-URI: https://a.example/x  ",
+                             b"WARC-Date: " + DATE.encode() + b" ",
+                             b"Content-Length: 2 "]),
+        b"response", [("https://a.example/x", DATE, b"hi")]),
+    "lower_case_header_names": (
+        _rec(b"hi", headers=[b"warc-type: response",
+                             b"warc-target-uri: https://a.example/x",
+                             b"warc-date: " + DATE.encode(),
+                             b"content-length: 2"]),
+        b"response", [("https://a.example/x", DATE, b"hi")]),
+    "upper_case_header_names": (
+        _rec(b"hi", headers=[b"WARC-TYPE: response",
+                             b"WARC-TARGET-URI: https://a.example/x",
+                             b"WARC-DATE: " + DATE.encode(),
+                             b"CONTENT-LENGTH: 2"]),
+        b"response", [("https://a.example/x", DATE, b"hi")]),
+    "missing_uri_and_date": (
+        _rec(b"hi", headers=[b"WARC-Type: response", b"Content-Length: 2"]),
+        b"response", [("", "", b"hi")]),
+    "non_utf8_target_uri": (
+        _rec(b"hi", url=b"https://a.example/\xff"),
+        b"response", [("https://a.example/\ufffd", DATE, b"hi")]),
+    "non_ascii_date": (
+        _rec(b"hi", headers=[b"WARC-Type: response",
+                             b"WARC-Date: 2024-01-01\xc3\xa9",
+                             b"Content-Length: 2"]),
+        b"response", [("", "2024-01-01\ufffd\ufffd", b"hi")]),
+    "negative_content_length": (
+        _rec(b"", length=b"-999999") + REAL,
+        b"response", [("https://a.example/x", DATE, b""), REAL_ROW]),
+    "non_numeric_content_length": (
+        _rec(b"<p>bad</p>", length=b"10abc") + REAL,
+        b"response", [REAL_ROW]),
+    "missing_content_length": (
+        _rec(b"<p>bad</p>", headers=[b"WARC-Type: response"]) + REAL,
+        b"response", [REAL_ROW]),
+    "http_header_stripped": (
+        _rec(b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<p>hi</p>"),
+        b"response", [("https://a.example/x", DATE, b"<p>hi</p>")]),
+    "http_header_without_terminator": (
+        _rec(b"HTTP/1.1 200 OK\r\nContent-Type: text/html"),
+        b"response", [("https://a.example/x", DATE, b"")]),
+    "conversion_text_starting_with_http": (
+        _rec(b"HTTP/1.1 is old\r\n\r\ntext", wtype=b"conversion"),
+        b"conversion",
+        [("https://a.example/x", DATE, b"HTTP/1.1 is old\r\n\r\ntext")]),
+    "other_record_types_skipped": (
+        _rec(b"GET / HTTP/1.1", wtype=b"request")
+        + _rec(b"k: v", wtype=b"metadata")
+        + _rec(b"software: x", wtype=b"warcinfo")
+        + _rec(b"text", wtype=b"conversion") + REAL,
+        b"response", [REAL_ROW]),
+    "record_type_selects_conversion": (
+        REAL + _rec(b"text", wtype=b"conversion"),
+        b"conversion", [("https://a.example/x", DATE, b"text")]),
+    "truncated_last_gzip_member": (
+        _TWO_MEMBERS[:len(_ONE_MEMBER) + 30],
+        b"response", [("https://a.example/1", DATE, b"one")]),
+    "oversized_record_then_real": (
+        _rec(_BIG, url=b"https://big.example/") + REAL,
+        b"response",
+        [("https://big.example/", DATE, _BIG[:warc.MAX_RECORD_PAYLOAD]),
+         REAL_ROW]),
+}
+
+
+@pytest.mark.parametrize("case", PARSE_CASES)
+def test_parse_warc_record(case):
+    data, record_type, want = PARSE_CASES[case]
+    assert warc.parse_warc(data, record_type=record_type) == want
+
+
+# extracted text make_wet writes; parse_warc must read back `text or ""`
+WET_TEXT = {
+    "empty": "",
+    "none": None,
+    "non_ascii": "Grüße aus Köln, 東京, naïve café",
+    "crlf": "line one\r\nline two\r\n\r\nafter a blank line\r\n",
+    "embedded_record": _rec(b"hi", wtype=b"conversion").decode("ascii"),
+}
+
+
+@pytest.mark.parametrize("case", WET_TEXT)
+def test_make_wet_roundtrip(case):
+    text = WET_TEXT[case]
+    data = warc.make_wet([("https://a.example/x", DATE, text)])
+    got = [(u, d, p.decode("utf-8")) for u, d, p in
+           warc.parse_warc(data, record_type=b"conversion")]
+    assert got == [("https://a.example/x", DATE, text or "")]
