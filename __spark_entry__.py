@@ -467,6 +467,77 @@ def _q_collate_binpack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_bpe2_tokens", "group_id")
 
 
+def _q_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sitemap URL-discovery source (sources/sitemap.py),
+    hash-verified: each doc renders a sitemaps.org urlset with
+    1 + doc_id%3 planted <loc>/<lastmod> entries (pure arithmetic, built
+    JVM-side as binary), the tolerant scan parses them back, and the
+    oracle regenerates the entries with generate_series. Index/gzip/
+    entity/cap behavior is pinned in tests/test_sitemap.py."""
+    from llmap_spark.sources.sitemap import read_sitemaps
+
+    body = F.expr(
+        "cast(concat('<?xml version=\"1.0\"?><urlset>', "
+        "array_join(transform(sequence(1, 1 + cast(doc_id % 3 as int)), "
+        "j -> concat('<url><loc>https://s', cast(doc_id % 20 as string), "
+        "'.example/d', cast(doc_id as string), '/u', cast(j as string), "
+        "'</loc><lastmod>2025-01-', "
+        "lpad(cast(1 + doc_id % 28 as string), 2, '0'), "
+        "'</lastmod></url>')), ''), '</urlset>') as binary)")
+    docs = _docs(spark, sf_dir).select("doc_id", body.alias("body"))
+    return read_sitemaps(docs, keep_cols=("doc_id",)).select(
+        "doc_id", "loc", "lastmod", "kind")
+
+
+def _q_frontier_iterative_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ITERATIVE frontier driver (sources/sitemap.py expand_frontier:
+    bounded multi-round index-following with visited anti-join and
+    per-round checkpoints), hash-verified on a planted 2-level sitemap
+    tree whose closure is doc_id arithmetic: doc d's root index lists
+    children c in 0..d%2; child c's urlset lists pages u in
+    1..1+(d+c)%2. So every doc yields page (c0,u1); odd docs add
+    (c0,u2) and (c1,u1) — all discovered in round 2 with their child
+    sitemap as src_loc. The fetch seam is deterministic JVM body
+    synthesis keyed on the loc."""
+    from llmap_spark.sources.sitemap import expand_frontier
+
+    docs = _docs(spark, sf_dir).select("doc_id")
+    seeds = docs.select(F.expr(
+        "concat('https://s', cast(doc_id as string), "
+        "'.example/sitemap.xml')").alias("loc"))
+
+    out = expand_frontier(seeds, _planted_tree_fetch(), max_rounds=4)
+    return out.select(
+        F.regexp_extract("src_loc", r"https://s(\d+)\.example", 1)
+        .cast("long").alias("doc_id"),
+        F.col("loc").alias("url"), "src_loc", "round")
+
+
+def _planted_tree_fetch():
+    """The deterministic fetch seam of frontier_iterative_planted: doc
+    d's root index lists children c in 0..d%2; child c's urlset lists
+    pages u in 1..1+(d+c)%2."""
+    def fetch(frontier: DataFrame) -> DataFrame:
+        d = "cast(regexp_extract(loc, 'https://s(\\\\d+)\\\\.example', 1) as bigint)"
+        c = "cast(regexp_extract(loc, 'child(\\\\d+)\\\\.xml', 1) as bigint)"
+        body = F.expr(
+            f"cast(CASE WHEN loc LIKE '%/sitemap.xml' THEN "
+            f"concat('<sitemapindex>', array_join(transform("
+            f"sequence(0, {d} % 2), c -> concat("
+            f"'<sitemap><loc>https://s', cast({d} as string), "
+            f"'.example/child', cast(c as string), '.xml</loc></sitemap>'"
+            f")), ''), '</sitemapindex>') "
+            f"ELSE concat('<urlset>', array_join(transform("
+            f"sequence(1, 1 + ({d} + {c}) % 2), u -> concat("
+            f"'<url><loc>https://s', cast({d} as string), "
+            f"'.example/page-c', cast({c} as string), '-u', "
+            f"cast(u as string), '</loc></url>')), ''), '</urlset>') "
+            f"END as binary)")
+        return frontier.withColumn("body", body)
+
+    return fetch
+
+
 def _q_lm_score_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CCNet-style char-trigram LM quality scorer (operators/lm.py),
     hash-verified: the model table is planted ({'aba': 1500, 'bab': 2500}
@@ -1002,6 +1073,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- LAST_CHECKED: never (new in r5) — inserted here as built ---
         "lang_id2": _q_lang_id2,
+        "frontier_iterative_planted": _q_frontier_iterative_planted,
         "token_count_cjk": _q_token_count_cjk,
         # --- LAST_CHECKED: r2 (green r1+r2 or r2 only; oldest rows) ---
         "token_count": _q_token_count,
@@ -1038,6 +1110,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "explode_chunks": _q_explode_chunks,
         "union_passthrough": _q_union_passthrough,
         "keyword_topk": _q_keyword_topk,
+        "sitemap_discovery": _q_sitemap_discovery,
         "lm_score_planted": _q_lm_score_planted,
         # --- LAST_CHECKED: r4, multi-round green (freshest + deepest) ---
         "extract_roundtrip": _q_extract_roundtrip,
@@ -1398,6 +1471,18 @@ def oracle_sql() -> dict[str, str]:
               CAST((4000 * (1 + doc_id % 9) + 9000)
                    // (2 * (2 + doc_id % 9) - 1) AS int) AS avg_millibits
             FROM documents
+        """,
+        "sitemap_discovery": """
+            SELECT d.doc_id,
+              'https://s' || CAST(d.doc_id % 20 AS varchar) || '.example/d'
+                || CAST(d.doc_id AS varchar) || '/u' || CAST(j.j AS varchar)
+                AS loc,
+              '2025-01-' || lpad(CAST(1 + d.doc_id % 28 AS varchar), 2, '0')
+                AS lastmod,
+              'url' AS kind
+            FROM documents d,
+                 LATERAL unnest(generate_series(
+                   1, CAST(1 + d.doc_id % 3 AS int))) AS j(j)
         """,
         "keyword_topk": """
             WITH terms AS (
@@ -2052,6 +2137,30 @@ def oracle_sql() -> dict[str, str]:
         -- 'alpha beta gamma' + k CJK chars + ' delta tail' = 5 + k
         SELECT doc_id, CAST(5 + doc_id % 9 AS int) AS n_tokens_sa
         FROM documents
+    """
+    d["frontier_iterative_planted"] = """
+        -- closure arithmetic of the planted 2-level tree: every doc
+        -- yields page (c0,u1); odd docs add (c0,u2) and (c1,u1); all
+        -- page discoveries happen in round 2 from their child sitemap
+        WITH base AS (
+          SELECT doc_id, CAST(doc_id AS VARCHAR) AS ds FROM documents)
+        SELECT doc_id,
+               'https://s' || ds || '.example/page-c0-u1' AS url,
+               'https://s' || ds || '.example/child0.xml' AS src_loc,
+               CAST(2 AS int) AS round
+        FROM base
+        UNION ALL
+        SELECT doc_id,
+               'https://s' || ds || '.example/page-c0-u2' AS url,
+               'https://s' || ds || '.example/child0.xml' AS src_loc,
+               CAST(2 AS int) AS round
+        FROM base WHERE doc_id % 2 = 1
+        UNION ALL
+        SELECT doc_id,
+               'https://s' || ds || '.example/page-c1-u1' AS url,
+               'https://s' || ds || '.example/child1.xml' AS src_loc,
+               CAST(2 AS int) AS round
+        FROM base WHERE doc_id % 2 = 1
     """
     d["extract_full"] = f"""
         WITH n AS (SELECT count(*) AS ndocs FROM documents)

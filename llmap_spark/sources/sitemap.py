@@ -1,6 +1,5 @@
 """Sitemap (sitemaps.org XML) source: URL discovery for the crawl story —
-the companion to the robots.txt gate (robots.txt advertises sitemaps; the
-sitemap advertises the URLs the extraction pipeline should fetch next).
+a sitemap advertises the URLs the extraction pipeline should fetch next.
 
 Kernel discipline as everywhere else (total, deterministic, stdlib-only,
 shared by pytest and the Spark reader):

@@ -116,8 +116,8 @@ REACH_ROOTS = sorted(
 PENDING_CUTS = {
     "llmap_spark.operators.binpack", "llmap_spark.operators.bpe",
     "llmap_spark.operators.lm", "llmap_spark.operators.sampling",
-    "llmap_spark.operators.sessions", "llmap_spark.streaming.stateful",
-    "llmap_spark.streaming.windowed",
+    "llmap_spark.operators.sessions", "llmap_spark.sources.sitemap",
+    "llmap_spark.streaming.stateful", "llmap_spark.streaming.windowed",
 }
 
 
