@@ -22,6 +22,8 @@ register.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
 _PERSISTED: list[DataFrame] = []
@@ -44,3 +46,17 @@ def release_persisted() -> int:
         except Exception:
             pass  # a stopped session invalidates handles; releasing is moot
     return n
+
+
+@contextmanager
+def released_on_exit():
+    """Unpersist, when the block exits, every frame registered inside it:
+    for a caller that has materialized all it needs from those frames
+    before the block ends (the curation chain releases its intermediate
+    caches once connected components has checkpointed the pairs)."""
+    n = len(_PERSISTED)
+    try:
+        yield
+    finally:
+        while len(_PERSISTED) > n:
+            _PERSISTED.pop().unpersist()

@@ -5,17 +5,20 @@ step it runs after them:
 
   exact_dedup          md5 fingerprint -> groupBy-min winners -> join-back
   minhash_lsh          char-shingle MinHash signatures (pandas UDF) ->
-                       banded LSH bucket join -> candidate pairs with
-                       signature-estimated Jaccard (JVM zip_with)
+                       bands grouped on their signature slices ->
+                       candidate pairs with signature-estimated Jaccard
+                       (JVM zip_with)
   connected_components min-label propagation over candidate pairs ->
                        duplicate clusters (no GraphFrames dep)
 
 Sub-document (paragraph) dedup is scrub.dedup_paragraphs.
 
 Scale notes baked in: LSH buckets are capped (hot-bucket skew guard),
-signatures travel as array<long> (Arrow-native), verification math stays
-JVM-side (zip_with), and components iterate with AQE-friendly joins, with
-a driver-side union-find only for small, already-materialized pair sets.
+signatures travel as array<long> (Arrow-native), band keys are signature
+slices built in one JVM expression, verification math stays JVM-side
+(zip_with), and components iterate with AQE-friendly joins, with a
+driver-side union-find only for small pair sets: one bounded Arrow
+collect in, Arrow-built labels out, no Python worker.
 """
 
 from __future__ import annotations
@@ -186,7 +189,12 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     quadratic join blowup; dropped buckets mean those docs are near-dups of
     *many* docs and are caught by other bands with overwhelming odds).
 
-    Shuffle diet: only (id, band, band-hash) rows enter the bucket
+    Band key: the band's slice of the signature itself (4 longs), all
+    bands built by one `inline(transform(sequence(...)))` expression.
+    Two documents share a bucket exactly when their slices are equal, so
+    no hash of the slice is needed.
+
+    Shuffle diet: only (id, band, band slice) rows enter the bucket
     grouping and the candidate `distinct` — signatures (64 longs, ~0.5 KB)
     are re-attached AFTER the pair set is deduplicated, via broadcast of
     the (small by construction) pair list against the persisted signature
@@ -201,7 +209,10 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     the bounded candidate set and release the signature cache immediately —
     appropriate in notebooks/short jobs; on a long-lived cluster prefer
     writing the candidates to a table, since localCheckpoint blocks are
-    lost on executor failure.
+    lost on executor failure. A caller that hands the pairs straight to
+    connected_components (the curation chain) keeps the lazy default:
+    components checkpoints its input itself, and a second checkpoint
+    would write the same pairs twice.
     """
     from llmap_spark.cache import register_persisted
 
@@ -215,16 +226,15 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     sig = sig.persist()
     if not materialize:
         register_persisted(sig)
-    # band key: md5 of the band's signature slice, JVM-side
+    # band key: the band's signature slice itself, all BANDS bands in one
+    # expression (one plan node, not one driver-built struct per band).
+    # Equal slices are exactly what makes an LSH bucket, so grouping on
+    # the slice needs no hash of it
     rows_per_band = NUM_HASHES // BANDS
-    band_exprs = [
-        F.struct(F.lit(bd).alias("band"),
-                 F.md5(F.to_json(F.slice("sig", bd * rows_per_band + 1,
-                                         rows_per_band))).alias("bh"))
-        for bd in range(BANDS)]
-    exploded = (sig.select("_id", F.explode(F.array(*band_exprs)).alias("bk"))
-                .select("_id", F.col("bk.band").alias("band"),
-                        F.col("bk.bh").alias("bh")))
+    exploded = sig.select("_id", F.expr(
+        f"inline(transform(sequence(0, {BANDS - 1}), b -> named_struct("
+        f"'band', b, 'bh', slice(sig, b * {rows_per_band} + 1, "
+        f"{rows_per_band}))))"))
     # hot-bucket guard via groupBy counts + ANTI-join against the
     # over-full buckets, NOT a window over (band, bh): the hot bucket is
     # exactly the case the cap exists for, and a window would buffer that
@@ -280,16 +290,18 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
 # clustering candidate pairs
 # --------------------------------------------------------------------------
 
-def _union_find_components(spark, edges: DataFrame) -> DataFrame:
-    """Driver-side union-find over a bounded, already-materialized pair
-    frame. Duplicate pairs and edge direction are irrelevant to
-    union-find (union is symmetric and idempotent), so the RAW pair set
-    works — no mirroring or distinct needed (r6: the driver fast path
-    used to pay a distinct exchange and a doubled checkpoint write for a
-    canonical edge set only the distributed fixpoint needs). Every union
-    attaches the larger root under the smaller, so each set's root IS
-    its minimum id — labels match the distributed min-label fixpoint
-    exactly (pinned by pytest running both paths on the same graphs)."""
+def _union_find_components(spark, pdf: pd.DataFrame,
+                           id_type) -> DataFrame:
+    """Driver-side union-find over a bounded pair set already collected
+    to pandas (two id columns). Duplicate pairs and edge direction are
+    irrelevant to union-find (union is symmetric and idempotent), so the
+    RAW pair set works — no mirroring or distinct needed (r6: the driver
+    fast path used to pay a distinct exchange and a doubled checkpoint
+    write for a canonical edge set only the distributed fixpoint needs).
+    Every union attaches the larger root under the smaller, so each set's
+    root IS its minimum id — labels match the distributed min-label
+    fixpoint exactly (pinned by pytest running both paths on the same
+    graphs)."""
     parent: dict = {}
 
     def find(x):
@@ -300,10 +312,8 @@ def _union_find_components(spark, edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # Arrow collect (toPandas) + zip over columns: ~16 B/edge on the wire
-    # and no per-row pyspark Row objects (collect() would cost ~100+ B per
-    # edge in boxed Rows before union-find even starts)
-    pdf = edges.toPandas()
+    # zip over the columns: no per-row pyspark Row objects (collect()
+    # would cost ~100+ B per edge in boxed Rows before union-find starts)
     for a, b in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
         if a not in parent:
             parent[a] = a
@@ -317,19 +327,25 @@ def _union_find_components(spark, edges: DataFrame) -> DataFrame:
 
     from pyspark.sql.types import StructField, StructType
 
-    id_type = edges.schema.fields[0].dataType
+    nodes = list(parent)
+    dtype = pdf.dtypes.iloc[0]  # the collected id type, kept end to end
+    labels = pd.DataFrame({"node": pd.Series(nodes, dtype=dtype),
+                           "component": pd.Series([find(n) for n in nodes],
+                                                  dtype=dtype)})
     schema = StructType([StructField("node", id_type),
                          StructField("component", id_type)])
-    # broadcast hint: this frame is bounded by construction (<=
-    # driver_threshold edges -> <= 2x that in nodes, a few MB) but is
-    # RDD-backed, whose sizeInBytes estimate is defaultSizeInBytes
-    # (effectively infinite) — without the hint the keep-list anti-join
-    # downstream planned as a SortMergeJoin that exchanged+sorted BOTH
-    # sides (r6 plan audit, pipeline_kept_docs_before.txt); the hint makes
-    # every consumer join map-side. The distributed CC path returns
+    # pandas -> Arrow batches -> JVM: the labels frame needs no Python
+    # worker (a frame built from a Python list is read by a Python-RDD
+    # job on the chain's critical path). Broadcast hint: the frame is
+    # bounded by construction (<= driver_threshold edges -> <= 2x that
+    # in nodes, a few MB), but past Spark's Arrow local-relation size
+    # threshold it is RDD-backed, whose sizeInBytes estimate is
+    # defaultSizeInBytes (effectively infinite) — without the hint the
+    # keep-list anti-join downstream then plans as a SortMergeJoin that
+    # exchanges+sorts BOTH sides (r6 plan audit); the hint makes every
+    # consumer join map-side. The distributed CC path returns
     # cluster-scale labels and is deliberately NOT hinted.
-    return F.broadcast(spark.createDataFrame(
-        [(n, find(n)) for n in parent], schema))
+    return F.broadcast(spark.createDataFrame(labels, schema))
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -378,10 +394,14 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     materialization of the raw pair set, if 2x the pair count (an upper
     bound on the directed edge count — duplicates only shrink it) is
     <= driver_threshold the component labels are computed by a
-    driver-side union-find on one bounded Arrow collect of the RAW pairs
-    — identical labels (component = min reachable id), zero iterative
-    rounds, and no mirrored/distinct edge set to build (union-find is
-    direction- and duplicate-agnostic). Near-dup candidate edges are
+    driver-side union-find on the RAW pairs — identical labels
+    (component = min reachable id), zero iterative rounds, and no
+    mirrored/distinct edge set to build (union-find is direction- and
+    duplicate-agnostic). One bounded Arrow collect,
+    limit(driver_threshold // 2 + 1), is both the size probe and the
+    union-find input: a full limit means the graph is too big, so no
+    count job runs. The labels go back to the JVM as Arrow batches, with
+    no Python worker, in the input's id type. Near-dup candidate edges are
     typically a tiny fraction of corpus rows even at 100 TB, so most
     runs take this path; bigger graphs build the canonical edge set and
     run the distributed loop. The default (250k directed edges) is sized
@@ -405,18 +425,27 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # downstream consumer read this checkpoint, so a lazy `pairs` plan
     # (e.g. a full LSH pipeline) is evaluated exactly once — unmaterialized
     # it would be recomputed per round, measured 9x slower on the composed
-    # curation chain. r6: the mirrored+distinct canonical edge set is
-    # built only on the DISTRIBUTED path — union-find is direction- and
-    # duplicate-agnostic, so the common driver fast path skips that
-    # distinct exchange and the doubled checkpoint write.
+    # curation chain. It is the chain's only materialization of the pairs
+    # (plans/training._kept_reps hands LSH's plan over lazily). r6: the
+    # mirrored+distinct canonical edge set is built only on the
+    # DISTRIBUTED path — union-find is direction- and duplicate-agnostic,
+    # so the common driver fast path skips that distinct exchange and the
+    # doubled checkpoint write.
     pairs_m = ckpt(pairs.select(F.col(id_a).alias("a"),
                                 F.col(id_b).alias("b")))
-    # 2x raw pairs bounds the directed edge count from above (duplicates
-    # only shrink it), so this probe is conservative: never sends a graph
-    # to the driver that the directed-edge rule would have kept
-    # distributed. Label output is identical on both paths (pinned).
-    if driver_threshold and 2 * pairs_m.count() <= driver_threshold:
-        return _union_find_components(spark, pairs_m)
+    # driver path iff 2 x raw pairs <= driver_threshold: 2x raw pairs
+    # bounds the directed edge count from above (duplicates only shrink
+    # it), so the rule never sends a graph to the driver that the
+    # directed-edge rule would have kept distributed. ONE bounded Arrow
+    # collect is both the size probe and the union-find input: one row
+    # past the limit means "too big", with no separate count job. Label
+    # output is identical on both paths (pinned).
+    if driver_threshold > 0:
+        limit = driver_threshold // 2
+        head = pairs_m.limit(limit + 1).toPandas()
+        if len(head) <= limit:
+            return _union_find_components(
+                spark, head, pairs_m.schema.fields[0].dataType)
     edges = ckpt(
         pairs_m.union(pairs_m.select(F.col("b").alias("a"),
                                      F.col("a").alias("b")))

@@ -36,13 +36,22 @@ def occurrences(col: Column, sub: str) -> Column:
     ).cast("int")
 
 
-def token_count(col: Column) -> Column:
-    """Whitespace token count as pure arithmetic: spaces+1 on a
-    squeezed string; 0 for empty/blank. Portable to the SQL oracle."""
-    squeezed = F.trim(F.regexp_replace(col, r"\s+", " "))
+def squeeze_ws(col: Column) -> Column:
+    """Whitespace runs collapsed to one space, ends trimmed: the one
+    normalization token counts, quality features and fingerprints share."""
+    return F.trim(F.regexp_replace(col, r"\s+", " "))
+
+
+def _tokens_of_squeezed(squeezed: Column) -> Column:
     return F.when(F.length(squeezed) == 0, F.lit(0)).otherwise(
         occurrences(squeezed, " ") + F.lit(1)
     ).cast("int")
+
+
+def token_count(col: Column) -> Column:
+    """Whitespace token count as pure arithmetic: spaces+1 on a
+    squeezed string; 0 for empty/blank. Portable to the SQL oracle."""
+    return _tokens_of_squeezed(squeeze_ws(col))
 
 
 # CJK codepoint classes (Kana + Han incl. ext-A + Hangul syllables):
@@ -78,46 +87,73 @@ def token_count_bpe(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_ISH_PATTERN)).cast("int")
 
 
+QUALITY_COLUMNS = ("n_chars_t", "n_tokens_t", "n_periods", "n_commas",
+                   "n_stop_hits", "mwl_x100", "q_keep")
+
+
+def _let(value: Column, body) -> Column:
+    """`body(v)` with `value` evaluated ONCE per row and bound to `v`: a
+    one-element array transform. The optimizer neither inlines a lambda
+    argument into its uses nor pushes a filter inside the lambda, so a
+    bound value stays one evaluation however often the body reads it."""
+    return F.transform(F.array(value), body)[0]
+
+
+def quality(col: Column) -> Column:
+    """Struct of the QUALITY_COLUMNS signals of `col`: the one quality
+    formula, shared by quality_features and the curation chain's gate.
+
+    Every intermediate the formula reads more than once (the squeezed
+    text, the padded text, the token count, the mean word length) is
+    bound with _let and evaluated once per row. Written as chained
+    columns, the optimizer inlines each alias into every use — and into
+    a pushed-down `q_keep` filter, whose plan then re-ran the whitespace
+    regexp once per use."""
+    stop_words = ("the", "and", "of", "to", "a", "in")
+
+    def counts(x):
+        stop_hits = sum(occurrences(x["p"], f" {w} ") for w in stop_words)
+        return F.struct(
+            F.length(x["t"]).cast("int").alias("n_chars_t"),
+            _tokens_of_squeezed(x["s"]).alias("n_tokens_t"),
+            occurrences(x["t"], ".").alias("n_periods"),
+            occurrences(x["t"], ",").alias("n_commas"),
+            stop_hits.cast("int").alias("n_stop_hits"),
+            F.length(x["s"]).cast("int").alias("_sq_len"))
+
+    def with_mwl(y):
+        n = y["n_tokens_t"]
+        # mean word length x100, integer division (portable): chars-
+        # without-spaces * 100 / tokens — on the SQUEEZED length, not the
+        # raw one: n_tokens counts squeezed whitespace, so raw length
+        # would let every extra whitespace char inflate the mean word
+        # length (a 950-char page of ten 5-char words read as mwl ~94
+        # instead of ~5, wrongly failing the q_keep bound)
+        mwl = F.when(n > 0, F.floor((y["_sq_len"] - (n - 1)) * F.lit(100) / n)
+                     .cast("int")).otherwise(F.lit(0))
+        return _let(mwl, lambda m: F.struct(
+            # the counts above, in QUALITY_COLUMNS order
+            *[y[c].alias(c) for c in QUALITY_COLUMNS[:-2]],
+            m.alias("mwl_x100"),
+            # keep gate: enough tokens, sane mean word length, stopwords
+            ((n >= 10) & (m >= 200) & (m <= 1200)
+             & (y["n_stop_hits"] >= 1)).alias("q_keep")))
+
+    text = F.struct(col.alias("t"), squeeze_ws(col).alias("s"),
+                    F.concat(F.lit(" "), col, F.lit(" ")).alias("p"))
+    return _let(text, lambda x: _let(counts(x), with_mwl))
+
+
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Integer quality-signal columns: char/token counts, punctuation,
     digits, stopword hits, mean word length x100 (integer), plus a boolean
     `q_keep` gate typical of web-text filtering (Gopher/C4-style rules,
-    restated as integer comparisons)."""
-    c = F.col(text_col)
-    padded = F.concat(F.lit(" "), c, F.lit(" "))
-    stop_hits = None
-    for w in ("the", "and", "of", "to", "a", "in"):
-        occ = occurrences(padded, f" {w} ")
-        stop_hits = occ if stop_hits is None else stop_hits + occ
-    out = (
-        df.withColumn("n_chars_t", F.length(c).cast("int"))
-        .withColumn("n_tokens_t", token_count(c))
-        .withColumn("n_periods", occurrences(c, "."))
-        .withColumn("n_commas", occurrences(c, ","))
-        .withColumn("n_stop_hits", stop_hits.cast("int"))
-    )
-    # mean word length x100, integer division (portable): chars-without-
-    # spaces * 100 / tokens — computed on the SQUEEZED length, not the raw
-    # one: n_tokens counts squeezed whitespace, so raw length would let
-    # every extra whitespace char inflate the mean word length (a 950-char
-    # page of ten 5-char words read as mwl ~94 instead of ~5, wrongly
-    # failing the q_keep bound)
-    squeezed_len = F.length(
-        F.trim(F.regexp_replace(c, r"\s+", " "))).cast("int")
-    out = out.withColumn(
-        "mwl_x100",
-        F.when(F.col("n_tokens_t") > 0,
-               F.floor((squeezed_len - (F.col("n_tokens_t") - 1))
-                       * F.lit(100) / F.col("n_tokens_t")).cast("int"))
-        .otherwise(F.lit(0)),
-    )
-    # keep gate: enough tokens, sane mean word length, some stopwords
-    return out.withColumn(
-        "q_keep",
-        (F.col("n_tokens_t") >= 10)
-        & (F.col("mwl_x100") >= 200) & (F.col("mwl_x100") <= 1200)
-        & (F.col("n_stop_hits") >= 1),
-    )
+    restated as integer comparisons). Same formula as `quality`, which
+    a caller that only needs the gate filters on directly."""
+    q = "_quality"
+    return (df.withColumn(q, quality(F.col(text_col)))
+            .withColumns({n: F.col(q)[n] for n in QUALITY_COLUMNS})
+            .drop(q))
 
 
 def word_ngrams(words_col: str, n: int):
@@ -145,8 +181,7 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     boilerplate-looping text. Pure JVM array expressions (split +
     transform + array_distinct), integer-exact and portable to the SQL
     oracle: floor(1000 * (n_grams - n_distinct) / n_grams)."""
-    squeezed = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    df = df.withColumn("_w", F.split(squeezed, " "))
+    df = df.withColumn("_w", F.split(squeeze_ws(F.col(text_col)), " "))
     for n in (2, 3):
         df = df.withColumn(f"_g{n}", word_ngrams("_w", n)).withColumn(
             f"dup_{n}gram_x1000",
@@ -188,8 +223,8 @@ def fingerprint(df: DataFrame, text_col: str = "text",
                 out_col: str = "fingerprint") -> DataFrame:
     """Document fingerprint: md5 of whitespace-normalized text. Identical
     in Spark and the SQL oracle; the basis for exact dedup."""
-    norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    return df.withColumn(out_col, F.md5(F.encode(norm, "UTF-8")))
+    return df.withColumn(
+        out_col, F.md5(F.encode(squeeze_ws(F.col(text_col)), "UTF-8")))
 
 
 def top_terms(df: DataFrame, id_col: str = "doc_id",
@@ -215,7 +250,7 @@ def top_terms(df: DataFrame, id_col: str = "doc_id",
     folded = F.translate(
         F.coalesce(F.col(text_col), F.lit("")),
         "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
-    words = F.split(F.trim(F.regexp_replace(folded, r"\s+", " ")), " ")
+    words = F.split(squeeze_ws(folded), " ")
     terms = (df.select(F.col(id_col), F.explode(words).alias("term"))
              .filter(F.col("term") != ""))
     tf = terms.groupBy(id_col, "term").agg(

@@ -56,36 +56,47 @@ def _kept_reps(docs: DataFrame, id_col: str = "doc_id",
     fixpoint mid-flight — the right mode on a real cluster when the
     corpus makes CC run longer than executor MTBF.
     """
+    from llmap_spark.cache import register_persisted, released_on_exit
     from llmap_spark.operators.dedup import (connected_components,
                                              exact_dedup,
                                              minhash_lsh_candidates)
-    from llmap_spark.operators.textstats import quality_features
+    from llmap_spark.operators.textstats import quality
 
-    q = quality_features(docs, text_col=text_col).filter(F.col("q_keep"))
-    reps = exact_dedup(q, id_col=id_col, text_col=text_col) \
-        .filter(~F.col("is_dup")) \
-        .select(id_col, text_col)
-    # reps feeds BOTH the LSH stage (materialized eagerly below, which
-    # populates this cache) and the final anti-join — persisting avoids a
-    # second full quality+window pass over the corpus (measured ~40% off
-    # the whole chain at sf0.1). SLIMMED to (id, text) before the persist
-    # (round 4): downstream needs nothing else — LSH projects exactly
-    # these two and the final output is ids — so caching the quality
-    # feature columns + fingerprint would only widen the cache and every
-    # downstream exchange. Storage is MEMORY_AND_DISK with LRU
-    # eviction, so an over-large corpus spills rather than OOMs; the
-    # persist is registered with llmap_spark.cache so a long-lived session
-    # releases it via release_persisted().
-    from llmap_spark.cache import register_persisted
-    reps = register_persisted(reps.persist())
-    # materialize=True: the candidate set feeds an ITERATIVE consumer
-    # (connected components) plus the final anti-join — exactly the case
-    # the LSH operator's caller-controlled materialization exists for
-    # (releases the signature cache too)
-    cand = minhash_lsh_candidates(reps, id_col=id_col, text_col=text_col,
-                                  materialize=True)
-    verified = cand.filter(F.col("est_jaccard") >= verify_jaccard)
-    comp = connected_components(verified, checkpoint_dir=cc_checkpoint_dir)
+    # Document-level caches, each read by more than one consumer:
+    #   q     the quality survivors (id, text). The gate filters on the
+    #         shared formula's q_keep directly (textstats.quality binds
+    #         each intermediate once per row), not on quality_features'
+    #         columns — the optimizer pushed that filter below the
+    #         feature projections and inlined every alias into it, 24
+    #         regexp_replace calls in its plan. exact_dedup reads its
+    #         input twice (its slim fingerprint persist and the join
+    #         side); cached, the gate runs once per document.
+    #   reps  the exact-dedup representatives (id, text), read by LSH and
+    #         by the final anti-join. Cached, the anti-join does not
+    #         re-run exact_dedup's winners aggregate (two stages).
+    # Both are filled by connected_components' checkpoint below. After
+    # it, reps alone is read, so q, exact_dedup's slim frame and LSH's
+    # signature frame are released as the block exits, and the built
+    # chain holds one corpus-sized cache. Caches are MEMORY_AND_DISK with
+    # LRU eviction (an over-large corpus spills rather than OOMs); reps is
+    # registered with llmap_spark.cache so a long-lived session releases
+    # it via release_persisted().
+    with released_on_exit():
+        q = register_persisted(
+            docs.select(id_col, text_col)
+            .filter(quality(F.col(text_col))["q_keep"]).persist())
+        reps = exact_dedup(q, id_col=id_col, text_col=text_col) \
+            .filter(~F.col("is_dup")) \
+            .select(id_col, text_col).persist()
+        # LSH stays lazy: connected_components checkpoints the verified
+        # pairs once — the chain's only materialization of them — and
+        # every later reader (its rounds, the keep-list below) reads that
+        cand = minhash_lsh_candidates(reps, id_col=id_col,
+                                      text_col=text_col)
+        verified = cand.filter(F.col("est_jaccard") >= verify_jaccard)
+        comp = connected_components(verified,
+                                    checkpoint_dir=cc_checkpoint_dir)
+    register_persisted(reps)
     near_dup_losers = (
         comp.filter(F.col("node") != F.col("component"))
         .select(F.col("node").alias(id_col))

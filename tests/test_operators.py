@@ -175,13 +175,8 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
     assert ests and min(ests) > 0.5
 
 
-def test_connected_components_vs_union_find(spark):
-    from llmap_spark.operators.dedup import connected_components
-
-    edges = [(1, 2), (2, 3), (10, 11), (12, 11), (20, 21), (3, 4), (40, 41)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.node: r.component for r in connected_components(pairs).collect()}
-    # python union-find oracle
+def _union_find_oracle(edges) -> dict:
+    """Python union-find: node -> minimum id of its component."""
     parent = {}
 
     def find(x):
@@ -195,7 +190,16 @@ def test_connected_components_vs_union_find(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
+    return {n: find(n) for n in parent}
+
+
+def test_connected_components_vs_union_find(spark):
+    from llmap_spark.operators.dedup import connected_components
+
+    edges = [(1, 2), (2, 3), (10, 11), (12, 11), (20, 21), (3, 4), (40, 41)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.node: r.component for r in connected_components(pairs).collect()}
+    want = _union_find_oracle(edges)
     assert got == want
     # both execution strategies produce the identical labeling: the
     # default adaptive driver fast path (taken here: 14 directed edges)
@@ -203,6 +207,77 @@ def test_connected_components_vs_union_find(spark):
     dist = {r.node: r.component for r in
             connected_components(pairs, driver_threshold=0).collect()}
     assert dist == want
+
+
+# name -> (pairs, driver_threshold, takes the driver path). The driver
+# path is taken iff 2 x raw pairs <= driver_threshold: 4 pairs at 8.
+CC_CASES = {
+    "at_limit": ([(1, 2), (3, 4), (5, 6), (7, 8)], 8, True),
+    "one_over_limit": ([(1, 2), (3, 4), (5, 6), (7, 8), (9, 10)], 8, False),
+    "dup_and_reversed": ([(2, 1), (1, 2), (1, 2), (3, 2)], 8, True),
+    "dup_and_reversed_over_limit":
+        ([(2, 1), (1, 2), (1, 2), (3, 2), (5, 4)], 8, False),
+    "threshold_zero": ([(1, 2), (2, 3)], 0, False),
+    "odd_threshold": ([(1, 2), (3, 4), (5, 6), (7, 8)], 9, True),
+}
+
+
+@pytest.mark.parametrize("case", list(CC_CASES))
+def test_cc_single_bounded_collect(spark, case):
+    """One bounded collect decides the path and feeds the union-find: the
+    labels equal the oracle on both sides of the threshold, and the driver
+    path runs no count job. A limit one row short would label a truncated
+    pair set as if it were whole (one_over_limit)."""
+    from llmap_spark.operators.dedup import connected_components
+
+    edges, threshold, driver = CC_CASES[case]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    sc = spark.sparkContext
+    group = f"cc-collect-{case}"
+    sc.setJobGroup(group, group)
+    try:
+        comp = connected_components(pairs, driver_threshold=threshold)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    # the driver path's labels carry the broadcast hint, the distributed
+    # path's do not
+    hinted = "broadcast" in comp._jdf.queryExecution().analyzed().toString()
+    assert hinted == driver
+    assert {r.node: r.component for r in comp.collect()} == \
+        _union_find_oracle(edges)
+    if driver:
+        # the pair checkpoint, then the bounded collect: no count job
+        # (whose AQE stages are named after CompletableFuture)
+        tracker = sc.statusTracker()
+        jobs = [{tracker.getStageInfo(s).name.split(" at ")[0]
+                 for s in tracker.getJobInfo(j).stageIds}
+                for j in sorted(tracker.getJobIdsForGroup(group))]
+        assert jobs == [{"localCheckpoint"}, {"toPandas"}], jobs
+
+
+@pytest.mark.parametrize("id_type,simple", [
+    ("long", "bigint"), ("int", "int"), ("string", "string")])
+def test_cc_driver_labels_keep_id_type(spark, id_type, simple):
+    """The Arrow-built driver-path labels come back in the input id type
+    with the oracle's labels (strings order as strings)."""
+    from llmap_spark.operators.dedup import connected_components
+
+    edges = [(1, 2), (2, 3), (10, 11), (12, 11), (40, 9)]
+    if id_type == "string":
+        edges = [(str(a), str(b)) for a, b in edges]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    # an Arrow failure must surface, not fall back to a Python-RDD frame
+    fallback = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    spark.conf.set(fallback, "false")
+    try:
+        comp = connected_components(pairs)
+    finally:
+        spark.conf.unset(fallback)
+    assert [f.dataType.simpleString() for f in comp.schema] == [simple] * 2
+    assert [f.name for f in comp.schema] == ["node", "component"]
+    assert {r.node: r.component for r in comp.collect()} == \
+        _union_find_oracle(edges)
 
 
 def test_exact_dedup_null_text_never_dup(spark):

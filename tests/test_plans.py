@@ -4,8 +4,10 @@ ARCHITECTURE.md must stay true as the code evolves."""
 from __future__ import annotations
 
 import dataclasses
+import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from llmap_spark.plans.pipeline import ExtractConfig, extract
 
@@ -274,3 +276,111 @@ def test_lsh_curation_skew_stress(spark):
     assert kept == 1
     # and no row was lost
     assert para.count() == n
+
+
+def _planted_docs(spark, n: int = 160):
+    """sf0.001 ids carrying the case-variant near-dup families of the
+    driver's planted queries: members of each 4-block share one MinHash
+    signature, and every text passes the quality gate."""
+    import __spark_entry__ as e
+
+    return (e._planted_neardup_docs(spark, "/root/testdata/sf0.001")
+            .filter(f"doc_id < {n}"))
+
+
+def test_quality_gate_squeezes_once(spark, monkeypatch):
+    """The chain's quality gate binds the whitespace squeeze once per
+    row (textstats.quality). Filtering on quality_features' columns
+    instead let the optimizer push the filter below the feature
+    projections and inline every alias into it: the gate's plan carried
+    dozens of regexp_replace calls. The gate is the first frame the
+    chain persists; quality_features shares the formula, so its own
+    q_keep filter keeps the single squeeze too."""
+    import llmap_spark.cache as cache
+    from llmap_spark.operators.textstats import quality_features
+    from llmap_spark.plans.training import kept_documents
+
+    persisted = []
+
+    def capture(df):
+        persisted.append(df)
+        return df
+
+    monkeypatch.setattr(cache, "register_persisted", capture)
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    kept_documents(docs)
+    gate = persisted[0]
+    assert gate.columns == ["doc_id", "text"]
+    assert _plan(gate).count("regexp_replace(") <= 2
+    for df in persisted:
+        df.unpersist()
+    gated = quality_features(docs).filter("q_keep").select("doc_id", "text")
+    assert _plan(gated).count("regexp_replace(") <= 2
+
+
+def test_chain_materializes_candidate_pairs_once(spark, monkeypatch):
+    """connected_components' checkpoint of the verified pairs is the
+    chain's only materialization: LSH hands its plan over lazily, and the
+    driver path needs no second checkpoint."""
+    from llmap_spark.cache import release_persisted
+    from llmap_spark.plans.training import kept_documents
+
+    # the session's concrete DataFrame class, which defines the method
+    DataFrame = type(spark.range(1))
+    calls = []
+    real = DataFrame.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(self.columns)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counted)
+    kept = {r.doc_id for r in kept_documents(_planted_docs(spark)).collect()}
+    release_persisted()
+    assert calls == [["a", "b"]]
+    # every 4-block collapses to its minimum id
+    assert kept == set(range(0, 160, 4))
+
+
+def test_lsh_band_key_is_the_signature_slice(spark):
+    """Buckets group on the band's signature slice itself: no md5 or
+    to_json in the band stage, and the candidate pairs equal an inline
+    md5-keyed banding of the same signatures."""
+    import hashlib
+    import itertools
+
+    from llmap_spark.operators import dedup
+
+    # collected first: the planted texts are themselves built with md5
+    docs = spark.createDataFrame(
+        _planted_docs(spark, 40)
+        .unionByName(spark.read.parquet(
+            "/root/testdata/sf0.001/documents.parquet")
+            .filter("doc_id < 60").select(
+                (F.col("doc_id") + 1000).alias("doc_id"), "text"))
+        .toPandas())
+    cand = dedup.minhash_lsh_candidates(docs)
+    plan = _plan(cand)
+    assert "md5(" not in plan and "to_json" not in plan
+    got = {(r.id_a, r.id_b): r.est_jaccard for r in cand.collect()}
+
+    sigs = {r.doc_id: r.sig for r in docs.select(
+        "doc_id", dedup.minhash_signature_udf()(F.col("text")).alias("sig")
+    ).collect() if r.sig is not None}
+    rows = dedup.NUM_HASHES // dedup.BANDS
+    buckets: dict = {}
+    for i, sig in sigs.items():
+        for band in range(dedup.BANDS):
+            key = hashlib.md5(json.dumps(
+                sig[band * rows:(band + 1) * rows]).encode()).hexdigest()
+            buckets.setdefault((band, key), []).append(i)
+    want = {}
+    for ids in buckets.values():
+        if len(ids) <= dedup.MAX_BUCKET:
+            for a, b in itertools.combinations(sorted(ids), 2):
+                want[(a, b)] = sum(
+                    x == y for x, y in zip(sigs[a], sigs[b])) / dedup.NUM_HASHES
+    assert got == want
+    # the planted families are in it, each pair at full agreement
+    assert all(got[(4 * f + i, 4 * f + j)] == 1.0
+               for f in range(10) for i, j in itertools.combinations(range(4), 2))
