@@ -5,13 +5,14 @@
 Extracts the committed files of ``<rev>`` (``git archive``) under
 ``.perfbench/ab-<sha>/`` and runs ``perfbench/run.py`` there and in this
 checkout, one launch per side and pair, alternating which side runs first.
-Pair ``i`` runs seed ``--seed + i`` on both sides. Prints each pair's
-change/base ratio of every end-to-end metric of ``BENCHMARK.json``, then per
-metric the two medians, the median ratio, the change's wins (ties count for
-neither side) and the base's interquartile range, and a verdict for
-``--metric`` under the claim rule: the change wins at least nine tenths of
-the pairs and its median is better than the base's by more than the base's
-interquartile range. A run that is not ``correct`` stops the comparison.
+Every launch runs for ``BENCHMARK.json``'s ``run_seconds``; pair ``i`` runs
+seed ``FIRST_SEED + i`` on both sides. Prints each pair's change/base ratio
+of every end-to-end metric of ``BENCHMARK.json``, then per metric the two
+medians, the median ratio, the change's wins (ties count for neither side),
+the base's interquartile range and a verdict under the claim rule: at least
+``MIN_CLAIM_PAIRS`` pairs, the change wins at least nine tenths of them, and
+its median is better than the base's by more than the base's interquartile
+range. A run that is not ``correct`` stops the comparison.
 """
 
 from __future__ import annotations
@@ -27,6 +28,8 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 RUN_TIMEOUT_S = 600
+FIRST_SEED = 951
+MIN_CLAIM_PAIRS = 10
 
 
 def base_checkout(root: Path, rev: str) -> Path:
@@ -82,7 +85,8 @@ def summarize(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> dict:
             "base_median": b_med, "change_median": c_med,
             "ratio_median": statistics.median(c / b for b, c in zip(base, change)),
             "wins": wins, "pairs": len(pairs), "base_iqr": iqr(base),
-            "claim": (wins >= 0.9 * len(pairs)
+            "claim": (len(pairs) >= MIN_CLAIM_PAIRS
+                      and wins >= 0.9 * len(pairs)
                       and sign * (b_med - c_med) > iqr(base)),
         }
     return out
@@ -93,23 +97,19 @@ def main(argv=None, root: Path = ROOT) -> int:
     ap.add_argument("--base", required=True, help="git revision to compare against")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seed", type=int, default=951, help="seed of the first pair")
-    ap.add_argument("--seconds", type=float, default=14)
-    ap.add_argument("--metric", default="wall_s", help="metric the verdict is for")
     args = ap.parse_args(argv)
 
     declared = json.loads((root / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in declared["end_to_end"]}
-    if args.metric not in better:
-        ap.error(f"--metric must be one of {sorted(better)}")
+    seconds = declared["run_seconds"]
     base = base_checkout(root, args.base)
     pairs = []
     for i in range(args.pairs):
-        seed = args.seed + i
+        seed = FIRST_SEED + i
         order = [("base", base), ("change", root)]
         if i % 2:
             order.reverse()
-        got = {side: run_once(path, args.workload, seed, args.seconds)
+        got = {side: run_once(path, args.workload, seed, seconds)
                for side, path in order}
         pairs.append((got["base"], got["change"]))
         ratios = " ".join(f"{k} {got['change'][k] / got['base'][k]:.3f}"
@@ -119,10 +119,8 @@ def main(argv=None, root: Path = ROOT) -> int:
     for name, s in summarize(pairs, better).items():
         print(f"{name}: base median {s['base_median']:.4g} (IQR {s['base_iqr']:.3g}), "
               f"change median {s['change_median']:.4g}, ratio median "
-              f"{s['ratio_median']:.3f}, change wins {s['wins']}/{s['pairs']}")
-    verdict = summarize(pairs, {args.metric: better[args.metric]})[args.metric]
-    print(f"verdict {args.metric}: "
-          f"{'claim holds' if verdict['claim'] else 'no claim'}")
+              f"{s['ratio_median']:.3f}, change wins {s['wins']}/{s['pairs']}, "
+              f"{'claim holds' if s['claim'] else 'no claim'}")
     return 0
 
 

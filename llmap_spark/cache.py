@@ -40,12 +40,18 @@ def release_persisted() -> int:
     already-released frame is a Spark no-op). Returns the count released."""
     n = len(_PERSISTED)
     while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # a stopped session invalidates handles; releasing is moot
+        unpersist_quietly(_PERSISTED.pop())
     return n
+
+
+def unpersist_quietly(df: DataFrame) -> None:
+    """Unpersist, ignoring a failure: a stopped session invalidates
+    handles, releasing is then moot, and on an error path the original
+    exception is the one to surface."""
+    try:
+        df.unpersist()
+    except Exception:
+        pass
 
 
 @contextmanager
@@ -59,4 +65,4 @@ def released_on_exit():
         yield
     finally:
         while len(_PERSISTED) > n:
-            _PERSISTED.pop().unpersist()
+            unpersist_quietly(_PERSISTED.pop())

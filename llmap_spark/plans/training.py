@@ -56,7 +56,8 @@ def _kept_reps(docs: DataFrame, id_col: str = "doc_id",
     fixpoint mid-flight — the right mode on a real cluster when the
     corpus makes CC run longer than executor MTBF.
     """
-    from llmap_spark.cache import register_persisted, released_on_exit
+    from llmap_spark.cache import (register_persisted, released_on_exit,
+                                   unpersist_quietly)
     from llmap_spark.operators.dedup import (connected_components,
                                              exact_dedup,
                                              minhash_lsh_candidates)
@@ -69,33 +70,45 @@ def _kept_reps(docs: DataFrame, id_col: str = "doc_id",
     #         columns — the optimizer pushed that filter below the
     #         feature projections and inlined every alias into it, 24
     #         regexp_replace calls in its plan. exact_dedup reads its
-    #         input twice (its slim fingerprint persist and the join
-    #         side); cached, the gate runs once per document.
+    #         input twice (its winners aggregate and the join side);
+    #         cached, the gate runs once per document, and exact_dedup
+    #         reads both sides from this cache instead of persisting a
+    #         slim fingerprint copy of its own.
     #   reps  the exact-dedup representatives (id, text), read by LSH and
     #         by the final anti-join. Cached, the anti-join does not
     #         re-run exact_dedup's winners aggregate (two stages).
-    # Both are filled by connected_components' checkpoint below. After
-    # it, reps alone is read, so q, exact_dedup's slim frame and LSH's
-    # signature frame are released as the block exits, and the built
-    # chain holds one corpus-sized cache. Caches are MEMORY_AND_DISK with
-    # LRU eviction (an over-large corpus spills rather than OOMs); reps is
-    # registered with llmap_spark.cache so a long-lived session releases
-    # it via release_persisted().
-    with released_on_exit():
-        q = register_persisted(
-            docs.select(id_col, text_col)
-            .filter(quality(F.col(text_col))["q_keep"]).persist())
-        reps = exact_dedup(q, id_col=id_col, text_col=text_col) \
-            .filter(~F.col("is_dup")) \
-            .select(id_col, text_col).persist()
-        # LSH stays lazy: connected_components checkpoints the verified
-        # pairs once — the chain's only materialization of them — and
-        # every later reader (its rounds, the keep-list below) reads that
-        cand = minhash_lsh_candidates(reps, id_col=id_col,
-                                      text_col=text_col)
-        verified = cand.filter(F.col("est_jaccard") >= verify_jaccard)
-        comp = connected_components(verified,
-                                    checkpoint_dir=cc_checkpoint_dir)
+    # Both are filled by connected_components' checkpoint below, which
+    # also fills LSH's signature frame: three corpus-sized caches while
+    # it runs (q, reps, signatures). After it, reps alone is read, so q
+    # and the signature frame are released as the block exits, and the
+    # built chain holds one corpus-sized cache. Caches are
+    # MEMORY_AND_DISK with LRU eviction (an over-large corpus spills
+    # rather than OOMs); reps is registered with llmap_spark.cache so a
+    # long-lived session releases it via release_persisted(), and is
+    # released at once if the block raises (connected_components does
+    # when it does not converge).
+    reps = None
+    try:
+        with released_on_exit():
+            q = register_persisted(
+                docs.select(id_col, text_col)
+                .filter(quality(F.col(text_col))["q_keep"]).persist())
+            reps = exact_dedup(q, id_col=id_col, text_col=text_col) \
+                .filter(~F.col("is_dup")) \
+                .select(id_col, text_col).persist()
+            # LSH stays lazy: connected_components checkpoints the
+            # verified pairs once — the chain's only materialization of
+            # them — and every later reader (its rounds, the keep-list
+            # below) reads that
+            cand = minhash_lsh_candidates(reps, id_col=id_col,
+                                          text_col=text_col)
+            verified = cand.filter(F.col("est_jaccard") >= verify_jaccard)
+            comp = connected_components(verified,
+                                        checkpoint_dir=cc_checkpoint_dir)
+    except BaseException:
+        if reps is not None:
+            unpersist_quietly(reps)
+        raise
     register_persisted(reps)
     near_dup_losers = (
         comp.filter(F.col("node") != F.col("component"))

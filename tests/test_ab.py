@@ -1,6 +1,6 @@
 """bench/ab.py driven against a fake perfbench/run.py in a throwaway git
-repository: alternation, per-pair ratios, medians, wins, the base's IQR
-and the claim verdict."""
+repository: alternation, seeds and run length, per-pair ratios, medians,
+wins, the base's IQR and the claim verdicts."""
 
 from __future__ import annotations
 
@@ -25,7 +25,8 @@ here = pathlib.Path.cwd()
 speed = float((here / "speed.txt").read_text())
 seed = int(args.seed)
 with open(LOG, "a") as f:
-    f.write(f"{(here / 'side.txt').read_text().strip()} {seed}\\n")
+    side = (here / "side.txt").read_text().strip()
+    f.write(f"{side} {seed} {args.seconds}\\n")
 wall = speed * (1 + seed % 3 / 100)
 m = {"setup_s": 10.0, "wall_s": wall, "rows_per_s": 1000 / max(wall, 1e-9),
      "cpu_s": 3 * wall, "peak_rss_mb": 100.0}
@@ -69,38 +70,49 @@ def _run(repo, capsys, *argv):
     return capsys.readouterr().out
 
 
-def test_ab_reports_pairs_and_claim(fake_repo, capsys):
+def test_ab_reports_pairs(fake_repo, capsys):
     repo, log = fake_repo
     (repo / "speed.txt").write_text("8\n")
-    out = _run(repo, capsys, "--pairs", "3", "--seed", "5")
-    # alternating order, seed + i on both sides of pair i
+    out = _run(repo, capsys, "--pairs", "3")
+    # alternating order, seed 951 + i on both sides of pair i, every
+    # launch as long as BENCHMARK.json's run_seconds
     assert log.read_text().split("\n")[:-1] == [
-        "base 5", "change 5", "change 6", "base 6", "base 7", "change 7"]
+        "base 951 14", "change 951 14", "change 952 14", "base 952 14",
+        "base 953 14", "change 953 14"]
     assert out.count("pair ") == 3
-    assert "pair 2 seed 6 (change first): setup_s 1.000 wall_s 0.800" in out
-    # wall_s base runs 10.2, 10.0, 10.1: median 10.1, IQR 0.2 by the
-    # exclusive-quartile method
+    assert "pair 2 seed 952 (change first): setup_s 1.000 wall_s 0.800" in out
+    # wall_s base runs 10.0, 10.1, 10.2: median 10.1, IQR 0.2 by the
+    # exclusive-quartile method; three pairs are too few for a claim
     assert ("wall_s: base median 10.1 (IQR 0.2), change median 8.08, "
-            "ratio median 0.800, change wins 3/3") in out
-    assert "rows_per_s: base median 99.01" in out and "change wins 3/3" in out
+            "ratio median 0.800, change wins 3/3, no claim") in out
+    assert "rows_per_s: base median 99.01" in out
     assert "setup_s: base median 10 (IQR 0), change median 10, ratio median " \
-           "1.000, change wins 0/3" in out
-    assert out.rstrip().endswith("verdict wall_s: claim holds")
+           "1.000, change wins 0/3, no claim" in out
     # the base's committed files were extracted once, under .perfbench/
     (base,) = (repo / ".perfbench").glob("ab-*")
     assert (base / "side.txt").read_text() == "base\n"
 
 
+def test_ab_claim_needs_ten_pairs(fake_repo, capsys):
+    repo, _ = fake_repo
+    (repo / "speed.txt").write_text("8\n")
+    out = _run(repo, capsys, "--pairs", "10")
+    assert out.count("pair ") == 10
+    assert ("wall_s: base median 10.1 (IQR 0.2), change median 8.08, "
+            "ratio median 0.800, change wins 10/10, claim holds") in out
+    assert "change wins 10/10, claim holds" in \
+        next(ln for ln in out.splitlines() if ln.startswith("rows_per_s:"))
+    assert "change wins 0/10, no claim" in \
+        next(ln for ln in out.splitlines() if ln.startswith("setup_s:"))
+
+
 def test_ab_no_claim_within_noise(fake_repo, capsys):
     repo, _ = fake_repo
     (repo / "speed.txt").write_text("9.99\n")
-    out = _run(repo, capsys, "--pairs", "3", "--seed", "5")
+    out = _run(repo, capsys, "--pairs", "10")
     # wins every pair, but by less than the base's IQR
-    assert "wall_s: base median 10.1 (IQR 0.2), change median 10.09" in out
-    assert "change wins 3/3" in out
-    assert out.rstrip().endswith("verdict wall_s: no claim")
-    out = _run(repo, capsys, "--pairs", "3", "--seed", "5", "--metric", "setup_s")
-    assert out.rstrip().endswith("verdict setup_s: no claim")
+    assert ("wall_s: base median 10.1 (IQR 0.2), change median 10.09, "
+            "ratio median 0.999, change wins 10/10, no claim") in out
 
 
 def test_ab_stops_on_an_incorrect_run(fake_repo, capsys):
@@ -119,3 +131,7 @@ def test_ab_summary_directions():
     assert s["t"]["ratio_median"] == pytest.approx(0.95)
     assert not s["t"]["claim"]
     assert json.dumps(s)  # plain data
+    # a clear win on every pair needs MIN_CLAIM_PAIRS pairs to claim
+    win = ({"t": 10.0}, {"t": 5.0})
+    assert not ab.summarize([win] * 9, {"t": "lower"})["t"]["claim"]
+    assert ab.summarize([win] * 10, {"t": "lower"})["t"]["claim"]

@@ -227,7 +227,9 @@ def test_cc_single_bounded_collect(spark, case):
     """One bounded collect decides the path and feeds the union-find: the
     labels equal the oracle on both sides of the threshold, and the driver
     path runs no count job. A limit one row short would label a truncated
-    pair set as if it were whole (one_over_limit)."""
+    pair set as if it were whole (one_over_limit). The collect is one
+    task in one stage on both paths: a bare limit would shuffle up to the
+    limit from every partition into one reducer."""
     from llmap_spark.operators.dedup import connected_components
 
     edges, threshold, driver = CC_CASES[case]
@@ -246,14 +248,18 @@ def test_cc_single_bounded_collect(spark, case):
     assert hinted == driver
     assert {r.node: r.component for r in comp.collect()} == \
         _union_find_oracle(edges)
+    tracker = sc.statusTracker()
+    jobs = [[tracker.getStageInfo(s)
+             for s in sorted(tracker.getJobInfo(j).stageIds)]
+            for j in sorted(tracker.getJobIdsForGroup(group))]
+    names = [[s.name.split(" at ")[0] for s in job] for job in jobs]
+    probes = [job for job, n in zip(jobs, names) if "toPandas" in n]
+    if threshold > 0:
+        assert [[s.numTasks for s in job] for job in probes] == [[1]], names
     if driver:
         # the pair checkpoint, then the bounded collect: no count job
         # (whose AQE stages are named after CompletableFuture)
-        tracker = sc.statusTracker()
-        jobs = [{tracker.getStageInfo(s).name.split(" at ")[0]
-                 for s in tracker.getJobInfo(j).stageIds}
-                for j in sorted(tracker.getJobIdsForGroup(group))]
-        assert jobs == [{"localCheckpoint"}, {"toPandas"}], jobs
+        assert names == [["localCheckpoint"], ["toPandas"]], names
 
 
 @pytest.mark.parametrize("id_type,simple", [

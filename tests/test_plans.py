@@ -342,6 +342,75 @@ def test_chain_materializes_candidate_pairs_once(spark, monkeypatch):
     assert kept == set(range(0, 160, 4))
 
 
+@pytest.mark.parametrize("cc_raises", [False, True])
+def test_chain_cache_lifetimes(spark, monkeypatch, cc_raises):
+    """While connected_components checkpoints the pairs the chain holds
+    three corpus-sized caches (quality survivors, representatives,
+    signatures): exact_dedup reads the cached survivors on both sides
+    and persists no slim copy. Once the chain is built the
+    representatives alone stay cached and registered; if the components
+    step raises, nothing the chain persisted stays cached or registered."""
+    import llmap_spark.cache as cache
+    from llmap_spark.operators import dedup
+    from llmap_spark.plans.training import kept_documents
+
+    DataFrame = type(spark.range(1))
+    persisted = []
+    real_persist = DataFrame.persist
+
+    def recorded(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def cached():
+        return [df for df in persisted
+                if df.storageLevel.useMemory or df.storageLevel.useDisk]
+
+    during = []
+    real_cc = dedup.connected_components
+
+    def cc(*args, **kwargs):
+        during.append(len(cached()))
+        if cc_raises:
+            raise RuntimeError("did not converge")
+        return real_cc(*args, **kwargs)
+
+    cache.release_persisted()
+    monkeypatch.setattr(DataFrame, "persist", recorded)
+    monkeypatch.setattr(dedup, "connected_components", cc)
+    if cc_raises:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            kept_documents(_planted_docs(spark))
+        assert cached() == [] and cache._PERSISTED == []
+        return
+    kept_documents(_planted_docs(spark))
+    assert during == [3]
+    (reps,) = cached()
+    assert reps.columns == ["doc_id", "text"]
+    assert cache._PERSISTED == [reps]
+    cache.release_persisted()
+    assert cached() == []
+
+
+def test_released_on_exit_keeps_the_original_error():
+    """A frame whose unpersist fails does not mask the exception that
+    ended the block, and the frames registered before it are kept."""
+    import llmap_spark.cache as cache
+
+    class Stale:
+        def unpersist(self):
+            raise RuntimeError("stopped session")
+
+    cache.release_persisted()
+    outer = cache.register_persisted(Stale())
+    with pytest.raises(ValueError, match="from the block"):
+        with cache.released_on_exit():
+            cache.register_persisted(Stale())
+            raise ValueError("from the block")
+    assert cache._PERSISTED == [outer]
+    assert cache.release_persisted() == 1
+
+
 def test_lsh_band_key_is_the_signature_slice(spark):
     """Buckets group on the band's signature slice itself: no md5 or
     to_json in the band stage, and the candidate pairs equal an inline
