@@ -12,6 +12,11 @@ A snapshot exists iff its manifest file exists; data/lineage directories
 without a manifest are uncommitted garbage and are ignored by readers, which
 is what makes kill-at-any-point safe (single-writer rename atomicity).
 
+An extraction commit is the data write plus one query: the written files,
+read back with the schema the write used (no inference job), aggregate
+into the lineage rows (one per partition x salt), which come to the driver
+through Arrow and are written as the lineage parquet from there.
+
 This replaces the reference's SQLite response cache as the resume mechanism
 (reference cache.py:55-89): the transform is deterministic, so committed
 output *is* the memo — resume = anti-join input urls against committed urls
@@ -25,11 +30,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 
 from llmap_spark.kernel import KERNEL_VERSION
 from llmap_spark.plans.pipeline import ExtractConfig, extract, lineage_from
@@ -47,9 +54,21 @@ class Snapshot:
     parent_id: int | None
 
 
-def _root_dirs(out_root: str) -> tuple[Path, Path, Path]:
-    root = Path(out_root)
-    return root / "data", root / "lineage", root / MANIFEST_DIR
+def _snap_paths(out_root: str, snapshot_id: int) -> tuple[str, str, Path]:
+    """The data and lineage directories of a snapshot, and the manifests'."""
+    root, name = Path(out_root), f"snap-{snapshot_id:06d}"
+    return str(root / "data" / name), str(root / "lineage" / name), \
+        root / MANIFEST_DIR
+
+
+def _refuse_other_kernels(snaps: list[Snapshot], out_root: str) -> None:
+    """One table holds one kernel's extraction semantics per row."""
+    stale = [s.snapshot_id for s in snaps if s.kernel_version != KERNEL_VERSION]
+    if stale:
+        raise ValueError(
+            f"snapshots {stale} in {out_root} were committed with a different "
+            f"kernel_version (current {KERNEL_VERSION}); a table must not mix "
+            "extraction semantics per row: use a fresh out_root, or rebuild.")
 
 
 def committed_snapshots(out_root: str) -> list[Snapshot]:
@@ -58,7 +77,7 @@ def committed_snapshots(out_root: str) -> list[Snapshot]:
     "replaces" list — the instant a compaction manifest renames into
     place, readers and resume must count the merged snapshot instead of
     its sources (whose files may be deleted at any point after)."""
-    _, _, mdir = _root_dirs(out_root)
+    mdir = Path(out_root) / MANIFEST_DIR
     if not mdir.is_dir():
         return []
     raw = []
@@ -109,44 +128,34 @@ def run_extract_job(spark: SparkSession, pages: DataFrame, out_root: str,
     only reads one column of the output table.
     """
     snaps = committed_snapshots(out_root)
-    # refuse to silently mix kernel semantics in one output table: resume
-    # only continues a table whose committed snapshots used this kernel
-    stale = [s.snapshot_id for s in snaps if s.kernel_version != KERNEL_VERSION]
-    if stale:
-        raise ValueError(
-            f"snapshots {stale} in {out_root} were committed with a different "
-            f"kernel_version (current {KERNEL_VERSION}); resuming would mix "
-            "extraction semantics per row. Use a fresh out_root (or rebuild).")
+    _refuse_other_kernels(snaps, out_root)
 
     done = read_extracted(spark, out_root)
     todo = pages if done is None else pages.join(
         done.select("url"), on="url", how="left_anti")
     next_id = (snaps[-1].snapshot_id + 1) if snaps else 1
     parent = snaps[-1].snapshot_id if snaps else None
-
-    data_dir, lin_dir, mdir = _root_dirs(out_root)
-    data_path = str(data_dir / f"snap-{next_id:06d}")
-    lin_path = str(lin_dir / f"snap-{next_id:06d}")
+    data_path, lin_path, mdir = _snap_paths(out_root, next_id)
 
     started = time.time()
     ex = extract(todo, cfg)
     ex.write.mode("overwrite").parquet(data_path)
     finished = time.time()
 
-    # lineage is derived from the *written* files -> exactly consistent.
-    # n_rows comes from the lineage aggregate itself: a separate count()
-    # would re-scan the whole new snapshot a second time per commit.
-    written = spark.read.parquet(data_path)
-    lineage = lineage_from(
+    # lineage is derived from the *written* files -> exactly consistent
+    written = spark.read.schema(ex.schema).parquet(data_path)
+    summary = lineage_from(
         written, snapshot_id=next_id,
-        started_at=_ts(started), finished_at=_ts(finished))
-    lineage.write.mode("overwrite").parquet(lin_path)
-    lin_rows = spark.read.parquet(lin_path)
-    n_rows = (lin_rows.agg(F.sum("n_rows")).collect()[0][0] or 0)
+        started_at=_ts(started), finished_at=_ts(finished)).toArrow()
+    n_rows = sum(summary.column("n_rows").to_pylist())
     if n_rows == 0:
         return None  # nothing new; no empty snapshot
+    shutil.rmtree(lin_path, ignore_errors=True)  # an uncommitted attempt's
+    os.makedirs(lin_path)
+    pq.write_table(summary, os.path.join(lin_path, "part-00000.parquet"),
+                   compression="zstd")
 
-    manifest = {
+    _publish(mdir, {
         "snapshot_id": next_id,
         "parent_id": parent,
         "data_path": data_path,
@@ -156,11 +165,7 @@ def run_extract_job(spark: SparkSession, pages: DataFrame, out_root: str,
         "config": {"repartition": cfg.repartition, "n_salts": cfg.n_salts,
                    "hot_hosts": list(cfg.hot_hosts)},
         "committed_at": _ts(finished),
-    }
-    mdir.mkdir(parents=True, exist_ok=True)
-    tmp = mdir / f".snapshot-{next_id:06d}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=2))
-    os.rename(tmp, mdir / f"snapshot-{next_id:06d}.json")  # atomic commit
+    })
     return Snapshot(next_id, data_path, lin_path, n_rows, KERNEL_VERSION, parent)
 
 
@@ -202,30 +207,19 @@ def compact_snapshots(spark: SparkSession, out_root: str,
     small files into N); None keeps Spark's natural partitioning.
     Returns the new Snapshot, or None when fewer than two snapshots are
     live (nothing to compact)."""
-    import shutil
-
     snaps = committed_snapshots(out_root)
     if len(snaps) < 2:
         return None
+    _refuse_other_kernels(snaps, out_root)
+    next_id = snaps[-1].snapshot_id + 1
+    data_path, lin_path, mdir = _snap_paths(out_root, next_id)
     # raw manifest scan: the transitive replaced set (and the orphan
     # manifests' paths for cleanup) are not in the live Snapshot view
-    _, _, mdir0 = _root_dirs(out_root)
     raw_manifests = [json.loads(f.read_text())
-                     for f in mdir0.glob("snapshot-*.json")]
+                     for f in mdir.glob("snapshot-*.json")]
     prior_replaced: set[int] = set()
     for m in raw_manifests:
         prior_replaced.update(m.get("replaces", []))
-    stale = [s.snapshot_id for s in snaps if s.kernel_version != KERNEL_VERSION]
-    if stale:
-        raise ValueError(
-            f"snapshots {stale} in {out_root} were committed with a "
-            f"different kernel_version (current {KERNEL_VERSION}); refusing "
-            "to merge mixed extraction semantics into one snapshot")
-
-    next_id = snaps[-1].snapshot_id + 1
-    data_dir, lin_dir, mdir = _root_dirs(out_root)
-    data_path = str(data_dir / f"snap-{next_id:06d}")
-    lin_path = str(lin_dir / f"snap-{next_id:06d}")
 
     merged = spark.read.parquet(*[s.data_path for s in snaps])
     if repartition:
@@ -235,7 +229,7 @@ def compact_snapshots(spark: SparkSession, out_root: str,
     lineage.write.mode("overwrite").parquet(lin_path)
     n_rows = sum(s.n_rows for s in snaps)
 
-    manifest = {
+    _publish(mdir, {
         "snapshot_id": next_id,
         "parent_id": snaps[-1].snapshot_id,
         "data_path": data_path,
@@ -246,11 +240,7 @@ def compact_snapshots(spark: SparkSession, out_root: str,
         "replaces": sorted({s.snapshot_id for s in snaps} | prior_replaced),
         "compaction": True,
         "committed_at": _ts(time.time()),
-    }
-    mdir.mkdir(parents=True, exist_ok=True)
-    tmp = mdir / f".snapshot-{next_id:06d}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=2))
-    os.rename(tmp, mdir / f"snapshot-{next_id:06d}.json")  # the switch
+    })  # the switch
     if clean:
         # delete every RETIRED manifest/dir on disk, not just this pass's
         # sources: crash-orphaned manifests from an earlier interrupted
@@ -269,6 +259,15 @@ def compact_snapshots(spark: SparkSession, out_root: str,
                 pass  # hidden garbage; a later compaction can clean it
     return Snapshot(next_id, data_path, lin_path, n_rows,
                     KERNEL_VERSION, snaps[-1].snapshot_id)
+
+
+def _publish(mdir: Path, manifest: dict) -> None:
+    """Commit a snapshot: its manifest appears whole by an atomic rename."""
+    name = f"snapshot-{manifest['snapshot_id']:06d}.json"
+    mdir.mkdir(parents=True, exist_ok=True)
+    tmp = mdir / f".{name}.tmp"
+    tmp.write_text(json.dumps(manifest, indent=2))
+    os.rename(tmp, mdir / name)
 
 
 def _ts(unix_seconds: float) -> str:

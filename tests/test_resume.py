@@ -171,3 +171,54 @@ def test_second_compaction_does_not_resurrect_orphans(spark, pages_smoke,
     mdir = pathlib.Path(out_dir) / snap.MANIFEST_DIR
     assert sorted(f.name for f in mdir.glob("snapshot-*.json")) == [
         "snapshot-000005.json"]
+
+
+def test_fresh_commit_runs_at_most_four_jobs(spark, pages_smoke, out_dir):
+    """After the data write the commit runs one summary query (a shuffle
+    map stage and a collect, two jobs under AQE): no schema inference
+    read, no re-read of the data or of the lineage it wrote."""
+    sc = spark.sparkContext
+    pages = spark.read.parquet(pages_smoke)  # no limit: its shuffle is a job
+    sc.setJobGroup("fresh-commit", "run_extract_job")
+    try:
+        s1 = snap.run_extract_job(spark, pages, out_dir, ExtractConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s1 is not None and s1.n_rows == pages.count()
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-commit")) <= 4
+
+
+# FIXTURES.md §4, in the order lineage_from builds the columns
+LINEAGE_SCHEMA = {
+    "partition_id": "int", "salt_bucket": "int", "n_rows": "bigint",
+    "n_ok": "bigint", "n_err": "bigint", "n_empty": "bigint",
+    "bytes_in": "bigint", "bytes_out": "bigint", "task_attempt": "int",
+    "started_at": "timestamp", "finished_at": "timestamp",
+    "snapshot_id": "bigint", "kernel_version": "string"}
+
+
+def test_committed_lineage_contract(spark, pages_smoke, out_dir):
+    """The lineage written from the driver-side summary reads back with
+    the FIXTURES.md §4 schema and the rows lineage_from derives from the
+    committed data; a no-op resume leaves no lineage directory behind."""
+    import pathlib
+
+    from llmap_spark.plans.pipeline import lineage_from
+
+    pages = spark.read.parquet(pages_smoke).orderBy("url").limit(80)
+    s1 = snap.run_extract_job(spark, pages, out_dir, ExtractConfig())
+    lin = snap.read_lineage(spark, out_dir)
+    assert [(f.name, f.dataType.simpleString()) for f in lin.schema] == \
+        list(LINEAGE_SCHEMA.items())
+    derived = lineage_from(snap.read_extracted(spark, out_dir), snapshot_id=1,
+                           started_at="2025-01-01 00:00:00",
+                           finished_at="2025-01-01 00:00:00")
+    wall = ("started_at", "finished_at")
+    assert sorted(lin.drop(*wall).collect()) == \
+        sorted(derived.drop(*wall).collect())
+    assert lin.agg(F.sum("n_rows")).first()[0] == s1.n_rows == 80
+
+    assert snap.run_extract_job(spark, pages, out_dir, ExtractConfig()) is None
+    lineage_dirs = sorted(p.name for p in
+                          (pathlib.Path(out_dir) / "lineage").iterdir())
+    assert lineage_dirs == ["snap-000001"]

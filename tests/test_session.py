@@ -43,34 +43,57 @@ def test_environment_overrides_the_box(monkeypatch):
     assert session.local_defaults() == (32, "5g")
 
 
-MIB = 1 << 20
-# case -> (input bytes, cores, expected maxPartitionBytes): the per-split
-# target is total // (3 * cores), clamped to [4 MiB, 128 MiB]
-SCAN_CONF = {
-    "floor": (6 * MIB, 1, 4 * MIB),
-    "middle": (60 * MIB, 2, 10 * MIB),
-    "cap": (1536 * MIB, 1, 128 * MIB),
+def test_arrow_conversion_errors_raise(spark):
+    """A pandas frame that Arrow cannot convert to the declared schema
+    raises instead of silently taking the row-by-row Python path."""
+    import pandas as pd
+    from pyspark.errors import PySparkTypeError
+
+    ids = pd.DataFrame({"id": pd.Series([1, 2], dtype="int64")})
+    with pytest.raises(PySparkTypeError, match="int64"):
+        spark.createDataFrame(ids, "id string")
+
+
+# case -> (files, rows per file, hive partition dirs, cores, scan partitions
+# Spark plans): ~100 KB files pack into one split per core while there are
+# enough of them, one per file below that; a 6 MB file splits by bytes
+SCAN_SPLITS = {
+    "24_files_4_cores": (24, 100, (), 4, 4),
+    "24_files_8_cores": (24, 100, (), 8, 8),
+    "8_files_4_cores": (8, 100, (), 4, 4),
+    "3_files_4_cores": (3, 100, (), 4, 3),
+    "1_file_4_cores": (1, 100, (), 4, 1),
+    "partitioned_8_files_4_cores": (8, 100, ("lang=en", "lang=de"), 4, 4),
+    "one_6mb_file_4_cores": (1, 6000, (), 4, 4),
 }
 
 
-def _sparse(path, size: int) -> None:
-    with open(path, "wb") as f:
-        f.truncate(size)  # a hole: st_size without the disk blocks
+@pytest.mark.parametrize("case", SCAN_SPLITS)
+def test_scan_conf_for_plans_one_wave(spark, tmp_path, case):
+    import random
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-@pytest.mark.parametrize("case", SCAN_CONF)
-@pytest.mark.parametrize("layout", ["file", "directory"])
-def test_scan_conf_for_clamps_split_size(tmp_path, layout, case):
-    total, cores, want = SCAN_CONF[case]
-    if layout == "file":
-        path = tmp_path / "pages.parquet"
-        _sparse(path, total)
-    else:
-        # a partitioned table: every file under the root counts, at any depth
-        path = tmp_path / "pages"
-        (path / "lang=en").mkdir(parents=True)
-        _sparse(path / "part-0.parquet", total // 3)
-        _sparse(path / "lang=en" / "part-1.parquet", total - total // 3)
-    conf = session.scan_conf_for(str(path), cores)
-    assert conf == {"spark.sql.files.maxPartitionBytes": str(want),
-                    "spark.sql.files.openCostInBytes": str(MIB)}
+    n_files, rows, dirs, cores, want = SCAN_SPLITS[case]
+    rng = random.Random(0)
+    for i in range(n_files):
+        d = tmp_path / (dirs[i % len(dirs)] if dirs else "")
+        d.mkdir(exist_ok=True)
+        text = [rng.randbytes(500).hex() for _ in range(rows)]  # 1 KB a row
+        pq.write_table(pa.table({"id": range(rows), "text": text}),
+                       d / f"part-{i:05d}.parquet", compression="none",
+                       row_group_size=500)
+    conf = session.scan_conf_for(str(tmp_path), cores)
+    before = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        scan = spark.read.schema("id long, text string").parquet(str(tmp_path))
+        assert scan.rdd.getNumPartitions() == want
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
