@@ -423,137 +423,6 @@ def _q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", token_count_bpe(F.col("text")).alias("n_bpe_tokens"))
 
 
-def _planted_bpe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arithmetic corpus for the REAL BPE's hash oracle: doc i is
-    n_words = 1 + i%7 words, word j = 'ab' repeated k_j = 1 + (i+3j)%31
-    times. Under the power-merges table the classic greedy merge loop
-    pairs left-to-right per level (binary carries), so word j encodes to
-    exactly bit_count(k_j) tokens — validated for every k in 1..31
-    against encode_len before the SQL was written (pinned in
-    tests/test_bpe.py)."""
-    text = F.expr(
-        "array_join(transform(sequence(1, 1 + cast(doc_id % 7 as int)), "
-        "j -> repeat('ab', cast(1 + (doc_id + 3*j) % 31 as int))), ' ')")
-    return _docs(spark, sf_dir).select("doc_id", text.alias("text"))
-
-
-def _q_token_count_bpe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL merges-table BPE counting (operators/bpe.py: classic greedy
-    lowest-rank merges, broadcast vocab, memoized Arrow batches) — the
-    deterministic successor to the token_count_bpe regex stand-in for the
-    reference's HF-tokenizer cost model (reference parse.py:17-18).
-    Hash-verified via the planted power-merges construction; arbitrary-
-    text behavior is pinned against a spec implementation in pytest."""
-    from llmap_spark.operators.bpe import bpe_token_count, power_merges
-
-    return bpe_token_count(
-        _planted_bpe_docs(spark, sf_dir), power_merges(5)).select(
-        "doc_id", "n_bpe2_tokens")
-
-
-def _q_collate_binpack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collate driven by the REAL BPE cost model: prefix-sum packing of
-    the planted-BPE docs under a 64-token budget, sizes computed by the
-    actual encoder (not the regex stand-in) — token counting and request
-    packing composed exactly as the reference composes them
-    (parse.py:17-18 feeding llmap.py:23-64)."""
-    from llmap_spark.operators.binpack import collate_approx
-    from llmap_spark.operators.bpe import bpe_token_count, power_merges
-
-    sized = bpe_token_count(_planted_bpe_docs(spark, sf_dir),
-                            power_merges(5))
-    return collate_approx(sized, "doc_id", "n_bpe2_tokens",
-                          budget=64).select(
-        "doc_id", "n_bpe2_tokens", "group_id")
-
-
-def _q_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sitemap URL-discovery source (sources/sitemap.py),
-    hash-verified: each doc renders a sitemaps.org urlset with
-    1 + doc_id%3 planted <loc>/<lastmod> entries (pure arithmetic, built
-    JVM-side as binary), the tolerant scan parses them back, and the
-    oracle regenerates the entries with generate_series. Index/gzip/
-    entity/cap behavior is pinned in tests/test_sitemap.py."""
-    from llmap_spark.sources.sitemap import read_sitemaps
-
-    body = F.expr(
-        "cast(concat('<?xml version=\"1.0\"?><urlset>', "
-        "array_join(transform(sequence(1, 1 + cast(doc_id % 3 as int)), "
-        "j -> concat('<url><loc>https://s', cast(doc_id % 20 as string), "
-        "'.example/d', cast(doc_id as string), '/u', cast(j as string), "
-        "'</loc><lastmod>2025-01-', "
-        "lpad(cast(1 + doc_id % 28 as string), 2, '0'), "
-        "'</lastmod></url>')), ''), '</urlset>') as binary)")
-    docs = _docs(spark, sf_dir).select("doc_id", body.alias("body"))
-    return read_sitemaps(docs, keep_cols=("doc_id",)).select(
-        "doc_id", "loc", "lastmod", "kind")
-
-
-def _q_frontier_iterative_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ITERATIVE frontier driver (sources/sitemap.py expand_frontier:
-    bounded multi-round index-following with visited anti-join and
-    per-round checkpoints), hash-verified on a planted 2-level sitemap
-    tree whose closure is doc_id arithmetic: doc d's root index lists
-    children c in 0..d%2; child c's urlset lists pages u in
-    1..1+(d+c)%2. So every doc yields page (c0,u1); odd docs add
-    (c0,u2) and (c1,u1) — all discovered in round 2 with their child
-    sitemap as src_loc. The fetch seam is deterministic JVM body
-    synthesis keyed on the loc."""
-    from llmap_spark.sources.sitemap import expand_frontier
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    seeds = docs.select(F.expr(
-        "concat('https://s', cast(doc_id as string), "
-        "'.example/sitemap.xml')").alias("loc"))
-
-    out = expand_frontier(seeds, _planted_tree_fetch(), max_rounds=4)
-    return out.select(
-        F.regexp_extract("src_loc", r"https://s(\d+)\.example", 1)
-        .cast("long").alias("doc_id"),
-        F.col("loc").alias("url"), "src_loc", "round")
-
-
-def _planted_tree_fetch():
-    """The deterministic fetch seam of frontier_iterative_planted: doc
-    d's root index lists children c in 0..d%2; child c's urlset lists
-    pages u in 1..1+(d+c)%2."""
-    def fetch(frontier: DataFrame) -> DataFrame:
-        d = "cast(regexp_extract(loc, 'https://s(\\\\d+)\\\\.example', 1) as bigint)"
-        c = "cast(regexp_extract(loc, 'child(\\\\d+)\\\\.xml', 1) as bigint)"
-        body = F.expr(
-            f"cast(CASE WHEN loc LIKE '%/sitemap.xml' THEN "
-            f"concat('<sitemapindex>', array_join(transform("
-            f"sequence(0, {d} % 2), c -> concat("
-            f"'<sitemap><loc>https://s', cast({d} as string), "
-            f"'.example/child', cast(c as string), '.xml</loc></sitemap>'"
-            f")), ''), '</sitemapindex>') "
-            f"ELSE concat('<urlset>', array_join(transform("
-            f"sequence(1, 1 + ({d} + {c}) % 2), u -> concat("
-            f"'<url><loc>https://s', cast({d} as string), "
-            f"'.example/page-c', cast({c} as string), '-u', "
-            f"cast(u as string), '</loc></url>')), ''), '</urlset>') "
-            f"END as binary)")
-        return frontier.withColumn("body", body)
-
-    return fetch
-
-
-def _q_lm_score_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CCNet-style char-trigram LM quality scorer (operators/lm.py),
-    hash-verified: the model table is planted ({'aba': 1500, 'bab': 2500}
-    milli-bits, OOV 9000) and doc text is 'ab'*k + 'z' (k = 2 + doc_id%9),
-    whose trigram decomposition is exactly (k-1) x 'aba' + (k-1) x 'bab'
-    + 1 OOV 'abz' — so totals and the integer average are pure arithmetic.
-    Real training (driver-side bounded sample, quantized once) is pinned
-    in tests/test_lm.py."""
-    from llmap_spark.operators.lm import lm_score
-
-    text = F.expr("concat(repeat('ab', cast(2 + doc_id % 9 as int)), 'z')")
-    docs = _docs(spark, sf_dir).select("doc_id", text.alias("text"))
-    return lm_score(docs, {"aba": 1500, "bab": 2500}, 9000).select(
-        "doc_id", "n_grams", "millibits_total", "avg_millibits")
-
-
 def _q_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc keyword extraction (textstats.top_terms): integer tf-idf
     surrogate — (tf DESC, df ASC, term ASC) is the idf ordering without
@@ -749,33 +618,13 @@ def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(cand.filter(F.col("est_jaccard") >= 0.5))
 
 
-def _q_collate_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.binpack import collate_approx
-
-    return collate_approx(_docs(spark, sf_dir), "doc_id", "n_chars",
-                          budget=5000).select("doc_id", "group_id")
-
-
-def _q_collate_binpack_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALE shape of collate: each bucket packs independently in
-    parallel (window partitioned by a key), vs the single-task global
-    window of collate_binpack which exists for small dims / oracle parity."""
-    from llmap_spark.operators.binpack import collate_approx
-
-    d = _docs(spark, sf_dir).withColumn(
-        "bucket", (F.col("doc_id") % 16).cast("long"))
-    return collate_approx(d, "doc_id", "n_chars", budget=5000,
-                          partition_col="bucket").select(
-        "doc_id", "bucket", "group_id")
-
-
 def _q_group_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference group-by-file combine (llmap.py:204-215): per-key ordered
     concatenation — determinism-by-sorting preserved. Scale note: the
     per-key collect_list payload is bounded by per-user event counts
     (same contract as the reference's per-file combine); a key whose
-    payload could exceed task memory wants the binpack/window family
-    (collate_binpack_bucketed) instead of concatenation."""
+    payload could exceed task memory needs a bounded aggregate instead
+    of concatenation."""
     return (
         _events(spark, sf_dir).groupBy("user_id")
         .agg(F.expr(
@@ -1073,7 +922,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- LAST_CHECKED: never (new in r5) — inserted here as built ---
         "lang_id2": _q_lang_id2,
-        "frontier_iterative_planted": _q_frontier_iterative_planted,
         "token_count_cjk": _q_token_count_cjk,
         # --- LAST_CHECKED: r2 (green r1+r2 or r2 only; oldest rows) ---
         "token_count": _q_token_count,
@@ -1081,8 +929,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id": _q_lang_id,
         "quality_score": _q_quality_score,
         "repetition_score": _q_repetition_score,
-        "collate_binpack": _q_collate_binpack,
-        "collate_binpack_bucketed": _q_collate_binpack_bucketed,
         "group_combine": _q_group_combine,
         "topk_per_user": _q_topk_per_user,
         "windowed_events": _q_windowed_events,
@@ -1104,14 +950,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_quality_weighted": _q_sample_quality_weighted,
         "sample_seeded_portable": _q_sample_seeded_portable,
         "pipeline_curated_nfc_planted": _q_pipeline_curated_nfc_planted,
-        "token_count_bpe2": _q_token_count_bpe2,
-        "collate_binpack_bpe": _q_collate_binpack_bpe,
         "sample_seeded": _q_sample_seeded,
         "explode_chunks": _q_explode_chunks,
         "union_passthrough": _q_union_passthrough,
         "keyword_topk": _q_keyword_topk,
-        "sitemap_discovery": _q_sitemap_discovery,
-        "lm_score_planted": _q_lm_score_planted,
         # --- LAST_CHECKED: r4, multi-round green (freshest + deepest) ---
         "extract_roundtrip": _q_extract_roundtrip,
         "extract_status_counts": _q_extract_status_counts,
@@ -1463,27 +1305,6 @@ def oracle_sql() -> dict[str, str]:
             -- kept singleton (see _q_pipeline_kept_planted)
             SELECT doc_id FROM documents WHERE doc_id % 8 IN (0, 4, 7)
         """,
-        "lm_score_planted": """
-            SELECT doc_id,
-              CAST(2 * (2 + doc_id % 9) - 1 AS int) AS n_grams,
-              CAST(4000 * (1 + doc_id % 9) + 9000 AS bigint)
-                AS millibits_total,
-              CAST((4000 * (1 + doc_id % 9) + 9000)
-                   // (2 * (2 + doc_id % 9) - 1) AS int) AS avg_millibits
-            FROM documents
-        """,
-        "sitemap_discovery": """
-            SELECT d.doc_id,
-              'https://s' || CAST(d.doc_id % 20 AS varchar) || '.example/d'
-                || CAST(d.doc_id AS varchar) || '/u' || CAST(j.j AS varchar)
-                AS loc,
-              '2025-01-' || lpad(CAST(1 + d.doc_id % 28 AS varchar), 2, '0')
-                AS lastmod,
-              'url' AS kind
-            FROM documents d,
-                 LATERAL unnest(generate_series(
-                   1, CAST(1 + d.doc_id % 3 AS int))) AS j(j)
-        """,
         "keyword_topk": """
             WITH terms AS (
               SELECT doc_id, u.term
@@ -1597,51 +1418,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, fingerprint, rep_id,
                    doc_id <> rep_id AS is_dup
             FROM w
-        """,
-        "token_count_bpe2": """
-            -- the real BPE under power merges = binary-carry pairing:
-            -- word j of doc i ('ab' x k_j, k_j = 1 + (i+3j)%31) encodes
-            -- to bit_count(k_j) tokens (derivation validated against
-            -- encode_len for all k before this SQL was written)
-            SELECT d.doc_id,
-              CAST(sum(bit_count(CAST(1 + (d.doc_id + 3*j.j) % 31
-                                      AS bigint))) AS int)
-                AS n_bpe2_tokens
-            FROM documents d,
-                 LATERAL unnest(generate_series(
-                   1, CAST(1 + d.doc_id % 7 AS int))) AS j(j)
-            GROUP BY d.doc_id
-        """,
-        "collate_binpack_bpe": """
-            WITH s AS (
-              SELECT d.doc_id,
-                CAST(sum(bit_count(CAST(1 + (d.doc_id + 3*j.j) % 31
-                                        AS bigint))) AS int)
-                  AS n_bpe2_tokens
-              FROM documents d,
-                   LATERAL unnest(generate_series(
-                     1, CAST(1 + d.doc_id % 7 AS int))) AS j(j)
-              GROUP BY d.doc_id)
-            SELECT doc_id, n_bpe2_tokens,
-              CAST(floor(coalesce(sum(n_bpe2_tokens) OVER
-                (ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                / 64) AS bigint) AS group_id
-            FROM s
-        """,
-        "collate_binpack": """
-            SELECT doc_id, CAST(floor(coalesce(sum(n_chars) OVER
-              (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              / 5000) AS bigint) AS group_id
-            FROM documents
-        """,
-        "collate_binpack_bucketed": """
-            SELECT doc_id, CAST(doc_id % 16 AS BIGINT) AS bucket,
-              CAST(floor(coalesce(sum(n_chars) OVER
-                (PARTITION BY doc_id % 16 ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                / 5000) AS bigint) AS group_id
-            FROM documents
         """,
         "group_combine": """
             SELECT user_id, string_agg(event_type, ',' ORDER BY event_id) AS journey
@@ -2137,30 +1913,6 @@ def oracle_sql() -> dict[str, str]:
         -- 'alpha beta gamma' + k CJK chars + ' delta tail' = 5 + k
         SELECT doc_id, CAST(5 + doc_id % 9 AS int) AS n_tokens_sa
         FROM documents
-    """
-    d["frontier_iterative_planted"] = """
-        -- closure arithmetic of the planted 2-level tree: every doc
-        -- yields page (c0,u1); odd docs add (c0,u2) and (c1,u1); all
-        -- page discoveries happen in round 2 from their child sitemap
-        WITH base AS (
-          SELECT doc_id, CAST(doc_id AS VARCHAR) AS ds FROM documents)
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c0-u1' AS url,
-               'https://s' || ds || '.example/child0.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base
-        UNION ALL
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c0-u2' AS url,
-               'https://s' || ds || '.example/child0.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id,
-               'https://s' || ds || '.example/page-c1-u1' AS url,
-               'https://s' || ds || '.example/child1.xml' AS src_loc,
-               CAST(2 AS int) AS round
-        FROM base WHERE doc_id % 2 = 1
     """
     d["extract_full"] = f"""
         WITH n AS (SELECT count(*) AS ndocs FROM documents)

@@ -5,8 +5,8 @@ training-data pipeline needs: deduplication, one operator per level the
 curation chain runs (exact md5 and MinHash-LSH for whole documents, with
 connected components over the LSH candidate pairs; paragraph dedup in
 scrub), text analysis (language id, quality scoring, token counting, md5
-fingerprinting), scrubbing (paragraph dedup, decontamination, PII
-redaction) and bin-packing.
+fingerprinting) and scrubbing (paragraph dedup, decontamination, PII
+redaction).
 
 Design rules: built-in `pyspark.sql.functions` (JVM-side, codegen'd)
 wherever the semantics allow; Arrow-batched pandas UDFs only for genuinely

@@ -149,7 +149,9 @@ def run_extract_job(spark: SparkSession, pages: DataFrame, out_root: str,
         started_at=_ts(started), finished_at=_ts(finished)).toArrow()
     n_rows = sum(summary.column("n_rows").to_pylist())
     if n_rows == 0:
-        return None  # nothing new; no empty snapshot
+        # nothing new; no empty snapshot, and no uncommitted data dir left
+        shutil.rmtree(data_path, ignore_errors=True)
+        return None
     shutil.rmtree(lin_path, ignore_errors=True)  # an uncommitted attempt's
     os.makedirs(lin_path)
     pq.write_table(summary, os.path.join(lin_path, "part-00000.parquet"),

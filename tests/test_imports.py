@@ -17,7 +17,7 @@ ROOT = Path(__file__).resolve().parent.parent
 # (lazy) ones included; read only, never executed
 SOURCES = sorted(
     [*ROOT.glob("llmap_spark/**/*.py"), ROOT / "__spark_entry__.py",
-     ROOT / "bench.py", ROOT / "bench_extra.py", *ROOT.glob("bench/*.py"),
+     ROOT / "bench.py", *ROOT.glob("bench/*.py"),
      *ROOT.glob("perfbench/*.py")])
 
 
@@ -114,9 +114,7 @@ REACH_ROOTS = sorted(
 # modules no root reaches that are still scheduled for deletion; a module
 # leaves this list when it is deleted or gains a caller
 PENDING_CUTS = {
-    "llmap_spark.operators.binpack", "llmap_spark.operators.bpe",
-    "llmap_spark.operators.lm", "llmap_spark.operators.sampling",
-    "llmap_spark.operators.sessions", "llmap_spark.sources.sitemap",
+    "llmap_spark.operators.sampling", "llmap_spark.operators.sessions",
     "llmap_spark.streaming.stateful", "llmap_spark.streaming.windowed",
 }
 

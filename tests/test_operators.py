@@ -319,32 +319,6 @@ def test_exact_dedup_preserves_rows_and_extra_columns(spark):
     assert got["d"].fingerprint is None and not got["d"].is_dup
 
 
-# -- binpack ------------------------------------------------------------------
-
-def test_collate_greedy_matches_reference_loop(spark, docs):
-    from llmap_spark.operators.binpack import collate_greedy, greedy_pack
-
-    got = {r.doc_id: r.group_id for r in
-           collate_greedy(docs, "doc_id", "n_chars", budget=5000).collect()}
-    rows = sorted((r.doc_id, r.n_chars) for r in docs.collect())
-    want = dict(zip([d for d, _ in rows],
-                    greedy_pack([c for _, c in rows], 5000)))
-    assert got == want
-
-
-def test_collate_approx_vs_duckdb(spark, docs):
-    from llmap_spark.operators.binpack import collate_approx
-
-    got = {r.doc_id: r.group_id for r in
-           collate_approx(docs, "doc_id", "n_chars", budget=5000).collect()}
-    want = {r[0]: r[1] for r in duckdb.sql(f"""
-        SELECT doc_id, cast(floor(coalesce(sum(n_chars) OVER
-          (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),0)
-          / 5000) AS bigint)
-        FROM '{DOCS}'""").fetchall()}
-    assert got == want
-
-
 # -- sessions -----------------------------------------------------------------
 
 def test_sessionize_vs_python(spark):
@@ -554,16 +528,6 @@ def test_weighted_sample_null_weight_is_explicit_zero(spark):
         [(1, 10000), (2, None), (3, 10000)], "doc_id long, w_bp int")
     kept = {r.doc_id for r in weighted_sample(df, "w_bp").collect()}
     assert kept == {1, 3}  # null weight -> rate 0, by rule not by NULL-logic
-
-
-def test_greedy_pack_zero_sizes_and_nan_totality():
-    from llmap_spark.operators.binpack import greedy_pack
-
-    # oversize after zero-size items still gets its own bin
-    assert greedy_pack([0, 20], 10) == [0, 1]
-    assert greedy_pack([0, 0, 5, 20, 3], 10) == [0, 0, 0, 1, 2]
-    # None/NaN count as zero instead of poisoning the accumulator
-    assert greedy_pack([5, None, 6, float("nan"), 6], 10) == [0, 0, 1, 1, 2]
 
 
 def test_token_count_script_aware(spark):

@@ -200,7 +200,8 @@ LINEAGE_SCHEMA = {
 def test_committed_lineage_contract(spark, pages_smoke, out_dir):
     """The lineage written from the driver-side summary reads back with
     the FIXTURES.md §4 schema and the rows lineage_from derives from the
-    committed data; a no-op resume leaves no lineage directory behind."""
+    committed data; a no-op resume leaves no data or lineage directory
+    behind."""
     import pathlib
 
     from llmap_spark.plans.pipeline import lineage_from
@@ -219,6 +220,6 @@ def test_committed_lineage_contract(spark, pages_smoke, out_dir):
     assert lin.agg(F.sum("n_rows")).first()[0] == s1.n_rows == 80
 
     assert snap.run_extract_job(spark, pages, out_dir, ExtractConfig()) is None
-    lineage_dirs = sorted(p.name for p in
-                          (pathlib.Path(out_dir) / "lineage").iterdir())
-    assert lineage_dirs == ["snap-000001"]
+    for kind in ("data", "lineage"):
+        dirs = sorted(p.name for p in (pathlib.Path(out_dir) / kind).iterdir())
+        assert dirs == ["snap-000001"], kind
