@@ -28,7 +28,6 @@ EDGE_RESIDUES_SQL = "(" + ", ".join(map(str, sorted(_EDGE_RESIDUES))) + ")"
 # keeps the byte-identity oracles exact — a corpus with U+00A0 etc. would
 # need this class widened.
 NORM_SQL = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
-CHUNK = 50  # words per chunk for explode_chunks
 
 # Shared quality-formula fragments (textstats.quality_features twins).
 # ONE maintained copy composed by every oracle that needs the quality
@@ -79,10 +78,6 @@ def _table_stat_key(sf_dir: str, table: str) -> str:
         st = p.stat()
         parts.append(f".:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,15 +204,6 @@ def _q_extract_tpl_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "status")
 
 
-def _q_sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """True seeded random sampling (reference --sample, llmap.py:269-270,
-    kept in spirit: Bernoulli with a fixed seed — reproducible run-to-run
-    but engine-specific, so rows-only; the modulo twin is the oracle-able
-    variant)."""
-    return _docs(spark, sf_dir).sample(fraction=0.05, seed=42) \
-        .select("doc_id", "lang")
-
-
 def _q_extract_edge_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row oracle for ALL SEVEN injected edge-page kinds. The
     derivations lean on the fixture texts being pure ASCII with no &<>
@@ -239,44 +225,6 @@ def _q_extract_edge_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_extract("url", r"/p(\d+)$", 1).cast("long").alias("page_i"),
         F.regexp_extract("url", r"/edge/([a-z0-9_]+)/", 1).alias("kind"),
         "extracted_text", "n_blocks_kept", "n_blocks_total", "status")
-
-
-def _q_sample_seeded_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded Bernoulli sampling that is ENGINE-PORTABLE (and therefore
-    hash-verified, unlike sample_seeded's engine-specific RNG): the
-    per-row coin is the first 8 hex digits of md5(seed:doc_id) — identical
-    in any engine — taken mod 10^4 against the rate. Reproducible across
-    runs, engines, AND partitionings (a property Spark's sample() lacks:
-    its RNG is seeded per partition index)."""
-    from llmap_spark.operators.sampling import bernoulli_sample
-
-    return bernoulli_sample(_docs(spark, sf_dir), rate_bp=500, seed=42) \
-        .select("doc_id", "lang")
-
-
-def _q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-rebalance sampling (sampling.stratified_sample): per-stratum
-    keep rates in one CASE + portable-coin gate, map-only. The training-data
-    move this exists for: downsample the dominant language, keep the tail."""
-    from llmap_spark.operators.sampling import stratified_sample
-
-    return stratified_sample(
-        _docs(spark, sf_dir), {"en": 8000, "de": 2500, "fr": 1000},
-        default_bp=250).select("doc_id", "lang")
-
-
-def _q_sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-proportional sampling (sampling.weighted_sample): each doc's
-    keep rate is its own integer column — here token count scaled and
-    capped — so high-quality documents survive preferentially. Coin and
-    weight are both engine-exact, hence hash-verified."""
-    from llmap_spark.operators.sampling import weighted_sample
-    from llmap_spark.operators.textstats import token_count
-
-    d = _docs(spark, sf_dir).withColumn(
-        "w_bp",
-        F.least(F.lit(9500), token_count(F.col("text")) * 25).cast("int"))
-    return weighted_sample(d, "w_bp").select("doc_id", "w_bp")
 
 
 def _q_pipeline_kept_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -618,94 +566,6 @@ def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(cand.filter(F.col("est_jaccard") >= 0.5))
 
 
-def _q_group_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference group-by-file combine (llmap.py:204-215): per-key ordered
-    concatenation — determinism-by-sorting preserved. Scale note: the
-    per-key collect_list payload is bounded by per-user event counts
-    (same contract as the reference's per-file combine); a key whose
-    payload could exceed task memory needs a bounded aggregate instead
-    of concatenation."""
-    return (
-        _events(spark, sf_dir).groupBy("user_id")
-        .agg(F.expr(
-            "concat_ws(',', transform(array_sort(collect_list("
-            "struct(event_id, event_type))), x -> x.event_type))"
-        ).alias("journey"))
-    )
-
-
-def _q_topk_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("value").desc(), F.col("event_id").asc())
-    return (
-        _events(spark, sf_dir)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("user_id", "event_id", "rnk")
-    )
-
-
-def _q_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch twin of the streaming windowed aggregation — calls the
-    SAME function the stream==batch test pins (single-implementation rule;
-    a second hand-rolled copy of the aggregation is how twins drift)."""
-    from llmap_spark.streaming.windowed import windowed_counts_batch
-
-    return windowed_counts_batch(_events(spark, sf_dir), minutes=5)
-
-
-def _q_orders_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast-join chain over the star schema: dims are broadcast, the
-    fact table never shuffles for the join."""
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name").agg(F.count("*").alias("n_orders"))
-    )
-
-
-def _q_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic sampling (reference --sample, llmap.py:269-270 — made
-    reproducible: modulo on the key instead of RNG)."""
-    return _docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0) \
-        .select("doc_id", "lang")
-
-
-def _q_explode_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference chunking (parse.py:242-252): one doc -> N bounded chunks,
-    here fixed 50-word windows via explode."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ").alias("_w"))
-    chunks = F.expr(
-        f"case when size(_w) > 0 and _w[0] <> '' then "
-        f"transform(sequence(1, cast(ceil(size(_w) / {CHUNK}.0) as int)), "
-        f"i -> concat_ws(' ', slice(_w, (i-1)*{CHUNK}+1, {CHUNK}))) "
-        "else array() end")
-    return (
-        d.select("doc_id", F.posexplode(chunks).alias("chunk_idx", "chunk_text"))
-        .select("doc_id", "chunk_idx", "chunk_text")
-    )
-
-
-def _q_union_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference parseable-vs-other partition + reunion (llmap.py:142-143,
-    173-174): disjoint filters off one scan, tagged, unioned."""
-    d = _docs(spark, sf_dir)
-    a = d.filter(F.col("lang") == "en").select(
-        "doc_id", F.lit("parseable").alias("branch"))
-    b = d.filter(F.col("lang") != "en").select(
-        "doc_id", F.lit("passthrough").alias("branch"))
-    return a.unionByName(b)
-
-
 def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WARC source, hash-verified end-to-end: documents are rendered
     into crawl-style gzip-member WARC archives (urls and payloads pure
@@ -758,71 +618,6 @@ def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url",
         F.length("html").cast("long").alias("n_bytes"),
         F.md5("html").alias("payload_md5"))
-
-
-def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.sessions import sessionize
-
-    return sessionize(_events(spark, sf_dir)).select(
-        "event_id", "user_id", "session_id")
-
-
-def _q_asof_prior_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.sessions import asof_prior_event
-
-    return asof_prior_event(_events(spark, sf_dir)).select(
-        "event_id", "user_id", "prev_purchase_id")
-
-
-EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-def _q_pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manual pivot (CASE-sum): one row per user with a count column per
-    event type — portable to the SQL oracle, unlike engine PIVOT syntax."""
-    aggs = [
-        F.sum(F.when(F.col("event_type") == t, 1).otherwise(0))
-        .cast("long").alias(f"n_{t}")
-        for t in EVENT_TYPES
-    ]
-    return _events(spark, sf_dir).groupBy("user_id").agg(*aggs)
-
-
-def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q1-style aggregate with INTEGER-exact money arithmetic:
-    cents = floor(price*100) is the same IEEE op in both engines, so
-    sums hash identically (no double-sum ordering hazard)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cents = F.floor(F.col("l_extendedprice") * 100).cast("long")
-    disc_pct = F.floor(F.col("l_discount") * 100).cast("long")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-             F.sum(cents).alias("sum_base_cents"),
-             F.sum(cents * (100 - disc_pct)).alias("sum_disc_units"),
-             F.count("*").alias("count_order"))
-    )
-
-
-def _q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window aggregation (Spark's built-in session
-    semantics, usable in batch AND streaming); oracle reconstructs the
-    same sessions with the lag/cumsum formulation.
-
-    ts is truncated to whole seconds BEFORE session_window: the oracle (and
-    the sessionize twin) compare floor(epoch) gaps, so a fractional gap in
-    (1800, 1801) s would split natively but merge in the oracle — truncating
-    first makes both sides apply the identical integer gap rule."""
-    ev = _events(spark, sf_dir).withColumn(
-        "ts", F.date_trunc("second", F.col("ts")))
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select("user_id",
-                F.unix_timestamp("w.start").cast("long").alias("sess_start"),
-                F.unix_timestamp("w.end").cast("long").alias("sess_end"),
-                "n_events")
-    )
 
 
 _SCRUB_BOILER = "shared corpus boilerplate paragraph"
@@ -929,16 +724,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id": _q_lang_id,
         "quality_score": _q_quality_score,
         "repetition_score": _q_repetition_score,
-        "group_combine": _q_group_combine,
-        "topk_per_user": _q_topk_per_user,
-        "windowed_events": _q_windowed_events,
-        "sessionize": _q_sessionize,
-        "session_windows": _q_session_windows,
-        "asof_prior_purchase": _q_asof_prior_purchase,
-        "pivot_event_counts": _q_pivot_event_counts,
-        "pricing_summary": _q_pricing_summary,
-        "orders_per_region": _q_orders_per_region,
-        "sample_deterministic": _q_sample_deterministic,
         # --- LAST_CHECKED: r3 (scrub families) ---
         "scrub_paragraph_dedup": _q_scrub_paragraph_dedup,
         "scrub_redact_pii": _q_scrub_redact_pii,
@@ -946,13 +731,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scrub_normalize": _q_scrub_normalize,
         # --- LAST_CHECKED: r4, single green row ever (checked once) ---
         "warc_roundtrip": _q_warc_roundtrip,
-        "sample_stratified": _q_sample_stratified,
-        "sample_quality_weighted": _q_sample_quality_weighted,
-        "sample_seeded_portable": _q_sample_seeded_portable,
         "pipeline_curated_nfc_planted": _q_pipeline_curated_nfc_planted,
-        "sample_seeded": _q_sample_seeded,
-        "explode_chunks": _q_explode_chunks,
-        "union_passthrough": _q_union_passthrough,
         "keyword_topk": _q_keyword_topk,
         # --- LAST_CHECKED: r4, multi-round green (freshest + deepest) ---
         "extract_roundtrip": _q_extract_roundtrip,
@@ -1419,136 +1198,6 @@ def oracle_sql() -> dict[str, str]:
                    doc_id <> rep_id AS is_dup
             FROM w
         """,
-        "group_combine": """
-            SELECT user_id, string_agg(event_type, ',' ORDER BY event_id) AS journey
-            FROM events GROUP BY user_id
-        """,
-        "topk_per_user": """
-            SELECT user_id, event_id, rnk FROM (
-              SELECT user_id, event_id,
-                     row_number() OVER (PARTITION BY user_id
-                       ORDER BY value DESC, event_id ASC) AS rnk
-              FROM events) WHERE rnk <= 3
-        """,
-        "windowed_events": """
-            SELECT CAST(floor(epoch(ts) / 300) * 300 AS bigint) AS win_start,
-                   event_type, count(*) AS n_events,
-                   CAST(sum(CAST(floor(value * 1000000) AS bigint)) AS BIGINT)
-                     AS sum_micros
-            FROM events GROUP BY 1, 2
-        """,
-        "orders_per_region": """
-            SELECT r_name, count(*) AS n_orders
-            FROM orders
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name
-        """,
-        "sample_deterministic": """
-            SELECT doc_id, lang FROM documents WHERE doc_id % 20 = 0
-        """,
-        "sample_seeded_portable": """
-            SELECT doc_id, lang FROM documents
-            WHERE ('0x' || substr(md5('42:' || CAST(doc_id AS varchar)), 1, 8))
-                  ::BIGINT % 10000 < 500
-        """,
-        "sample_stratified": """
-            SELECT doc_id, lang FROM documents
-            WHERE ('0x' || substr(md5('42:' || CAST(doc_id AS varchar)), 1, 8))
-                  ::BIGINT % 10000 <
-                  CASE WHEN lang = 'en' THEN 8000
-                       WHEN lang = 'de' THEN 2500
-                       WHEN lang = 'fr' THEN 1000 ELSE 250 END
-        """,
-        "sample_quality_weighted": f"""
-            WITH f AS (
-              SELECT doc_id,
-                CASE WHEN length({NORM_SQL}) = 0 THEN 0
-                  ELSE CAST(length({NORM_SQL})
-                    - length(replace({NORM_SQL}, ' ', '')) AS int) + 1
-                END AS nt
-              FROM documents)
-            SELECT doc_id, CAST(least(9500, nt * 25) AS int) AS w_bp
-            FROM f
-            WHERE ('0x' || substr(md5('42:' || CAST(doc_id AS varchar)), 1, 8))
-                  ::BIGINT % 10000 < least(9500, nt * 25)
-        """,
-        "explode_chunks": f"""
-            WITH d AS (SELECT doc_id, {w_norm} AS w FROM documents),
-            c AS (SELECT doc_id, w FROM d WHERE len(w) > 0 AND w[1] <> ''),
-            e AS (SELECT doc_id,
-                    unnest(generate_series(1, CAST(ceil(len(w) / {CHUNK}.0) AS int))) AS ci,
-                    unnest(list_transform(
-                      generate_series(1, CAST(ceil(len(w) / {CHUNK}.0) AS int)),
-                      i -> array_to_string(w[((i-1)*{CHUNK}+1):(i*{CHUNK})], ' '))) AS chunk_text
-                  FROM c)
-            SELECT doc_id, ci - 1 AS chunk_idx, chunk_text FROM e
-        """,
-        "union_passthrough": """
-            SELECT doc_id, 'parseable' AS branch FROM documents WHERE lang = 'en'
-            UNION ALL
-            SELECT doc_id, 'passthrough' AS branch FROM documents WHERE lang <> 'en'
-        """,
-        "sessionize": """
-            SELECT event_id, user_id,
-              CAST(sum(CASE WHEN prev_ts IS NULL
-                         OR floor(epoch(ts)) - prev_ts > 1800 THEN 1 ELSE 0 END)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS bigint) AS session_id
-            FROM (SELECT event_id, user_id, ts,
-                    lag(floor(epoch(ts))) OVER (PARTITION BY user_id
-                      ORDER BY ts, event_id) AS prev_ts
-                  FROM events)
-        """,
-        "session_windows": """
-            WITH s AS (
-              SELECT user_id, CAST(floor(epoch(ts)) AS bigint) AS e,
-                CAST(sum(CASE WHEN prev_ts IS NULL
-                           OR floor(epoch(ts)) - prev_ts > 1800 THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS bigint) AS session_id
-              FROM (SELECT user_id, event_id, ts,
-                      lag(floor(epoch(ts))) OVER (PARTITION BY user_id
-                        ORDER BY ts, event_id) AS prev_ts
-                    FROM events))
-            SELECT user_id,
-                   CAST(min(e) AS bigint) AS sess_start,
-                   CAST(max(e) + 1800 AS bigint) AS sess_end,
-                   count(*) AS n_events
-            FROM s GROUP BY user_id, session_id
-        """,
-        "asof_prior_purchase": """
-            SELECT event_id, user_id,
-              last_value(CASE WHEN event_type = 'purchase' THEN event_id END
-                         IGNORE NULLS)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                AS prev_purchase_id
-            FROM events
-        """,
-        "pivot_event_counts": """
-            SELECT user_id,
-              CAST(sum(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS bigint) AS n_click,
-              CAST(sum(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS bigint) AS n_error,
-              CAST(sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END) AS bigint) AS n_purchase,
-              CAST(sum(CASE WHEN event_type='signup' THEN 1 ELSE 0 END) AS bigint) AS n_signup,
-              CAST(sum(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS bigint) AS n_view
-            FROM events GROUP BY user_id
-        """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-              CAST(sum(CAST(l_quantity AS bigint)) AS BIGINT) AS sum_qty,
-              CAST(sum(CAST(floor(l_extendedprice * 100) AS bigint)) AS BIGINT)
-                AS sum_base_cents,
-              CAST(sum(CAST(floor(l_extendedprice * 100) AS bigint)
-                  * (100 - CAST(floor(l_discount * 100) AS bigint))) AS BIGINT)
-                AS sum_disc_units,
-              count(*) AS count_order
-            FROM lineitem GROUP BY l_returnflag, l_linestatus
-        """,
         "pipeline_curated_planted": """
             -- full-chain replication: the keep-list is arithmetic
             -- (doc_id % 8 IN (0,4,7), derived on pipeline_kept_planted),
@@ -1893,13 +1542,12 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY g.doc_id
         """,
         # rows-only (genuinely non-SQL-expressible: hash-signature /
-        # iterative / engine-specific-sampler kernels; pytest carries
-        # their oracles instead — see tests/):
+        # iterative kernels; pytest carries their oracles instead — see
+        # tests/):
         #   dedup_minhash_lsh, dedup_components (the planted twins
         #   dedup_minhash_planted / dedup_components_planted ARE
         #   hash-checked), pipeline_kept_docs (the planted twin
-        #   pipeline_kept_planted IS hash-checked), sample_seeded (the
-        #   md5-coin twin sample_seeded_portable IS hash-checked);
+        #   pipeline_kept_planted IS hash-checked);
         #   tests/test_entry_contract.py pins this set
     }
     # extract_full = the whole corpus in one result, composed VERBATIM

@@ -89,10 +89,6 @@ def main() -> int:
         # cache persisted for the rest of the bench session
         ("dedup_minhash_lsh", lambda: noop(
             minhash_lsh_candidates(docs, materialize=True))),
-        ("windowed_events", lambda: noop(
-            entry._q_windowed_events(spark, sf_dir))),
-        ("topk_per_user", lambda: noop(
-            entry._q_topk_per_user(spark, sf_dir))),
         # the composed curation chain (quality -> dedup -> LSH -> CC)
         ("pipeline_kept_docs", lambda: noop(
             entry._q_pipeline_kept_docs(spark, sf_dir))),

@@ -15,7 +15,6 @@ Layout:
                    scrub incl. paragraph dedup) + text ops
   sources/       — pages reader + Iceberg-style snapshot sink with resume
   plans/         — pipeline assembly (extract funnel) + lineage
-  streaming/     — Structured Streaming variants
 """
 
 from llmap_spark.kernel import KERNEL_VERSION

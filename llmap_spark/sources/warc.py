@@ -210,82 +210,6 @@ def write_wet(df, out_dir: str,
     return len(_glob.glob(os.path.join(out_dir, "part-*.warc.wet.gz")))
 
 
-def gzip_member_offsets(f, max_members: int = MAX_RECORDS_PER_FILE) -> list[int]:
-    """Absolute byte offsets at which each gzip member ENDS, by streaming
-    the file through zlib with BOUNDED memory (1 MB input blocks, 1 MB
-    output windows, output discarded — indexing a multi-GB archive never
-    buffers it). Gzip carries no member-length field, so one decompression
-    pass is the only way to find boundaries; this is the 'offset index
-    pass' that makes oversized archives splittable at member boundaries.
-    Total: a truncated/corrupt tail yields the members indexed so far;
-    non-gzip input yields []."""
-    import zlib
-
-    ends: list[int] = []
-    base = 0          # absolute offset of buf[0]
-    buf = b""
-    d = zlib.decompressobj(31)
-    while True:
-        if not buf:
-            buf = f.read(1 << 20)
-            if not buf:
-                break
-        try:
-            d.decompress(buf, 1 << 20)
-        except zlib.error:
-            break
-        if d.eof:
-            rem = d.unused_data
-            end = base + (len(buf) - len(rem))
-            ends.append(end)
-            if len(ends) >= max_members:
-                break
-            buf = rem
-            base = end
-            d = zlib.decompressobj(31)
-            continue
-        tail = d.unconsumed_tail
-        if tail:
-            # output-window-limited: keep draining the same input
-            base += len(buf) - len(tail)
-            buf = tail
-            continue
-        base += len(buf)
-        buf = b""
-    return ends
-
-
-def _member_chunks(path: str, target_chunk_bytes: int) -> list[tuple[int, int]]:
-    """Group consecutive gzip members of `path` into (start, length) spans
-    of ~target_chunk_bytes compressed size (always whole members, so each
-    span is a valid multi-member gzip stream).
-
-    NON-GZIP fallback: an oversized PLAIN (uncompressed) WARC has no gzip
-    members, so gzip_member_offsets returns [] — yielding no chunks would
-    SILENTLY DROP the whole file from the split route while the default
-    binaryFile route parses it fine. Emit one whole-file span instead:
-    parse_warc handles plain WARC via the _decompress pass-through, so the
-    file still contributes its rows (as a single task — plain WARC has no
-    cheap record-boundary index; that one fat task is the price of an
-    uncompressed archive, not data loss)."""
-    import os
-
-    with open(path, "rb") as f:
-        ends = gzip_member_offsets(f)
-    if not ends:
-        size = os.path.getsize(path)
-        return [(0, size)] if size else []
-    chunks: list[tuple[int, int]] = []
-    start = 0
-    for e in ends:
-        if e - start >= target_chunk_bytes:
-            chunks.append((start, e - start))
-            start = e
-    if ends and ends[-1] > start:
-        chunks.append((start, ends[-1] - start))
-    return chunks
-
-
 def _warc_ts(col_name: str):
     """WARC-Date string -> timestamp, total: WARC 1.1 fractional seconds
     are truncated (the engine's integer-second convention), and a
@@ -303,8 +227,8 @@ def _warc_ts(col_name: str):
 def read_wet(spark, path: str):
     """WET archives under `path` -> DataFrame(url, warc_ts, extracted_text,
     wet_path): the inverse of write_wet, so a WET deliverable round-trips
-    back into the engine (e.g. feeding the scrub/dedup/sampling family
-    without re-extracting). Same one-task-per-archive scan as read_warc
+    back into the engine (e.g. feeding the curation chain without
+    re-extracting). Same one-task-per-archive scan as read_warc
     (gzip members are not block-splittable); conversion-record payloads
     decode as UTF-8 with replacement (total on any bytes)."""
     from collections.abc import Iterator
@@ -337,162 +261,31 @@ def read_wet(spark, path: str):
         "extracted_text", "wet_path")
 
 
-_WARC_ROWS_SCHEMA = ("url string, warc_date string, html binary, "
-                     "warc_path string")
-
-
-def _parse_warc_batches(batches):
-    """mapInPandas body shared by the batch and streaming readers: rows of
-    (path, content) -> parsed response records."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = {"url": [], "warc_date": [], "html": [], "warc_path": []}
-        for p, content in zip(pdf["path"], pdf["content"]):
-            for url, date, payload in parse_warc(content):
-                rows["url"].append(url)
-                rows["warc_date"].append(date)
-                rows["html"].append(payload)
-                rows["warc_path"].append(p)
-        yield pd.DataFrame(rows)
-
-
-def _finish_warc_df(parsed):
-    return parsed.select(
-        "url", _warc_ts("warc_date").alias("warc_ts"),
-        "html", "warc_path")
-
-
-def read_warc(spark, path: str, split_threshold: int | None = None,
-              target_chunk_bytes: int = 128 << 20):
+def read_warc(spark, path: str):
     """WARC archives under `path` -> DataFrame(url, warc_ts, html, warc_path).
 
-    Default shape: one task per archive (binaryFile scan; WARC gzip
-    members are not block-splittable mid-member) running the SAME
-    parse_warc the tests pin — `warc_path` rides along for lineage,
-    mirroring the pages table schema otherwise so
-    `plans.pipeline.extract` consumes the result directly.
-
-    SKEW GUARD (split_threshold=<bytes>): archives LARGER than the
-    threshold are split at gzip-MEMBER boundaries so one multi-GB archive
-    no longer pins a single task's memory and wall-clock. Two extra
-    stages, both distributed: (1) an offset index pass — one task per
-    oversized file streams it through zlib with bounded memory and
-    groups members into ~target_chunk_bytes spans (gzip has no member
-    length field, so one decompression pass is the only way to find the
-    boundaries); (2) ranged reads — each span seeks/reads only its bytes
-    and parses them with the same kernel, so a valid multi-member slice
-    yields byte-identical records to the whole-file parse (pinned by
-    tests/test_warc.py::test_split_read_matches_whole_read). Files at or
-    under the threshold keep the one-task binaryFile route.
-
-    The split path opens files by PATH from executors, so `path` must be
-    a driver+executor-visible mount (the write_wet shared-FS contract);
-    the default route has no such requirement. Caps (MAX_RECORDS_PER_FILE
-    etc.) apply per scan unit — per chunk when splitting."""
+    One task per archive (binaryFile scan; WARC gzip members are not
+    block-splittable mid-member) running the SAME parse_warc the tests
+    pin — `warc_path` rides along for lineage, mirroring the pages table
+    schema otherwise so `plans.pipeline.extract` consumes the result
+    directly."""
     from collections.abc import Iterator
 
     import pandas as pd
 
-    parse = _parse_warc_batches
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = {"url": [], "warc_date": [], "html": [], "warc_path": []}
+            for p, content in zip(pdf["path"], pdf["content"]):
+                for url, date, payload in parse_warc(content):
+                    rows["url"].append(url)
+                    rows["warc_date"].append(date)
+                    rows["html"].append(payload)
+                    rows["warc_path"].append(p)
+            yield pd.DataFrame(rows)
 
-    if split_threshold is None:
-        files = spark.read.format("binaryFile").load(path)
-        return _finish_warc_df(
-            files.select("path", "content").mapInPandas(
-                parse, _WARC_ROWS_SCHEMA))
-
-    import glob as _glob
-    import os
-
-    pattern = os.path.join(path, "*") if os.path.isdir(path) else path
-    paths = sorted(p for p in _glob.glob(pattern) if os.path.isfile(p))
-    small = [p for p in paths if os.path.getsize(p) <= split_threshold]
-    large = [p for p in paths if os.path.getsize(p) > split_threshold]
-    parts = []
-    if small:
-        # explicit file: scheme — these paths came from a DRIVER-LOCAL
-        # glob (the split path's shared-mount contract), so they must not
-        # resolve against fs.defaultFS (hdfs:// on a real cluster would
-        # read a different namespace than the large-file open() branch)
-        files = spark.read.format("binaryFile").load(
-            ["file://" + os.path.abspath(p) for p in small])
-        parts.append(files.select("path", "content").mapInPandas(
-            parse, _WARC_ROWS_SCHEMA))
-    if large:
-        chunk_target = target_chunk_bytes
-
-        def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = {"path": [], "start": [], "length": []}
-                for p in pdf["path"]:
-                    for s, ln in _member_chunks(p, chunk_target):
-                        rows["path"].append(p)
-                        rows["start"].append(s)
-                        rows["length"].append(ln)
-                yield pd.DataFrame(rows)
-
-        def parse_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = {"url": [], "warc_date": [], "html": [],
-                        "warc_path": []}
-                for p, s, ln in zip(pdf["path"], pdf["start"],
-                                    pdf["length"]):
-                    with open(p, "rb") as f:
-                        f.seek(int(s))
-                        blob = f.read(int(ln))
-                    # 'file:' + absolute path matches binaryFile's URI
-                    # spelling so both routes emit identical lineage
-                    uri = "file:" + os.path.abspath(p)
-                    for url, date, payload in parse_warc(blob):
-                        rows["url"].append(url)
-                        rows["warc_date"].append(date)
-                        rows["html"].append(payload)
-                        rows["warc_path"].append(uri)
-                yield pd.DataFrame(rows)
-
-        idx_in = spark.createDataFrame(
-            [(p,) for p in large], "path string").repartition(len(large))
-        chunks = idx_in.mapInPandas(index, "path string, start long, length long")
-        # spread chunk parses across the cluster: the tiny (path, start)
-        # rows shuffle, the archive bytes never do
-        chunks = chunks.repartition("path", "start")
-        parts.append(chunks.mapInPandas(parse_ranges, _WARC_ROWS_SCHEMA))
-    if not parts:
-        empty = spark.createDataFrame([], _WARC_ROWS_SCHEMA)
-        return _finish_warc_df(empty)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return _finish_warc_df(out)
-
-
-def read_warc_stream(spark, path: str, glob: str | None = None):
-    """STREAMING WARC ingest: archives dropped into `path` after the query
-    starts are picked up incrementally (binaryFile file-stream source —
-    each file processed exactly once, tracked by the sink checkpoint)
-    through the SAME parse_warc kernel as the batch reader, so stream and
-    batch rows are byte-identical per archive. The
-    crawl-arrives-continuously shape: compose with
-    plans.pipeline.extract (a stateless per-row map lifts to readStream
-    unchanged) and a parquet sink + checkpointLocation for exactly-once
-    end-to-end. One task per archive, as in batch; the split_threshold
-    skew guard is batch-only (a streaming ranged read would need its own
-    source).
-
-    `glob` defaults to None = ingest EVERY file, matching the batch
-    reader exactly (parse_warc is total: a non-WARC file yields zero
-    rows, not an error). Pass e.g. '*.warc.gz' to skip in-progress
-    uploads — but note the file-stream source processes each PATH once,
-    so a file later rewritten in place is NOT re-read; writers must
-    follow the write-to-tmp-then-rename convention either way."""
-    # file-stream sources require an explicit schema; binaryFile's is fixed
-    reader = (spark.readStream.format("binaryFile")
-              .schema("path string, modificationTime timestamp, "
-                      "length long, content binary"))
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    files = reader.load(path)
+    files = spark.read.format("binaryFile").load(path)
     parsed = files.select("path", "content").mapInPandas(
-        _parse_warc_batches, _WARC_ROWS_SCHEMA)
-    return _finish_warc_df(parsed)
+        parse, "url string, warc_date string, html binary, warc_path string")
+    return parsed.select(
+        "url", _warc_ts("warc_date").alias("warc_ts"), "html", "warc_path")

@@ -135,3 +135,97 @@ def test_ab_summary_directions():
     win = ({"t": 10.0}, {"t": 5.0})
     assert not ab.summarize([win] * 9, {"t": "lower"})["t"]["claim"]
     assert ab.summarize([win] * 10, {"t": "lower"})["t"]["claim"]
+
+
+# canned formatted-plan fragments: (base, change, identical after
+# normalize_plan)
+PLAN_CASES = {
+    "expression_ids_shifted": (
+        "Output [2]: [url#12, warc_ts#13]\nInput [1]: [url#12]\n",
+        "Output [2]: [url#40, warc_ts#41]\nInput [1]: [url#40]\n", True),
+    "long_suffix_kept": (
+        "Output [1]: [doc_id#563L]\n", "Output [1]: [doc_id#564L]\n", True),
+    # blanking the ids would hide that the join now reads one attribute
+    # on both sides
+    "shared_id_is_structure": (
+        "Left keys [1]: [doc_id#5L]\nRight keys [1]: [doc_id#9L]\n",
+        "Left keys [1]: [doc_id#5L]\nRight keys [1]: [doc_id#5L]\n", False),
+    "plan_ids_shifted": (
+        "Arguments: hashpartitioning(doc_id#3L, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id=1294]\n",
+        "Arguments: hashpartitioning(doc_id#7L, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id=1290]\n", True),
+    "rdd_ids_shifted": (
+        "Arguments: [node#1L], MapPartitionsRDD[57] at checkpoint\n",
+        "Arguments: [node#2L], MapPartitionsRDD[61] at checkpoint\n", True),
+    "partition_count_literal": (
+        "Arguments: hashpartitioning(doc_id#3L, 8), ENSURE_REQUIREMENTS\n",
+        "Arguments: hashpartitioning(doc_id#3L, 16), ENSURE_REQUIREMENTS\n",
+        False),
+    "operator_numbers_kept": (
+        "+- Exchange (5)\n   +- * HashAggregate (4)\n",
+        "+- Exchange (6)\n   +- * HashAggregate (5)\n", False),
+    "codegen_ids_kept": (
+        "(3) Project [codegen id : 1]\n", "(3) Project [codegen id : 2]\n",
+        False),
+}
+
+
+@pytest.mark.parametrize("case", PLAN_CASES)
+def test_normalize_plan(case):
+    ab = _load_ab()
+    base, change, same = PLAN_CASES[case]
+    assert (ab.normalize_plan(base) == ab.normalize_plan(change)) is same
+
+
+def test_normalize_plan_numbers_by_first_appearance():
+    ab = _load_ab()
+    text = ("Output [2]: [url#12, lang#4]\nInput [1]: [lang#4]\n"
+            "Arguments: [plan_id=99], [plan_id=7], MapPartitionsRDD[12]\n")
+    assert ab.normalize_plan(text) == (
+        "Output [2]: [url#1, lang#2]\nInput [1]: [lang#2]\n"
+        "Arguments: [plan_id=1], [plan_id=2], MapPartitionsRDD[1]\n")
+
+
+def test_split_plans_drops_log_noise():
+    ab = _load_ab()
+    out = ("WARN NativeCodeLoader: no native library\n"
+           "@@plan extract\n== Physical Plan ==\n* Project (1)\n\n"
+           "@@plan kept_documents\n== Physical Plan ==\nExchange (2)\n")
+    assert ab.split_plans(out) == {
+        "extract": "== Physical Plan ==\n* Project (1)\n\n",
+        "kept_documents": "== Physical Plan ==\nExchange (2)\n"}
+
+
+def test_diff_plans_names_the_changed_plan():
+    ab = _load_ab()
+    base = {name: f"== Physical Plan ==\nScan parquet (1)\nOutput: [x#{i}]\n"
+            for i, name in enumerate(ab.PLANS)}
+    change = {name: text.replace("#", "#10") for name, text in base.items()}
+    change["kept_documents"] += "Exchange (2)\n"
+    diffs = ab.diff_plans(base, change)
+    assert list(diffs) == list(ab.PLANS)
+    assert diffs["extract"] == [] and diffs["curated_corpus"] == []
+    assert "+Exchange (2)" in diffs["kept_documents"]
+    assert "--- base/kept_documents" in diffs["kept_documents"]
+
+
+def test_plan_dumper_builds_every_plan():
+    """The dumper sent to both checkouts is valid Python that prints every
+    plan of PLANS under its marker."""
+    import ast
+
+    ab = _load_ab()
+    ast.parse(ab.PLAN_DUMPER)
+    ast.parse(ab.PLAN_INPUTS)
+    for name in ab.PLANS:
+        assert f'"{name}": lambda' in ab.PLAN_DUMPER
+
+
+def test_timing_runs_need_workload_and_pairs(fake_repo, capsys):
+    repo, log = fake_repo
+    with pytest.raises(SystemExit) as exc:
+        _load_ab().main(["--base", "HEAD", "--pairs", "1"], root=repo)
+    assert exc.value.code == 2
+    assert "--workload and --pairs are required" in capsys.readouterr().err
+    assert not log.exists()

@@ -111,12 +111,6 @@ REACH_ROOTS = sorted(
      *ROOT.glob("llmap_spark/plans/*.py"),
      ROOT / "llmap_spark/sources/snapshot.py", ROOT / "llmap_spark/oracle.py",
      *ROOT.glob("perfbench/*.py")])
-# modules no root reaches that are still scheduled for deletion; a module
-# leaves this list when it is deleted or gains a caller
-PENDING_CUTS = {
-    "llmap_spark.operators.sampling", "llmap_spark.operators.sessions",
-    "llmap_spark.streaming.stateful", "llmap_spark.streaming.windowed",
-}
 
 
 def _module_path(name: str) -> Path:
@@ -146,6 +140,4 @@ def test_every_module_is_reachable():
                 sub = f"{module}.{imported}"
                 todo.append(sub if sub in modules else module)
     leaves = {m for m, ispkg in modules.items() if not ispkg}
-    assert PENDING_CUTS <= leaves, "a pending cut no longer exists"
-    assert not PENDING_CUTS & reached, "a pending cut gained a caller"
-    assert leaves - reached == PENDING_CUTS, "modules nothing reaches"
+    assert leaves - reached == set(), "modules nothing reaches"

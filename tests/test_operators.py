@@ -143,6 +143,39 @@ def test_repetition_features_planted(spark):
     assert got[4] == (0, 0)
 
 
+# text -> (n, the grams word_ngrams builds from the text's words)
+WORD_NGRAMS = {
+    "fewer_words_than_n": ("a b", 3, []),
+    "exactly_n_words": ("a b c", 3, ["a b c"]),
+    "sliding_window": ("a b c d", 2, ["a b", "b c", "c d"]),
+    "unigrams": ("a b", 1, ["a", "b"]),
+    "repeated_grams_kept": ("x y x y x", 2, ["x y", "y x", "x y", "y x"]),
+    "blank_text_unigrams": ("   ", 1, []),
+    "null_text_unigrams": (None, 1, []),
+    "null_text_bigrams": (None, 2, []),
+}
+
+
+@pytest.fixture(scope="module")
+def word_ngrams_built(spark):
+    """Every WORD_NGRAMS case through one query, on words split the way
+    repetition_features and decontaminate split them."""
+    from llmap_spark.operators.textstats import squeeze_ws, word_ngrams
+
+    rows = [(k, text) for k, (text, _, _) in WORD_NGRAMS.items()]
+    df = spark.createDataFrame(rows, "case string, text string").withColumn(
+        "_w", F.split(squeeze_ws(F.col("text")), " "))
+    cols = {n: word_ngrams("_w", n).alias(f"g{n}")
+            for n in sorted({n for _, n, _ in WORD_NGRAMS.values()})}
+    got = df.select("case", *cols.values()).collect()
+    return {r.case: r[f"g{WORD_NGRAMS[r.case][1]}"] for r in got}
+
+
+@pytest.mark.parametrize("case", WORD_NGRAMS)
+def test_word_ngrams(word_ngrams_built, case):
+    assert word_ngrams_built[case] == WORD_NGRAMS[case][2]
+
+
 # -- dedup ------------------------------------------------------------------
 
 def test_exact_dedup_finds_planted_dups(spark, docs):
@@ -319,48 +352,6 @@ def test_exact_dedup_preserves_rows_and_extra_columns(spark):
     assert got["d"].fingerprint is None and not got["d"].is_dup
 
 
-# -- sessions -----------------------------------------------------------------
-
-def test_sessionize_vs_python(spark):
-    from datetime import datetime, timedelta
-
-    from llmap_spark.operators.sessions import sessionize
-
-    base = datetime(2025, 1, 1)
-    rows = [  # user 1: gaps 10s, 2000s, 5s -> sessions 1,1,2,2
-        (1, 1, base), (2, 1, base + timedelta(seconds=10)),
-        (3, 1, base + timedelta(seconds=2010)),
-        (4, 1, base + timedelta(seconds=2015)),
-        # user 2: single event
-        (5, 2, base),
-        # user 3: tie on ts broken by event_id
-        (6, 3, base), (7, 3, base),
-    ]
-    df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    got = {r.event_id: r.session_id for r in sessionize(df).collect()}
-    assert got == {1: 1, 2: 1, 3: 2, 4: 2, 5: 1, 6: 1, 7: 1}
-
-
-def test_asof_prior_event(spark):
-    from datetime import datetime, timedelta
-
-    from llmap_spark.operators.sessions import asof_prior_event
-
-    base = datetime(2025, 1, 1)
-    rows = [
-        (1, 1, base, "view"),
-        (2, 1, base + timedelta(seconds=5), "purchase"),
-        (3, 1, base + timedelta(seconds=9), "view"),
-        (4, 1, base + timedelta(seconds=12), "purchase"),
-        (5, 1, base + timedelta(seconds=20), "click"),
-        (6, 2, base, "click"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, event_type string")
-    got = {r.event_id: r.prev_purchase_id for r in asof_prior_event(df).collect()}
-    assert got == {1: None, 2: None, 3: 2, 4: 2, 5: 4, 6: None}
-
-
 # -- review-fix regressions ---------------------------------------------------
 
 def test_shingleless_docs_are_not_duplicates(spark):
@@ -519,15 +510,6 @@ def test_minhash_duplicate_ids_no_self_pairs(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = minhash_lsh_candidates(df, materialize=True).collect()
     assert all(r.id_a < r.id_b for r in pairs)
-
-
-def test_weighted_sample_null_weight_is_explicit_zero(spark):
-    from llmap_spark.operators.sampling import weighted_sample
-
-    df = spark.createDataFrame(
-        [(1, 10000), (2, None), (3, 10000)], "doc_id long, w_bp int")
-    kept = {r.doc_id for r in weighted_sample(df, "w_bp").collect()}
-    assert kept == {1, 3}  # null weight -> rate 0, by rule not by NULL-logic
 
 
 def test_token_count_script_aware(spark):

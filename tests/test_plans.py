@@ -53,14 +53,6 @@ def test_repartition_plan_has_exactly_one_exchange(spark, pages_smoke):
     assert "xxhash64(url" in plan and "salt_bucket" in plan
 
 
-def test_dim_joins_are_broadcast(spark):
-    import __spark_entry__ as e
-
-    plan = _plan(e.queries()["orders_per_region"](spark, "/root/testdata/sf0.001"))
-    assert plan.count("BroadcastHashJoin") == 3     # all three dims broadcast
-    assert "SortMergeJoin" not in plan
-
-
 def test_t0_filter_reaches_the_scan(spark):
     """mapInArrow blocks predicate pushdown, so the t0 url filter must be
     applied BELOW the extraction UDF (on the scan) or every page pays

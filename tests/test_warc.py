@@ -79,128 +79,6 @@ def test_spark_reader_roundtrips_pages(spark, tmp_path):
     assert ex.count() == len(want)
 
 
-def test_gzip_member_offsets_align_with_records():
-    """The offset index finds exactly the make_warc member boundaries,
-    streaming (never loading the archive whole)."""
-    import io
-
-    recs = [(f"https://x.example/{i}", "2025-01-01T00:00:00Z",
-             b"p" * (100 + i)) for i in range(20)]
-    blob = warc.make_warc(recs)
-    ends = warc.gzip_member_offsets(io.BytesIO(blob))
-    assert len(ends) == 20
-    assert ends[-1] == len(blob)
-    # each boundary starts a fresh gzip magic (or is EOF)
-    for e in ends[:-1]:
-        assert blob[e:e + 2] == b"\x1f\x8b"
-    # truncated tail: members before the cut still index
-    cut = ends[9] + 5
-    assert warc.gzip_member_offsets(io.BytesIO(blob[:cut])) == ends[:10]
-    # non-gzip input: total, empty
-    assert warc.gzip_member_offsets(io.BytesIO(b"not gzip at all")) == []
-
-
-def test_split_read_matches_whole_read(spark, tmp_path):
-    """The oversized-archive skew guard: a planted fat archive scans as
-    MULTIPLE tasks (member-boundary chunks) with output identical to the
-    one-task whole-file route — url, bytes, timestamp, and lineage path
-    all byte-equal."""
-    from pyspark.sql import functions as F
-
-    recs = [(f"https://fat.example/doc{i}", "2025-01-01T00:00:00Z",
-             (f"<html><body><p>payload {i} " + "x" * 400 + "</p></body></html>")
-             .encode()) for i in range(64)]
-    fat = tmp_path / "fat-00000.warc.gz"
-    fat.write_bytes(warc.make_warc(recs))
-    small_recs = recs[:3]
-    small = tmp_path / "small-00000.warc.gz"
-    small.write_bytes(warc.make_warc(small_recs))
-
-    whole = warc.read_warc(spark, str(tmp_path))
-    split = warc.read_warc(spark, str(tmp_path),
-                           split_threshold=small.stat().st_size,
-                           target_chunk_bytes=4096)
-
-    def rows(df):
-        return sorted((r.url, bytes(r.html), r.warc_ts, r.warc_path)
-                      for r in df.collect())
-
-    assert rows(split) == rows(whole)
-    # the fat archive really was split: its records came from >1 task
-    n_tasks = (split.filter(F.col("url").like("https://fat.example/%"))
-               .select(F.spark_partition_id().alias("pid"))
-               .distinct().count())
-    assert n_tasks > 1
-    # and the chunk index is member-aligned (no partial members)
-    chunks = warc._member_chunks(str(fat), 4096)
-    assert len(chunks) > 1
-    assert chunks[0][0] == 0
-    assert sum(ln for _, ln in chunks) == fat.stat().st_size
-    for s, ln in chunks:
-        blob = fat.read_bytes()[s:s + ln]
-        assert blob[:2] == b"\x1f\x8b"
-
-
-def test_oversized_plain_warc_not_dropped_by_split_route(spark, tmp_path):
-    """An UNCOMPRESSED .warc above split_threshold has no gzip members to
-    index — the split route must fall back to one whole-file chunk (same
-    rows as the default route), never silently contribute zero rows."""
-    recs = [(f"https://plain.example/doc{i}", "2025-01-01T00:00:00Z",
-             (f"<html><body><p>plain {i} " + "y" * 300 + "</p></body></html>")
-             .encode()) for i in range(16)]
-    p = tmp_path / "plain-00000.warc"
-    p.write_bytes(warc.make_warc(recs, compress=False))
-
-    # unit: the chunk index itself yields the whole-file span
-    assert warc._member_chunks(str(p), 4096) == [(0, p.stat().st_size)]
-
-    whole = warc.read_warc(spark, str(tmp_path))
-    split = warc.read_warc(spark, str(tmp_path), split_threshold=1024,
-                           target_chunk_bytes=4096)
-
-    def rows(df):
-        return sorted((r.url, bytes(r.html), r.warc_ts, r.warc_path)
-                      for r in df.collect())
-
-    got = rows(split)
-    assert got == rows(whole)
-    assert len(got) == len(recs)
-
-
-def test_warc_stream_incremental_pickup(spark, tmp_path):
-    """Streaming WARC ingest: archives dropped AFTER the query starts are
-    parsed incrementally through the same kernel, with rows identical to
-    the batch reader's."""
-    src = tmp_path / "drop"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def shard(k, n):
-        recs = [(f"https://s{k}.example/doc{i}", "2025-01-01T00:00:00Z",
-                 f"<html><body><p>rec {k}-{i}</p></body></html>".encode())
-                for i in range(n)]
-        (src / f"seg-{k:05d}.warc.gz").write_bytes(warc.make_warc(recs))
-
-    shard(0, 5)
-    q = (warc.read_warc_stream(spark, str(src))
-         .writeStream.format("parquet").outputMode("append")
-         .option("path", out).option("checkpointLocation", ckpt)
-         .queryName("warc_stream_test").start())
-    try:
-        q.processAllAvailable()
-        assert spark.read.parquet(out).count() == 5
-        shard(1, 7)  # arrives mid-stream
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r.url: bytes(r.html)
-           for r in spark.read.parquet(out).collect()}
-    want = {r.url: bytes(r.html)
-            for r in warc.read_warc(spark, str(src)).collect()}
-    assert got == want and len(got) == 12
-
-
 def test_wet_sink_roundtrips_extraction(spark, tmp_path):
     """extract -> write_wet (per-partition executor-side archives) ->
     parse_warc(conversion) reads the extracted text back byte-identical
@@ -430,3 +308,41 @@ def test_make_wet_roundtrip(case):
     got = [(u, d, p.decode("utf-8")) for u, d, p in
            warc.parse_warc(data, record_type=b"conversion")]
     assert got == [("https://a.example/x", DATE, text or "")]
+
+
+# WARC-Date string -> the warc_ts _warc_ts parses (None = NULL, never an
+# ANSI error); the fraction of WARC 1.1 dates truncates to the second
+WARC_TS = {
+    "whole_seconds": ("2025-03-04T05:06:07Z", "2025-03-04 05:06:07"),
+    "last_second_of_year": ("2024-12-31T23:59:59Z", "2024-12-31 23:59:59"),
+    "fraction_1_digit": ("2025-01-01T00:00:07.9Z", "2025-01-01 00:00:07"),
+    "fraction_3_digits": ("2025-01-01T00:00:07.123Z", "2025-01-01 00:00:07"),
+    "fraction_6_digits": ("2025-01-01T00:00:07.123456Z",
+                          "2025-01-01 00:00:07"),
+    "fraction_9_digits": ("2025-01-01T00:00:07.123456789Z",
+                          "2025-01-01 00:00:07"),
+    "fraction_without_z": ("2025-01-01T00:00:07.5", None),
+    "no_z": ("2025-01-01T00:00:07", None),
+    "month_13": ("2025-13-01T00:00:00Z", None),
+    "feb_29_leap_year": ("2024-02-29T12:00:00Z", "2024-02-29 12:00:00"),
+    "feb_29_non_leap_year": ("2023-02-29T12:00:00Z", None),
+    "empty": ("", None),
+    "null": (None, None),
+}
+
+
+@pytest.fixture(scope="module")
+def warc_ts_parsed(spark):
+    """Every WARC_TS case through one query."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(k, v[0]) for k, v in WARC_TS.items()],
+                               "case string, warc_date string")
+    got = df.select("case", F.date_format(
+        warc._warc_ts("warc_date"), "yyyy-MM-dd HH:mm:ss").alias("ts"))
+    return {r.case: r.ts for r in got.collect()}
+
+
+@pytest.mark.parametrize("case", WARC_TS)
+def test_warc_ts(warc_ts_parsed, case):
+    assert warc_ts_parsed[case] == WARC_TS[case][1]
