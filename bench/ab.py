@@ -4,8 +4,9 @@
     python3 bench/ab.py --base <rev> --plans
 
 Extracts the committed files of ``<rev>`` (``git archive``) under
-``.perfbench/ab-<sha>/`` and runs ``perfbench/run.py`` there and in this
-checkout, one launch per side and pair, alternating which side runs first.
+``.perfbench/ab-<sha>/``, deleting the checkouts of other revisions, and
+runs ``perfbench/run.py`` there and in this checkout, one launch per side
+and pair, alternating which side runs first.
 Every launch runs for ``BENCHMARK.json``'s ``run_seconds``; pair ``i`` runs
 seed ``FIRST_SEED + i`` on both sides. Prints each pair's change/base ratio
 of every end-to-end metric of ``BENCHMARK.json``, then per metric the two
@@ -32,6 +33,7 @@ import io
 import json
 import os
 import re
+import shutil
 import statistics
 import subprocess
 import sys
@@ -92,11 +94,16 @@ _PLAN_IDS = (re.compile(r"(#)(\d+)"), re.compile(r"(plan_id=)(\d+)"),
 
 
 def base_checkout(root: Path, rev: str) -> Path:
-    """The committed files of ``rev`` under ``.perfbench/``, extracted once."""
+    """The committed files of ``rev`` under ``.perfbench/``, extracted once.
+    The checkouts of every other revision are deleted first: each holds
+    ~50 MB, most of it its own cache of the benchmark inputs."""
     sha = subprocess.run(["git", "rev-parse", "--verify", f"{rev}^{{commit}}"],
                          cwd=root, check=True, capture_output=True,
                          text=True).stdout.strip()
     dest = root / ".perfbench" / f"ab-{sha[:12]}"
+    for stale in dest.parent.glob("ab-*"):
+        if stale != dest:
+            shutil.rmtree(stale)
     done = dest / ".extracted"
     if not done.exists():
         tar = subprocess.run(["git", "archive", "--format=tar", sha], cwd=root,

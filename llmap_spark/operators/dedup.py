@@ -6,8 +6,8 @@ step it runs after them:
   exact_dedup          md5 fingerprint -> groupBy-min winners -> join-back
   minhash_lsh          char-shingle MinHash signatures (pandas UDF) ->
                        bands grouped on their signature slices ->
-                       candidate pairs with signature-estimated Jaccard
-                       (JVM zip_with)
+                       candidate pairs scored inside their bucket with
+                       signature-estimated Jaccard (JVM zip_with)
   connected_components min-label propagation over candidate pairs ->
                        duplicate clusters (no GraphFrames dep)
 
@@ -16,9 +16,10 @@ Sub-document (paragraph) dedup is scrub.dedup_paragraphs.
 Scale notes baked in: LSH buckets are capped (hot-bucket skew guard),
 signatures travel as array<long> (Arrow-native), band keys are signature
 slices built in one JVM expression, verification math stays JVM-side
-(zip_with), and components iterate with AQE-friendly joins, with a
-driver-side union-find only for small pair sets: one bounded Arrow
-collect in, Arrow-built labels out, no Python worker.
+(zip_with) and runs on the signatures the bucket already holds (no join
+back to the signature frame), and components iterate with AQE-friendly
+joins, with a driver-side union-find only for small pair sets: one
+bounded Arrow collect in, Arrow-built labels out, no Python worker.
 """
 
 from __future__ import annotations
@@ -201,12 +202,25 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     Two documents share a bucket exactly when their slices are equal, so
     no hash of the slice is needed.
 
-    Shuffle diet: only (id, band, band slice) rows enter the bucket
-    grouping and the candidate `distinct` — signatures (64 longs, ~0.5 KB)
-    are re-attached AFTER the pair set is deduplicated, via broadcast of
-    the (small by construction) pair list against the persisted signature
-    frame. Carrying both signatures through the grouping + distinct would
-    ship ~1 KB of avoidable shuffle per candidate occurrence.
+    Pairs are scored inside their bucket: each bucket collects its
+    members as sorted (id, signature) structs, and the bounded in-array
+    expansion emits (id_a, id_b, est_jaccard) directly, so the plan has
+    no join on id_a or id_b and reads the signature frame only through
+    the band explode. The `distinct` stays: a pair appears once per band
+    it shares, each time with the same score.
+
+    Shuffle trade-off: every bucket member now carries its signature (64
+    longs, ~0.5 KB) through the bucket shuffle, about BANDS = 16 copies
+    per document, where the shuffle used to carry only (id, band, band
+    slice) and re-attached signatures AFTER the pair `distinct` with two
+    joins against the persisted signature frame. On the curate_corpus
+    benchmark input (1.8k documents, 4 cores, materialize=True) the
+    operator's shuffle grows from 1.06 MB to 3.56 MB and it runs 8
+    stages where it ran 12; at small inputs per-stage latency costs more
+    than the bytes. The hot-bucket count still shuffles no signature,
+    and the anti-join drops a capped bucket's rows before the collect's
+    shuffle, so a viral bucket's signatures never move. The cap bounds
+    the collect: a bucket holds at most MAX_BUCKET signatures (~100 KB).
 
     The operator is LAZY by default: it returns a plan and leaves the
     signature frame persisted (the UDF runs once per row however many
@@ -228,17 +242,18 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
         "_id", minhash_signature_udf()(F.col(text_col)).alias("sig"))
     # shingle-less docs carry NULL signatures and cannot be near-dups
     sig = sig.filter(F.col("sig").isNotNull())
-    # the signature subtree feeds three consumers (band explode + the two
-    # signature re-joins); persist so the Python UDF runs once per row
+    # the band explode below feeds two consumers (the hot-bucket count
+    # and the bucket collect); persist so the Python UDF runs once per row
     sig = sig.persist()
     if not materialize:
         register_persisted(sig)
     # band key: the band's signature slice itself, all BANDS bands in one
     # expression (one plan node, not one driver-built struct per band).
     # Equal slices are exactly what makes an LSH bucket, so grouping on
-    # the slice needs no hash of it
+    # the slice needs no hash of it. The whole signature rides along for
+    # the in-bucket scoring; the count below prunes it
     rows_per_band = NUM_HASHES // BANDS
-    exploded = sig.select("_id", F.expr(
+    exploded = sig.select("_id", "sig", F.expr(
         f"inline(transform(sequence(0, {BANDS - 1}), b -> named_struct("
         f"'band', b, 'bh', slice(sig, b * {rows_per_band} + 1, "
         f"{rows_per_band}))))"))
@@ -246,12 +261,13 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     # over-full buckets, NOT a window over (band, bh): the hot bucket is
     # exactly the case the cap exists for, and a window would buffer that
     # whole bucket in one task before dropping it; partial aggregation
-    # collapses it map-side to one (partition, bucket) row. The anti-join
-    # side is only the buckets EXCEEDING the cap — rare by construction —
-    # so AQE broadcasts it at runtime and the exploded frame never
-    # shuffles for the cap (the r3 inner-join formulation joined back the
-    # corpus-sized <=cap bucket list instead: a full extra exchange,
-    # measured +2.6 s at sf0.1 in the driver bench)
+    # collapses it map-side to one (partition, bucket) row, and the count
+    # shuffles no signature. The anti-join side is only the buckets
+    # EXCEEDING the cap — rare by construction — so AQE broadcasts it at
+    # runtime and the exploded frame never shuffles for the cap (the r3
+    # inner-join formulation joined back the corpus-sized <=cap bucket
+    # list instead: a full extra exchange, measured +2.6 s at sf0.1 in
+    # the driver bench)
     hot = (exploded.groupBy("band", "bh")
            .agg(F.count(F.lit(1)).alias("_bn"))
            .filter(F.col("_bn") > MAX_BUCKET)
@@ -260,33 +276,33 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     # post-prune, every bucket is <= MAX_BUCKET members, so pair
     # generation is ONE groupBy + bounded in-array expansion
     # (MAX_BUCKET^2/2 structs per bucket row) instead of a two-sided
-    # self-join. Saves a full exchange of the exploded frame AND stops
-    # the counts/anti-join subtree being evaluated once per join side.
+    # self-join. Members carry their signatures, so each pair is scored
+    # where it is made: no join back to the signature frame
     byb = (pruned.groupBy("band", "bh")
-           .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-           .filter(F.size("ids") >= 2))
-    pairs = (byb.select(F.explode(F.flatten(F.expr(
-        "transform(ids, (x, i) -> transform("
-        "  slice(ids, i + 2, size(ids) - i - 1),"
-        "  y -> struct(x AS id_a, y AS id_b)))"
-    ))).alias("p")).select("p.id_a", "p.id_b")
+           .agg(F.sort_array(F.collect_list(F.struct("_id", "sig")))
+                .alias("m"))
+           .filter(F.size("m") >= 2))
+
+    def scored(x, y):
+        agree = F.aggregate(
+            F.zip_with(x["sig"], y["sig"],
+                       lambda p, q: F.when(p == q, 1).otherwise(0)),
+            F.lit(0), lambda acc, v: acc + v)
+        return F.struct(x["_id"].alias("id_a"), y["_id"].alias("id_b"),
+                        (agree / F.lit(float(NUM_HASHES)))
+                        .alias("est_jaccard"))
+
+    out = (byb.select(F.explode(F.flatten(F.transform(
+        "m", lambda x, i: F.transform(
+            F.slice("m", i + 2, F.size("m") - i - 1),
+            lambda y: scored(x, y))))).alias("p"))
+        .select("p.id_a", "p.id_b", "p.est_jaccard")
         # strict <: a duplicated id in the input must not emit a
         # self-pair (sort_array makes equal ids adjacent, so the
         # in-array expansion WOULD pair them)
         .filter(F.col("id_a") < F.col("id_b"))
+        # a pair shares up to BANDS buckets; its score is the same in each
         .distinct())
-    sa = sig.select(F.col("_id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    # no broadcast hint: AQE turns these into broadcast joins at runtime
-    # when the pair set is small; a forced broadcast would OOM if a huge
-    # corpus yields a pair set beyond driver memory
-    withsigs = sa.join(pairs, "id_a").join(sb, "id_b")
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0), lambda acc, v: acc + v)
-    out = withsigs.select(
-        "id_a", "id_b",
-        (agree / F.lit(float(NUM_HASHES))).alias("est_jaccard"))
     if materialize:
         out = out.localCheckpoint(eager=True)
         sig.unpersist()

@@ -10,7 +10,8 @@ llmap's pipeline, `llmap.py:139-229`, generalized to corpus hygiene):
   redact_pii        email / IPv4 / phone redaction with per-kind counts,
                     pure JVM regexp (no Python in the hot path)
   decontaminate     benchmark decontamination: flag documents sharing any
-                    word n-gram with a (small) held-out benchmark corpus
+                    word n-gram with a (small) held-out benchmark corpus;
+                    contaminated_ids is its drop-set-only twin
 
 Scale notes baked in:
   - paragraph winners use groupBy(fingerprint).agg(min(...)) — map-side
@@ -23,7 +24,9 @@ Scale notes baked in:
   - decontaminate broadcasts the benchmark n-gram set (benchmarks are
     MB-scale vs a 100 TB corpus) so the corpus side is one map-side join
     plus a partially-aggregated groupBy(doc) — one narrow shuffle of one
-    row per document.
+    row per document; contaminated_ids, which the curation chain uses,
+    skips the groupBy too: a left-semi join against the broadcast grams
+    is one map stage.
 
 All expressions are chosen to evaluate identically in Spark and DuckDB
 (ASCII-safe, no locale-sensitive folds) so every operator here is
@@ -36,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from llmap_spark.operators.textstats import fingerprint
+from llmap_spark.operators.textstats import fingerprint, word_ngrams
 
 # Conservative patterns that parse identically under Java regex (Spark)
 # and RE2 (DuckDB): no backreferences, no lookaround.
@@ -202,6 +205,21 @@ def _with_words(df: DataFrame, text_col: str, out_col: str) -> DataFrame:
         F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"))
 
 
+def _grams(df: DataFrame, n: int, text_col: str, keep: tuple = (),
+           distinct_per_row: bool = False) -> DataFrame:
+    """One row (*keep, _gram) per word n-gram of `text_col`. The one gram
+    builder of both decontamination shapes: word_ngrams is the repo's
+    SINGLE n-gram constructor (blank-text guard included), and operating
+    on the pre-split projection keeps gram extraction O(words x n)
+    instead of re-splitting per gram position. `distinct_per_row` drops
+    a row's repeated grams before the explode."""
+    grams = word_ngrams("_w", n)
+    if distinct_per_row:
+        grams = F.array_distinct(grams)
+    return (_with_words(df, text_col, "_w")
+            .select(*keep, F.explode(grams).alias("_gram")))
+
+
 def decontaminate(df: DataFrame, benchmark: DataFrame, n: int = 3,
                   id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
@@ -216,18 +234,10 @@ def decontaminate(df: DataFrame, benchmark: DataFrame, n: int = 3,
     eval suites are MB-scale against a 100 TB corpus, so the corpus side
     never shuffles for the membership test; the only wide exchange is the
     groupBy(doc) whose partial aggregate emits one row per document per
-    partition."""
-    from llmap_spark.operators.textstats import word_ngrams
-
-    # word_ngrams is the repo's SINGLE n-gram constructor (blank-text
-    # guard included) — operating on the pre-split projection keeps gram
-    # extraction O(words x n) instead of re-splitting per gram position
-    bench = (_with_words(benchmark, text_col, "_bw")
-             .select(F.explode(word_ngrams("_bw", n)).alias("_gram"))
-             .distinct())
-    grams = (_with_words(df.select(id_col, text_col), text_col, "_dw")
-             .select(F.col(id_col), F.explode(F.array_distinct(
-                 word_ngrams("_dw", n))).alias("_gram")))
+    partition. The curation chain, which needs only the contaminated ids,
+    uses contaminated_ids instead."""
+    bench = _grams(benchmark, n, text_col).distinct()
+    grams = _grams(df, n, text_col, keep=(id_col,), distinct_per_row=True)
     hits = (grams.join(F.broadcast(bench.withColumn("_hit", F.lit(1))),
                        "_gram", "left")
             .groupBy(id_col)
@@ -235,3 +245,22 @@ def decontaminate(df: DataFrame, benchmark: DataFrame, n: int = 3,
                  .cast("bigint").alias("n_hits")))
     return hits.withColumn(
         "contaminated", (F.col("n_hits") > 0).cast("int"))
+
+
+def contaminated_ids(df: DataFrame, benchmark: DataFrame, n: int = 3,
+                     id_col: str = "doc_id",
+                     text_col: str = "text") -> DataFrame:
+    """The ids of the documents that share any word n-gram with a
+    benchmark text: the same set as decontaminate's contaminated = 1 rows,
+    for callers that only drop them (the curation chain).
+
+    The document grams are LEFT-SEMI-joined to the broadcast benchmark
+    grams, so an id appears once per matching gram occurrence of its
+    document, never once per benchmark copy of a gram: the benchmark
+    side needs no distinct, the document side no array_distinct and no
+    groupBy. The whole drop set is one map stage over the document
+    grams; a caller removes it with one left_anti join."""
+    bench = F.broadcast(_grams(benchmark, n, text_col))
+    return (_grams(df, n, text_col, keep=(id_col,))
+            .join(bench, "_gram", "left_semi")
+            .select(id_col))

@@ -12,8 +12,8 @@ families build toward, composed as one lazy DataFrame transform.
 and, for the training-ready deliverable (curated_corpus):
 
       keep list
-      -> decontaminate          (drop docs sharing word n-grams with a
-                                 broadcast held-out benchmark)
+      -> decontaminate          (anti-join the ids whose word n-grams
+                                 semi-join a broadcast held-out benchmark)
       -> paragraph dedup        (corpus-wide first-occurrence rewrite)
       -> PII redaction          (typed placeholders, JVM regexp)
 
@@ -154,13 +154,15 @@ def curated_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
     n_phones) — `text` is the fully-scrubbed payload. Scale shape: the
     keep-list needs NO attach join — the shared _kept_reps core already
     carries the survivors' text (r6: the earlier left-semi re-attach was
-    a second full corpus scan); decontamination broadcasts the benchmark
-    gram set (corpus side never shuffles for membership); paragraph dedup
+    a second full corpus scan); decontamination left-semi-joins the
+    document grams to the broadcast benchmark grams and anti-joins the
+    resulting ids away (the corpus side never shuffles for membership,
+    and no per-document hit count is built); paragraph dedup
     is the one wide stage (fingerprint groupBy + reassembly); redaction
     is map-only JVM regexp. Stages are ordered cheapest-drop-first so the
     wide paragraph shuffle only sees survivors.
     """
-    from llmap_spark.operators.scrub import (decontaminate as _decon,
+    from llmap_spark.operators.scrub import (contaminated_ids,
                                              dedup_paragraphs, redact_pii)
 
     out = _kept_reps(docs, id_col=id_col, text_col=text_col, **kept_kwargs)
@@ -183,9 +185,8 @@ def curated_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
 
     out = register_persisted(out.persist())
     if benchmark is not None:
-        dirty = (_decon(out, benchmark, id_col=id_col, text_col=text_col)
-                 .filter(F.col("contaminated") == 1)
-                 .select(id_col))
+        dirty = contaminated_ids(out, benchmark, id_col=id_col,
+                                 text_col=text_col)
         out = out.join(dirty, id_col, "left_anti")
     out = (dedup_paragraphs(out, id_col=id_col, text_col=text_col)
            .withColumnRenamed("text_clean", text_col))

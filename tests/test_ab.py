@@ -93,6 +93,25 @@ def test_ab_reports_pairs(fake_repo, capsys):
     assert (base / "side.txt").read_text() == "base\n"
 
 
+def test_ab_deletes_other_base_checkouts(fake_repo, capsys):
+    """Only the checkout of --base is kept under .perfbench/; the shared
+    inputs cache stays."""
+    repo, _ = fake_repo
+    for name in ("ab-0123456789ab", "ab-ba9876543210", "inputs"):
+        (repo / ".perfbench" / name).mkdir(parents=True)
+        (repo / ".perfbench" / name / "f").write_text("x\n")
+    sha = subprocess.run(["git", "rev-parse", "HEAD"], cwd=repo, check=True,
+                         capture_output=True, text=True).stdout.strip()
+    _run(repo, capsys, "--pairs", "1")
+    assert sorted(p.name for p in (repo / ".perfbench").iterdir()) == [
+        f"ab-{sha[:12]}", "inputs"]
+    assert (repo / ".perfbench" / "inputs" / "f").exists()
+    # a second run against the same base reuses its checkout
+    (repo / ".perfbench" / f"ab-{sha[:12]}" / "kept").write_text("x\n")
+    _run(repo, capsys, "--pairs", "1")
+    assert (repo / ".perfbench" / f"ab-{sha[:12]}" / "kept").exists()
+
+
 def test_ab_claim_needs_ten_pairs(fake_repo, capsys):
     repo, _ = fake_repo
     (repo / "speed.txt").write_text("8\n")

@@ -403,6 +403,27 @@ def test_released_on_exit_keeps_the_original_error():
     assert cache.release_persisted() == 1
 
 
+def test_lsh_scores_pairs_inside_their_bucket(spark):
+    """Bucket members carry their signatures, so a pair is scored where
+    the bucket expansion makes it: the plan joins nothing on id_a or
+    id_b (the hot-bucket anti-join on (band, bh) is its only join), and
+    the persisted signature frame is read only by the band explode of
+    the count and collect branches."""
+    from llmap_spark.cache import release_persisted
+    from llmap_spark.operators import dedup
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+    lines = _plan(dedup.minhash_lsh_candidates(docs)).splitlines()
+    release_persisted()
+    joins = [ln for ln in lines if "Join" in ln]
+    assert len(joins) == 1 and "LeftAnti" in joins[0], joins
+    assert not any("id_a" in ln or "id_b" in ln for ln in joins), joins
+    scans = [i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln]
+    assert len(scans) == 2, lines
+    assert all("Generate inline(" in lines[i - 1] for i in scans), lines
+
+
 def test_lsh_band_key_is_the_signature_slice(spark):
     """Buckets group on the band's signature slice itself: no md5 or
     to_json in the band stage, and the candidate pairs equal an inline

@@ -5,8 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from llmap_spark.operators.scrub import (decontaminate, dedup_paragraphs,
-                                         redact_pii)
+from llmap_spark.operators.scrub import (contaminated_ids, decontaminate,
+                                         dedup_paragraphs, redact_pii)
 
 
 def test_paragraph_dedup_keeps_first_occurrence(spark):
@@ -226,6 +226,32 @@ def test_normalize_text_strips_before_composing(spark):
         spark.createDataFrame([(0, r.text_clean)],
                               "doc_id long, text string")).collect()[0]
     assert again.changed == 0
+
+
+@pytest.mark.parametrize("n, n_rows", [(1, 12), (3, 4)])
+def test_contaminated_ids_match_decontaminate(spark, n, n_rows):
+    """The curation chain's drop set (contaminated_ids) is decontaminate's
+    contaminated = 1 set, on docs shorter than n words, NULL and blank
+    text, blank benchmark rows and grams repeated on both sides. The
+    drop set holds one row per matching document gram occurrence: the
+    benchmark side is not distinct-ed, so its repeated gram must not
+    multiply the rows."""
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps"),
+         (1, "x y z x y z"),
+         (2, "a b"),
+         (3, None), (4, ""), (5, "   "),
+         (6, "totally clean words only here"),
+         (7, "  quick   brown\tfox  ")],
+        "doc_id long, text string")
+    bench = spark.createDataFrame(
+        [("quick brown fox benchmark sentence",), ("x y z",), ("x y z",),
+         ("",), ("  ",), (None,)], "text string")
+    dropped = [r.doc_id for r in contaminated_ids(docs, bench, n=n).collect()]
+    flagged = {r.doc_id for r in decontaminate(docs, bench, n=n)
+               .filter("contaminated = 1").collect()}
+    assert set(dropped) == flagged == {0, 1, 7}
+    assert len(dropped) == n_rows
 
 
 def test_decontaminate_plan_broadcasts_benchmark(spark):
