@@ -22,11 +22,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from llmap_spark.corpus import EDGE_RESIDUES as _EDGE_RESIDUES
 
 EDGE_RESIDUES_SQL = "(" + ", ".join(map(str, sorted(_EDGE_RESIDUES))) + ")"
-# DuckDB-side normalization twin of kernel._normalize. NB: RE2's \s is
-# ASCII; Python str.split() also splits Unicode whitespace. The corpus
-# generator emits ASCII-whitespace text by construction, which is what
-# keeps the byte-identity oracles exact — a corpus with U+00A0 etc. would
-# need this class widened.
+# DuckDB-side twin of textstats.squeeze_ws and kernel._normalize. The
+# three whitespace classes differ: Spark's (Java) \s is [ \t\n\x0B\f\r],
+# DuckDB's (RE2) \s is [ \t\n\f\r] — no U+000B, which Spark squeezes to a
+# space and DuckDB keeps — and Python's str.split() in the kernel also
+# splits U+001C and Unicode spaces such as U+00A0, which neither regex
+# matches. The test documents' only whitespace is the space (and the
+# generated pages emit no U+000B), which is what keeps the byte-identity
+# oracles exact.
 NORM_SQL = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
 
 # Shared quality-formula fragments (textstats.quality_features twins).
@@ -298,96 +301,6 @@ def _q_pipeline_curated_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curated_corpus(planted, benchmark=bench)
 
 
-def _planted_nfc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_planted_curation_docs plus a per-group DECOMPOSED suffix token
-    ' z<hex4>e'+U+0301 (combining acute) on every non-junk doc: the NFC
-    stage composes the trailing pair to 'é', so the composed bytes are
-    arithmetically derivable ('z'||hex4||chr(233)) and the full nfc=True
-    chain is hash-checkable. The suffix varies per group (hex4 of
-    md5('n'||g)) so it adds no cross-group shingle sharing beyond what
-    the green twin already carries ('the ' is shared there), and is
-    identical within a group so the family structure (near-dup /
-    exact-dup / junk / singleton) is unchanged."""
-    docs = _planted_curation_docs(spark, sf_dir)
-    # the suffix literal below is DECOMPOSED on purpose: base 'e' +
-    # U+0301 combining acute — the NFC stage must compose it to U+00E9
-    suffix = F.expr(
-        "concat(' z', substr(md5(concat('n', "
-        "cast(doc_id DIV 8 as string))), 1, 4), 'é')")
-    text = F.when(F.col("doc_id") % 8 == 6, F.col("text")) \
-        .otherwise(F.concat(F.col("text"), suffix))
-    return docs.select("doc_id", text.alias("text"))
-
-
-def _q_pipeline_curated_nfc_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full curated deliverable with the OPT-IN NFC stage ON,
-    hash-verified as COMPOSED (keep-list -> NFC normalize -> decontaminate
-    -> paragraph dedup -> redact), not just per-stage: the r3 verdict's
-    item 7. The planted corpus carries decomposed 'e'+U+0301 suffixes the
-    NFC stage must compose; the oracle writes the composed bytes
-    (chr(233)) directly from the same arithmetic, so the normalize
-    output's exact bytes are part of the hash. The benchmark slice stays
-    DECOMPOSED (raw planted text), matching what the Spark side passes —
-    decontamination still fires via the shared word-soup grams, which are
-    accent-free."""
-    from llmap_spark.plans.training import curated_corpus
-
-    planted = _planted_nfc_docs(spark, sf_dir)
-    bench = planted.filter(F.col("doc_id") % 16 == 7).select("text")
-    return curated_corpus(planted, benchmark=bench, nfc=True)
-
-
-def _q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.textstats import token_count
-
-    return _docs(spark, sf_dir).select(
-        "doc_id", token_count(F.col("text")).alias("n_tokens"))
-
-
-def _q_token_count_cjk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Script-aware token counting (textstats.token_count_script_aware:
-    whitespace tokens + one per CJK codepoint — unsegmented scripts
-    no longer count a sentence as one token), hash-verified by
-    construction: 'alpha beta gamma' + k CJK chars (k = doc_id % 9,
-    script cycling han/kana/hangul by doc_id % 3) + ' delta tail'
-    counts exactly 5 + k."""
-    from llmap_spark.operators.textstats import token_count_script_aware
-
-    c = F.expr("CASE cast(doc_id % 3 as int) WHEN 0 THEN '的' "
-               "WHEN 1 THEN 'の' ELSE '한' END")
-    text2 = F.concat(F.lit("alpha beta gamma"),
-                     F.repeat(c, (F.col("doc_id") % 9).cast("int")),
-                     F.lit(" delta tail"))
-    d = _docs(spark, sf_dir).select("doc_id", text2.alias("text"))
-    return d.select(
-        "doc_id",
-        token_count_script_aware(F.col("text")).alias("n_tokens_sa"))
-
-
-def _q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.textstats import token_count_bpe
-
-    return _docs(spark, sf_dir).select(
-        "doc_id", token_count_bpe(F.col("text")).alias("n_bpe_tokens"))
-
-
-def _q_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc keyword extraction (textstats.top_terms): integer tf-idf
-    surrogate — (tf DESC, df ASC, term ASC) is the idf ordering without
-    the float log, so the oracle replays it exactly. ASCII-translate case
-    fold on both engines (lower() diverges cross-engine on e.g. U+0130,
-    the kernel's standing rule)."""
-    from llmap_spark.operators.textstats import top_terms
-
-    return top_terms(_docs(spark, sf_dir), k=3)
-
-
-def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.textstats import lang_id
-
-    return lang_id(_docs(spark, sf_dir)).select("doc_id", "pred_lang")
-
-
 # lang_id2's planted construction: one script-pure (or marker-pure)
 # snippet per supported language + an 'und' no-evidence case, cycled by
 # doc_id. Each snippet was validated against detect_language BEFORE the
@@ -484,13 +397,6 @@ def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_features(_docs(spark, sf_dir)).select(
         "doc_id", "n_chars_t", "n_tokens_t", "n_periods", "n_commas",
         "n_stop_hits", "mwl_x100", "q_keep")
-
-
-def _q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from llmap_spark.operators.textstats import repetition_features
-
-    return repetition_features(_docs(spark, sf_dir)).select(
-        "doc_id", "dup_2gram_x1000", "dup_3gram_x1000")
 
 
 def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,23 +580,6 @@ def _q_scrub_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text_redacted", "n_emails", "n_ipv4", "n_phones")
 
 
-def _q_scrub_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC + control-strip hygiene (scrub.normalize_text),
-    hash-verified cross-engine: a decomposed e-acute (e + U+0301) suffix
-    is planted on every doc (it must COMPOSE under NFC) plus a BEL control
-    char on doc_id % 3 = 0 (it must strip); the oracle replays both with
-    DuckDB's nfc_normalize — both engines implement UAX #15."""
-    from llmap_spark.operators.scrub import normalize_text
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(F.coalesce(F.col("text"), F.lit("")),
-                 F.lit(" nfc:e\u0301"),
-                 F.expr("CASE WHEN doc_id % 3 = 0 THEN char(7) "
-                        "ELSE '' END")).alias("text"))
-    return normalize_text(d).select("doc_id", "text_clean", "changed")
-
-
 def _q_scrub_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (scrub.decontaminate): docs with
     doc_id % 97 == 0 play the held-out benchmark; every corpus document is
@@ -717,22 +606,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- LAST_CHECKED: never (new in r5) — inserted here as built ---
         "lang_id2": _q_lang_id2,
-        "token_count_cjk": _q_token_count_cjk,
         # --- LAST_CHECKED: r2 (green r1+r2 or r2 only; oldest rows) ---
-        "token_count": _q_token_count,
-        "token_count_bpe": _q_token_count_bpe,
-        "lang_id": _q_lang_id,
         "quality_score": _q_quality_score,
-        "repetition_score": _q_repetition_score,
         # --- LAST_CHECKED: r3 (scrub families) ---
         "scrub_paragraph_dedup": _q_scrub_paragraph_dedup,
         "scrub_redact_pii": _q_scrub_redact_pii,
         "scrub_decontaminate": _q_scrub_decontaminate,
-        "scrub_normalize": _q_scrub_normalize,
         # --- LAST_CHECKED: r4, single green row ever (checked once) ---
         "warc_roundtrip": _q_warc_roundtrip,
-        "pipeline_curated_nfc_planted": _q_pipeline_curated_nfc_planted,
-        "keyword_topk": _q_keyword_topk,
         # --- LAST_CHECKED: r4, multi-round green (freshest + deepest) ---
         "extract_roundtrip": _q_extract_roundtrip,
         "extract_status_counts": _q_extract_status_counts,
@@ -756,7 +637,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 
 def oracle_sql() -> dict[str, str]:
-    w_norm = f"string_split({NORM_SQL}, ' ')"
     d = {
         "extract_roundtrip": f"""
             -- the same integer keep gate extract_t0_full models: a doc
@@ -1084,66 +964,6 @@ def oracle_sql() -> dict[str, str]:
             -- kept singleton (see _q_pipeline_kept_planted)
             SELECT doc_id FROM documents WHERE doc_id % 8 IN (0, 4, 7)
         """,
-        "keyword_topk": """
-            WITH terms AS (
-              SELECT doc_id, u.term
-              FROM (SELECT doc_id,
-                      string_split(trim(regexp_replace(
-                        translate(coalesce(text, ''),
-                          'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
-                          'abcdefghijklmnopqrstuvwxyz'),
-                        '\\s+', ' ', 'g')), ' ') AS ws
-                    FROM documents) d,
-                   LATERAL unnest(d.ws) AS u(term)
-              WHERE u.term <> ''),
-            tf AS (
-              SELECT doc_id, term, CAST(count(*) AS int) AS tf
-              FROM terms GROUP BY doc_id, term),
-            dfreq AS (
-              SELECT term, CAST(count(*) AS int) AS df_count
-              FROM tf GROUP BY term),
-            ranked AS (
-              SELECT t.doc_id, t.term, t.tf, f.df_count,
-                CAST(row_number() OVER (PARTITION BY t.doc_id
-                  ORDER BY t.tf DESC, f.df_count ASC, t.term ASC)
-                  AS int) AS rank
-              FROM tf t JOIN dfreq f USING (term))
-            SELECT doc_id, term, tf, df_count, rank
-            FROM ranked WHERE rank <= 3
-        """,
-        "token_count": f"""
-            SELECT doc_id, CASE WHEN length({NORM_SQL}) = 0 THEN 0
-              ELSE CAST((length({NORM_SQL})
-                - length(replace({NORM_SQL}, ' ', ''))) AS int) + 1 END AS n_tokens
-            FROM documents
-        """,
-        "token_count_bpe": r"""
-            SELECT doc_id,
-              CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+'))
-                   AS int) AS n_bpe_tokens
-            FROM documents
-        """,
-        "lang_id": """
-            WITH c AS (SELECT doc_id,
-              CAST((length(' '||text||' ') - length(replace(' '||text||' ',' the ','')))/5
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' and ','')))/5
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' of ','')))/4 AS int) AS c_en,
-              CAST((length(' '||text||' ') - length(replace(' '||text||' ',' der ','')))/5
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' und ','')))/5
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' die ','')))/5 AS int) AS c_de,
-              CAST((length(' '||text||' ') - length(replace(' '||text||' ',' le ','')))/4
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' et ','')))/4
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' les ','')))/5 AS int) AS c_fr,
-              CAST((length(' '||text||' ') - length(replace(' '||text||' ',' el ','')))/4
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' los ','')))/5
-                + (length(' '||text||' ') - length(replace(' '||text||' ',' que ','')))/5 AS int) AS c_es
-              FROM documents)
-            SELECT doc_id,
-              CASE WHEN c_en >= c_de AND c_en >= c_fr AND c_en >= c_es THEN 'en'
-                   WHEN c_de >= c_fr AND c_de >= c_es THEN 'de'
-                   WHEN c_fr >= c_es THEN 'fr' ELSE 'es' END AS pred_lang
-            FROM c
-        """,
         "quality_score": f"""
             WITH q AS (SELECT doc_id,
               {SQ_LEN_SQL} AS sq_len,
@@ -1161,26 +981,6 @@ def oracle_sql() -> dict[str, str]:
               n_stop_hits, mwl_x100,
               {QKEEP_SQL} AS q_keep
             FROM f
-        """,
-        "repetition_score": f"""
-            WITH d AS (SELECT doc_id, {w_norm} AS w FROM documents),
-            g AS (SELECT doc_id,
-              CASE WHEN len(w) >= 2 THEN list_transform(
-                     generate_series(1, len(w) - 1), i -> w[i]||' '||w[i+1])
-                   ELSE [] END AS g2,
-              CASE WHEN len(w) >= 3 THEN list_transform(
-                     generate_series(1, len(w) - 2),
-                     i -> w[i]||' '||w[i+1]||' '||w[i+2])
-                   ELSE [] END AS g3
-              FROM d)
-            SELECT doc_id,
-              CASE WHEN len(g2) > 0 THEN CAST(floor(
-                1000 * (len(g2) - len(list_distinct(g2))) / len(g2)) AS int)
-                ELSE 0 END AS dup_2gram_x1000,
-              CASE WHEN len(g3) > 0 THEN CAST(floor(
-                1000 * (len(g3) - len(list_distinct(g3))) / len(g3)) AS int)
-                ELSE 0 END AS dup_3gram_x1000
-            FROM g
         """,
         "dedup_exact": f"""
             -- NULL text = UNKNOWN content, never a duplicate (mirrors the
@@ -1297,110 +1097,6 @@ def oracle_sql() -> dict[str, str]:
                 '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS int) AS n_phones
             FROM r2
         """,
-        "pipeline_curated_nfc_planted": """
-            -- the nfc=True composed chain: same replay as
-            -- pipeline_curated_planted, over the planted corpus carrying a
-            -- per-group DECOMPOSED ' z<hex4>e'+U+0301 suffix. The NFC
-            -- stage's output is derived arithmetically — the only
-            -- combining sequence is 'e'+U+0301, so composition is
-            -- replace('e'||chr(769) -> chr(233)) — and those composed
-            -- bytes flow through decontamination (benchmark grams stay
-            -- decomposed, as the Spark side passes them; matching happens
-            -- on the accent-free word-soup grams), paragraph dedup, and
-            -- redaction, so the whole opt-in path hashes end-to-end
-            WITH planted AS (
-              SELECT doc_id,
-                CASE WHEN doc_id % 8 = 6 THEN 'xx'
-                ELSE (CASE doc_id % 8
-                  WHEN 7 THEN 'the '
-                    || regexp_replace(md5('s' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                    || regexp_replace(md5('t' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                  WHEN 4 THEN 'the '
-                    || regexp_replace(md5('e' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                    || regexp_replace(md5('f' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                  WHEN 5 THEN 'the '
-                    || regexp_replace(md5('e' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                    || regexp_replace(md5('f' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                  ELSE (['zq','Zq','zQ','ZQ'])[CAST(doc_id % 8 AS int) + 1]
-                    || ' the '
-                    || regexp_replace(md5('a' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                    || regexp_replace(md5('b' || CAST(doc_id // 8 AS varchar)),
-                                      '(....)', '\\1 ', 'g')
-                END)
-                || ' z' || substr(md5('n' || CAST(doc_id // 8 AS varchar)), 1, 4)
-                || 'e' || chr(769)
-                END AS text
-              FROM documents),
-            kept AS (
-              -- keep-list (doc_id % 8 IN (0,4,7), same derivation as the
-              -- green twin) with the NFC stage applied: compose the one
-              -- planted combining sequence
-              SELECT doc_id, replace(text, 'e' || chr(769), chr(233)) AS text
-              FROM planted WHERE doc_id % 8 IN (0, 4, 7)),
-            bw AS (
-              SELECT string_split_regex(trim(coalesce(text, '')), '\\s+')
-                AS ws
-              FROM planted WHERE doc_id % 16 = 7),
-            bg AS (
-              SELECT DISTINCT array_to_string(ws[u.i:u.i+2], ' ') AS gram
-              FROM bw, LATERAL unnest(generate_series(1, len(ws) - 2))
-                   AS u(i)
-              WHERE len(ws) >= 3),
-            kw AS (
-              SELECT doc_id,
-                string_split_regex(trim(coalesce(text, '')), '\\s+') AS ws
-              FROM kept),
-            kg AS (
-              SELECT DISTINCT doc_id,
-                array_to_string(ws[u.i:u.i+2], ' ') AS gram
-              FROM kw, LATERAL unnest(generate_series(1, len(ws) - 2))
-                   AS u(i)
-              WHERE len(ws) >= 3),
-            dirty AS (SELECT DISTINCT doc_id FROM kg JOIN bg USING (gram)),
-            clean AS (
-              SELECT k.doc_id, k.text FROM kept k
-              LEFT JOIN dirty d USING (doc_id) WHERE d.doc_id IS NULL),
-            win AS (
-              SELECT doc_id, text, row_number() OVER (
-                PARTITION BY md5(trim(regexp_replace(text, '\\s+', ' ', 'g')))
-                ORDER BY doc_id) AS rn
-              FROM clean),
-            pd AS (
-              SELECT doc_id,
-                CASE WHEN rn = 1 THEN text ELSE '' END AS t2,
-                CASE WHEN rn = 1 THEN 1 ELSE 0 END AS nk
-              FROM win)
-            , r1 AS (
-              SELECT doc_id, nk, t2,
-                regexp_replace(t2,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                  '<EMAIL>', 'g') AS u1
-              FROM pd),
-            r2 AS (
-              SELECT *, regexp_replace(u1,
-                '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '<IP>', 'g') AS u2
-              FROM r1)
-            SELECT doc_id,
-              regexp_replace(u2,
-                '\\b\\d{3}-\\d{3}-\\d{4}\\b', '<PHONE>', 'g') AS text,
-              CAST(1 AS int) AS n_paras,
-              CAST(nk AS int) AS n_paras_kept,
-              CAST(len(regexp_extract_all(t2,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
-                AS int) AS n_emails,
-              CAST(len(regexp_extract_all(u1,
-                '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b')) AS int) AS n_ipv4,
-              CAST(len(regexp_extract_all(u2,
-                '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS int) AS n_phones
-            FROM r2
-        """,
         "scrub_paragraph_dedup": """
             -- replays _scrub_paragraph_docs + dedup_paragraphs: build the
             -- same 3-paragraph planted text, fingerprint each paragraph
@@ -1493,28 +1189,6 @@ def oracle_sql() -> dict[str, str]:
                 '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS int) AS n_phones
             FROM staged2
         """,
-        "scrub_normalize": """
-            -- same planted construction: decomposed e-acute (chr(769) is
-            -- U+0301) always appended, BEL on doc_id%3=0; control strip
-            -- runs FIRST (a control between base and combining mark
-            -- blocks composition), then NFC composes; changed compares
-            -- against the pre-normalization text
-            WITH built AS (
-              SELECT doc_id,
-                coalesce(text, '') || ' nfc:e' || chr(769)
-                || CASE WHEN doc_id % 3 = 0 THEN chr(7) ELSE '' END AS t
-              FROM documents),
-            n AS (
-              SELECT doc_id, t,
-                nfc_normalize(regexp_replace(t,
-                  '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g'))
-                  AS text_clean
-              FROM built)
-            SELECT doc_id, text_clean,
-              CAST(CASE WHEN text_clean <> t THEN 1 ELSE 0 END AS int)
-                AS changed
-            FROM n
-        """,
         "scrub_decontaminate": """
             -- distinct word-3-gram intersection against the doc_id%97
             -- benchmark slice; docs with < 3 words carry no gram and are
@@ -1550,18 +1224,13 @@ def oracle_sql() -> dict[str, str]:
         #   pipeline_kept_planted IS hash-checked);
         #   tests/test_entry_contract.py pins this set
     }
+    d["lang_id2"] = _langid_oracle_sql()
     # extract_full = the whole corpus in one result, composed VERBATIM
     # from the three per-family derivations (each independently
     # hash-green) so the whole-corpus twin cannot drift from them. Keyed
     # by page_i (bijective with url; the url host is seeded-RNG
     # decoration no SQL can derive). Edge pages take lang from the
     # wrapped doc (corpus.py: lang = langs[i % ndocs]).
-    d["lang_id2"] = _langid_oracle_sql()
-    d["token_count_cjk"] = """
-        -- 'alpha beta gamma' + k CJK chars + ' delta tail' = 5 + k
-        SELECT doc_id, CAST(5 + doc_id % 9 AS int) AS n_tokens_sa
-        FROM documents
-    """
     d["extract_full"] = f"""
         WITH n AS (SELECT count(*) AS ndocs FROM documents)
         SELECT page_i, lang, extracted_text, n_blocks_kept,

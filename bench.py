@@ -46,7 +46,7 @@ def main() -> int:
     from llmap_spark.operators.dedup import (exact_dedup,
                                              minhash_lsh_candidates)
     from llmap_spark.operators.scrub import dedup_paragraphs, redact_pii
-    from llmap_spark.operators.textstats import (fingerprint, lang_id,
+    from llmap_spark.operators.textstats import (fingerprint,
                                                  quality_features)
     from llmap_spark.operators.langid import lang_id2 as lang_id2_op
     from llmap_spark.plans.pipeline import ExtractConfig, extract
@@ -80,7 +80,7 @@ def main() -> int:
         ("extract_salted_shuffle", lambda: noop(extract(pages, ExtractConfig(
             repartition=2 * cpus)))),
         ("textstats", lambda: noop(
-            fingerprint(quality_features(lang_id(docs))))),
+            fingerprint(quality_features(docs)))),
         # corpus scrubbing deliverable shape (paragraph dedup -> redact)
         ("scrub", lambda: noop(redact_pii(
             dedup_paragraphs(docs).withColumnRenamed("text_clean", "text")))),

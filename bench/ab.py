@@ -17,12 +17,16 @@ its median is better than the base's by more than the base's interquartile
 range. A run that is not ``correct`` stops the comparison.
 
 ``--plans`` compares plans instead of timings: both sides print the
-formatted physical plans of ``extract``, ``kept_documents`` and
-``curated_corpus`` over the same inputs (the benchmark's seed-``FIRST_SEED``
-crawl and curate inputs, generated by this checkout), and the plans are
-diffed after expression, plan and RDD ids are renumbered by first
-appearance. The plan dumper reaches the base over stdin, so the base needs
-no copy of this script. Exits 1 when any plan differs.
+formatted physical plans of ``extract``, ``lsh_candidates``,
+``kept_documents`` and ``curated_corpus`` over the same inputs (the
+benchmark's seed-``FIRST_SEED`` crawl and curate inputs, generated by this
+checkout), and the plans are diffed after expression, plan and RDD ids and
+lambda variable names are renumbered by first appearance.
+``lsh_candidates`` is printed on its own because the chain's plans cannot
+show it: ``connected_components`` checkpoints the verified pairs while the
+chain is built, so ``kept_documents`` and ``curated_corpus`` read those
+pairs, not the LSH subtree. The plan dumper reaches the base over stdin,
+so the base needs no copy of this script. Exits 1 when any plan differs.
 """
 
 from __future__ import annotations
@@ -44,7 +48,7 @@ ROOT = Path(__file__).resolve().parent.parent
 RUN_TIMEOUT_S = 600
 FIRST_SEED = 951
 MIN_CLAIM_PAIRS = 10
-PLANS = ("extract", "kept_documents", "curated_corpus")
+PLANS = ("extract", "lsh_candidates", "kept_documents", "curated_corpus")
 PLAN_MARK = "@@plan "
 
 # run as `python3 - <pages> <documents> <benchmark> <cores>` in a checkout:
@@ -52,6 +56,7 @@ PLAN_MARK = "@@plan "
 PLAN_DUMPER = f"""
 import sys
 
+from llmap_spark.operators.dedup import minhash_lsh_candidates
 from llmap_spark.plans.pipeline import ExtractConfig, extract
 from llmap_spark.plans.training import curated_corpus, kept_documents
 from llmap_spark.session import get_spark, scan_conf_for
@@ -64,6 +69,7 @@ docs = spark.read.parquet(docs_dir)
 bench = spark.read.parquet(bench_dir)
 frames = {{
     "extract": lambda: extract(pages, ExtractConfig()),
+    "lsh_candidates": lambda: minhash_lsh_candidates(docs),
     "kept_documents": lambda: kept_documents(docs),
     "curated_corpus": lambda: curated_corpus(docs, benchmark=bench),
 }}
@@ -88,9 +94,10 @@ curate = gen.generate("curate_corpus", {FIRST_SEED}, cache)
 print(crawl / "pages", curate / "documents", curate / "benchmark", sep="\\n")
 """
 # the ids a plan draws from session-wide counters: group 1 is kept, group 2
-# renumbered
+# renumbered. PySpark names lambda variables from a process-wide counter,
+# so a plan printed earlier in the dump shifts every later plan's names
 _PLAN_IDS = (re.compile(r"(#)(\d+)"), re.compile(r"(plan_id=)(\d+)"),
-             re.compile(r"(RDD\[)(\d+)"))
+             re.compile(r"(RDD\[)(\d+)"), re.compile(r"(lambda x_)(\d+)"))
 
 
 def base_checkout(root: Path, rev: str) -> Path:
@@ -173,8 +180,8 @@ def split_plans(text: str) -> dict[str, str]:
 
 
 def normalize_plan(text: str) -> str:
-    """Expression, plan and RDD ids renumbered by first appearance, each
-    kind on its own: the numbers differ between sessions, but which
+    """Expression, plan and RDD ids and lambda variable names renumbered by
+    first appearance, each kind on its own: the numbers differ between sessions, but which
     operators share an id is part of the plan. Operator numbers, codegen
     ids and literals are left alone."""
     for pattern in _PLAN_IDS:

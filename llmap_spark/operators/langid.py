@@ -1,10 +1,8 @@
 """Multi-language identification over a char-script + marker-word model.
 
-The round-4 `lang_id` (textstats.py) covers 4 Latin languages by marker
-words; a crawl-scale training pipeline partitions by language before
-everything else, so this is its real replacement: 35 languages (plus
-'und') across the script classes below, decided by pure integer
-arithmetic in two tiers —
+A crawl-scale training pipeline partitions by language before everything
+else, so this covers 35 languages (plus 'und') across the script classes
+below, decided by pure integer arithmetic in two tiers —
 
   tier 1  SCRIPT: count codepoints per script class (precompiled
           char-class regexes — C-speed stdlib scans, one pass per

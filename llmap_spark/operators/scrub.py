@@ -35,11 +35,9 @@ hash-oracle-able; see __spark_entry__ for the driver twins.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
-from llmap_spark.operators.textstats import fingerprint, word_ngrams
+from llmap_spark.operators.textstats import fingerprint
 
 # Conservative patterns that parse identically under Java regex (Spark)
 # and RE2 (DuckDB): no backreferences, no lookaround.
@@ -133,48 +131,6 @@ def dedup_paragraphs(df: DataFrame, id_col: str = "doc_id",
                     .cast("int").alias("n_paras_kept")))
 
 
-# C0 controls minus \t \n \r, plus DEL — the chars no tokenizer wants;
-# identical class syntax in Java regex and RE2
-CONTROL_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
-
-
-def nfc_udf():
-    """pandas_udf: NFC-normalize a string column (Python unicodedata —
-    there is no JVM-side Unicode normalizer in Spark SQL, so this is the
-    one deliberately-Python scrub stage; Arrow-batched, total on NULL).
-    asNondeterministic blocks optimizer expression cloning (the flag does
-    not make it nondeterministic — see the MinHash UDF note)."""
-    @pandas_udf("string")
-    def nfc(s: pd.Series) -> pd.Series:
-        # pandas' null-propagating normalizer (same unicodedata backend,
-        # no per-row lambda frames)
-        return s.str.normalize("NFC")
-
-    return nfc.asNondeterministic()
-
-
-def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Pre-tokenization text hygiene: a JVM control-character strip (C0
-    minus tab/newline/CR, plus DEL) followed by NFC normalization
-    (combining sequences compose — 'e'+U+0301 becomes 'é', so byte-level
-    dedup and n-gram features stop splitting on representation). Adds
-    `text_clean` and a `changed` flag; NULL text cleans to ''.
-
-    Strip runs FIRST: a control char between a base char and its
-    combining mark blocks composition, so NFC-then-strip could emit
-    text that is neither NFC-normalized nor stable under a second pass
-    ('e' NUL U+0301 -> decomposed 'e'+U+0301). Strip-then-NFC output is
-    control-free and NFC by construction — idempotent (pinned in pytest).
-
-    Both engines implement UAX #15, so the operator is hash-verified
-    against DuckDB's nfc_normalize directly."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    cleaned = nfc_udf()(F.regexp_replace(t, CONTROL_RE, ""))
-    return (df.withColumn("text_clean", cleaned)
-            .withColumn("changed",
-                        (F.col("text_clean") != t).cast("int")))
-
-
 def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add `text_redacted` plus per-kind match counts. Emails, then IPv4
     addresses, then NNN-NNN-NNNN phone numbers are replaced with typed
@@ -203,6 +159,25 @@ def _with_words(df: DataFrame, text_col: str, out_col: str) -> DataFrame:
     return df.withColumn(
         out_col,
         F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"))
+
+
+def word_ngrams(words_col: str, n: int):
+    """Word n-gram array over a pre-split words column (JVM transform
+    expression) — the SINGLE n-gram constructor, which _grams wraps for
+    both decontamination shapes (decontaminate and contaminated_ids must
+    agree on every gram, so they cannot each keep a copy).
+
+    Gotchas baked in: sequence(1, 0) yields a DESCENDING [1, 0] in Spark,
+    so short texts need the explicit size guard rather than an empty
+    sequence; and split('') is [''], so at n=1 every blank/NULL-text doc
+    would otherwise share the '' gram (the shared-sentinel hazard) — the
+    `[0] <> ''` guard is a no-op for n >= 2 (size 1 < n already)."""
+    gram_body = "concat_ws(' ', " + ", ".join(
+        f"{words_col}[i-1+{j}]" for j in range(n)) + ")"
+    return F.expr(
+        f"case when size({words_col}) >= {n} and {words_col}[0] <> '' then "
+        f"transform(sequence(1, size({words_col}) - {n - 1}), i -> {gram_body}) "
+        "else array() end")
 
 
 def _grams(df: DataFrame, n: int, text_col: str, keep: tuple = (),

@@ -133,16 +133,12 @@ def kept_documents(docs: DataFrame, id_col: str = "doc_id",
 
 
 def curated_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
-                   nfc: bool = False,
                    id_col: str = "doc_id", text_col: str = "text",
                    **kept_kwargs) -> DataFrame:
     """The deliverable: kept_documents' keep-list joined back to text and
     scrubbed into a training-ready corpus.
 
         kept_documents keep-list      (quality -> dedup -> LSH -> CC)
-          -> NFC normalize            (opt-in nfc=True: compose combining
-                                       sequences + strip controls BEFORE
-                                       fingerprinting)
           -> decontaminate            (drop docs sharing any word 3-gram
                                        with the held-out benchmark; skipped
                                        when benchmark is None)
@@ -166,21 +162,12 @@ def curated_corpus(docs: DataFrame, benchmark: DataFrame | None = None,
                                              dedup_paragraphs, redact_pii)
 
     out = _kept_reps(docs, id_col=id_col, text_col=text_col, **kept_kwargs)
-    if nfc:
-        # normalize BEFORE paragraph dedup so fingerprints see composed
-        # text (representation variants of the same paragraph collapse)
-        from llmap_spark.operators.scrub import normalize_text
-
-        out = (normalize_text(out, text_col=text_col)
-               .drop(text_col, "changed")
-               .withColumnRenamed("text_clean", text_col))
     # `out` always feeds MULTIPLE branches downstream: dedup_paragraphs
     # references its input twice (paras + counts), and the benchmark path
     # adds the gram explode + anti-join left side. Unpersisted, the
-    # keep-list anti-join (and the per-row NFC UDF when enabled) would
-    # evaluate once PER BRANCH — the CLAUDE.md branch-recompute gotcha.
-    # Registered for release_persisted, same contract as the reps persist
-    # in _kept_reps.
+    # keep-list anti-join would evaluate once PER BRANCH — the CLAUDE.md
+    # branch-recompute gotcha. Registered for release_persisted, same
+    # contract as the reps persist in _kept_reps.
     from llmap_spark.cache import register_persisted
 
     out = register_persisted(out.persist())

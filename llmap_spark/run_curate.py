@@ -48,9 +48,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--benchmark", default=None,
                     help="held-out benchmark parquet (text column) for "
                          "decontamination; only used with --emit corpus")
-    ap.add_argument("--nfc", action="store_true",
-                    help="NFC-normalize + control-strip text before the "
-                         "scrub stages (--emit corpus only)")
     ap.add_argument("--partition-by-lang", action="store_true",
                     help="--emit corpus only: identify each curated doc's "
                          "language (operators/langid.py, 35 languages) and "
@@ -86,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
 
         bench = (spark.read.parquet(args.benchmark)
                  if args.benchmark else None)
-        out = curated_corpus(docs, benchmark=bench, nfc=args.nfc,
+        out = curated_corpus(docs, benchmark=bench,
                              id_col=args.id_col,
                              text_col=args.text_col,
                              verify_jaccard=args.verify_jaccard,

@@ -177,6 +177,14 @@ PLAN_CASES = {
     "rdd_ids_shifted": (
         "Arguments: [node#1L], MapPartitionsRDD[57] at checkpoint\n",
         "Arguments: [node#2L], MapPartitionsRDD[61] at checkpoint\n", True),
+    "lambda_names_shifted": (
+        "Condition : transform(array(x#2), lambdafunction(lambda x_5#3.t, "
+        "lambda x_5#3, false))\n",
+        "Condition : transform(array(x#2), lambdafunction(lambda x_8#3.t, "
+        "lambda x_8#3, false))\n", True),
+    "lambda_names_distinct": (
+        "lambdafunction(lambda x_5#3, lambda x_5#3, false)\n",
+        "lambdafunction(lambda x_5#3, lambda x_6#3, false)\n", False),
     "partition_count_literal": (
         "Arguments: hashpartitioning(doc_id#3L, 8), ENSURE_REQUIREMENTS\n",
         "Arguments: hashpartitioning(doc_id#3L, 16), ENSURE_REQUIREMENTS\n",

@@ -3,6 +3,9 @@ on the driver-provided sf0.001 documents table."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -16,47 +19,6 @@ def docs(spark):
 
 
 # -- textstats --------------------------------------------------------------
-
-def test_token_count_vs_duckdb(spark, docs):
-    from llmap_spark.operators.textstats import token_count
-
-    got = {r.doc_id: r.n for r in
-           docs.select("doc_id", token_count(F.col("text")).alias("n")).collect()}
-    want = {r[0]: r[1] for r in duckdb.sql(f"""
-        SELECT doc_id, CASE WHEN length(trim(regexp_replace(text,'\\s+',' ','g')))=0
-          THEN 0 ELSE cast((length(trim(regexp_replace(text,'\\s+',' ','g')))
-            - length(replace(trim(regexp_replace(text,'\\s+',' ','g')),' ','')))
-            AS int) + 1 END
-        FROM '{DOCS}'""").fetchall()}
-    assert got == want
-    # and equals python split() count
-    pyw = {r.doc_id: len((r.text or "").split()) for r in docs.collect()}
-    assert got == pyw
-
-
-def test_lang_id_deterministic_and_portable(spark, docs):
-    from llmap_spark.operators.textstats import lang_id
-
-    got = {r.doc_id: r.pred_lang for r in
-           lang_id(docs).select("doc_id", "pred_lang").collect()}
-    # python oracle with the same rule
-    rows = {r.doc_id: r.text for r in docs.collect()}
-    markers = {"en": ("the", "and", "of"), "de": ("der", "und", "die"),
-               "fr": ("le", "et", "les"), "es": ("el", "los", "que")}
-    for d, t in rows.items():
-        pad = f" {t} "
-        cnt = {lg: sum(pad.count(f" {w} ") for w in ws)
-               for lg, ws in markers.items()}
-        if cnt["en"] >= cnt["de"] and cnt["en"] >= cnt["fr"] and cnt["en"] >= cnt["es"]:
-            want = "en"
-        elif cnt["de"] >= cnt["fr"] and cnt["de"] >= cnt["es"]:
-            want = "de"
-        elif cnt["fr"] >= cnt["es"]:
-            want = "fr"
-        else:
-            want = "es"
-        assert got[d] == want, d
-
 
 def test_fingerprint_matches_duckdb(spark, docs):
     from llmap_spark.operators.textstats import fingerprint
@@ -125,22 +87,87 @@ def test_quality_keep_gate_edges(q_edges, case):
     assert r.q_keep is keep
 
 
-def test_repetition_features_planted(spark):
-    from llmap_spark.operators.textstats import repetition_features
+# case -> a whitespace char, squeezed by squeeze_ws iff Java's \s matches
+# it: [ \t\n\x0B\f\r], narrower than Python's str.split() (no U+00A0,
+# no U+001C) and wider than DuckDB's RE2 \s (U+000B)
+WS_CHARS = {
+    "space": " ", "tab": "\t", "newline": "\n", "cr": "\r",
+    "formfeed": "\f", "vtab": "\x0b", "nbsp": "\u00a0", "fs": "\u001c",
+}
+JAVA_WS = re.compile(r"[\t\n\x0b\f\r ]+")
 
-    rows = [
-        (1, "all words here are completely distinct from one another today"),
-        (2, "spam spam spam spam spam spam spam spam spam spam"),
-        (3, "x"),   # fewer words than a 2-gram
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: (r.dup_2gram_x1000, r.dup_3gram_x1000)
-           for r in repetition_features(df).collect()}
-    assert got[1] == (0, 0)
-    assert got[2] == (888, 875)  # 9 2-grams 1 distinct; 8 3-grams 1 distinct
-    assert got[3] == (0, 0)
-    assert got[4] == (0, 0)
+
+@pytest.fixture(scope="module")
+def ws_rows(spark):
+    """Every WS_CHARS case, the char leading, doubled and trailing
+    around three words, through fingerprint and quality_features."""
+    from llmap_spark.operators.textstats import fingerprint, quality_features
+
+    rows = [(k, f"{c}alpha{c}{c}beta{c}gamma{c}")
+            for k, c in WS_CHARS.items()]
+    df = spark.createDataFrame(rows, "case string, text string")
+    return {r.case: r for r in
+            quality_features(fingerprint(df)).collect()}
+
+
+@pytest.mark.parametrize("case", WS_CHARS)
+def test_squeeze_ws_is_javas_whitespace_class(ws_rows, case):
+    c = WS_CHARS[case]
+    # Spark's trim strips only the space, so strip(" "), not strip()
+    squeezed = JAVA_WS.sub(" ", f"{c}alpha{c}{c}beta{c}gamma{c}").strip(" ")
+    r = ws_rows[case]
+    assert r.fingerprint == hashlib.md5(squeezed.encode()).hexdigest()
+    assert r.n_tokens_t == squeezed.count(" ") + 1
+
+
+# text -> n_stop_hits: a stopword counts only as a whole, lower-case,
+# space-delimited word, and adjacent repeats share their delimiter
+STOP_EDGES = {
+    "capitalized": ("The", 0),
+    "trailing_period": ("the.", 0),
+    "prefix_of_word": ("there", 0),
+    "adjacent_repeats": ("the the the", 2),
+}
+
+
+@pytest.fixture(scope="module")
+def stop_hits(spark):
+    from llmap_spark.operators.textstats import quality_features
+
+    df = spark.createDataFrame(
+        [(k, text) for k, (text, _) in STOP_EDGES.items()],
+        "case string, text string")
+    return {r.case: r.n_stop_hits for r in quality_features(df).collect()}
+
+
+@pytest.mark.parametrize("case", STOP_EDGES)
+def test_stop_hits_word_boundaries(stop_hits, case):
+    assert stop_hits[case] == STOP_EDGES[case][1]
+
+
+# text -> (n_tokens_t, q_keep) for texts with no word: NULL text has no
+# token count, and none of them passes the gate
+EMPTY_TEXTS = {
+    "null": (None, (None, False)),
+    "empty": ("", (0, False)),
+    "whitespace_only": (" \t\n\r ", (0, False)),
+}
+
+
+@pytest.fixture(scope="module")
+def empty_texts(spark):
+    from llmap_spark.operators.textstats import quality_features
+
+    df = spark.createDataFrame(
+        [(k, text) for k, (text, _) in EMPTY_TEXTS.items()],
+        "case string, text string")
+    return {r.case: (r.n_tokens_t, r.q_keep)
+            for r in quality_features(df).collect()}
+
+
+@pytest.mark.parametrize("case", EMPTY_TEXTS)
+def test_quality_of_wordless_text(empty_texts, case):
+    assert empty_texts[case] == EMPTY_TEXTS[case][1]
 
 
 # text -> (n, the grams word_ngrams builds from the text's words)
@@ -158,9 +185,10 @@ WORD_NGRAMS = {
 
 @pytest.fixture(scope="module")
 def word_ngrams_built(spark):
-    """Every WORD_NGRAMS case through one query, on words split the way
-    repetition_features and decontaminate split them."""
-    from llmap_spark.operators.textstats import squeeze_ws, word_ngrams
+    """Every WORD_NGRAMS case through one query, on words split at the
+    spaces of the squeeze_ws-normalized text."""
+    from llmap_spark.operators.scrub import word_ngrams
+    from llmap_spark.operators.textstats import squeeze_ws
 
     rows = [(k, text) for k, (text, _, _) in WORD_NGRAMS.items()]
     df = spark.createDataFrame(rows, "case string, text string").withColumn(
@@ -438,12 +466,6 @@ def test_curated_corpus_composes_scrub_stages(spark, docs):
     # quality-gate failures from the sf0.001 corpus prefix (see
     # test_training_pipeline_kept_documents): 14 fails the gate
     assert 14 not in out
-    # opt-in NFC stage composes before fingerprinting
-    accented = allr.withColumn(
-        "text", F.concat(F.col("text"), F.lit(" café")))
-    nfc_out = {r.doc_id: r for r in
-               curated_corpus(accented, nfc=True).collect()}
-    assert any("caf\u00e9" in r.text for r in nfc_out.values())
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -510,29 +532,3 @@ def test_minhash_duplicate_ids_no_self_pairs(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = minhash_lsh_candidates(df, materialize=True).collect()
     assert all(r.id_a < r.id_b for r in pairs)
-
-
-def test_token_count_script_aware(spark):
-    """CJK codepoints count one token each; space-delimited parts keep
-    the whitespace rule; mixed documents count each part by its script."""
-    from pyspark.sql import functions as F
-
-    from llmap_spark.operators.textstats import token_count_script_aware
-
-    cases = [
-        (0, "hello world", 2),
-        (1, "这是一个测试", 6),              # 6 han chars, no spaces
-        (2, "hello 这是 world", 4),          # 2 ws tokens + 2 han... plus
-        (3, "これはテスト", 6),              # kana
-        (4, "한국어문장", 5),                # hangul
-        (5, "", 0),
-        (6, "   ", 0),
-        (7, "mixed 中文 and ひらがな end", 3 + 2 + 4),  # 3 words + 6 cjk
-    ]
-    df = spark.createDataFrame([(i, t) for i, t, _ in cases],
-                               "id long, text string")
-    got = {r.id: r.n for r in df.select(
-        "id", token_count_script_aware(F.col("text")).alias("n")).collect()}
-    # case 2: 'hello', 'world' + 2 han chars = 4
-    for i, _, want in cases:
-        assert got[i] == want, (i, got[i], want)

@@ -248,6 +248,38 @@ def test_run_curate_cli_emit_corpus(spark, tmp_path):
             "n_ipv4", "n_phones"} == set(got.columns)
 
 
+def test_run_curate_cli_benchmark_drops_contaminated(spark, tmp_path):
+    """--emit corpus --benchmark: the document whose text is the
+    benchmark is decontaminated away and counted in dropped_rows; three
+    distinct documents that each pass the quality gate, so nothing else
+    drops."""
+    import hashlib
+    import io
+    import json
+    from contextlib import redirect_stdout
+
+    from llmap_spark import run_curate
+
+    texts = ["the " + " ".join(hashlib.md5(f"{d}-{w}".encode()).hexdigest()[:6]
+                               for w in range(12)) for d in range(3)]
+    spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "docs"))
+    spark.createDataFrame([(texts[2],)], "text string") \
+        .write.parquet(str(tmp_path / "bench"))
+    out = str(tmp_path / "corpus")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        rc = run_curate.main(
+            ["--input", str(tmp_path / "docs"), "--output", out,
+             "--cores", "8", "--emit", "corpus",
+             "--benchmark", str(tmp_path / "bench")])
+    assert rc == 0
+    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {0, 1}
+    assert (summary["input_rows"], summary["kept_rows"],
+            summary["dropped_rows"]) == (3, 2, 1)
+
+
 def test_run_curate_cli_partition_by_lang(spark, tmp_path):
     """--partition-by-lang writes the curated corpus physically
     partitioned on pred_lang (lang_id2), the per-language pruning

@@ -184,50 +184,6 @@ def test_paragraph_dedup_sep_is_literal_not_regex(spark):
     assert r.n_paras_kept == 2
 
 
-def test_normalize_text_nfc_and_control_strip(spark):
-    from llmap_spark.operators.scrub import normalize_text
-
-    docs = spark.createDataFrame(
-        [(0, "cafe\u0301 menu"),  # combining acute -> composed e-acute
-         (1, "plain ascii"),
-         (2, "bell\x07 and\x00null"),     # C0 controls stripped
-         (3, "tab\tand\nnewline kept"),
-         (4, None)],
-        "doc_id long, text string")
-    got = {r.doc_id: r for r in normalize_text(docs).collect()}
-    assert got[0].text_clean == "caf\u00e9 menu" and got[0].changed == 1
-    assert got[1].text_clean == "plain ascii" and got[1].changed == 0
-    assert got[2].text_clean == "bell and" + "null"
-    assert got[2].changed == 1
-    assert got[3].text_clean == "tab\tand\nnewline kept"
-    assert got[3].changed == 0
-    assert got[4].text_clean == "" and got[4].changed == 0
-    # idempotent: a second pass changes nothing
-    again = normalize_text(
-        spark.createDataFrame([(0, got[0].text_clean)],
-                              "doc_id long, text string")).collect()[0]
-    assert again.changed == 0
-
-
-def test_normalize_text_strips_before_composing(spark):
-    """A control char BETWEEN a base char and its combining mark blocks
-    composition — strip must run first or the output is neither NFC nor
-    stable under a second pass."""
-    import unicodedata
-
-    from llmap_spark.operators.scrub import normalize_text
-
-    docs = spark.createDataFrame(
-        [(0, "e\x00\u0301 rest")], "doc_id long, text string")
-    r = normalize_text(docs).collect()[0]
-    assert r.text_clean == "\u00e9 rest"  # composed, control gone
-    assert unicodedata.is_normalized("NFC", r.text_clean)
-    again = normalize_text(
-        spark.createDataFrame([(0, r.text_clean)],
-                              "doc_id long, text string")).collect()[0]
-    assert again.changed == 0
-
-
 @pytest.mark.parametrize("n, n_rows", [(1, 12), (3, 4)])
 def test_contaminated_ids_match_decontaminate(spark, n, n_rows):
     """The curation chain's drop set (contaminated_ids) is decontaminate's
