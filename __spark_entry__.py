@@ -27,10 +27,16 @@ EDGE_RESIDUES_SQL = "(" + ", ".join(map(str, sorted(_EDGE_RESIDUES))) + ")"
 # DuckDB's (RE2) \s is [ \t\n\f\r] — no U+000B, which Spark squeezes to a
 # space and DuckDB keeps — and Python's str.split() in the kernel also
 # splits U+001C and Unicode spaces such as U+00A0, which neither regex
-# matches. The test documents' only whitespace is the space (and the
-# generated pages emit no U+000B), which is what keeps the byte-identity
-# oracles exact.
+# matches. DuckDB's one-argument trim also strips U+00A0 and the other
+# Unicode space separators, where Spark's strips only the space. The test
+# documents' only whitespace is the space (and the generated pages emit
+# no U+000B), which is what keeps the byte-identity oracles exact.
 NORM_SQL = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
+# scrub._with_words' twin: the squeezed, coalesced text split at its
+# spaces. Its trim strips only the space, as Spark's does, so of the
+# differences above only U+000B is left.
+WORDS_SQL = ("string_split(trim(regexp_replace(coalesce(text, ''), "
+             "'\\s+', ' ', 'g'), ' '), ' ')")
 
 # Shared quality-formula fragments (textstats.quality_features twins).
 # ONE maintained copy composed by every oracle that needs the quality
@@ -301,96 +307,6 @@ def _q_pipeline_curated_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curated_corpus(planted, benchmark=bench)
 
 
-# lang_id2's planted construction: one script-pure (or marker-pure)
-# snippet per supported language + an 'und' no-evidence case, cycled by
-# doc_id. Each snippet was validated against detect_language BEFORE the
-# oracle was generated (the planted-oracle discipline); the oracle SQL
-# is then generated FROM this table by running the single-process kernel
-# per snippet — the same local-kernel-as-oracle contract the extraction
-# roundtrips use, which makes the driver compare Spark's distributed
-# execution against the local kernel on every row.
-_LANGID_SNIPPETS: list[tuple[str, str]] = [
-    ("en", "the report and the data of the case that is ready for "
-           "review with notes"),
-    ("de", "der bericht und die daten das ist nicht mit ein problem"),
-    ("fr", "le rapport est dans une page que les notes pour des cas"),
-    ("es", "el informe por los datos con las notas para una causa está "
-           "aqui"),
-    ("it", "il rapporto che di per della pagina sono anche più note"),
-    ("pt", "não uma nota mais como são você também pelo caso"),
-    ("nl", "het rapport een van niet zijn voor aan ook nota"),
-    ("pl", "nie jest że ale jak tylko przez się strona"),
-    ("sv", "och att det som är för har inte sida"),
-    ("da", "og at er til ikke den har blev side"),
-    ("fi", "ja ei että mutta myös kun hän joka sivu"),
-    ("tr", "bir ve bu için ile olarak daha çok sayfa"),
-    ("id", "yang dan di untuk dengan tidak ini itu halaman"),
-    ("vi", "và của là có không được người trong trang"),
-    ("ro", "și este pentru care din nu cu mai pagina"),
-    ("cs", "je se na že ale jako pro tak strana"),
-    ("hu", "és hogy nem egy van meg már csak oldal"),
-    ("ru", "и в не на что это как по страница"),
-    ("uk", "і що це як та але від щоб сторінка"),
-    ("bg", "че това като към само след може беше страница"),
-    ("sr", "је су као него да за или био страна"),
-    ("ar", "في من على أن إلى عن هذا التي صفحة"),
-    ("fa", "که این است با را های برای آن صفحه"),
-    ("ur", "کے میں کی اور ہے سے کا نے صفحہ"),
-    ("zh", "这是一个测试页面的主要内容文字部分"),
-    ("ja", "これはテストページの主要な内容です"),
-    ("ko", "이것은 테스트 페이지의 주요 내용입니다"),
-    ("el", "αυτό είναι μια δοκιμαστική σελίδα με περιεχόμενο"),
-    ("th", "นี่คือหน้าทดสอบที่มีเนื้อหาหลัก"),
-    ("he", "זהו דף בדיקה עם תוכן עיקרי"),
-    ("hi", "यह मुख्य सामग्री वाला परीक्षण पृष्ठ है"),
-    ("bn", "এটি প্রধান বিষয়বস্তু সহ একটি পরীক্ষা পৃষ্ঠা"),
-    ("ta", "இது முக்கிய உள்ளடக்கம் கொண்ட சோதனை பக்கம்"),
-    ("ka", "ეს არის ტესტის გვერდი ძირითადი შინაარსით"),
-    ("hy", "սա փորձնական էջ է հիմնական բովանդակությամբ"),
-    ("und", "1234 5678 --- !!!"),
-]
-
-
-def _q_lang_id2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """35-language identification (operators/langid.py: script-range
-    counting + marker-word argmax, shared total kernel), hash-verified by
-    the planted snippet cycle: text is REPLACED by the snippet for
-    language (doc_id % 36), so every (pred_lang, pred_script, n_letters)
-    row is a kernel-derived constant the generated oracle replays."""
-    from llmap_spark.operators.langid import lang_id2
-
-    n = len(_LANGID_SNIPPETS)
-    snips = F.array(*[F.lit(s) for _, s in _LANGID_SNIPPETS])
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.element_at(snips, (F.col("doc_id") % n + 1).cast("int"))
-        .alias("text"))
-    return lang_id2(d).select(
-        "doc_id", "pred_lang", "pred_script", "n_letters")
-
-
-def _langid_oracle_sql() -> str:
-    """CASE-constant oracle generated by running the single-process
-    kernel on each planted snippet (validated in tests/test_langid.py)."""
-    from llmap_spark.operators.langid import detect_language
-
-    n = len(_LANGID_SNIPPETS)
-    lang_arms, script_arms, nlet_arms = [], [], []
-    for i, (_, snip) in enumerate(_LANGID_SNIPPETS):
-        lang, script, nlet = detect_language(snip)
-        lang_arms.append(f"WHEN {i} THEN '{lang}'")
-        script_arms.append(f"WHEN {i} THEN '{script}'")
-        nlet_arms.append(f"WHEN {i} THEN {nlet}")
-    return f"""
-        SELECT doc_id,
-          CASE doc_id % {n} {' '.join(lang_arms)} END AS pred_lang,
-          CASE doc_id % {n} {' '.join(script_arms)} END AS pred_script,
-          CAST(CASE doc_id % {n} {' '.join(nlet_arms)} END AS int)
-            AS n_letters
-        FROM documents
-    """
-
-
 def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llmap_spark.operators.textstats import quality_features
 
@@ -604,8 +520,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entries sort before multi-round-green ones within a block. Keep
     # the LAST_CHECKED blocks below honest when rotating.
     return {
-        # --- LAST_CHECKED: never (new in r5) — inserted here as built ---
-        "lang_id2": _q_lang_id2,
         # --- LAST_CHECKED: r2 (green r1+r2 or r2 only; oldest rows) ---
         "quality_score": _q_quality_score,
         # --- LAST_CHECKED: r3 (scrub families) ---
@@ -998,7 +912,7 @@ def oracle_sql() -> dict[str, str]:
                    doc_id <> rep_id AS is_dup
             FROM w
         """,
-        "pipeline_curated_planted": """
+        "pipeline_curated_planted": f"""
             -- full-chain replication: the keep-list is arithmetic
             -- (doc_id % 8 IN (0,4,7), derived on pipeline_kept_planted),
             -- then each scrub stage is replayed exactly — distinct-3-gram
@@ -1036,8 +950,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id, text FROM planted
               WHERE doc_id % 8 IN (0, 4, 7)),
             bw AS (
-              SELECT string_split_regex(trim(coalesce(text, '')), '\\s+')
-                AS ws
+              SELECT {WORDS_SQL} AS ws
               FROM planted WHERE doc_id % 16 = 7),
             bg AS (
               SELECT DISTINCT array_to_string(ws[u.i:u.i+2], ' ') AS gram
@@ -1046,7 +959,7 @@ def oracle_sql() -> dict[str, str]:
               WHERE len(ws) >= 3),
             kw AS (
               SELECT doc_id,
-                string_split_regex(trim(coalesce(text, '')), '\\s+') AS ws
+                {WORDS_SQL} AS ws
               FROM kept),
             kg AS (
               SELECT DISTINCT doc_id,
@@ -1076,25 +989,25 @@ def oracle_sql() -> dict[str, str]:
               -- counted on the text its replacement operates on
               SELECT doc_id, nk, t2,
                 regexp_replace(t2,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
+                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}',
                   '<EMAIL>', 'g') AS u1
               FROM pd),
             r2 AS (
               SELECT *, regexp_replace(u1,
-                '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '<IP>', 'g') AS u2
+                '\\b(?:\\d{{1,3}}\\.){{3}}\\d{{1,3}}\\b', '<IP>', 'g') AS u2
               FROM r1)
             SELECT doc_id,
               regexp_replace(u2,
-                '\\b\\d{3}-\\d{3}-\\d{4}\\b', '<PHONE>', 'g') AS text,
+                '\\b\\d{{3}}-\\d{{3}}-\\d{{4}}\\b', '<PHONE>', 'g') AS text,
               CAST(1 AS int) AS n_paras,
               CAST(nk AS int) AS n_paras_kept,
               CAST(len(regexp_extract_all(t2,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
+                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}'))
                 AS int) AS n_emails,
               CAST(len(regexp_extract_all(u1,
-                '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b')) AS int) AS n_ipv4,
+                '\\b(?:\\d{{1,3}}\\.){{3}}\\d{{1,3}}\\b')) AS int) AS n_ipv4,
               CAST(len(regexp_extract_all(u2,
-                '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS int) AS n_phones
+                '\\b\\d{{3}}-\\d{{3}}-\\d{{4}}\\b')) AS int) AS n_phones
             FROM r2
         """,
         "scrub_paragraph_dedup": """
@@ -1189,13 +1102,13 @@ def oracle_sql() -> dict[str, str]:
                 '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS int) AS n_phones
             FROM staged2
         """,
-        "scrub_decontaminate": """
+        "scrub_decontaminate": f"""
             -- distinct word-3-gram intersection against the doc_id%97
             -- benchmark slice; docs with < 3 words carry no gram and are
             -- excluded on both sides
             WITH w AS (
               SELECT doc_id,
-                string_split_regex(trim(coalesce(text, '')), '\\s+') AS ws
+                {WORDS_SQL} AS ws
               FROM documents),
             g AS (
               SELECT DISTINCT doc_id,
@@ -1224,7 +1137,6 @@ def oracle_sql() -> dict[str, str]:
         #   pipeline_kept_planted IS hash-checked);
         #   tests/test_entry_contract.py pins this set
     }
-    d["lang_id2"] = _langid_oracle_sql()
     # extract_full = the whole corpus in one result, composed VERBATIM
     # from the three per-family derivations (each independently
     # hash-green) so the whole-corpus twin cannot drift from them. Keyed

@@ -48,7 +48,6 @@ def main() -> int:
     from llmap_spark.operators.scrub import dedup_paragraphs, redact_pii
     from llmap_spark.operators.textstats import (fingerprint,
                                                  quality_features)
-    from llmap_spark.operators.langid import lang_id2 as lang_id2_op
     from llmap_spark.plans.pipeline import ExtractConfig, extract
     from llmap_spark.plans.training import curated_corpus
     import __spark_entry__ as entry
@@ -98,8 +97,6 @@ def main() -> int:
         ("pipeline_curated", lambda: noop(curated_corpus(
             docs, benchmark=docs.filter(F.col("doc_id") % 97 == 0)
             .select("text")))),
-        # r5 first-class operator: 35-language id (map-only kernel UDF)
-        ("lang_id2", lambda: noop(lang_id2_op(docs))),
     ]
 
     # warmup (untimed): python workers + codegen + shuffle spin-up, so the

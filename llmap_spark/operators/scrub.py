@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from llmap_spark.operators.textstats import fingerprint
+from llmap_spark.operators.textstats import fingerprint, squeeze_ws
 
 # Conservative patterns that parse identically under Java regex (Spark)
 # and RE2 (DuckDB): no backreferences, no lookaround.
@@ -95,10 +95,9 @@ def dedup_paragraphs(df: DataFrame, id_col: str = "doc_id",
     paras = fingerprint(paras, text_col="_para", out_col="_fp")
     # blank test uses the SAME normalization as the fingerprint (a
     # tab-only paragraph must classify blank, not dedup via md5(''))
-    norm_para = F.trim(F.regexp_replace(F.col("_para"), r"\s+", " "))
     paras = paras.withColumn(
         "_fp",
-        F.when(norm_para != "", F.col("_fp"))
+        F.when(squeeze_ws(F.col("_para")) != "", F.col("_fp"))
         .otherwise(F.concat(F.lit("\x00blank:"),
                             F.col(id_col).cast("string"), F.lit(":"),
                             F.col("_idx").cast("string"))))
@@ -156,9 +155,13 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _with_words(df: DataFrame, text_col: str, out_col: str) -> DataFrame:
+    """The words of `text_col`: its squeeze_ws text split at the spaces.
+    Not trim(text) split on \\s+: Spark's trim strips only the space, so
+    a text that starts with a tab or newline would get a leading '' word,
+    and word_ngrams' blank guard would then drop every gram of it."""
     return df.withColumn(
         out_col,
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"))
+        F.split(squeeze_ws(F.coalesce(F.col(text_col), F.lit(""))), " "))
 
 
 def word_ngrams(words_col: str, n: int):

@@ -10,7 +10,6 @@ CLI:
     python -m llmap_spark.oracle blocks  <file.html> [...]
     python -m llmap_spark.oracle extract <file.html> [...]
     python -m llmap_spark.oracle status  <file.html> [...]
-    python -m llmap_spark.oracle lang    <file.txt> [...]
 """
 
 from __future__ import annotations
@@ -59,7 +58,7 @@ def extract_parquet(pages_path: str) -> "pyarrow.Table":  # noqa: F821
 
 
 def main(argv: list[str]) -> int:
-    if len(argv) < 2 or argv[0] not in {"blocks", "extract", "status", "lang"}:
+    if len(argv) < 2 or argv[0] not in {"blocks", "extract", "status"}:
         print(__doc__, file=sys.stderr)
         return 2
     cmd, files = argv[0], argv[1:]
@@ -80,12 +79,6 @@ def main(argv: list[str]) -> int:
                       f"{b.text[:60]!r}")
         elif cmd == "extract":
             print(kernel.extract_page(html).extracted_text)
-        elif cmd == "lang":
-            from llmap_spark.operators.langid import detect_language
-
-            lang, script, n = detect_language(
-                html.decode("utf-8", errors="replace"))
-            print(f"{f}\t{lang}\tscript={script}\tletters={n}")
         else:
             r = kernel.extract_page(html)
             print(f"{f}\t{r.status}\tkept={r.n_blocks_kept}/{r.n_blocks_total}\t"

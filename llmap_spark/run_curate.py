@@ -48,13 +48,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--benchmark", default=None,
                     help="held-out benchmark parquet (text column) for "
                          "decontamination; only used with --emit corpus")
-    ap.add_argument("--partition-by-lang", action="store_true",
-                    help="--emit corpus only: identify each curated doc's "
-                         "language (operators/langid.py, 35 languages) and "
-                         "write the corpus partitioned by pred_lang — the "
-                         "training-pipeline layout where every downstream "
-                         "job (per-language sampling, quality, tokenizer "
-                         "training) prunes to its language's files")
     args = ap.parse_args(argv)
 
     from pyspark import SparkConf
@@ -93,20 +86,7 @@ def main(argv: list[str] | None = None) -> int:
                              text_col=args.text_col,
                              verify_jaccard=args.verify_jaccard,
                              cc_checkpoint_dir=args.checkpoint_dir)
-    if args.emit == "corpus" and args.partition_by_lang:
-        from pyspark.sql import functions as F
-
-        from llmap_spark.operators.langid import lang_id2
-
-        out = lang_id2(out, text_col=args.text_col).drop(
-            "pred_script", "n_letters")
-        # pred_lang becomes the physical partition key: downstream
-        # per-language jobs read only their directory (partition
-        # pruning), the layout a multilingual pipeline filters by first
-        out.write.mode("overwrite").partitionBy("pred_lang") \
-            .parquet(args.output)
-    else:
-        out.write.mode("overwrite").parquet(args.output)
+    out.write.mode("overwrite").parquet(args.output)
     n_kept = spark.read.parquet(args.output).count()
     print(json.dumps({
         "status": "written", "input_rows": n_in, "kept_rows": n_kept,

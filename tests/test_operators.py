@@ -97,14 +97,22 @@ WS_CHARS = {
 JAVA_WS = re.compile(r"[\t\n\x0b\f\r ]+")
 
 
+def _ws_text(case: str) -> str:
+    """The WS_CHARS char leading, doubled and trailing around three words."""
+    c = WS_CHARS[case]
+    return f"{c}alpha{c}{c}beta{c}gamma{c}"
+
+
+def _is_java_ws(case: str) -> bool:
+    return bool(JAVA_WS.fullmatch(WS_CHARS[case]))
+
+
 @pytest.fixture(scope="module")
 def ws_rows(spark):
-    """Every WS_CHARS case, the char leading, doubled and trailing
-    around three words, through fingerprint and quality_features."""
+    """Every _ws_text case through fingerprint and quality_features."""
     from llmap_spark.operators.textstats import fingerprint, quality_features
 
-    rows = [(k, f"{c}alpha{c}{c}beta{c}gamma{c}")
-            for k, c in WS_CHARS.items()]
+    rows = [(k, _ws_text(k)) for k in WS_CHARS]
     df = spark.createDataFrame(rows, "case string, text string")
     return {r.case: r for r in
             quality_features(fingerprint(df)).collect()}
@@ -112,9 +120,8 @@ def ws_rows(spark):
 
 @pytest.mark.parametrize("case", WS_CHARS)
 def test_squeeze_ws_is_javas_whitespace_class(ws_rows, case):
-    c = WS_CHARS[case]
     # Spark's trim strips only the space, so strip(" "), not strip()
-    squeezed = JAVA_WS.sub(" ", f"{c}alpha{c}{c}beta{c}gamma{c}").strip(" ")
+    squeezed = JAVA_WS.sub(" ", _ws_text(case)).strip(" ")
     r = ws_rows[case]
     assert r.fingerprint == hashlib.md5(squeezed.encode()).hexdigest()
     assert r.n_tokens_t == squeezed.count(" ") + 1
@@ -202,6 +209,105 @@ def word_ngrams_built(spark):
 @pytest.mark.parametrize("case", WORD_NGRAMS)
 def test_word_ngrams(word_ngrams_built, case):
     assert word_ngrams_built[case] == WORD_NGRAMS[case][2]
+
+
+# -- whitespace through decontamination and paragraph dedup ----------------
+
+@pytest.fixture(scope="module")
+def ws_scrub(spark):
+    """Every WS_CHARS case through the scrub operators. Case i's texts
+    carry i in their first word, so a case can only match its own twin:
+    `led(i)` puts the char before that word, `plain(i)` does not."""
+    from llmap_spark.operators.scrub import (_with_words, contaminated_ids,
+                                             decontaminate, dedup_paragraphs)
+
+    cases = list(WS_CHARS)
+
+    def led(i):
+        return WS_CHARS[cases[i]] + f"alpha{i} beta gamma"
+
+    def plain(i):
+        return f"alpha{i} beta gamma"
+
+    def docs(text):
+        return spark.createDataFrame(
+            [(i, text(i)) for i in range(len(cases))],
+            "doc_id long, text string")
+
+    def bench(text):
+        return spark.createDataFrame(
+            [(text(i),) for i in range(len(cases))], "text string")
+
+    words = _with_words(spark.createDataFrame(
+        [(k, _ws_text(k)) for k in cases], "case string, text string"),
+        "text", "_w").collect()
+    flagged = {side: {cases[r.doc_id] for r in
+                      contaminated_ids(docs(d), bench(b), n=3).collect()}
+               for side, d, b in (("doc", led, plain),
+                                  ("bench", plain, led))}
+    hits = decontaminate(docs(lambda i: led(i) + " delta"),
+                         bench(lambda i: plain(i) + " delta"), n=3)
+    # the char as a paragraph of its own at the end of two documents
+    paras = spark.createDataFrame(
+        [(2 * i + j, f"{w}_{k}\n\n{WS_CHARS[k]}")
+         for i, k in enumerate(cases) for j, w in enumerate("ab")],
+        "doc_id long, text string")
+    return {
+        "words": {r.case: r._w for r in words},
+        "flagged": flagged,
+        "n_hits": {cases[r.doc_id]: r.n_hits for r in hits.collect()},
+        "second_copy": {cases[r.doc_id // 2]: (r.text_clean, r.n_paras_kept)
+                        for r in dedup_paragraphs(paras).collect()
+                        if r.doc_id % 2},
+    }
+
+
+@pytest.mark.parametrize("case", WS_CHARS)
+def test_gram_words_split_squeezed_text(ws_scrub, case):
+    words = JAVA_WS.sub(" ", _ws_text(case)).strip(" ").split(" ")
+    assert ws_scrub["words"][case] == words
+
+
+@pytest.mark.parametrize("side", ["doc", "bench"])
+@pytest.mark.parametrize("case", WS_CHARS)
+def test_contaminated_ids_whitespace_led(ws_scrub, side, case):
+    """A leading whitespace char on either side is not part of the first
+    word, so the texts share their one 3-gram; a char Java's \\s does
+    not match is part of it."""
+    assert (case in ws_scrub["flagged"][side]) == _is_java_ws(case)
+
+
+@pytest.mark.parametrize("case", WS_CHARS)
+def test_decontaminate_hits_whitespace_led_doc(ws_scrub, case):
+    # both grams shared, or only "beta gamma delta" when the char sticks
+    # to the first word
+    assert ws_scrub["n_hits"][case] == (2 if _is_java_ws(case) else 1)
+
+
+@pytest.mark.parametrize("case", WS_CHARS)
+def test_paragraph_dedup_whitespace_paragraph(ws_scrub, case):
+    """Two documents end in the same one-char paragraph. A blank one
+    (Java's \\s) is spacing and survives in both; any other is content,
+    and the second document's copy is deduplicated."""
+    assert ws_scrub["second_copy"][case] == (
+        (f"b_{case}\n\n{WS_CHARS[case]}", 2) if _is_java_ws(case)
+        else (f"b_{case}", 1))
+
+
+@pytest.mark.parametrize("case", WS_CHARS)
+def test_oracle_words_match_gram_builder(ws_scrub, case):
+    """The DuckDB oracles' word split (WORDS_SQL) gives the gram
+    builder's words, except that RE2's \\s has no U+000B: DuckDB keeps
+    that char, and so the whole text, as one word."""
+    from __spark_entry__ import WORDS_SQL
+
+    text = _ws_text(case)
+    (got,) = duckdb.execute(f"SELECT {WORDS_SQL} FROM (SELECT ? AS text)",
+                            [text]).fetchone()
+    if case == "vtab":
+        assert got == [text] != ws_scrub["words"][case]
+    else:
+        assert got == ws_scrub["words"][case]
 
 
 # -- dedup ------------------------------------------------------------------

@@ -73,11 +73,12 @@ def test_cli_blocks_one_line_per_block(page_file, capsys):
 
 
 @pytest.mark.parametrize("argv", [[], ["extract"], ["meta", "x.html"],
-                                  ["pixels", "x.png"], ["bogus", "x"]])
-def test_cli_rejects_usage_outside_its_four_commands(argv, capsys):
+                                  ["pixels", "x.png"], ["bogus", "x"],
+                                  ["lang", "x.txt"]])
+def test_cli_rejects_usage_outside_its_commands(argv, capsys):
     assert oracle.main(argv) == 2
     err = capsys.readouterr().err
-    for cmd in ("blocks", "extract", "status", "lang"):
+    for cmd in ("blocks", "extract", "status"):
         assert f"oracle {cmd}" in err
 
 
@@ -88,13 +89,6 @@ def test_cli_skips_missing_file(tmp_path, capsys):
     cap = capsys.readouterr()
     assert "skipping nonexistent file" in cap.err
     assert cap.out.startswith(f"{good}\tok\t")
-
-
-def test_cli_lang_reports_detected_language(tmp_path, capsys):
-    path = tmp_path / "doc.txt"
-    path.write_text(DOC)
-    assert oracle.main(["lang", str(path)]) == 0
-    assert capsys.readouterr().out.startswith(f"{path}\ten\tscript=latin\t")
 
 
 def _batch(urls: list[str]) -> pa.RecordBatch:

@@ -278,35 +278,3 @@ def test_run_curate_cli_benchmark_drops_contaminated(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {0, 1}
     assert (summary["input_rows"], summary["kept_rows"],
             summary["dropped_rows"]) == (3, 2, 1)
-
-
-def test_run_curate_cli_partition_by_lang(spark, tmp_path):
-    """--partition-by-lang writes the curated corpus physically
-    partitioned on pred_lang (lang_id2), the per-language pruning
-    layout; the parquet reads back with the partition column."""
-    import io
-    import json
-    import os
-    from contextlib import redirect_stdout
-
-    from llmap_spark import run_curate
-
-    out = str(tmp_path / "corpus_by_lang")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = run_curate.main(
-            ["--input", "/root/testdata/sf0.001/documents.parquet",
-             "--output", out, "--cores", "8", "--emit", "corpus",
-             "--partition-by-lang"])
-    assert rc == 0
-    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
-    got = spark.read.parquet(out)
-    assert summary["kept_rows"] == got.count() > 0
-    assert "pred_lang" in got.columns
-    # physical layout: pred_lang=<code> partition directories exist
-    parts = [d for d in os.listdir(out) if d.startswith("pred_lang=")]
-    assert parts, os.listdir(out)
-    # synthetic corpus text is English-ish marker soup -> en dominates
-    top = got.groupBy("pred_lang").count().orderBy(
-        "count", ascending=False).first()
-    assert top.pred_lang in ("en", "und")
